@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.dec
 import graft.operators.Analytics
-import graft.pipelines.BoxOfficePipeline
+import graft.pipelines.{AtomicStore, BoxOfficePipeline, StoreTable}
 
 /** User-facing facade: every query surface the reference serves — the
   * Streamlit dashboard pages (src/dashboard.py) and the AI agent's SQL
@@ -21,8 +21,8 @@ class BoxOffice(spark: SparkSession, storeRoot: String) {
   private def table(name: String): DataFrame = {
     // read-side resilience: roll forward any swap a crashed writer left
     // mid-flight (idempotent fs-metadata checks; see AtomicStore)
-    graft.pipelines.AtomicStore.recover(spark, s"$storeRoot/$name")
-    spark.read.parquet(s"$storeRoot/$name")
+    AtomicStore.recover(spark, s"$storeRoot/$name")
+    StoreTable.read(spark, s"$storeRoot/$name")
   }
 
   def boxoffice: DataFrame = table("boxoffice")
@@ -127,11 +127,13 @@ class BoxOffice(spark: SparkSession, storeRoot: String) {
 
   /** The AI agent's engine requirement: execute arbitrary SELECT text
     * against the 4-table schema (ai_agent.py:118-124). Registers the
-    * store tables as temp views on each call.
+    * store tables that exist as temp views on each call; existence is
+    * checked on the store's own filesystem, so hdfs://, s3a:// and file:
+    * roots register their tables too.
     */
   def ask(sql: String): DataFrame = {
     Seq("boxoffice", "movie", "goods_event", "goods_stock").foreach { t =>
-      if (new java.io.File(s"$storeRoot/$t").exists())
+      if (StoreTable.exists(spark, s"$storeRoot/$t"))
         table(t).createOrReplaceTempView(t)
     }
     spark.sql(sql)

@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Analytics, Hints, Ingest, Joins, Upsert}
@@ -33,38 +33,57 @@ object BoxOfficePipeline {
     * `java.io.File` check here would be local-FS-only and silently
     * report "missing" for every hdfs://, s3a://, or file: URI store,
     * making every fold-style sink that bootstraps through this helper
-    * discard its prior state (round-13 advice).
+    * discard its prior state (round-13 advice). An existing table is
+    * read through [[StoreTable.read]]: no schema-inference job.
     */
-  def readOrEmpty(spark: SparkSession, path: String, schemaOf: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(path)
+  def readOrEmpty(spark: SparkSession, path: String, schemaOf: DataFrame): DataFrame =
+    if (StoreTable.exists(spark, path)) StoreTable.read(spark, path)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
                                schemaOf.schema)
+
+  /** `df` with a row counter attached: the count is read from the
+    * returned [[Observation]] once an action (here: the write) has run
+    * the plan — no second execution just to count.
+    */
+  private def counted(df: DataFrame): (DataFrame, Observation) = {
+    val rows = Observation()
+    (df.observe(rows, count(lit(1)).as("rows")), rows)
   }
+
+  private def rowsOf(o: Observation): Long = o.get("rows").asInstanceOf[Long]
 
   /** Daily incremental ingest (ST1, kobis_pipeline.py:8-60): compute the
     * missing-date spine from the store's watermark, keep only the raw
     * rows for those dates, apply the transform chain (F3 coercing date
     * parse → P7 null-date drop → F5 elapsed_dt), append partitioned.
     * Re-runs are no-ops: already-ingested dates fall out of the spine.
+    *
+    * One job collects the spine (a few dates at most) to the driver; the
+    * batch keeps its rows with a literal `isin` and is written once, its
+    * row count observed on the write. An empty batch writes nothing: on
+    * an up-to-date store the empty spine skips the write, and a store
+    * with no table yet is checked for an empty batch first, so it never
+    * gets a table directory without data files.
     */
   def ingestDaily(spark: SparkSession, root: String, raw: DataFrame,
                   asOf: String): Long = {
     val path = s"$root/boxoffice"
+    val fresh = !StoreTable.exists(spark, path)
     val store = readOrEmpty(spark, path, raw.withColumn("elapsed_dt", lit(0)))
-    val missing = Ingest.missingDates(store, "target_dt", asOf)
+    val missing = Ingest.missingDates(store, "target_dt", asOf).collect().map(_.get(0))
     val batch = raw
       // F3 coerce→null: Spark 4 is ANSI by default, so the reference's
       // pd.to_datetime(errors='coerce') maps to try_to_date, not to_date
       .withColumn("open_dt", try_to_date(col("open_dt")))
       .filter(col("open_dt").isNotNull)                     // P7
       .withColumn("elapsed_dt", datediff(col("target_dt"), col("open_dt"))) // F5
-      .join(missing.withColumnRenamed("d", "target_dt"), Seq("target_dt"), "left_semi")
-    val n = batch.count()
-    if (n > 0)
-      batch.write.mode(SaveMode.Append).partitionBy("target_dt").parquet(path)
-    n
+      .filter(col("target_dt").isin(missing.toIndexedSeq: _*))
+    if (missing.isEmpty || (fresh && batch.isEmpty)) 0L
+    else {
+      val (out, rows) = counted(batch)
+      out.write.mode(SaveMode.Append).partitionBy("target_dt").parquet(path)
+      rowsOf(rows)
+    }
   }
 
   /** Backfill (S13, backfill_boxoffice.py:27-47): the reference deletes a
@@ -126,7 +145,8 @@ object BoxOfficePipeline {
     * `fresh`'s schema when absent), apply `merge`, then durable staging +
     * rename swap — a crash anywhere leaves a complete copy on disk, never
     * the delete-then-write hole of a live overwrite. Returns the
-    * post-swap row count.
+    * post-swap row count, observed on the staging write: the merge runs
+    * exactly once, with nothing cached.
     */
   private def mergeAndSwap(spark: SparkSession, path: String, fresh: DataFrame,
                            merge: DataFrame => DataFrame): Long =
@@ -137,12 +157,9 @@ object BoxOfficePipeline {
     // the winner's output — both batches land.
     AtomicStore.withLock(spark, path) {
       AtomicStore.recover(spark, path) // roll forward a swap a crash interrupted
-      val store = readOrEmpty(spark, path, fresh)
-      val out = merge(store).cache()
-      val n = out.count()
+      val (out, rows) = counted(merge(readOrEmpty(spark, path, fresh)))
       AtomicStore.overwrite(out, path)
-      out.unpersist()
-      n
+      rowsOf(rows)
     }
 
   /** Stock append (S10, goods_stock_pipeline.py:99-113) with the F18
@@ -157,7 +174,7 @@ object BoxOfficePipeline {
   /** Current-stock view (W1 over the append log, dashboard.py:104-119). */
   def latestStock(spark: SparkSession, root: String): DataFrame =
     Analytics.latestPerKey(
-      spark.read.parquet(s"$root/goods_stock"),
+      StoreTable.read(spark, s"$root/goods_stock"),
       Seq("event_id", "theater_name"),
       Seq(col("scraped_at_us").desc))
 
@@ -284,19 +301,18 @@ object BoxOfficePipeline {
     */
   def compact(spark: SparkSession, path: String, targetRowsPerFile: Long,
               partitionBy: Seq[String] = Nil): (Long, Long) = {
-    def parquetFiles(p: java.io.File): Long =
-      if (!p.exists()) 0L
-      else if (p.isFile) (if (p.getName.endsWith(".parquet")) 1L else 0L)
-      else p.listFiles().map(parquetFiles).sum
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def parquetFiles(): Long = StoreTable.dataFiles(fs, p).size.toLong
     AtomicStore.recover(spark, path) // roll forward a swap a crash interrupted
-    val before = parquetFiles(new java.io.File(path))
-    val df = spark.read.parquet(path)
+    val before = parquetFiles()
+    val df = StoreTable.read(spark, path)
     val rows = df.count()
     val nFiles = math.max(1, math.ceil(rows.toDouble / targetRowsPerFile).toInt)
     // durable staging + rename swap (reads the live path while writing the
     // staging copy, so no localCheckpoint needed; crash-safe either way)
     AtomicStore.overwrite(df.repartition(nFiles), path, partitionBy)
-    (before, parquetFiles(new java.io.File(path)))
+    (before, parquetFiles())
   }
 
   /** Cluster a table's storage layout for pruning locality: hash-
@@ -323,8 +339,8 @@ object BoxOfficePipeline {
   def describeStore(spark: SparkSession, root: String, tables: Seq[String]): String =
     tables.map { t =>
       val p = s"$root/$t"
-      if (new java.io.File(p).exists())
-        s"$t:\n${spark.read.parquet(p).schema.treeString}"
+      if (StoreTable.exists(spark, p))
+        s"$t:\n${StoreTable.read(spark, p).schema.treeString}"
       else s"$t: <empty>"
     }.mkString("\n")
 

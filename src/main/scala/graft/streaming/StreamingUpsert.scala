@@ -16,7 +16,11 @@ import graft.operators.Upsert
   * micro-batch runs the engine's deterministic last-write-wins upsert
   * (`Upsert.upsert`) against the store inside `foreachBatch` — the
   * standard pattern for merge-shaped sinks on sources Spark can't MERGE
-  * into natively. Each batch: read store → union+window → overwrite.
+  * into natively. Each batch, under the store's writer lock: roll
+  * forward an interrupted swap, read the store (schema from a parquet
+  * footer, no inference job), union+window with the batch, and write
+  * the result once to staging before the rename swap. The merge plan
+  * runs once: its shuffle stage and the write, two Spark jobs with AQE.
   *
   * Scale: the per-batch cost is one keyed shuffle over (store + batch);
   * on a real deployment the store is partitioned and the rewrite is
@@ -76,11 +80,14 @@ object StreamingUpsert {
     * The merged rows are staged to DURABLE storage before the
     * overwrite — the overwrite cannot read the path it is replacing,
     * and a localCheckpoint's executor-local blocks would not survive
-    * an executor loss mid-write. Trade-off vs [[writer]]: the swap is
-    * per-partition, not whole-table-atomic (the lakehouse MERGE shape
-    * without a transaction log) — the same contract the batch fact
-    * store accepts for backfills; last-write-wins and replay
-    * idempotence are unchanged.
+    * an executor loss mid-write. Dynamic partition overwrite is a
+    * per-WRITE option, never a session conf: setting
+    * `spark.sql.sources.partitionOverwriteMode` would change every later
+    * partitioned overwrite in the same session. Trade-off vs
+    * [[writer]]: the swap is per-partition, not whole-table-atomic (the
+    * lakehouse MERGE shape without a transaction log) — the same
+    * contract the batch fact store accepts for backfills;
+    * last-write-wins and replay idempotence are unchanged.
     */
   def writerPartitioned(spark: SparkSession, stream: DataFrame,
                         storePath: String, keys: Seq[String],
@@ -96,9 +103,9 @@ object StreamingUpsert {
           val merged = Upsert.upsert(base, b, keys, col(versionCol))
           val staging = storePath + ".batchstage"
           merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging)
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          spark.read.parquet(staging)
+          graft.pipelines.StoreTable.read(spark, staging)
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partCol).parquet(storePath)
         }
       } finally { b.unpersist(); () }

@@ -78,4 +78,20 @@ class StreamingUpsertSpec extends SparkSpec {
     assert(rows(3L) == (("open", 15L, "db")))
     assert(rows.size == 3)
   }
+
+  test("a partitioned drain leaves the session's partitionOverwriteMode unchanged") {
+    val s = spark.newSession()
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    import s.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = s.conf.get(key)
+    val dir = Files.createTempDirectory("graft_supsert_conf_").toString
+    val input = MemoryStream[(Long, String, Long, String)]
+    input.addData((1L, "open", 10L, "da"), (2L, "open", 10L, "db"))
+    StreamingUpsert.startPartitioned(s, input.toDS().toDF("event_id", "status", "scraped_at", "dt"),
+      s"$dir/store", keys = Seq("event_id"), versionCol = "scraped_at", partCol = "dt",
+      checkpoint = s"$dir/ckpt").awaitTermination()
+    assert(s.read.parquet(s"$dir/store").count() == 2)
+    assert(s.conf.get(key) == before, s"the drain changed $key")
+  }
 }
