@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.{dec, avgExact, sumd, tsDate}
 import graft.operators._
+import graft.pipelines.StoreTable
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -47,8 +48,8 @@ object SparkEntry {
   /** Stat token of the source tables a cached fixture derives from —
     * the [[Tables.scanKey]] (path|mtime|len[|newest-child|n]) of each,
     * concatenated. Written into a feed's completion marker so a feed
-    * goes stale exactly when the scan-plan memo would re-list its
-    * source: testdata regenerated IN PLACE must rebuild the /dev/shm
+    * goes stale exactly when one of its source tables changes:
+    * testdata regenerated IN PLACE must rebuild the /dev/shm
     * feeds too, or the stream drains would diverge from the batch duals
     * (round-15 advice, medium).
     */
@@ -92,7 +93,7 @@ object SparkEntry {
   }
 
   /** Materialize a deterministic MEDIA fixture corpus once per (name,
-    * sf dir) and read it back through the memoized parquet scan — the
+    * sf dir) and read it back through [[StoreTable.read]] — the
     * [[cachedFeed]] discipline applied to the batch multimodal fixtures
     * (round-15 verdict #1): the synthetic PNG/WAV ENCODE is fixture
     * construction, not the operator under test (the per-row decode +
@@ -111,7 +112,7 @@ object SparkEntry {
         srcToken(s, dir, "documents")) { fd =>
       build.repartition(8).write.parquet(fd)
     }
-    Tables.memoizedScan(s, feed)
+    StoreTable.read(s, feed)
   }
 
   /** Write `df` as ONE parquet file named `$name.parquet` under
@@ -611,7 +612,7 @@ object SparkEntry {
         .withColumn("elapsed_dt", datediff(col("target_dt"), col("open_dt")))
         .withColumn("sales", col("sales") * 2)
       p.backfillRange(s, root, repl)
-      s.read.parquet(s"$root/boxoffice")
+      StoreTable.read(s, s"$root/boxoffice")
         .select(col("movie_cd"),
           date_format(col("target_dt"), "yyyy-MM-dd").as("target_dt"),
           date_format(col("open_dt"), "yyyy-MM-dd").as("open_dt"),
@@ -1850,7 +1851,7 @@ object SparkEntry {
           throw new IllegalStateException(
             "stream cdc drain did not terminate within 600s")
       } finally if (q.isActive) q.stop()
-      s.read.parquet(store).orderBy("c_custkey")
+      StoreTable.read(s, store).orderBy("c_custkey")
     }),
 
     // J7b — forward as-of: for each (user, week-start) probe, the FIRST
@@ -2679,7 +2680,7 @@ object SparkEntry {
           throw new IllegalStateException(
             "stream upsert drain did not terminate within 600s")
       } finally if (q.isActive) q.stop()
-      s.read.parquet(store).orderBy("event_id")
+      StoreTable.read(s, store).orderBy("event_id")
     }),
 
     // streaming LSH near-dup candidates vs the batch band-bucket join:
@@ -2988,7 +2989,7 @@ object SparkEntry {
         // featurization gets 8 scan tasks instead of the one-file
         // table's single task. The model is count aggregation over
         // longs (layout-independent), so its rows are unchanged.
-        val docs = Tables.memoizedScan(src.sparkSession, streamDir)
+        val docs = StoreTable.read(src.sparkSession, streamDir)
         val en = coalesce(col("lang") === lit("en"), lit(false))
         val model = TextAnalysis.dsirModel(docs, docs.where(en), "text",
           buckets = 4096)

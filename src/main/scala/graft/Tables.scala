@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
+import graft.pipelines.StoreTable
+
 /** Loaders for the driver-generated testdata tables (see /root/repo/TESTDATA.md).
   *
   * Design notes (100 TB posture):
@@ -12,11 +14,17 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   *     prunes columns into the scan, so downstream operators never have to
   *     hand-optimize I/O. On a real cluster these paths would be
   *     partitioned/bucketed table locations; nothing else changes.
+  *   - Every scan goes through [[StoreTable.read]], which takes the schema
+  *     from one footer on the driver: opening a table launches no Spark
+  *     job, and neither does [[registerAll]] on a fresh session. No scan
+  *     plan is memoized: each load lists the path and reads one footer
+  *     (well under a millisecond on a local disk).
   *   - `events.ts` has shipped as BOTH parquet TIMESTAMP(NANOS) and
   *     TIMESTAMP(MICROS) across testdata regenerations, so [[load]] is
-  *     schema-adaptive (round-6 verdict #1): nanos files are read
-  *     losslessly as a Long via `spark.sql.legacy.parquet.nanosAsLong`;
-  *     micros files arrive as a Spark timestamp and [[normalizeEventTs]]
+  *     schema-adaptive (round-6 verdict #1): the reader's footer
+  *     conversion reads nanos files losslessly as a Long, without setting
+  *     `spark.sql.legacy.parquet.nanosAsLong` on the session; micros
+  *     files arrive as a Spark timestamp and [[normalizeEventTs]]
   *     converts them to the SAME epoch-nanos Long contract
   *     (`unix_micros * 1000` — exact, micros data has no sub-microsecond
   *     component). Every operator downstream sees one type: Long nanos.
@@ -34,46 +42,14 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     normalizeEventTs(loadRaw(spark, sfDir, name))
 
-  /** Scan-PLAN memo (round-15 optimization, guide §6 "file listing"):
-    * every `spark.read.parquet(path)` builds a fresh InMemoryFileIndex
-    * (a driver-side listing of the path) and re-reads a parquet footer
-    * to infer the schema — pure metadata work that repeats identically
-    * for every one of the suite's 400+ queries (the SQL-fuzz family
-    * alone re-derives all 10 table plans per query via [[registerAll]]).
-    * A production engine holds this in its catalog; this memo is the
-    * library equivalent. It caches the analyzed scan DataFrame — a PLAN,
-    * never data: every action still reads the parquet files — keyed by
-    * session (weakly, so test sessions can be collected) and by the
-    * path's (mtime, length), so a table that is overwritten or appended
-    * to is re-listed and re-inferred on the next load (parquet writers
-    * create/remove files under the directory, which bumps its mtime;
-    * single-file fixtures get a fresh file mtime from the move). An
-    * unstattable path falls through to the uncached read so the error
-    * surfaces from the reader, not the memo.
-    */
-  /** The inner per-session map holds analyzed DataFrames, which strongly
-    * reference their SparkSession — held directly as the WeakHashMap
-    * VALUE they would pin their own KEY and no session could ever be
-    * collected (round-15 advice). The SoftReference breaks that strong
-    * key←value chain: a session kept alive only by its own memo becomes
-    * softly reachable, so the collector can reclaim it (and the memo)
-    * under memory pressure; a cleared memo is simply rebuilt on the next
-    * load — a miss, never a correctness change.
-    */
-  private val planCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.lang.ref.SoftReference[
-          java.util.concurrent.ConcurrentHashMap[String, DataFrame]]]())
-
-  /** Memo key for one table path: `path|mtime|len`, plus — for a
+  /** Change token for one table path: `path|mtime|len`, plus — for a
     * DIRECTORY path — the newest immediate child's mtime and the child
     * count (round-15 verdict #7): a directory whose file set is rewritten
     * in place can keep its own (mtime, length) within filesystem mtime
     * resolution while its part files changed, and a stale file listing
-    * would silently serve the old data. `None` = unstattable (missing
-    * path — the caller falls through to the raw reader so the error
-    * surfaces from there).
+    * would silently serve the old data. Keys [[registerAll]]'s view memo
+    * and the cached fixtures' source tokens. `None` = unstattable
+    * (missing path).
     */
   private[graft] def scanKey(spark: SparkSession, path: String): Option[String] =
     try {
@@ -90,43 +66,19 @@ object Tables {
       Some(s"$path|${st.getModificationTime}|${st.getLen}$dirPart")
     } catch { case _: Exception => None }
 
-  /** Raw scan with the file's physical schema. Streaming sources need this:
-    * `readStream.schema(...)` must match the parquet footer, so a stream
-    * over a micros-typed file declares a timestamp column and normalizes
-    * AFTER the source (see [[normalizeEventTs]]).
+  /** Raw scan with the file's physical schema (nanos columns as Long).
+    * Streaming sources need this: `readStream.schema(...)` must match the
+    * parquet footer, so a stream over a micros-typed file declares a
+    * timestamp column and normalizes AFTER the source (see
+    * [[normalizeEventTs]]). A missing table fails here, from Spark's
+    * reader.
     */
-  def loadRaw(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // runtime conf, read at scan-schema conversion time; harmless for the
-    // tables that have no nanos columns
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    memoizedScan(spark, s"$sfDir/$name.parquet")
-  }
-
-  /** The scan-plan memo for an arbitrary parquet path — [[loadRaw]]'s
-    * machinery, also used by the cached fixture corpora (which are
-    * rebuilt-on-source-change directories under scratch, so the same
-    * per-query listing/footer constant applied to them).
-    */
-  private[graft] def memoizedScan(spark: SparkSession, path: String): DataFrame =
-    scanKey(spark, path) match {
-      case None => spark.read.parquet(path) // missing/unstattable: reader throws
-      case Some(key) =>
-        val perSession = planCache.synchronized {
-          val ref = planCache.get(spark)
-          val live = if (ref == null) null else ref.get()
-          if (live != null) live
-          else {
-            val fresh = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-            planCache.put(spark, new java.lang.ref.SoftReference(fresh))
-            fresh
-          }
-        }
-        perSession.computeIfAbsent(key, _ => spark.read.parquet(path))
-    }
+  def loadRaw(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    StoreTable.read(spark, s"$sfDir/$name.parquet")
 
   /** Schema-adaptive `ts` contract: whatever the parquet writer produced,
     * downstream operators see epoch-NANOS as a Long.
-    *   - Long already (nanos file + `nanosAsLong`): pass through.
+    *   - Long already (TIMESTAMP(NANOS) file, read as Long): pass through.
     *   - TIMESTAMP / TIMESTAMP_NTZ (micros file): `unix_micros * 1000` —
     *     exact within Long range (micros ~1.7e15 → nanos ~1.7e18 < 2^63)
     *     and lossless because micros data has no sub-microsecond part.
@@ -144,18 +96,15 @@ object Tables {
       case _ => df
     }
 
-  /** View-registration memo (round-15 optimization, same discipline as
-    * the scan-plan memo above): `createOrReplaceTempView` ×10 costs
-    * ~70 ms per call even over memoized plans (catalog writes + plan
-    * re-registration), and the 210-query SQL-fuzz family calls
-    * [[registerAll]] once per query — ~15 s of the whole bench spent
-    * re-creating views that are IDENTICAL call over call. Skip the
-    * re-registration when the last registration on this session was for
-    * the SAME sf dir and every table's memoized scan plan is the SAME
-    * instance (`eq`) — the scan memo already keys plan identity by the
-    * path's (mtime, length), so an overwritten table yields a fresh
-    * plan instance and forces re-registration, and switching sf dirs
-    * re-registers by key inequality. Only the 10 testdata views are
+  /** View-registration memo (round-15 optimization): `createOrReplaceTempView`
+    * ×10 costs ~70 ms per call (catalog writes + plan re-registration),
+    * and the 210-query SQL-fuzz family calls [[registerAll]] once per
+    * query — ~15 s of the whole bench spent re-creating views that are
+    * IDENTICAL call over call. Skip the re-registration when the last
+    * registration on this session was for the SAME sf dir and every
+    * table's [[scanKey]] is unchanged — an overwritten table changes its
+    * key and forces re-registration, and switching sf dirs re-registers
+    * by key inequality. Only the 10 testdata views are
     * memoized; nothing else in the repo registers under these names
     * (grep-checked: the pipeline/API views use `graft_`/store-table
     * names), and the memo is per-session, so drain sessions and test
@@ -166,22 +115,18 @@ object Tables {
       new java.util.WeakHashMap[SparkSession, (String, Seq[Option[String]])]())
 
   def registerAll(spark: SparkSession, sfDir: String): Unit = {
-    // invalidation token = the scan-memo keys (path|mtime|len[|dir]) of
-    // all 10 tables, NOT the DataFrame instances: plan identity is
-    // exactly key identity (the scan memo builds one plan per key), and
-    // holding DataFrames as the WeakHashMap value would strongly
-    // reference each frame's session — the value pinning its own key, so
-    // no session is ever collected (round-15 advice). `None` keys
-    // (unstattable table) always re-register, matching the memo-less
-    // loadRaw fall-through.
+    // invalidation token = the scanKeys (path|mtime|len[|dir]) of all 10
+    // tables, NOT the DataFrames: holding DataFrames as the WeakHashMap
+    // value would strongly reference each frame's session — the value
+    // pinning its own key, so no session is ever collected (round-15
+    // advice). `None` keys (unstattable table) always re-register, so
+    // the reader raises the error.
     val keys = all.map(n => scanKey(spark, s"$sfDir/$n.parquet"))
     val prev = registeredViews.get(spark)
     val unchanged = prev != null && prev._1 == sfDir &&
       prev._2 == keys && keys.forall(_.isDefined)
     if (!unchanged) {
-      all.foreach { n =>
-        normalizeEventTs(loadRaw(spark, sfDir, n)).createOrReplaceTempView(n)
-      }
+      all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
       registeredViews.put(spark, (sfDir, keys))
       ()
     }

@@ -5,30 +5,40 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** The one reader of parquet store tables.
+/** The one reader of parquet tables: store tables, the testdata tables
+  * and the cached fixture corpora.
   *
-  * `spark.read.parquet(dir)` without a schema infers it, and inference
-  * runs a Spark job to read a footer — one job per store read, before
-  * the read's own action. This reader resolves the schema on the
-  * driver instead and hands it to `spark.read.schema(...)`, so a store
-  * read launches no job until its action runs:
+  * `spark.read.parquet(path)` without a schema infers it, and inference
+  * runs a Spark job to read a footer — one job per read, before the
+  * read's own action. This reader resolves the schema on the driver
+  * instead and hands it to `spark.read.schema(...)`, so a read launches
+  * no job until its action runs. It opens the footer of ONE visible
+  * data file (without `mergeSchema`, inference also trusts a single
+  * file) and takes, as inference does:
   *
-  *   - it opens the footer of ONE visible data file and takes the
-  *     schema Spark recorded under [[RowMetadataKey]] — the same key
-  *     Spark's own inference reads (without `mergeSchema`, inference
-  *     also trusts a single file);
-  *   - partition columns are not in that schema: Spark still discovers
-  *     them from the `col=value` directory names, with the same types
-  *     and at the same (trailing) positions as inference gives them;
-  *   - a table with no data file, or whose file lacks the key (parquet
-  *     written by another engine), falls back to plain inference.
+  *   - the schema Spark recorded under [[RowMetadataKey]], when a Spark
+  *     writer produced the file;
+  *   - otherwise (parquet written by another engine, e.g. pyarrow) the
+  *     footer's parquet schema converted by Spark's own
+  *     `ParquetToSparkSchemaConverter`, set up from the session's SQL
+  *     conf as inference sets it up, except that INT64
+  *     `TIMESTAMP(NANOS)` always converts to `LongType` (see
+  *     [[converter]]).
+  *
+  * Partition columns are not in that schema: Spark still discovers them
+  * from the `col=value` directory names, with the same types and at the
+  * same (trailing) positions as inference gives them. A path with no
+  * readable data file falls back to plain inference, so a missing path
+  * or an empty table fails exactly as `spark.read.parquet` does.
   *
   * Every path goes through its OWN Hadoop filesystem, so hdfs://,
-  * s3a:// and file: stores resolve exactly like local ones.
+  * s3a:// and file: tables resolve exactly like local ones.
   */
 object StoreTable {
 
@@ -50,8 +60,9 @@ object StoreTable {
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
 
   /** The visible `.parquet` files under `dir`, partition directories
-    * included, in path order. Lazy: a caller that needs one file lists
-    * only until it finds it. Empty when `dir` does not exist.
+    * included, in path order; `dir` itself when it is a `.parquet` file.
+    * Lazy: a caller that needs one file lists only until it finds it.
+    * Empty when `dir` does not exist.
     */
   def dataFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] = {
     def under(d: Path): Iterator[FileStatus] =
@@ -75,33 +86,57 @@ object StoreTable {
   private val FooterOnly = ParquetReadOptions.builder()
     .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
 
-  /** The schema Spark recorded in `file`'s footer, if it recorded one.
-    * A footer these options cannot read (an encrypted one, say) counts
-    * as none: the caller falls back to Spark's own inference.
+  /** The file metadata of the first data file of the table at `path`.
+    * None when the table has no data file, or when these options cannot
+    * read its footer (an encrypted one, say): the caller then falls back
+    * to Spark's own inference.
     */
-  private def footerSchema(conf: Configuration, file: FileStatus): Option[StructType] =
-    scala.util.Try {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), FooterOnly)
-      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey))
-      finally reader.close()
-    }.toOption.flatten
+  private def footer(spark: SparkSession, path: String): Option[FileMetaData] = {
+    val p = new Path(path)
+    dataFiles(p.getFileSystem(conf(spark)), p).nextOption().flatMap { file =>
+      scala.util.Try {
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf(spark)), FooterOnly)
+        try reader.getFooter.getFileMetaData
+        finally reader.close()
+      }.toOption
+    }
+  }
+
+  private def recorded(meta: FileMetaData): Option[StructType] =
+    Option(meta.getKeyValueMetaData.get(RowMetadataKey))
       .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
       .collect { case s: StructType => s }
 
-  /** The data schema (partition columns excluded) of the table at
-    * `path`, read from one footer; None when no file carries Spark's
-    * row metadata.
+  /** The converter Spark's inference builds for a footer without the row
+    * metadata key, from the same session settings, but with
+    * `nanosAsLong` on: INT64 `TIMESTAMP(NANOS)` columns (older testdata
+    * `events.ts`) become `LongType` epoch nanos, where inference without
+    * `spark.sql.legacy.parquet.nanosAsLong` throws. The parquet readers
+    * take such a column through an explicit `LongType` schema without
+    * that conf, so the session conf is never touched.
     */
-  def dataSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val p = new Path(path)
-    dataFiles(p.getFileSystem(conf(spark)), p).nextOption()
-      .flatMap(footerSchema(conf(spark), _))
+  private def converter(spark: SparkSession): ParquetToSparkSchemaConverter = {
+    val c = spark.sessionState.conf
+    new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = c.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+      nanosAsLong = true)
   }
+
+  /** The data schema (partition columns excluded) Spark's writer recorded
+    * in the footer of the table at `path`; None for a table written by
+    * another engine, or with no readable data file.
+    */
+  def dataSchema(spark: SparkSession, path: String): Option[StructType] =
+    footer(spark, path).flatMap(recorded)
 
   /** Read the table at `path` with no schema-inference job. */
   def read(spark: SparkSession, path: String): DataFrame =
-    dataSchema(spark, path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None         => spark.read.parquet(path)
+    footer(spark, path) match {
+      case Some(meta) =>
+        val schema = recorded(meta).getOrElse(converter(spark).convert(meta.getSchema))
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
     }
 }

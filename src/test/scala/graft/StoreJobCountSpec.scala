@@ -19,6 +19,9 @@ import graft.streaming.StreamingUpsert
   * way [[PlanShapeSpec]] pins plan shapes: a store read costs no job
   * before its action, and each store commit runs its plan once, with
   * no job spent on schema inference or on counting before the write.
+  * Opening the testdata tables ([[Tables.registerAll]], [[Tables.load]])
+  * goes through the same reader and is pinned at 0 jobs as well, for
+  * Spark-written and pyarrow-written (no Spark row metadata) tables.
   *
   * Counts repeat exactly for a fixed input with AQE on (each AQE query
   * stage is its own job, so a commit's count is its shuffle stages plus
@@ -65,6 +68,38 @@ class StoreJobCountSpec extends SparkSpec {
   }
 
   private def freshRoot() = Files.createTempDirectory("graft_jobs_").toString
+
+  /** The pyarrow-written testdata tables (see TESTDATA.md). */
+  private val pyarrowSf = "/root/testdata/sf0.01"
+
+  /** The 10 testdata table names as tiny Spark-written tables. */
+  private def sparkWrittenSf(): String = {
+    import spark.implicits._
+    val dir = freshRoot()
+    Tables.all.foreach { n =>
+      Seq((1L, n)).toDF("id", "name").coalesce(1).write.parquet(s"$dir/$n.parquet")
+    }
+    dir
+  }
+
+  for ((kind, dir) <- Seq("Spark-written" -> (() => sparkWrittenSf()),
+                          "pyarrow-written" -> (() => pyarrowSf))) {
+    test(s"registerAll on a fresh session launches no Spark job ($kind tables)") {
+      val sf = dir()
+      val s = spark.newSession()
+      val (_, jobs) = jobsOf(Tables.registerAll(s, sf))
+      assert(Tables.all.forall(n => s.table(n).schema.nonEmpty))
+      assert(jobs == 0, s"registerAll launched $jobs job(s)")
+    }
+  }
+
+  test("Tables.load launches no Spark job before its action") {
+    val s = spark.newSession()
+    val (loaded, jobs) = jobsOf(Tables.all.map(n => n -> Tables.load(s, pyarrowSf, n)).toMap)
+    assert(jobs == 0, s"Tables.load launched $jobs job(s)")
+    val (n, countJobs) = jobsOf(loaded("nation").count())
+    assert(n == 25 && countJobs > 0)
+  }
 
   private def raw(s: SparkSession, day: String, n: Int): DataFrame = {
     import s.implicits._

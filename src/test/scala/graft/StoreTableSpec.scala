@@ -13,10 +13,12 @@ import org.apache.spark.sql.types.DateType
 import graft.api.BoxOffice
 import graft.pipelines.{BoxOfficePipeline, StoreTable}
 
-/** The store-table reader ([[StoreTable]]) and the single-execution
-  * commits built on it: the footer schema must equal what Spark's own
-  * inference gives, files without Spark's row metadata must still read,
-  * and the observed commit counts must equal the rows on disk.
+/** The parquet table reader ([[StoreTable]]) and the single-execution
+  * commits built on it: the driver-side footer schema must equal what
+  * Spark's own inference gives — for Spark-written tables, partitioned
+  * ones included, and for files without Spark's row metadata (the
+  * pyarrow-written testdata) — and the observed commit counts must equal
+  * the rows on disk.
   */
 class StoreTableSpec extends SparkSpec {
   import spark.implicits._
@@ -41,7 +43,7 @@ class StoreTableSpec extends SparkSpec {
     assert(read.orderBy("movie_cd").collect().toSeq == inferred.orderBy("movie_cd").collect().toSeq)
   }
 
-  test("a parquet file without Spark's row metadata falls back to inference") {
+  test("a parquet file without Spark's row metadata reads with inference's schema") {
     val dir = freshRoot()
     val schema = MessageTypeParser.parseMessageType(
       "message t { required int64 id; optional binary name (UTF8); }")
@@ -55,6 +57,38 @@ class StoreTableSpec extends SparkSpec {
     val read = StoreTable.read(spark, s"$dir/t")
     assert(read.schema == spark.read.parquet(s"$dir/t").schema)
     assert(read.orderBy("id").as[(Long, String)].collect().toSeq == Seq(1L -> "a", 2L -> "b"))
+  }
+
+  test("every pyarrow-written testdata table reads with inference's schema") {
+    val sf = "/root/testdata/sf0.01"
+    Tables.all.foreach { n =>
+      val path = s"$sf/$n.parquet"
+      assert(StoreTable.dataSchema(spark, path).isEmpty, s"$n: premise, no Spark row metadata")
+      assert(StoreTable.read(spark, path).schema == spark.read.parquet(path).schema, n)
+    }
+  }
+
+  test("a Spark-written table with two partition columns and nested types reads with inference's schema") {
+    val path = s"${freshRoot()}/t"
+    Seq((1L, "a", 2024, "x"), (2L, "b", 2025, "y"))
+      .toDF("id", "name", "year", "region")
+      .select(col("id"), struct(col("name"), col("id").as("n")).as("s"),
+        array(col("name")).as("tags"), map(col("name"), col("id")).as("m"),
+        col("year"), col("region"))
+      .write.partitionBy("year", "region").parquet(path)
+    val inferred = spark.read.parquet(path)
+    val read = StoreTable.read(spark, path)
+    assert(read.schema == inferred.schema)
+    assert(read.columns.takeRight(2).toSeq == Seq("year", "region"))
+    assert(read.orderBy("id").collect().toSeq == inferred.orderBy("id").collect().toSeq)
+  }
+
+  test("a table with no data file fails like inference does") {
+    val path = s"${freshRoot()}/empty"
+    new java.io.File(path).mkdirs()
+    val viaReader = intercept[org.apache.spark.sql.AnalysisException](StoreTable.read(spark, path))
+    val viaSpark = intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(path))
+    assert(viaReader.getCondition == viaSpark.getCondition)
   }
 
   test("ingestDaily of a batch that filters to zero rows leaves a fresh store without a table") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Guards the round-15 `registerAll` view-registration memo: skipping the
   * per-call `createOrReplaceTempView`×10 is only sound if the memo
   * re-registers exactly when the underlying plans can differ — a table
-  * file overwritten in place (new mtime → new scan-plan instance) or a
+  * file overwritten in place (new mtime → new [[Tables.scanKey]]) or a
   * different sf dir. A memo bug here would silently serve STALE views to
   * every SQL-surface query, so each invalidation edge is pinned
   * behaviorally (what the view reads), not structurally.
@@ -37,9 +37,9 @@ class TablesRegisterMemoSpec extends SparkSpec {
     // repeated call (the memoized fast path) still serves the live view
     Tables.registerAll(spark, dir)
     assert(viewTag() == "gen1")
-    // overwrite the table IN PLACE: the scan memo keys on (mtime, length,
+    // overwrite the table IN PLACE: the view memo keys on (mtime, length,
     // newest-child mtime, child count), so the new file set must
-    // invalidate both the plan and the registration. A fixed sleep was
+    // invalidate the registration. A fixed sleep was
     // flaky on coarse-mtime filesystems (round-15 advice: equal-length
     // gen1/gen2 rewrites can land on the SAME observed key within mtime
     // resolution) — instead poll the OBSERVED key inputs and rewrite

@@ -85,11 +85,12 @@ class TablesSchemaSpec extends SparkSpec {
 
   /** A file whose footer carries a real TIMESTAMP(NANOS) annotation — the
     * pre-round-6 testdata layout. Spark cannot WRITE this type, so the
-    * fixture goes through parquet-mr's example writer directly; reading it
-    * requires `spark.sql.legacy.parquet.nanosAsLong=true` or the
-    * footer-schema conversion throws `Illegal Parquet type: INT64
+    * fixture goes through parquet-mr's example writer directly. INFERRING
+    * its schema requires `spark.sql.legacy.parquet.nanosAsLong=true` or
+    * the footer-schema conversion throws `Illegal Parquet type: INT64
     * (TIMESTAMP(NANOS,...))` — exactly the conf a fresh
-    * `spark.newSession()` would lose (round-7 advice #1).
+    * `spark.newSession()` would lose (round-7 advice #1); [[Tables.load]]
+    * converts the footer itself and needs no conf.
     */
   private def writeNanosAnnotatedFixture(): String = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -128,12 +129,26 @@ class TablesSchemaSpec extends SparkSpec {
       spark.read.parquet(s"$dir/events.parquet").schema
     }
     assert(thrown.getMessage.contains("TIMESTAMP(NANOS"), thrown.getMessage)
-    assert(latestViaW1Chain(dir) == expected) // loadRaw re-sets the conf
+    assert(latestViaW1Chain(dir) == expected) // the reader converts the footer itself
+  }
+
+  test("a TIMESTAMP(NANOS) table reads with nanosAsLong inference's schema, session conf untouched") {
+    val dir = writeNanosAnnotatedFixture()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(key, "false")
+    val loaded = Tables.load(spark, dir, "events")
+    assert(spark.conf.get(key) == "false", s"Tables.load changed $key")
+    spark.conf.set(key, "true")
+    val inferred =
+      try spark.read.parquet(s"$dir/events.parquet").schema
+      finally spark.conf.set(key, "false")
+    assert(Tables.loadRaw(spark, dir, "events").schema == inferred)
+    assert(loaded.schema == inferred) // Long nanos: normalizeEventTs passes it through
   }
 
   test("streaming drain inherits nanosAsLong for TIMESTAMP(NANOS) sources") {
     val dir = writeNanosAnnotatedFixture()
-    val raw = Tables.loadRaw(spark, dir, "events") // sets the conf caller-side
+    val raw = Tables.loadRaw(spark, dir, "events")
     assert(raw.schema("ts").dataType == LongType) // premise: nanos read as Long
     val out = streaming.StreamDrain.drain(spark, s"$dir/events.parquet",
         raw.schema, "ts_nanos_drain_spec", "update") { src =>
