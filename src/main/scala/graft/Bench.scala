@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{avg, col}
+
+import graft.operators.{OpCache, Similarity}
 
 /** Bench main — driver contract: one JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -8,169 +13,87 @@ import org.apache.spark.sql.SparkSession
   * Each query is fully materialized through the noop sink (forces every
   * operator, unlike count() which lets Catalyst prune aggregates away).
   * One warm-up query runs first so JIT/classloading lands outside the
-  * measured section; the session uses the scale-appropriate shuffle
-  * fan-out and AQE (coalescing + skew handling), matching how the plans
-  * are meant to run on a real cluster.
+  * measured section. The session is [[Sessions.forRun]]: one shuffle
+  * partition per core, and Spark's default AQE (coalescing + skew
+  * handling), matching how the plans are meant to run on a real cluster.
   */
 object Bench {
 
-  /** Trained-IVF-PQ recall@10 against brute-force exact cosine over the
-    * sf dir's embeddings (round-8 verdict #6): the trained stack's
-    * QUALITY as a bench-reported number, measured on the bench corpus
-    * rather than a toy spec fixture. Deterministic given the data (IVF
-    * centroids are the first nCells vectors, PQ k-means init is
-    * md5-seeded), so the value is comparable round over round. The 200
-    * lowest vec_ids are the query set; recall = mean per-query hit
-    * fraction vs exact top-10. SimilaritySpec pins the ≥0.65 floor on
-    * sf0.1; here it lands in the bench JSON for trend tracking.
-    *
-    * The operating point is the measured knee on this corpus (r9 sweep;
-    * the embeddings are near-ISOTROPIC, ANN's adversarial case — no
-    * cluster structure for IVF to exploit and thin cosine margins that
-    * ADC noise swamps): plain ADC recall@10 saturates ~0.3–0.5 across
-    * m/ksub/nProbe, the exact rerank is what buys the rest —
-    * m=16/ksub=16/nProbe=8/rerank=100 measures 0.72, and doubling any
-    * single knob from there pays ≥2× compute for ≤0.05 more.
+  /** IVF-PQ recall@10 against brute-force exact cosine over the sf
+    * dir's embeddings (round-8 verdict #6): the ANN stack's QUALITY as a
+    * bench-reported number, measured on the bench corpus rather than a
+    * toy spec fixture. The 200 lowest vec_ids are the query set; recall
+    * = mean per-query hit fraction vs exact top-10. Deterministic given
+    * the data (IVF centroids are the first nCells vectors, PQ k-means
+    * init is md5-seeded), so the value is comparable round over round.
+    * `shortlist(corpus, queries)` builds the approximate top-10;
+    * `exactTopK` is the shared exact frame when the caller already has
+    * it. SimilaritySpec pins floors on sf0.1.
     */
-  def ivfPqRecallAt10(spark: SparkSession, sfDir: String,
-                      nCells: Int = 16, nProbe: Int = 8,
-                      m: Int = 16, ksub: Int = 16, rerank: Int = 100,
-                      exactTopK: Option[org.apache.spark.sql.DataFrame] = None): Double = {
-    import org.apache.spark.sql.functions._
+  def recallAt10(spark: SparkSession, sfDir: String,
+                 shortlist: (DataFrame, DataFrame) => DataFrame,
+                 exactTopK: Option[DataFrame] = None): Double = {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val queries = emb.filter(col("vec_id") < 200)
-    val exact = exactTopK.getOrElse(graft.operators.Similarity.bruteForceTopK(
-      queries, emb, "vec_id", "embedding", k = 10))
-    val approx = graft.operators.Similarity.ivfPqRerankTopK(
-      emb, queries, "vec_id", "embedding",
-      dim = 64, nCells = nCells, m = m, ksub = ksub, iters = 5, k = 10,
-      nProbe = nProbe, rerank = rerank)
-    val r = graft.operators.Similarity.recallAtK(approx, exact)
+    val exact = exactTopK.getOrElse(
+      Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", k = 10))
+    val r = Similarity.recallAtK(shortlist(emb, queries), exact)
       .agg(avg(col("recall"))).head().getDouble(0)
-    graft.operators.OpCache.clear()
+    OpCache.clear()
     r
   }
 
-  /** [[ivfPqRecallAt10]] with the shortlist built by the RESIDUAL ADC
-    * ([[graft.operators.Similarity.ivfPqResidualRerankTopK]]) — same
-    * rerank budget over a higher-fidelity shortlist.
+  /** The operating point of every recall field: the measured knee on
+    * this corpus (r9 sweep; the embeddings are near-ISOTROPIC, ANN's
+    * adversarial case — no cluster structure for IVF to exploit and
+    * thin cosine margins that ADC noise swamps). Plain ADC recall@10
+    * saturates ~0.3–0.5 across m/ksub/nProbe and the exact rerank buys
+    * the rest: m=16/ksub=16/nProbe=8/rerank=100 measures 0.72, and
+    * doubling any single knob from there pays ≥2× compute for ≤0.05
+    * more.
     */
-  def ivfPqResidualRecallAt10(spark: SparkSession, sfDir: String,
-                              nCells: Int = 16, nProbe: Int = 8,
-                              m: Int = 16, ksub: Int = 16,
-                              rerank: Int = 100,
-                              exactTopK: Option[org.apache.spark.sql.DataFrame] = None): Double = {
-    import org.apache.spark.sql.functions._
-    val emb = Tables.load(spark, sfDir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 200)
-    val exact = exactTopK.getOrElse(graft.operators.Similarity.bruteForceTopK(
-      queries, emb, "vec_id", "embedding", k = 10))
-    val approx = graft.operators.Similarity.ivfPqResidualRerankTopK(
-      emb, queries, "vec_id", "embedding",
-      dim = 64, nCells = nCells, m = m, ksub = ksub, iters = 5, k = 10,
-      nProbe = nProbe, rerank = rerank)
-    val r = graft.operators.Similarity.recallAtK(approx, exact)
-      .agg(avg(col("recall"))).head().getDouble(0)
-    graft.operators.OpCache.clear()
-    r
-  }
+  private val Dim = 64
+  private val NCells = 16
+  private val NProbe = 8
+  private val M = 16
+  private val KSub = 16
+  private val Iters = 5
+  private val Rerank = 100
 
-  /** ADC-ONLY recall@10 (no exact rerank) — the shortlist quality the
-    * rerank stage builds from, plain vs residual encoding at the SAME
-    * m/ksub/nProbe (round-9 verdict #2). `residual = true` routes
-    * through [[graft.operators.Similarity.ivfPqResidualTopK]] (trained
-    * coarse k-means, residual codebooks, exact cell term, reconstruction-
-    * norm correction); `false` is the plain [[ivfPqTopK]] band.
+  /** The bench JSON's six recall fields, in emission order, each with
+    * the shortlist it measures:
+    *   - `ivfpq_recall_at10`: plain ADC shortlist + exact rerank;
+    *   - `ivfpq_residual_recall_at10`: residual ADC shortlist + rerank;
+    *   - `ivfpq_adc_recall_at10` / `ivfpq_adc_residual_recall_at10`:
+    *     ADC only, plain vs residual encoding (round-9 verdict #2) —
+    *     the shortlist quality the rerank builds from;
+    *   - `ivfpq_adc_opq_recall_at10` / `ivfpq_opq_recall_at10`: the
+    *     OPQ-rotated residual ADC, alone and reranked (round-10 verdict
+    *     #3), read directly against the residual fields, win or lose.
     */
-  def ivfPqAdcRecallAt10(spark: SparkSession, sfDir: String, residual: Boolean,
-                         nCells: Int = 16, nProbe: Int = 8,
-                         m: Int = 16, ksub: Int = 16,
-                         exactTopK: Option[org.apache.spark.sql.DataFrame] = None): Double = {
-    import org.apache.spark.sql.functions._
-    val emb = Tables.load(spark, sfDir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 200)
-    val exact = exactTopK.getOrElse(graft.operators.Similarity.bruteForceTopK(
-      queries, emb, "vec_id", "embedding", k = 10))
-    val approx =
-      if (residual)
-        graft.operators.Similarity.ivfPqResidualTopK(
-          emb, queries, "vec_id", "embedding",
-          dim = 64, nCells = nCells, m = m, ksub = ksub, iters = 5, k = 10,
-          nProbe = nProbe)
-      else
-        graft.operators.Similarity.ivfPqTopK(
-          emb, queries, "vec_id", "embedding",
-          dim = 64, nCells = nCells, m = m, ksub = ksub, iters = 5, k = 10,
-          nProbe = nProbe)
-    val r = graft.operators.Similarity.recallAtK(approx, exact)
-      .agg(avg(col("recall"))).head().getDouble(0)
-    graft.operators.OpCache.clear()
-    r
-  }
-
-  /** OPQ-rotated residual ADC recall@10 (round-10 verdict #3): the one
-    * standard lever untried at the 128-bit budget — an orthogonal
-    * eigenvalue-allocation rotation before the subspace split
-    * ([[graft.operators.Similarity.ivfPqResidualOpqTopK]]), measured at
-    * the SAME pinned operating point as the other recall fields so the
-    * delta vs `ivfpq_adc_residual_recall_at10` is read directly off the
-    * bench JSON, win or lose.
-    */
-  def opqAdcRecallAt10(spark: SparkSession, sfDir: String,
-                       nCells: Int = 16, nProbe: Int = 8,
-                       m: Int = 16, ksub: Int = 16,
-                       exactTopK: Option[org.apache.spark.sql.DataFrame] = None): Double = {
-    import org.apache.spark.sql.functions._
-    val emb = Tables.load(spark, sfDir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 200)
-    val exact = exactTopK.getOrElse(graft.operators.Similarity.bruteForceTopK(
-      queries, emb, "vec_id", "embedding", k = 10))
-    val approx = graft.operators.Similarity.ivfPqResidualOpqTopK(
-      emb, queries, "vec_id", "embedding",
-      dim = 64, nCells = nCells, m = m, ksub = ksub, iters = 5, k = 10,
-      nProbe = nProbe)
-    val r = graft.operators.Similarity.recallAtK(approx, exact)
-      .agg(avg(col("recall"))).head().getDouble(0)
-    graft.operators.OpCache.clear()
-    r
-  }
-
-  /** [[opqAdcRecallAt10]]'s rerank composition — OPQ-rotated shortlist,
-    * exact-cosine rerank at the same rerank=100 budget as
-    * [[ivfPqResidualRecallAt10]]. */
-  def opqRerankRecallAt10(spark: SparkSession, sfDir: String,
-                          nCells: Int = 16, nProbe: Int = 8,
-                          m: Int = 16, ksub: Int = 16,
-                          rerank: Int = 100,
-                          exactTopK: Option[org.apache.spark.sql.DataFrame] = None): Double = {
-    import org.apache.spark.sql.functions._
-    val emb = Tables.load(spark, sfDir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 200)
-    val exact = exactTopK.getOrElse(graft.operators.Similarity.bruteForceTopK(
-      queries, emb, "vec_id", "embedding", k = 10))
-    val approx = graft.operators.Similarity.ivfPqResidualOpqRerankTopK(
-      emb, queries, "vec_id", "embedding",
-      dim = 64, nCells = nCells, m = m, ksub = ksub, iters = 5, k = 10,
-      nProbe = nProbe, rerank = rerank)
-    val r = graft.operators.Similarity.recallAtK(approx, exact)
-      .agg(avg(col("recall"))).head().getDouble(0)
-    graft.operators.OpCache.clear()
-    r
-  }
+  val recallShortlists: ListMap[String, (DataFrame, DataFrame) => DataFrame] = ListMap(
+    "ivfpq_recall_at10" -> ((emb, q) => Similarity.ivfPqRerankTopK(
+      emb, q, "vec_id", "embedding", Dim, NCells, M, KSub, Iters, k = 10,
+      nProbe = NProbe, rerank = Rerank)),
+    "ivfpq_residual_recall_at10" -> ((emb, q) => Similarity.ivfPqResidualRerankTopK(
+      emb, q, "vec_id", "embedding", Dim, NCells, M, KSub, Iters, k = 10,
+      nProbe = NProbe, rerank = Rerank)),
+    "ivfpq_adc_recall_at10" -> ((emb, q) => Similarity.ivfPqTopK(
+      emb, q, "vec_id", "embedding", Dim, NCells, M, KSub, Iters, k = 10,
+      nProbe = NProbe)),
+    "ivfpq_adc_residual_recall_at10" -> ((emb, q) => Similarity.ivfPqResidualTopK(
+      emb, q, "vec_id", "embedding", Dim, NCells, M, KSub, Iters, k = 10,
+      nProbe = NProbe)),
+    "ivfpq_adc_opq_recall_at10" -> ((emb, q) => Similarity.ivfPqResidualOpqTopK(
+      emb, q, "vec_id", "embedding", Dim, NCells, M, KSub, Iters, k = 10,
+      nProbe = NProbe)),
+    "ivfpq_opq_recall_at10" -> ((emb, q) => Similarity.ivfPqResidualOpqRerankTopK(
+      emb, q, "vec_id", "embedding", Dim, NCells, M, KSub, Iters, k = 10,
+      nProbe = NProbe, rerank = Rerank)))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.forRun("graft-bench")
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()
@@ -180,7 +103,7 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         return -1.0
       }
-      graft.operators.OpCache.clear() // release operator-internal persists
+      OpCache.clear() // release operator-internal persists
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -257,34 +180,23 @@ object Bench {
     // way — each metric's approx path is untouched). A failure in the
     // shared precompute falls back to per-metric recomputation so the
     // per-metric error isolation of `quality` is preserved.
-    val sharedExact: Option[org.apache.spark.sql.DataFrame] =
+    val sharedExact: Option[DataFrame] =
       if (only.nonEmpty) None
       else try {
-        import org.apache.spark.sql.functions.col
         val emb = Tables.load(spark, sfDir, "embeddings")
-        val ex = graft.operators.Similarity.bruteForceTopK(
+        val ex = Similarity.bruteForceTopK(
           emb.filter(col("vec_id") < 200), emb, "vec_id", "embedding", k = 10)
           .persist()
         ex.count() // materialize before OpCache.clear drops the inner persist
-        graft.operators.OpCache.clear()
+        OpCache.clear()
         Some(ex)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] shared exact top-k failed: ${e.getMessage}")
         None
       }
-    val recalls = Seq(
-      quality("ivfpq_recall_at10")(
-        ivfPqRecallAt10(spark, sfDir, exactTopK = sharedExact)),
-      quality("ivfpq_residual_recall_at10")(
-        ivfPqResidualRecallAt10(spark, sfDir, exactTopK = sharedExact)),
-      quality("ivfpq_adc_recall_at10")(
-        ivfPqAdcRecallAt10(spark, sfDir, residual = false, exactTopK = sharedExact)),
-      quality("ivfpq_adc_residual_recall_at10")(
-        ivfPqAdcRecallAt10(spark, sfDir, residual = true, exactTopK = sharedExact)),
-      quality("ivfpq_adc_opq_recall_at10")(
-        opqAdcRecallAt10(spark, sfDir, exactTopK = sharedExact)),
-      quality("ivfpq_opq_recall_at10")(
-        opqRerankRecallAt10(spark, sfDir, exactTopK = sharedExact))).flatten
+    val recalls = recallShortlists.toSeq.flatMap { case (name, shortlist) =>
+      quality(name)(recallAt10(spark, sfDir, shortlist, sharedExact))
+    }
     sharedExact.foreach(_.unpersist(blocking = false))
 
     var best = Map.empty[String, Double]

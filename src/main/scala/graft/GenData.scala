@@ -50,14 +50,7 @@ object GenData {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.forRun("graft-gendata")
     if (args.headOption.contains("--aniso")) {
       val outDir = if (args.length > 1) args(1) else "/root/repo/testdata/aniso"
       val n = if (args.length > 2) args(2).toLong else 2000L
@@ -99,8 +92,9 @@ object GenData {
     * Centers / reflection vectors / spectrum are driver-side constants
     * from a fixed-seed RNG (embedded as literals); per-vector noise is
     * the usual xxhash64 Box–Muller — fully deterministic, re-runnable.
-    * Written as `embeddings.parquet` in its own dir so RecallMain and
-    * every Similarity operator read it unchanged.
+    * Written as `embeddings.parquet` in its own dir so the bench's recall
+    * fields ([[Bench.recallAt10]]) and every Similarity operator read it
+    * unchanged.
     */
   def anisoEmbeddings(spark: SparkSession, outDir: String, n: Long): Unit = {
     val dim = 64

@@ -1,10 +1,7 @@
 package graft
 object SmokeMain {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.forRun("graft-smoke")
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")
     spark.stop()

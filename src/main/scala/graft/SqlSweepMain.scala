@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Executes a JSONL file of {"name":…,"sql":…} cases verbatim over the
   * registered testdata views and dumps one parquet dir per case — the
   * Spark half of `tools/sqlfuzz.py --sweep SEED`, which differential-
@@ -14,14 +12,7 @@ import org.apache.spark.sql.SparkSession
 object SqlSweepMain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, casesPath, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.forRun("graft-sqlsweep")
     new java.io.File(outDir).mkdirs()
     Tables.registerAll(spark, sfDir)
     val cases = spark.read.json(casesPath)

@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.forRun("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Testdata-schema smoke (round-6 verdict #2): the round-6 regeneration
     // silently flipped events.ts from TIMESTAMP(NANOS)/Long to
@@ -67,6 +59,7 @@ object Verify {
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        e.printStackTrace()
         errors += name -> s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
       }
       finally graft.operators.OpCache.clear() // release operator-internal persists

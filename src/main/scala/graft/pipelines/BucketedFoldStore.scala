@@ -58,7 +58,8 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * min(|delta|, numBuckets) buckets and degrades toward O(state).
   * `keys` may be any subset of the state's key columns — it only
   * drives bucket placement; `merge` still sees whole rows
-  * (`graft.FoldDecadeMain` measures the O(delta)-vs-O(state) decade).
+  * (`tools/fold_decade_r15.json` records the O(delta)-vs-O(state)
+  * decade).
   *
   * CONTRACT on `merge`: it must be KEY-LOCAL on the fold keys — the
   * output for a key depends only on input rows of that key (true of

@@ -48,7 +48,7 @@ object StreamDrain {
     * machinery, and a fresh `newSession()` per drain re-initializes a
     * SessionState (conf, catalog, parser, analyzer rule pipeline) that
     * is identical for every drain sharing one conf set. Sessions are
-    * cached per (context, conf-set, inherited-conf) key — isolation
+    * cached per (context, time zone, conf-set) key — isolation
     * between DIFFERENT conf sets is preserved exactly as before (a
     * RocksDB drain never shares a session with a default-provider
     * drain), and reuse within a set is safe because each drain's
@@ -83,19 +83,15 @@ object StreamDrain {
   private def sessionFor(spark: SparkSession,
                          confs: Map[String, String]): SparkSession = {
     val tz = spark.conf.get("spark.sql.session.timeZone")
-    val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
     val key = (System.identityHashCode(spark.sparkContext),
-      tz, nanos, confs.toSeq.sorted).toString
+      tz, confs.toSeq.sorted).toString
     sessions.computeIfAbsent(key, _ => {
       val ss = spark.newSession()
       // a fresh SessionState initializes from builder-time SparkConf,
-      // NOT the caller's runtime `conf.set` overrides — re-pin the two
-      // runtime confs the oracle agreement depends on (UTC timestamp
-      // arithmetic; the events-nanos schema contract, propagated so any
-      // future inferring path sees the caller's contract), then the
-      // drain-local overrides
+      // NOT the caller's runtime `conf.set` overrides — re-pin the
+      // session time zone (the oracle agreement depends on UTC timestamp
+      // arithmetic), then the drain-local overrides
       ss.conf.set("spark.sql.session.timeZone", tz)
-      ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", nanos)
       confs.foreach { case (k, v) => ss.conf.set(k, v) }
       ss
     })

@@ -20,9 +20,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     exploding quadratically — the standard guard in production LSH
   *     dedup; the cap is recorded in the emitted `truncated` flag so
   *     downstream can route those docs to a batch pass.
-  *   - `NoTimeout` here (exact within the run); a TTL variant would swap
-  *     in ProcessingTimeTimeout the same way StreamingDedup's
-  *     watermarked variant bounds exact-dedup state.
+  *   - `NoTimeout` here (exact within the run);
+  *     [[candidatePairsExpiring]] bounds state with an event-time ttl.
   *
   * Candidate pairs are LSH candidates, not verified near-dups: the
   * verification (exact Jaccard on shingle arrays) happens downstream on
@@ -165,73 +164,15 @@ object StreamingNearDup {
   }
 
   /** Bucket state plus its stored horizon deadline (max member event
-    * time + ttl). Shared by BOTH ttl variants so late-arrival semantics
-    * stay consistent: the lazy form checks the deadline against the
-    * watermark on next access; the eager form registers it as the
-    * event-time timeout — in each case grown monotonically (math.max),
-    * never overwritten, so a late-but-admitted arrival cannot shrink
-    * the horizon an earlier member established.
+    * time + ttl) for [[candidatePairsExpiring]], which registers the
+    * deadline as the event-time timeout. The deadline only grows
+    * (math.max), never overwritten, so a late-but-admitted arrival cannot
+    * shrink the horizon an earlier member established. The name is
+    * historical: a lazy-expiry variant that shared it lost to this form
+    * (SCALE.md round 12).
     */
   case class BucketStateLazy(members: List[Long], marked: List[Long],
                              deadline: Long)
-
-  /** [[candidatePairsExpiring]] with LAZY per-key expiry (round-11
-    * verdict #4 experiment): no timeout is ever registered — the stored
-    * deadline (max member ts + ttl) is checked against the CURRENT
-    * watermark when the bucket is next touched, and an expired bucket is
-    * reset before the arrivals fold. This removes the per-batch eviction
-    * timeout-scan that the three-provider measurement showed dominates
-    * the TTL drain's per-batch cost (SCALE.md round-11) — at two prices,
-    * both deliberate and documented:
-    *
-    *   1. SEMANTICS ARE A STRICTLY TIGHTER HORIZON, not identical: the
-    *      eager form expires a bucket only when a DATALESS micro-batch
-    *      observes the watermark past its deadline, so a bucket whose
-    *      deadline the watermark overtook mid-gap still pairs its old
-    *      members with the next arrival if no dataless batch intervened.
-    *      The lazy check uses the (newer) watermark of the ARRIVAL batch
-    *      itself, so exactly those grace-period pairs are dropped. Both
-    *      are consistent "near-dups within ~ttl" contracts; they differ
-    *      only in that grace band, which is why this is a VARIANT with
-    *      its own spec-pinned expected output, not a swap-in for the
-    *      oracle-gated eager query.
-    *   2. UNTOUCHED state lingers: a bucket that never receives another
-    *      arrival is never removed, so state cardinality is
-    *      distinct-buckets-ever within a run (the eager form's is
-    *      distinct-buckets-within-horizon). An always-on deployment
-    *      would pair this with periodic checkpoint compaction or a
-    *      coarse processing-time sweep.
-    *
-    * `graft.StreamCostMain` measures both variants side by side; the
-    * decision (win or lose) is recorded in SCALE.md round-12.
-    */
-  def candidatePairsExpiringLazy(spark: SparkSession, bandedDocs: DataFrame,
-                                 ttl: java.time.Duration,
-                                 maxBucket: Int = 64): Dataset[CandidatePair] = {
-    import spark.implicits._
-    bandedDocs.as[BandedDocTs]
-      .groupByKey(d => (d.band, d.key))
-      .flatMapGroupsWithState[BucketStateLazy, CandidatePair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((band, _), docs, state: GroupState[BucketStateLazy]) =>
-          val ds = docs.toSeq
-          val wm = state.getCurrentWatermarkMs()
-          val alive = state.getOption.filter(s => wm <= s.deadline)
-          val prior = alive.map(s => BucketState(s.members, s.marked))
-            .getOrElse(BucketState(Nil, Nil)) // absent or lazily expired
-          val (st, out) = foldArrivals(band, ds.iterator.map(_.doc_id),
-            prior, maxBucket)
-          // deadline = max member event time + ttl — a LATE (but
-          // watermark-admitted) arrival must not SHRINK a surviving
-          // bucket's horizon below what an earlier member established
-          // (review find: the overwrite form silently tightened it)
-          val maxTs = ds.iterator.map(_.ts.getTime).max
-          val deadline = math.max(maxTs + ttl.toMillis,
-            alive.map(_.deadline).getOrElse(Long.MinValue))
-          state.update(BucketStateLazy(st.members, st.marked, deadline))
-          out.iterator
-      }
-  }
 
   /** [[candidatePairs]] with an EVENT-TIME ttl — the state bound an
     * always-on stream needs: without it bucket-key cardinality grows
@@ -271,10 +212,8 @@ object StreamingNearDup {
                 .getOrElse(BucketState(Nil, Nil)), maxBucket)
             // deadline = max member event time + ttl, carried in state so
             // a LATE (but watermark-admitted) arrival cannot SHRINK the
-            // horizon an earlier member established — the same math.max
-            // guard the lazy variant applies (review find: the overwrite
-            // form silently tightened it), keeping the two variants'
-            // late-arrival semantics consistent
+            // horizon an earlier member established (review find: the
+            // overwrite form silently tightened it)
             val maxTs = ds.iterator.map(_.ts.getTime).max
             val deadline = math.max(maxTs + ttl.toMillis,
               prior.map(_.deadline).getOrElse(Long.MinValue))

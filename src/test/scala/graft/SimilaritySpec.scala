@@ -655,7 +655,8 @@ class SimilaritySpec extends SparkSpec {
     // scaladoc and the bench JSON's four recall fields.
     val dir = "/root/testdata/sf0.1"
     assume(new java.io.File(s"$dir/embeddings.parquet").exists(), s"$dir absent")
-    val r = Bench.ivfPqAdcRecallAt10(spark, dir, residual = true)
+    val r = Bench.recallAt10(spark, dir,
+      Bench.recallShortlists("ivfpq_adc_residual_recall_at10"))
     assert(r >= 0.30, s"residual ADC recall@10 dropped to $r")
   }
 
@@ -670,7 +671,7 @@ class SimilaritySpec extends SparkSpec {
     // only against a testdata regeneration, not run-to-run noise.
     val dir = "/root/testdata/sf0.1"
     assume(new java.io.File(s"$dir/embeddings.parquet").exists(), s"$dir absent")
-    val r = Bench.ivfPqRecallAt10(spark, dir)
+    val r = Bench.recallAt10(spark, dir, Bench.recallShortlists("ivfpq_recall_at10"))
     assert(r >= 0.65, s"trained IVF-PQ rerank recall@10 dropped to $r")
   }
 

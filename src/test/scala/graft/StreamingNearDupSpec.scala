@@ -129,54 +129,7 @@ class StreamingNearDupSpec extends SparkSpec {
     input.addData((3L, ts(6 * 3600 + 100), base + " mu"))
     runPass()
     assert(got.isEmpty, s"expired bucket still paired: $got")
-  }
-
-  test("LAZY-expiry ttl variant: pairs within the horizon, an overtaken bucket " +
-      "resets on next access and repopulates (round-11 verdict #4 experiment)") {
-    implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ttl_lz_").toString
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val bandedStream = StreamingNearDup.banded(
-        input.toDS().toDF("doc_id", "ts", "text"), "doc_id", "text",
-        k = 3, numHashes = 16, numBands = 8, carryCols = Seq("ts"))
-      .withWatermark("ts", "0 seconds")
-    val got = scala.collection.mutable.ListBuffer[(Long, Long)]()
-    def runPass(): Unit = {
-      val q = StreamingNearDup.candidatePairsExpiringLazy(spark, bandedStream,
-          ttl = java.time.Duration.ofHours(1))
-        .writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[StreamingNearDup.CandidatePair],
-           _: Long) =>
-            val rows = batch.collect().map(p => (p.id_a, p.id_b))
-            got.synchronized { got ++= rows }
-            ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-
-    // within the horizon (deadline 1000+3600 > watermark 1000): pairs,
-    // across a checkpoint restart — NO timeout was ever registered
-    input.addData((1L, ts(1000), base))
-    runPass()
-    input.addData((2L, ts(1300), base + " lambda"))
-    runPass()
-    assert(got.toSet == Set((1L, 2L)), s"got $got")
-
-    // an unrelated doc drags the watermark past the bucket's stored
-    // deadline; the expiry is only OBSERVED at the bucket's next access
-    input.addData((99L, ts(6 * 3600), "completely different words in this one here now"))
-    runPass()
-    got.clear()
-    input.addData((3L, ts(6 * 3600 + 100), base + " mu"))
-    runPass()
-    assert(got.isEmpty, s"overtaken bucket still paired: $got")
-    // ... and the reset bucket repopulated with the accessing doc: the
+    // ... and the emptied bucket repopulated with the arriving doc: the
     // next in-horizon arrival pairs with it
     input.addData((4L, ts(6 * 3600 + 200), base + " nu"))
     runPass()

@@ -146,8 +146,9 @@ class TablesSchemaSpec extends SparkSpec {
     assert(loaded.schema == inferred) // Long nanos: normalizeEventTs passes it through
   }
 
-  test("streaming drain inherits nanosAsLong for TIMESTAMP(NANOS) sources") {
+  test("streaming drain reads a TIMESTAMP(NANOS) source as Long") {
     val dir = writeNanosAnnotatedFixture()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
     val raw = Tables.loadRaw(spark, dir, "events")
     assert(raw.schema("ts").dataType == LongType) // premise: nanos read as Long
     val out = streaming.StreamDrain.drain(spark, s"$dir/events.parquet",
