@@ -93,6 +93,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional comma-separated filter for local iteration on a few
+    // queries (SPARK_GRAFT_ONLY=q_a,q_b); driver leaves it unset. An
+    // unknown name throws before any session starts, as in Verify.
+    val only = SparkEntry.selectOnly(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = Sessions.forRun("graft-bench")
 
     def run(name: String): Double = {
@@ -119,10 +123,6 @@ object Bench {
         System.err.println(s"[bench] warm skip $n: ${e.getMessage.take(120)}")
       }
     }
-    // optional comma-separated filter for local iteration on a few
-    // queries (SPARK_GRAFT_ONLY=q_a,q_b); driver leaves it unset
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     names.foreach { n =>

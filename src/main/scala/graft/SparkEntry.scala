@@ -212,6 +212,19 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     baseQueries ++ sqlFuzzQueries
 
+  /** The query names a comma-separated `SPARK_GRAFT_ONLY` value selects
+    * (`None` = unset: every query), for `Bench` and `Verify` alike. A
+    * name that is not a query throws: a typo must never shrink a run to
+    * a partial map or dump that reads as complete.
+    */
+  def selectOnly(spec: Option[String]): Option[Set[String]] =
+    spec.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).map { names =>
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
+      names
+    }
+
   private def baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // W1 — latest row per (user_id, event_type) by ts (dashboard.py:104-119).
@@ -2044,21 +2057,15 @@ object SparkEntry {
     }),
 
     // the nightly-state lifecycle: three ingestion batches folded into
-    // a DURABLE sketch store (read-merge-AtomicStore-swap per fold),
+    // a DURABLE sketch store (a one-bucket BucketedFoldStore),
     // quantiles read off the final stored table — must equal the
     // one-shot sketch over full history (oracle text shared VERBATIM
     // with q_quantile_sketch, the store-lifecycle analogue of the
     // in-memory merged face)
     "q_quantile_sketch_stored" -> ((s, dir) => {
       val root = s"$scratchRoot/graft_qsketch_store_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      // reset the WHOLE AtomicStore footprint, not just the table root:
-      // a stale _SUCCESS-stamped .staging from a prior crashed run would
-      // otherwise be promoted by recover() and seed the "fresh" replay
-      // with old counts (round-13 advice)
-      Seq(root, root + ".staging", root + ".old", root + ".lock").foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      }
+      val hp = new org.apache.hadoop.fs.Path(root)
+      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
       val o = t(s, dir, "orders")
       (0 to 2).foreach { i =>
         // fold batch 1 TWICE: the re-delivery must be a ledger no-op
@@ -2169,10 +2176,10 @@ object SparkEntry {
         .orderBy("event_type")
     }),
 
-    // streaming deployment of the same store: three feed files drained
-    // one per micro-batch (maxFilesPerTrigger=1), each folded into the
-    // durable store via foreachBatch + AtomicStore — the drained store,
-    // finalized, must hash-equal the SAME one-shot full-history oracle
+    // streaming deployment of the same store: three feed slices drained
+    // one per micro-batch, each folded into the durable store via
+    // foreachBatch + BucketedFoldStore — the drained store, finalized,
+    // must hash-equal the SAME one-shot full-history oracle
     "q_stream_incremental_agg" -> ((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("user_id"),
@@ -2197,7 +2204,7 @@ object SparkEntry {
         }
       }
       val store = s"$root/store"
-      val q = graft.streaming.StreamingIncrementalAgg.startBucketed(s,
+      val q = graft.streaming.StreamingIncrementalAgg.start(s,
         s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "8")
           .parquet(feed),
         store, Seq("event_type"), "value", "user_id", k = 32,

@@ -30,16 +30,10 @@ object Verify {
     // full — a subsequent full compare would silently bless those stale
     // outputs (round-3 review), so the filter is recorded in a marker
     // that tools/check.py surfaces as a warning; a full run clears it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name would otherwise run ZERO queries yet mark itself
+    // A typo'd name would otherwise run ZERO queries yet mark itself
     // fresh, and a scripted gate would go green with no coverage
-    // (round-4 review): fail loudly instead
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
+    // (round-4 review): selectOnly fails loudly instead.
+    val only = SparkEntry.selectOnly(sys.env.get("SPARK_GRAFT_ONLY"))
     val marker = Paths.get(s"$outDir/FILTERED_RUN")
     val succeeded = scala.collection.mutable.ArrayBuffer.empty[String]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]

@@ -47,6 +47,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * it is. Multi-writer MERGE on an object store without atomic rename
   * still wants a real transaction-log table format; this is the last
   * stop before that territory.
+  *
+  * Exactly-once folds (state plus a processed-batch ledger) are not
+  * this object's job: [[BucketedFoldStore]] commits them through a
+  * manifest and reuses only [[withLock]] from here.
   */
 object AtomicStore {
 
@@ -343,204 +347,6 @@ object AtomicStore {
       fs.exists(target) && hadLeftovers
     }
   }
-
-  /** Fold one ingestion batch into a store table EXACTLY ONCE per
-    * `batchId` — the processed-batch ledger the fold-style sinks
-    * (mergeable sketch / rollup stores) previously delegated to the
-    * caller (round-13 verdict #3: "a nightly pipeline retry
-    * double-counts").
-    *
-    * The ledger rides INSIDE the store table: one marker row per folded
-    * batch (every state column null, `__batch_id` set), so the single
-    * crash-safe [[overwrite]] swap commits the merged state AND the
-    * ledger entry atomically — there is no window where counts landed
-    * but the ledger did not, which two sibling tables could never
-    * guarantee without a transaction log. Under the writer lock: a
-    * `batchId` already in the ledger makes the whole fold a no-op
-    * (returns false); otherwise `merge(state, delta)` replaces the
-    * state rows and a marker for `batchId` joins the ledger (returns
-    * true). Readers use [[readState]] to see state rows only. The
-    * ledger grows one marker row per batch — 365/year against a
-    * state-table of any size — and [[compactLedger]] collapses old
-    * markers into a per-prefix watermark row when a higher-cadence
-    * caller (a 10-minute stream is 52k markers/year) needs the ledger
-    * bounded.
-    *
-    * COST (round-14 verdict): each fold's atomic swap REWRITES THE
-    * WHOLE STATE TABLE — the ledger is tiny, but the `overwrite` is
-    * O(state rows) per batch. In Spark jobs a fold is one driver collect
-    * of the matching ledger rows plus the one write of the swap (a
-    * re-delivered batch stops after the collect); the store's schema
-    * comes from a parquet footer ([[StoreTable.read]]), not from an
-    * inference job. That is the right trade for sketch- and
-    * rollup-sized state; a large keyed store folded frequently wants
-    * [[BucketedFoldStore.foldOnce]], which keeps the same exactly-once
-    * single-commit contract but rewrites only the hash buckets the
-    * delta touches — O(delta), not O(state).
-    *
-    * `delta` must not already contain a `__batch_id` column; `merge`
-    * receives (current state, delta) WITHOUT ledger columns and MUST
-    * return exactly `delta`'s column set (the marker row is built from
-    * `delta`'s schema and unioned by name with the merged state — a
-    * merge that renames, adds or drops a column is rejected loudly
-    * before any write, round-14 advice). A store written before the
-    * ledger existed (no `__batch_id` column) is adopted as all-state
-    * with an empty ledger on its first fold (round-14 advice: the
-    * legacy path used to fail with an AnalysisException).
-    */
-  def foldOnce(spark: SparkSession, storePath: String, batchId: String,
-               delta: DataFrame)
-              (merge: (DataFrame, DataFrame) => DataFrame): Boolean = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(!delta.columns.contains(LedgerCol),
-      s"foldOnce: delta already carries $LedgerCol")
-    require(!batchId.startsWith(WatermarkTag),
-      s"foldOnce: batch ids must not start with the reserved " +
-        s"watermark tag '$WatermarkTag' (got '$batchId')")
-    withLock(spark, storePath) {
-      recover(spark, storePath)
-      val tagged = delta.withColumn(LedgerCol, lit(null).cast("string"))
-      val base0 = BoxOfficePipeline.readOrEmpty(spark, storePath, tagged)
-      // legacy adoption: a pre-ledger store lacks the column — treat it
-      // as all-state with an empty ledger instead of failing
-      val base =
-        if (base0.columns.contains(LedgerCol)) base0
-        else base0.withColumn(LedgerCol, lit(null).cast("string"))
-      // one small driver collect over ledger rows only (exact hit +
-      // watermark rows), under the lock — the ledger is marker-sized
-      val ledgerHits = base
-        .filter(col(LedgerCol) === lit(batchId) ||
-          col(LedgerCol).startsWith(WatermarkTag))
-        .select(col(LedgerCol)).collect().map(_.getString(0))
-      val seen = ledgerHits.contains(batchId) || belowWatermark(batchId, ledgerHits)
-      if (!seen) {
-        val state = base.filter(col(LedgerCol).isNull).drop(LedgerCol)
-        val merged = merge(state, delta)
-        val expectedCols = tagged.columns.filter(_ != LedgerCol).sorted
-        require(merged.columns.sorted.sameElements(expectedCols),
-          "foldOnce: merge(state, delta) must return exactly delta's " +
-            s"column set ${expectedCols.mkString("(", ", ", ")")} — got " +
-            s"${merged.columns.sorted.mkString("(", ", ", ")")}; the " +
-            "ledger marker row is built from delta's schema, so a merge " +
-            "that renames/adds/drops columns cannot commit")
-        val newState = merged.withColumn(LedgerCol, lit(null).cast("string"))
-        val marker = spark.range(1).select(
-          tagged.schema.fields.filter(_.name != LedgerCol).map(f =>
-            lit(null).cast(f.dataType).as(f.name)).toSeq :+
-            lit(batchId).as(LedgerCol): _*)
-        val ledger = base.filter(col(LedgerCol).isNotNull)
-          .unionByName(marker)
-        overwrite(newState.unionByName(ledger), storePath)
-      }
-      !seen
-    }
-  }
-
-  /** Collapse old ledger markers into per-prefix WATERMARK rows so a
-    * high-cadence fold's ledger stays bounded (round-14 verdict #5: a
-    * 10-minute stream writes 52k markers/year through each swap).
-    *
-    * Markers shaped `<prefix>_<digits>` — the shape every streaming
-    * sink emits (`mb_17`, `night#mb_3`) — are grouped by prefix; all but
-    * the `retainLast` highest-numbered per prefix are replaced by ONE
-    * `wm#<prefix>#<maxCompacted>` row. [[foldOnce]] treats a batch id at
-    * or below its prefix's watermark as already-processed, so
-    * re-delivering a pre-watermark batch stays a no-op after compaction.
-    * Markers that don't parse are kept verbatim (never silently
-    * subsumed). One atomic swap, under the writer lock.
-    *
-    * CONTRACT: the watermark asserts every id `prefix_k` with
-    * k ≤ watermark was processed — sound only when ids below the
-    * retained tail were delivered contiguously, which Spark's
-    * monotonically increasing micro-batch ids guarantee. Don't compact
-    * a ledger whose numbered ids can arrive sparsely out of order.
-    *
-    * Returns the number of markers compacted away (0 = nothing to do,
-    * no rewrite performed).
-    */
-  def compactLedger(spark: SparkSession, storePath: String,
-                    retainLast: Int = 8): Int = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(retainLast >= 0, s"compactLedger: retainLast must be >= 0, got $retainLast")
-    withLock(spark, storePath) {
-      recover(spark, storePath)
-      val base = StoreTable.read(spark, storePath)
-      require(base.columns.contains(LedgerCol),
-        s"compactLedger: $storePath carries no $LedgerCol ledger column")
-      val markers = base.filter(col(LedgerCol).isNotNull)
-        .select(col(LedgerCol)).collect().map(_.getString(0))
-      val prior = markers.flatMap(parseWatermark).toMap
-      val (numbered, opaque) = markers.filterNot(_.startsWith(WatermarkTag))
-        .partition(m => parseSeq(m).isDefined)
-      val byPrefix = numbered.map(m => parseSeq(m).get).groupBy(_._1)
-      val compactable = byPrefix.map { case (p, ids) =>
-        p -> ids.map(_._2).sorted.dropRight(retainLast)
-      }.filter(_._2.nonEmpty)
-      if (compactable.isEmpty) 0
-      else {
-        val newWm = (prior.keySet ++ compactable.keySet).map { p =>
-          p -> math.max(prior.getOrElse(p, Long.MinValue),
-            compactable.get(p).map(_.max).getOrElse(Long.MinValue))
-        }.toMap
-        val keep = numbered.filter { m =>
-          val (p, n) = parseSeq(m).get
-          n > newWm.getOrElse(p, Long.MinValue)
-        } ++ opaque ++ newWm.map { case (p, n) => s"$WatermarkTag$p#$n" }
-        val stateFields = base.schema.fields.filter(_.name != LedgerCol)
-        val kept = spark.createDataset(keep.toSeq)(
-            org.apache.spark.sql.Encoders.STRING).toDF("__kept_id")
-          .select(stateFields.map(f =>
-            lit(null).cast(f.dataType).as(f.name)).toSeq :+
-            col("__kept_id").as(LedgerCol): _*)
-        val state = base.filter(col(LedgerCol).isNull)
-        overwrite(state.unionByName(kept), storePath)
-        compactable.values.map(_.length).sum
-      }
-    }
-  }
-
-  /** True iff `batchId` parses as `prefix_<n>` and some watermark row in
-    * `ledger` covers it (same prefix, n at or below the watermark).
-    */
-  private def belowWatermark(batchId: String, ledger: Array[String]): Boolean =
-    parseSeq(batchId).exists { case (p, n) =>
-      ledger.flatMap(parseWatermark).exists { case (wp, wn) => wp == p && n <= wn }
-    }
-
-  private val SeqId = "^(.*)_(\\d{1,18})$".r
-  private def parseSeq(id: String): Option[(String, Long)] = id match {
-    case SeqId(p, n) => Some((p, n.toLong))
-    case _           => None
-  }
-  private def parseWatermark(id: String): Option[(String, Long)] =
-    if (!id.startsWith(WatermarkTag)) None
-    else {
-      val body = id.stripPrefix(WatermarkTag)
-      val cut = body.lastIndexOf('#')
-      if (cut < 0) None
-      else scala.util.Try(body.substring(cut + 1).toLong).toOption
-        .map(n => (body.substring(0, cut), n))
-    }
-
-  /** The state rows of a [[foldOnce]] store: ledger markers stripped.
-    * A legacy pre-ledger store (no marker column) is returned as-is —
-    * it is all state.
-    */
-  def readState(spark: SparkSession, storePath: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val raw = StoreTable.read(spark, storePath)
-    if (raw.columns.contains(LedgerCol))
-      raw.filter(col(LedgerCol).isNull).drop(LedgerCol)
-    else raw
-  }
-
-  /** Ledger marker column of a [[foldOnce]] store. */
-  val LedgerCol = "__batch_id"
-
-  /** Reserved prefix of compacted-watermark ledger rows
-    * (`wm#<prefix>#<n>`); batch ids may not start with it.
-    */
-  val WatermarkTag = "wm#"
 
   private def stagingOf(p: Path) = new Path(p.getParent, p.getName + ".staging")
   private def oldOf(p: Path) = new Path(p.getParent, p.getName + ".old")

@@ -140,16 +140,18 @@ object BoxOfficePipeline {
       store => Upsert.upsert(store, fresh, keys, lit(0)))
 
   /** The ONE crash-safe read-merge-swap choreography every whole-table
-    * dimension rewrite goes through ([[upsertDim]], [[backfillDimRange]]):
-    * roll forward any interrupted swap, read the live store (empty with
-    * `fresh`'s schema when absent), apply `merge`, then durable staging +
-    * rename swap — a crash anywhere leaves a complete copy on disk, never
-    * the delete-then-write hole of a live overwrite. Returns the
+    * rewrite goes through ([[upsertDim]], [[backfillDimRange]] and the
+    * `StreamingUpsert` sinks): roll forward any interrupted swap, read
+    * the live store (empty with `fresh`'s schema when absent), apply
+    * `merge`, then durable staging + rename swap — a crash anywhere
+    * leaves a complete copy on disk, never the delete-then-write hole of
+    * a live overwrite. Returns the
     * post-swap row count, observed on the staging write: the merge runs
     * exactly once, with nothing cached.
     */
-  private def mergeAndSwap(spark: SparkSession, path: String, fresh: DataFrame,
-                           merge: DataFrame => DataFrame): Long =
+  private[graft] def mergeAndSwap(spark: SparkSession, path: String,
+                                  fresh: DataFrame,
+                                  merge: DataFrame => DataFrame): Long =
     // The lock spans the WHOLE read-merge-write: locking only the swap
     // would let two concurrent upserts read the same base generation and
     // the later swap silently drop the earlier writer's rows (round-9

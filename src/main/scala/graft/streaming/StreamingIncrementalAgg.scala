@@ -4,99 +4,54 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.operators.IncrementalAgg
+import graft.pipelines.BucketedFoldStore
 
 /** Continuously-maintained rollup store: each micro-batch is collapsed
   * to its mergeable per-key state ([[IncrementalAgg.aggregateBatch]])
-  * and folded into a durable store ([[IncrementalAgg.merge]] +
-  * crash-safe `AtomicStore` swap) — the streaming deployment of the
+  * and folded into a durable [[BucketedFoldStore]] with
+  * [[IncrementalAgg.merge]] — the streaming deployment of the
   * incremental materialized-view pattern, and the always-on form of the
-  * reference's append-then-re-derive dashboard rollups.
+  * reference's append-then-re-derive dashboard rollups. Read the store
+  * with `BucketedFoldStore.readState`.
   *
   * Why `foreachBatch` instead of a stateful streaming aggregation: the
   * store must be a QUERYABLE TABLE between batches (the dashboard reads
   * it), survive restarts without replaying the stream, and merge with
   * batch-side ingests — state-store aggregations keep their state
-  * private to the query. The per-batch cost is one batch-sized
-  * aggregation plus a merge that shuffles only STATE rows (one per key,
-  * independent of how much history the store summarizes); the KMV
-  * distinct sketch stays exactly mergeable across batches, so the
+  * private to the query. Per batch, only the hash buckets the batch's
+  * keys land in are rewritten (O(delta), however large the store
+  * grows), and the merge shuffles only STATE rows of those buckets; the
+  * KMV distinct sketch stays exactly mergeable across batches, so the
   * drained store is bit-identical to a one-shot aggregate over full
-  * history — which is what the oracle checks. Replay safety (round-13
-  * verdict #3): the fold goes through an exactly-once ledger keyed on
-  * the micro-batch id — Spark re-delivers a failed batch under the
-  * SAME id, so the retry is a ledger no-op.
+  * history — which is what the oracle checks. `IncrementalAgg.merge` is
+  * key-local on `keys`, the store's requirement.
   *
-  * LEDGER SCOPE (round-14 advice): micro-batch ids restart from 0 with
-  * a NEW checkpoint, so the ledger key carries a caller-supplied
-  * `streamName` — restarting a query against a RETAINED store with a
-  * fresh checkpoint (or pointing a second query at the same store)
-  * must use a distinct name, or its batch 0/1/2… silently no-op against
-  * the previous run's ledger entries. Store + checkpoint + name form
-  * one lifecycle: recreate them together or name each run uniquely.
-  *
-  * Two store layouts:
-  *  - [[writer]]: the whole-table `AtomicStore.foldOnce` swap — right
-  *    for rollup stores up to ~millions of rows (per-batch rewrite is
-  *    O(state)); read with `AtomicStore.readState`.
-  *  - [[writerBucketed]]: the `BucketedFoldStore` manifest commit —
-  *    per-batch rewrite is O(delta) (only the hash buckets the batch's
-  *    keys land in are rewritten, the ledger lives in the manifest and
-  *    its check is a driver-side set lookup, no Spark job); read with
-  *    `BucketedFoldStore.readState`. The 100 TB shape for large key
-  *    spaces (round-14 verdict #1).
+  * Replay safety: the fold's ledger key is the micro-batch id
+  * ([[BucketedFoldStore.ledgerKey]], which also documents when
+  * `streamName` must differ) — Spark re-delivers a failed batch under
+  * the SAME id, so the retry is a ledger no-op.
   */
 object StreamingIncrementalAgg {
 
-  private def ledgerKey(streamName: String, batchId: Long): String =
-    if (streamName.isEmpty) s"mb_$batchId" else s"$streamName#mb_$batchId"
-
   def writer(spark: SparkSession, stream: DataFrame, storePath: String,
              keys: Seq[String], valueCol: String, distinctCol: String,
-             k: Int, streamName: String = ""): DataStreamWriter[Row] =
+             k: Int, numBuckets: Int = 64,
+             streamName: String = ""): DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      graft.pipelines.AtomicStore.foldOnce(spark, storePath,
-        ledgerKey(streamName, batchId),
-        IncrementalAgg.aggregateBatch(batch, keys, valueCol, distinctCol, k))(
-        IncrementalAgg.merge(_, _, keys, k))
-      ()
-    }
-
-  def start(spark: SparkSession, stream: DataFrame, storePath: String,
-            keys: Seq[String], valueCol: String, distinctCol: String,
-            k: Int, checkpoint: String,
-            streamName: String = ""): StreamingQuery =
-    writer(spark, stream, storePath, keys, valueCol, distinctCol, k, streamName)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** [[writer]] against a [[graft.pipelines.BucketedFoldStore]]: each
-    * micro-batch rewrites only the state buckets its keys hash into —
-    * O(delta) per batch however large the store grows. Same
-    * exactly-once single-commit contract (the manifest rename commits
-    * state + ledger together); `IncrementalAgg.merge` is key-local on
-    * `keys`, the store's requirement.
-    */
-  def writerBucketed(spark: SparkSession, stream: DataFrame,
-                     storePath: String, keys: Seq[String], valueCol: String,
-                     distinctCol: String, k: Int, numBuckets: Int = 64,
-                     streamName: String = ""): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      graft.pipelines.BucketedFoldStore.foldOnce(spark, storePath,
-        ledgerKey(streamName, batchId),
+      BucketedFoldStore.foldOnce(spark, storePath,
+        BucketedFoldStore.ledgerKey(streamName, batchId),
         IncrementalAgg.aggregateBatch(batch, keys, valueCol, distinctCol, k),
         keys, numBuckets)(
         IncrementalAgg.merge(_, _, keys, k))
       ()
     }
 
-  /** [[writerBucketed]] started with an AvailableNow drain. */
-  def startBucketed(spark: SparkSession, stream: DataFrame,
-                    storePath: String, keys: Seq[String], valueCol: String,
-                    distinctCol: String, k: Int, checkpoint: String,
-                    numBuckets: Int = 64,
-                    streamName: String = ""): StreamingQuery =
-    writerBucketed(spark, stream, storePath, keys, valueCol, distinctCol, k,
+  /** [[writer]] started with an AvailableNow drain. */
+  def start(spark: SparkSession, stream: DataFrame, storePath: String,
+            keys: Seq[String], valueCol: String, distinctCol: String,
+            k: Int, checkpoint: String, numBuckets: Int = 64,
+            streamName: String = ""): StreamingQuery =
+    writer(spark, stream, storePath, keys, valueCol, distinctCol, k,
         numBuckets, streamName)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

@@ -4,12 +4,14 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.operators.QuantileSketch
+import graft.pipelines.BucketedFoldStore
 
 /** Continuously-maintained quantile-sketch store: each micro-batch is
-  * collapsed to its bucket-count sketch and folded into a durable
-  * `AtomicStore` table ([[QuantileSketch.foldIntoStore]]) — the online
-  * dual of the nightly stored-sketch lifecycle, the same shape as
-  * [[StreamingIncrementalAgg]] / the streaming DSIR model fold.
+  * collapsed to its bucket-count sketch and folded into the durable
+  * sketch store ([[QuantileSketch.foldIntoStore]], a
+  * [[BucketedFoldStore]]) — the online dual of the nightly stored-sketch
+  * lifecycle, the same shape as [[StreamingIncrementalAgg]] / the
+  * streaming DSIR model fold.
   *
   * Why `foreachBatch` instead of a stateful streaming aggregation: the
   * sketch must be a QUERYABLE TABLE between batches (a latency monitor
@@ -20,33 +22,22 @@ import graft.operators.QuantileSketch
   * only SKETCH rows (≤3.2k per group, independent of summarized
   * history).
   *
-  * EXACTLY-ONCE: unlike the other fold sinks, this one needs no external
-  * ledger discipline — the micro-batch id Spark hands `foreachBatch`
-  * (re-delivered VERBATIM when a failed batch retries) is passed to
-  * [[QuantileSketch.foldIntoStore]] as the ledger key, and the store's
-  * inline processed-batch ledger makes the re-delivered fold a no-op.
-  * The drained store therefore equals the one-shot sketch over full
-  * history even across restarts, which is what the shared oracle checks.
-  *
-  * LEDGER SCOPE (round-14 advice): micro-batch ids restart from 0 with
-  * a NEW checkpoint, so the ledger key carries a caller-supplied
-  * `streamName` — restarting against a RETAINED store with a fresh
-  * checkpoint (or pointing a second query at the same store) must use
-  * a distinct name, or its batch 0/1/2… silently no-op against the
-  * previous run's entries. Store + checkpoint + name are one
-  * lifecycle: recreate them together or name each run uniquely.
+  * EXACTLY-ONCE: the micro-batch id Spark hands `foreachBatch`
+  * (re-delivered VERBATIM when a failed batch retries) is the fold's
+  * ledger key ([[BucketedFoldStore.ledgerKey]], which also documents
+  * when `streamName` must differ), and the store's manifest ledger
+  * makes the re-delivered fold a no-op. The drained store therefore
+  * equals the one-shot sketch over full history even across restarts,
+  * which is what the shared oracle checks.
   */
 object StreamingQuantileSketch {
-
-  private def ledgerKey(streamName: String, batchId: Long): String =
-    if (streamName.isEmpty) s"mb_$batchId" else s"$streamName#mb_$batchId"
 
   def writer(spark: SparkSession, stream: DataFrame, storePath: String,
              valueCol: String, groupCols: Seq[String],
              streamName: String = ""): DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       QuantileSketch.foldIntoStore(spark, batch, valueCol, groupCols,
-        storePath, ledgerKey(streamName, batchId))
+        storePath, BucketedFoldStore.ledgerKey(streamName, batchId))
       ()
     }
 

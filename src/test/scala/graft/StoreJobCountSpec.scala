@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.api.BoxOffice
-import graft.pipelines.{AtomicStore, BoxOfficePipeline, BucketedFoldStore, StoreTable}
+import graft.pipelines.{BoxOfficePipeline, BucketedFoldStore, StoreTable}
 import graft.streaming.StreamingUpsert
 
 /** Pins the exact number of Spark jobs the store layer launches, the
@@ -114,7 +114,7 @@ class StoreJobCountSpec extends SparkSpec {
   }
 
   /** A store with every table kind: partitioned fact, dimension, stock
-    * log, an in-table-ledger fold store and a bucketed fold store.
+    * log and a fold store.
     */
   private def seededStore(s: SparkSession): String = {
     import s.implicits._
@@ -129,7 +129,6 @@ class StoreJobCountSpec extends SparkSpec {
     val delta = Seq(("k1", 1L)).toDF("k", "n")
     val sumMerge = (st: DataFrame, d: DataFrame) =>
       st.unionByName(d).groupBy("k").agg(sum("n").as("n"))
-    AtomicStore.foldOnce(s, s"$root/fold", "b_1", delta)(sumMerge)
     BucketedFoldStore.foldOnce(s, s"$root/bfold", "b_1", delta, Seq("k"), 4)(sumMerge)
     root
   }
@@ -147,7 +146,6 @@ class StoreJobCountSpec extends SparkSpec {
         api.genreRollup("2025-01-01", "2025-01-01"),
         api.currentStock("e1"),
         api.ask("SELECT COUNT(*) AS n FROM boxoffice JOIN movie USING (movie_cd)"),
-        AtomicStore.readState(s, s"$root/fold"),
         BucketedFoldStore.readState(s, s"$root/bfold")
       ).map(_.schema)
       (schemas, BoxOfficePipeline.describeStore(s, root, Seq("boxoffice", "nope")))

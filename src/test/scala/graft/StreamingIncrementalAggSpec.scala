@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.IncrementalAgg
+import graft.pipelines.BucketedFoldStore
 import graft.streaming.StreamingIncrementalAgg
 
 /** The streaming fold of the incremental-agg store: the store is a
@@ -28,7 +29,7 @@ class StreamingIncrementalAggSpec extends SparkSpec {
       input.addData(("a", 1L, 10.0), ("a", 2L, 2.0), ("b", 9L, 1.0))
       q.processAllAvailable()
       val mid = IncrementalAgg.finalize(
-          graft.pipelines.AtomicStore.readState(spark, store), Seq("g"), 8)
+          BucketedFoldStore.readState(spark, store), Seq("g"), 8)
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
       assert(mid == Map("a" -> (2L, 12.0), "b" -> (1L, 1.0)),
         s"after batch 1: $mid")
@@ -36,7 +37,7 @@ class StreamingIncrementalAggSpec extends SparkSpec {
       input.addData(("a", 1L, 3.0), ("c", 7L, 5.0))
       q.processAllAvailable()
       val fin = IncrementalAgg.finalize(
-          graft.pipelines.AtomicStore.readState(spark, store), Seq("g"), 8)
+          BucketedFoldStore.readState(spark, store), Seq("g"), 8)
         .collect().map(r => r.getString(0) ->
           (r.getLong(1), r.getDouble(2), r.getDouble(6))).toMap
       // a: 3 rows, total 15, 2 distinct uids (uid 1 repeated across
