@@ -1,18 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
-import graft.Tables.{dec, avgExact, sumd, tsDate}
-import graft.operators._
-import graft.pipelines.StoreTable
+import graft.faces._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every entry pairs a Spark DataFrame program with a DuckDB oracle SQL
-  * over the same parquet tables. Conventions that make the hash-compare
-  * exact (not just approximately right):
+  * Every face pairs a Spark DataFrame program with a DuckDB oracle SQL
+  * over the same parquet tables, declared once as a [[faces.Face]] in the
+  * family object under `faces/`; `queries`, `oracleSql` and `familyOf`
+  * are views derived from that one list. Conventions that make the
+  * hash-compare exact (not just approximately right):
   *   - doubles that get aggregated are cast to DECIMAL(38,6) first in BOTH
   *     engines — decimal addition is order-independent, so Spark's partial
   *     aggregation and DuckDB's single-threaded fold agree bitwise;
@@ -30,187 +28,12 @@ import graft.pipelines.StoreTable
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Scratch root for the queries' fixtures and stream stores — all are
-    * per-run REPLAY artifacts (fixed paths, cleared on entry), so their
-    * fsync-heavy write paths belong on tmpfs when the host has one
-    * (round-9 verdict #7: the q_stream_* family's bench share was
-    * dominated by start/commit I/O, measured, not by data volume;
-    * /tmp on this host is disk-backed ext4). A production deployment
-    * stores real tables on durable storage — these paths never hold
-    * anything a second run needs.
-    */
-  private lazy val scratchRoot: String =
-    if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else "/tmp"
-
-  /** Stat token of the source tables a cached fixture derives from —
-    * the [[Tables.scanKey]] (path|mtime|len[|newest-child|n]) of each,
-    * concatenated. Written into a feed's completion marker so a feed
-    * goes stale exactly when one of its source tables changes:
-    * testdata regenerated IN PLACE must rebuild the /dev/shm
-    * feeds too, or the stream drains would diverge from the batch duals
-    * (round-15 advice, medium).
-    */
-  private def srcToken(s: SparkSession, dir: String, tables: String*): String =
-    tables.map { n =>
-      Tables.scanKey(s, s"$dir/$n.parquet").getOrElse(s"$n|absent")
-    }.mkString(";")
-
-  /** Materialize a streaming-face FEED directory once per (face, sf
-    * dir) and reuse it across runs — the feed is a DETERMINISTIC
-    * function of the input tables, so re-deriving it per run only adds
-    * a corpus-sized write to what should be a drain-only timing
-    * (round-14 verdict: `q_stream_quantile_sketch`'s decade α was its
-    * fixture's, not the operator's). `build` writes into `{root}/files`;
-    * the completion marker carries the caller's [[srcToken]], so a
-    * half-written feed from a killed run — or a feed built from a
-    * since-regenerated source table — rebuilds rather than serving
-    * stale rows. Returns the files dir to stream from.
-    * Stores/checkpoints are NOT cached — each run drains from scratch.
-    */
-  private def cachedFeed(s: SparkSession, name: String, token: String)
-                        (build: String => Unit): String = {
-    val root = new org.apache.hadoop.fs.Path(s"$scratchRoot/$name")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(root, "_FEED_DONE")
-    val current: Option[String] =
-      if (!fs.exists(done)) None
-      else try {
-        val in = fs.open(done)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-        finally in.close()
-      } catch { case _: Exception => None }
-    if (!current.contains(token)) {
-      fs.delete(root, true)
-      build(s"$root/files")
-      val out = fs.create(done)
-      try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    s"$root/files"
-  }
-
-  /** Materialize a deterministic MEDIA fixture corpus once per (name,
-    * sf dir) and read it back through [[StoreTable.read]] — the
-    * [[cachedFeed]] discipline applied to the batch multimodal fixtures
-    * (round-15 verdict #1): the synthetic PNG/WAV ENCODE is fixture
-    * construction, not the operator under test (the per-row decode +
-    * hash is, and still executes from scratch every run), yet it ran
-    * inside the timed body of every aHash/audio face, re-encoding the
-    * same corpus per query per run. Written as 8 files so the timed
-    * decode scan parallelizes instead of inheriting the encode's
-    * single-task layout (guide §2.6/§6 — same reasoning as the 8-file
-    * stream feeds; hashes are per-row and the faces aggregate or sort,
-    * so file layout cannot change any result). The marker token tracks
-    * the documents table, so a regenerated sf dir rebuilds the corpus.
-    */
-  private def cachedMediaCorpus(s: SparkSession, dir: String, name: String)
-                               (build: => DataFrame): DataFrame = {
-    val feed = cachedFeed(s, s"${name}_${dir.replaceAll("[^A-Za-z0-9]", "_")}",
-        srcToken(s, dir, "documents")) { fd =>
-      build.repartition(8).write.parquet(fd)
-    }
-    StoreTable.read(s, feed)
-  }
-
-  /** Write `df` as ONE parquet file named `$name.parquet` under
-    * `filesDir`, stamped with `modMs` — the micro-batch-ordering feed
-    * layout every maxFilesPerTrigger=1 drain relies on (FileStreamSource
-    * orders by modification time). Shared by the [[cachedFeed]] builders
-    * of the multi-batch stream faces; staging residue is removed so the
-    * cached feed directory holds exactly the stream's input files.
-    */
-  private def emitFeedFile(df: DataFrame, filesDir: String, name: String,
-                           modMs: Long): Unit = {
-    val dir = new java.io.File(filesDir); dir.mkdirs()
-    val stage = new java.io.File(dir.getParentFile, s"stage_$name")
-    df.coalesce(1).write.parquet(stage.getAbsolutePath)
-    val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-    val dest = new java.io.File(dir, s"$name.parquet")
-    java.nio.file.Files.move(part.toPath, dest.toPath)
-    org.apache.commons.io.FileUtils.deleteQuietly(stage)
-    dest.setLastModified(modMs); ()
-  }
-
-  // ---- stored dedup-index tables, shared by the build/probe pair ----
-  // q_dedup_index_build times the corpus-side hash + bucketed write;
-  // q_dedup_incremental_stored times ONLY the ingestion-shaped probe,
-  // against tables built once per session — the deployment shape, where
-  // the index persists across ingestion batches. The memo records which
-  // sf dir the live tables hold so a probe never reads another scale's
-  // index (rebuilt on mismatch, skipped when current).
-  private val DedupIdxBands = "graft_dedup_idx_bands"
-  private val DedupIdxDocs = "graft_dedup_idx_docs"
-  @volatile private var dedupIndexDir: Option[String] = None
-
-  private def buildDedupIndex(s: SparkSession, dir: String): Unit = synchronized {
-    // persist before writeIndexTables: the two bucketed saveAsTables each
-    // scan the index, and a bucketed write SORTS its input — feeding the
-    // raw expression chain makes every write recompute the whole
-    // shingle→md5→signature pipeline inside its sort (measured ~10× the
-    // cached scan). The cache is released by the caller's OpCache.clear().
-    val rest = graft.operators.OpCache.persist(Dedup.minhashIndex(
-      t(s, dir, "documents").filter(pmod(col("doc_id"), lit(5)) =!= 0),
-      "doc_id", "text", k = 5, numHashes = 16, numBands = 4))
-    Dedup.writeIndexTables(rest, "doc_id", DedupIdxBands, DedupIdxDocs, nBuckets = 8)
-    dedupIndexDir = Some(dir)
-  }
-
-  private def ensureDedupIndex(s: SparkSession, dir: String): Unit = synchronized {
-    if (!dedupIndexDir.contains(dir)) buildDedupIndex(s, dir)
-  }
-
-  /** Typed events projection for the ST4 streaming drains. */
-  case class EventLatest(user_id: Long, event_type: String, event_id: Long,
-                         ts_us: Long, value: Double)
-
-  /** ST4 drain shared by the default- and RocksDB-provider gates:
-    * project events to the typed row, keep the (ts_us, event_id)-max row
-    * per (user_id, event_type) in state — the same ordering as the batch
-    * flagship `q_w1_latest_per_key`. The bounded drain is one data
-    * micro-batch (StreamDrain asserts it), so the update-mode emissions
-    * ARE the final per-key winners.
-    */
-  /** Bounded drain over the events table. The stream source must declare
-    * the file's PHYSICAL schema (a micros-typed regeneration reads `ts`
-    * as a timestamp, a nanos one as a Long — round-6 verdict #1), so the
-    * schema comes from [[Tables.loadRaw]] and the Long-nanos `ts`
-    * contract every operator assumes is re-established on the streaming
-    * frame via [[Tables.normalizeEventTs]] before `op` sees it.
-    */
-  private def drainEvents(s: SparkSession, dir: String, sink: String,
-                          mode: String, confs: Map[String, String] = Map.empty)
-                         (op: DataFrame => DataFrame): DataFrame =
-    graft.streaming.StreamDrain.drain(s, s"$dir/events.parquet",
-        Tables.loadRaw(s, dir, "events").schema, sink, mode, confs) { src =>
-      op(Tables.normalizeEventTs(src))
-    }
-
-  private def drainLatestPerKey(s: SparkSession, dir: String, sink: String,
-                                confs: Map[String, String]): DataFrame = {
-    drainEvents(s, dir, sink, "update", confs) { src =>
-      import s.implicits._
-      val ev = src.select(col("user_id"), col("event_type"), col("event_id"),
-          expr("ts div 1000").as("ts_us"), col("value"))
-        .as[EventLatest]
-      graft.streaming.LatestPerKeyStream.latestByVersion(ev)(
-        e => (e.user_id, e.event_type), e => (e.ts_us, e.event_id)).toDF()
-    }.select("user_id", "event_type", "event_id", "ts_us", "value")
-      .orderBy("user_id", "event_type")
-  }
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * W1 latest-per-key — the reference's one true window function
     * (dashboard.py:104-119).
     */
   def entry(spark: SparkSession): DataFrame =
     queries("q_w1_latest_per_key")(spark, "/root/testdata/sf0.001")
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    baseQueries ++ sqlFuzzQueries
 
   /** The query names a comma-separated `SPARK_GRAFT_ONLY` value selects
     * (`None` = unset: every query), for `Bench` and `Verify` alike. A
@@ -225,6665 +48,29 @@ object SparkEntry {
       names
     }
 
-  private def baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // W1 — latest row per (user_id, event_type) by ts (dashboard.py:104-119).
-    // Ordering/output use microsecond granularity (ts div 1000) because the
-    // DuckDB oracle truncates parquet TIMESTAMP(NANOS) to us — both engines
-    // must break ties with the same key values.
-    "q_w1_latest_per_key" -> ((s, dir) => {
-      Analytics.latestPerKey(
-          t(s, dir, "events").withColumn("ts_us", expr("ts div 1000")),
-          Seq("user_id", "event_type"),
-          Seq(col("ts_us").desc, col("event_id").desc))
-        .select("user_id", "event_type", "event_id", "ts_us", "value")
-        .orderBy("user_id", "event_type")
-    }),
-
-    // A1-A5 spine: TPC-H Q1-style pricing summary (scan→agg→sort)
-    "q1_pricing_summary" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .transform(Stage.spread) // single-row-group source; decimal agg work below is per-row heavy
-        .filter(to_date(col("l_shipdate")) <= lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sumd(col("l_quantity")).as("sum_qty"),
-          sumd(col("l_extendedprice")).as("sum_base_price"),
-          sumd(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("sum_disc_price"),
-          sumd(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax"))).as("sum_charge"),
-          avgExact(col("l_quantity")).as("avg_qty"),
-          avgExact(col("l_extendedprice")).as("avg_price"),
-          avgExact(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // A3/O6 — group-sum then top-k (dashboard.py:249 nlargest(10))
-    "q_a3_topk_customers" -> ((s, dir) => {
-      Analytics.topKByAgg(
-        t(s, dir, "orders"),
-        groupCols = Seq(col("o_custkey")),
-        aggs = Seq(sumd(col("o_totalprice")).as("total_spent"),
-                   count(lit(1)).as("n_orders")),
-        ord = Seq(col("total_spent").desc, col("o_custkey").asc),
-        k = 10)
-    }),
-
-    // A4 — top-3 days by total value (dashboard.py:256 nlargest(3))
-    "q_a4_top_days" -> ((s, dir) => {
-      Analytics.topKByAgg(
-        t(s, dir, "events").withColumn("d", tsDate("ts")),
-        groupCols = Seq(col("d")),
-        aggs = Seq(sumd(col("value")).as("total_value")),
-        ord = Seq(col("total_value").desc, col("d").asc),
-        k = 3)
-    }),
-
-    // A6 — countDistinct + deterministic ordered string-agg (dashboard.py:291-294)
-    "q_a6_genre_rollup" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val nat = t(s, dir, "nation")
-      Analytics.distinctAndSortedList(
-          cust.join(Hints.bcast(nat), col("c_nationkey") === col("n_nationkey")),
-          groupCol = "n_name", countCol = "c_custkey", listCol = "c_name")
-        .withColumnRenamed("cnt_distinct", "n_customers")
-        .withColumnRenamed("sorted_list", "customer_list")
-        .orderBy("n_name")
-    }),
-
-    // J1 — fact ⟕ broadcast dims, rollup (dashboard.py:287)
-    "q_j1_dim_rollup" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      val r = t(s, dir, "region")
-      c.join(Hints.bcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(Hints.bcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(count(lit(1)).as("n_customers"),
-             sumd(col("c_acctbal")).as("total_acctbal"),
-             avgExact(col("c_acctbal")).as("avg_acctbal"))
-        .orderBy("r_name", "n_name")
-    }),
-
-    // J2/J3 — anti join: customers with no large orders (kobis_pipeline.py:77-81)
-    "q_j2_customers_no_orders" -> ((s, dir) => {
-      Joins.anti(
-          t(s, dir, "customer"),
-          t(s, dir, "orders").filter(col("o_totalprice") > 400000)
-            .select(col("o_custkey").as("c_custkey")),
-          Seq("c_custkey"))
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    }),
-
-    // full outer join — nation-level supplier vs customer account totals;
-    // either side may be missing (beyond ref: SURVEY §2.3 "not present")
-    "q_j_full_outer" -> ((s, dir) => {
-      val sup = t(s, dir, "supplier").filter(col("s_acctbal") > 4000)
-        .groupBy(col("s_nationkey").as("nk"))
-        .agg(count(lit(1)).as("n_suppliers"))
-      val cust = t(s, dir, "customer").filter(col("c_acctbal") > 9000)
-        .groupBy(col("c_nationkey").as("nk"))
-        .agg(count(lit(1)).as("n_customers"))
-      sup.join(cust, Seq("nk"), "full_outer")
-        .select(col("nk"), coalesce(col("n_suppliers"), lit(0L)).as("n_suppliers"),
-                coalesce(col("n_customers"), lit(0L)).as("n_customers"))
-        .orderBy("nk")
-    }),
-
-    // CUBE grouping — all subtotal combinations (beyond ref; rollup's dual)
-    "q_cube_region_segment" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(CubeSql)
-    }),
-
-    // semi join — customers having at least one filtered order
-    "q_j2b_customers_with_orders" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .filter(col("o_totalprice") > 100000)
-        .select(col("o_custkey").as("c_custkey"))
-      Joins.semi(t(s, dir, "customer"), o, Seq("c_custkey"))
-        .select("c_custkey", "c_name", "c_mktsegment")
-        .orderBy("c_custkey")
-    }),
-
-    // F15 — threshold bucketing (movie_events_scraper.py:493-501)
-    "q_f15_stock_status" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .withColumn("status", Analytics.stockStatus(col("l_quantity")))
-        .groupBy("status")
-        .agg(count(lit(1)).as("n"),
-             sumd(col("l_quantity")).as("total_qty"))
-        .orderBy("status")
-    }),
-
-    // T1 — UNION-dedup of two name sets (movie_events_scraper.py:68-81)
-    "q_t1_union_names" -> ((s, dir) => {
-      t(s, dir, "customer").select(col("c_name").as("name"))
-        .union(t(s, dir, "supplier").select(col("s_name").as("name")))
-        .distinct()
-        .orderBy("name")
-    }),
-
-    // ST1 — watermark + gap-fill date spine (kobis_pipeline.py:14-49)
-    "q_st1_date_spine" -> ((s, dir) => {
-      Ingest.missingDates(t(s, dir, "orders"), "o_orderdate", "2001-12-31")
-        .orderBy("d")
-    }),
-
-    // U1 — upsert: fresh batch (event_id%10<3, value+1000) beats base
-    "q_u1_upsert" -> ((s, dir) => {
-      val base = t(s, dir, "events")
-        .withColumn("ts_us", expr("ts div 1000"))
-        .select("event_id", "ts_us", "user_id", "event_type", "value", "props")
-      val fresh = base.filter(col("event_id") % 10 < 3)
-        .withColumn("value", col("value") + 1000)
-        .withColumn("props", lit("{\"upd\": true}"))
-      Upsert.upsert(base, fresh, Seq("event_id"), col("ts_us"))
-        .orderBy("event_id")
-    }),
-
-    // F5/F6 — datediff analytics (kobisdata_extractor.py:149 elapsed_dt)
-    "q_f5_ship_delay" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(
-          avgExact(datediff(to_date(col("l_shipdate")), to_date(col("o_orderdate"))))
-            .as("avg_ship_delay_days"),
-          count(lit(1)).as("n_items"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // W2 — re-derived daily rank (reference ingests rank; we compute it)
-    "q_w2_daily_rank" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("user_id"), tsDate("ts").as("d"))
-        .agg(sumd(col("value")).as("day_value"))
-      val w = Window.partitionBy(col("d"))
-        .orderBy(col("day_value").desc, col("user_id").asc)
-      daily.withColumn("rnk", rank().over(w))
-        .filter(col("rnk") <= 5)
-        .orderBy("d", "rnk", "user_id")
-    }),
-
-    // W2 — lag delta + cumulative sum per user (audi_inten / *_acc analogs)
-    "q_w2_lag_cumsum" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_us").asc, col("event_id").asc)
-      t(s, dir, "events")
-        .withColumn("ts_us", expr("ts div 1000"))
-        .withColumn("prev_value", lag(col("value"), 1).over(w))
-        .withColumn("delta", col("value") - col("prev_value"))
-        .withColumn("cum_value",
-          sum(dec(col("value")))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("double"))
-        .select("user_id", "ts_us", "event_id", "value", "prev_value", "delta", "cum_value")
-        .orderBy("user_id", "ts_us", "event_id")
-    }),
-
-    // W-breadth: the rest of the ranking/distribution/value window
-    // family (§2.11 SQL surface) in one oracle — ntile, percent_rank,
-    // cume_dist, first/last/nth value over a running frame. One shuffle
-    // on the partition key; unique ORDER BY keys pin tie semantics
-    "q_w3_window_suite" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "orders")
-        .filter(pmod(col("o_custkey"), lit(10)) === 0)
-        .select(col("o_custkey"), col("o_orderkey"),
-          ntile(4).over(w).as("quartile"),
-          round(percent_rank().over(w), 6).as("pct_rank"),
-          round(cume_dist().over(w), 6).as("cume"),
-          first(col("o_orderkey")).over(run).as("first_key"),
-          last(col("o_orderkey")).over(run).as("last_key"),
-          nth_value(col("o_orderkey"), 2).over(run).as("second_key"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-
-    // P1/P9/P10/O1 — pruned scan, range+IN filters, multi-key sort
-    "q_p_scan_filter_sort" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
-                "l_returnflag", "l_shipdate")
-        .filter(col("l_shipdate").between(lit("1996-01-01 00:00:00").cast("timestamp"),
-                                          lit("1996-12-31 00:00:00").cast("timestamp"))
-                && col("l_returnflag").isin("R", "A"))
-        .orderBy(col("l_shipdate").desc, col("l_orderkey").asc, col("l_linenumber").asc)
-    }),
-
-    // §2.11 — open SQL surface: the text-to-SQL agent's fuzzy LIKE idiom
-    "q_sql_fuzzy_like" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql("""SELECT p_partkey, p_name, p_retailprice FROM part
-               WHERE REPLACE(p_name, ' ', '') LIKE '%redwidget%'
-               ORDER BY p_partkey""")
-    }),
-
-    // J4 — enrichment with fallback lookup + coalesce (movie_events_scraper.py:307-367)
-    "q_j4_enrich_fallback" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey").as("p_partkey"), col("l_returnflag"), col("l_quantity"))
-      val part = t(s, dir, "part")
-      val primary = part.filter(col("p_size") > 30)
-        .withColumn("eff_price", col("p_retailprice") * 0.9)
-      val fallback = part.withColumn("eff_price", col("p_retailprice"))
-      Joins.enrichWithFallback(li, primary, fallback, Seq("p_partkey"), Seq("eff_price"))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_items"),
-             sumd(col("eff_price") * col("l_quantity")).as("total_eff"))
-        .orderBy("l_returnflag")
-    }),
-
-    // J6 — fuzzy containment title match (movie_events_scraper.py:56-128)
-    "q_j6_fuzzy_title" -> ((s, dir) => {
-      val titles = s.sql(
-        """SELECT * FROM VALUES ('red widget premiere [2024]'),
-           ('the blue bolt: limited run'), ('hot gear <fan event>'),
-           ('totally unknown title') AS t(title)""")
-      FuzzyMatch.bestMatch(titles, "title", t(s, dir, "part"), "p_name")
-        .select("title", "matched")
-        .orderBy("title")
-    }),
-
-    // J6d — edit-distance rung of the fuzzy ladder: containment can't
-    // catch typos; min-Levenshtein pick with a damage bound, garbage
-    // probes fall back to themselves
-    "q_j6_fuzzy_levenshtein" -> ((s, dir) => {
-      import s.implicits._
-      val probes = Seq("GERMANY", "FRANC", "UNTED STATES", "ROMANIA X",
-        "QQQQQQQQQQ").toDF("probe")
-      FuzzyMatch.bestMatchByEditDistance(probes, "probe",
-          t(s, dir, "nation"), "n_name", maxDistance = 6)
-        .orderBy("probe")
-    }),
-
-    // F12 — the Lotte feed's field-parse rule ladder as columns
-    // (movie_events_scraper.py:581-593): angle-bracket title extract +
-    // the three-rule goods-name derivation
-    "q_f12_lotte_goods" -> ((s, dir) => {
-      val ev = s.sql(
-        """SELECT * FROM VALUES
-           (CAST(1 AS BIGINT), '<엔드게임> 시그니처 아트카드 증정', '오리지널 티켓 (1주차, 포스터)'),
-           (CAST(2 AS BIGINT), '<위젯> SPECIAL ART CARD EVENT', 'any goods name'),
-           (CAST(3 AS BIGINT), '<기타> 주간 굿즈', '<한정> 오리지널 티켓 (4주차, A3 포스터)'),
-           (CAST(4 AS BIGINT), '브래킷 없는 이벤트', '<한정판> 포토카드 세트'),
-           (CAST(5 AS BIGINT), '행사', '티켓 (,)')
-           AS t(event_id, event_name, goods_full_name)""")
-      ev.select(col("event_id"),
-          graft.sources.EventParse.titleInAngleBrackets(col("event_name")).as("movie_title_raw"),
-          graft.sources.EventParse.lotteGoodsName(col("event_name"),
-            col("goods_full_name")).as("goods_name"))
-        .orderBy("event_id")
-    }),
-
-    // F13 — the Megabox feed's parse rules (movie_events_scraper.py:
-    // 736-758): either-delimiter bracket title with event-title
-    // fallback, bracket-strip goods name with its own fallback chain,
-    // and the '~'-split period → (start_date, end_date)
-    "q_f13_megabox_dates" -> ((s, dir) => {
-      val ev = s.sql(
-        """SELECT * FROM VALUES
-           (CAST(1 AS BIGINT), '[퀴어] 오리지널 포토카드', '이벤트 안내', '2025.01.01 ~ 2025.01.31'),
-           (CAST(2 AS BIGINT), '스페셜 배지', '<판타스틱4> 개봉 기념', '2025.07.01~2025.07.15'),
-           (CAST(3 AS BIGINT), '<엔드게임>', '<엔드게임> 아트카드 증정', '2025.03.01 ~ 2025.03.31'),
-           (CAST(4 AS BIGINT), '포토카드 세트', '주간 이벤트', '2025.05.01'),
-           (CAST(5 AS BIGINT), '<> 굿즈', '[하얼빈] 이벤트', CAST(NULL AS STRING)),
-           (CAST(6 AS BIGINT), '[A] 카드', 'ev', '1 ~ 2 ~ 3')
-           AS t(event_id, goods_name, event_title, period)""")
-      val title = graft.sources.EventParse.megaboxMovieTitle(
-        col("goods_name"), col("event_title"))
-      ev.withColumn("__d",
-          graft.sources.EventParse.megaboxPeriodDates(col("period")))
-        .select(col("event_id"), title.as("movie_title_raw"),
-          graft.sources.EventParse.megaboxGoodsName(title,
-            col("goods_name"), col("event_title")).as("goods_name_out"),
-          col("__d.start_date").as("start_date"),
-          col("__d.end_date").as("end_date"))
-        .orderBy("event_id")
-    }),
-
-    // Composed goods-event enrichment pipeline (movie_events_scraper.py
-    // get_events :307-367): F11 alias join → J6 phased title match → J4
-    // gated two-key fallback enrichment, end-to-end in one call. Event 3
-    // exercises the reference's `updated` gate: its goods-key match has
-    // a null url, and the date-key match that DOES have one must be
-    // ignored.
-    "q_pipeline_goods_enrich" -> ((s, dir) => {
-      val goods = s.sql(
-        """SELECT * FROM VALUES
-           (CAST(1 AS BIGINT), 'widget <collector event>', 'sx poster',
-            '2024-01-01', '2024-01-31', CAST(NULL AS STRING), CAST(NULL AS STRING)),
-           (CAST(2 AS BIGINT), 'gizmo <limited>', 'poster b',
-            '2024-02-01', '2024-02-28', CAST(NULL AS STRING), 'own_img2'),
-           (CAST(3 AS BIGINT), CAST(NULL AS STRING), 'u4dx label',
-            '2024-03-01', '2024-03-31', 'own_url3', CAST(NULL AS STRING)),
-           (CAST(4 AS BIGINT), 'totally unknown title', 'poster x',
-            CAST(NULL AS STRING), '2024-04-30', CAST(NULL AS STRING), CAST(NULL AS STRING))
-           AS t(event_id, movie_title, goods_name, start_date, end_date,
-                event_url, image_url)""")
-      val aliases = s.sql(
-        """SELECT * FROM VALUES ('sx poster', 'screenx poster'),
-           ('u4dx label', 'ultra 4dx label') AS t(raw, canonical)""")
-      val recent = s.sql(
-        """SELECT * FROM VALUES ('large widget'), ('old rod') AS r(movie_nm)""")
-      val movieEvents = s.sql(
-        """SELECT * FROM VALUES
-           ('large widget', 'screenx poster', '2024-01-05', '2024-01-25', 'http://m1', 'img1'),
-           ('hot gizmo', 'different goods', '2024-02-01', '2024-02-28', 'http://m2', 'img2'),
-           (CAST(NULL AS STRING), 'ultra 4dx label', '2024-03-05', '2024-03-20',
-            CAST(NULL AS STRING), 'img3'),
-           ('ultra 4dx label', 'other goods', '2024-03-01', '2024-03-31', 'http://m4', 'img4')
-           AS t(movie_title, goods_name, start_date, end_date, event_url, image_url)""")
-      graft.pipelines.BoxOfficePipeline.enrichGoodsEvents(goods, aliases, recent,
-          t(s, dir, "part").select(col("p_name").as("movie_nm")), movieEvents)
-        .select("event_id", "movie_title", "goods_name", "event_url", "image_url")
-        .orderBy("event_id")
-    }),
-
-    // Store LIFECYCLE at the oracle tier (S10/S13/ST1/ST5 + F3/F5/P7
-    // composed, previously spec-only): bootstrap ingest → byte-identical
-    // re-run (must be a no-op: dates fall out of the watermark spine) →
-    // watermark-advance ingest → range backfill rewriting only the
-    // partitions days 3-5 touch with doubled sales (the reference's
-    // delete-then-insert, backfill_boxoffice.py:27-47). The oracle
-    // restates the surviving store contents from the source table alone,
-    // so duplicate rows from a non-idempotent re-ingest or a backfill
-    // that failed to replace (or over-deleted) partitions all break the
-    // hash. Scratch store under /tmp, rebuilt from zero each run.
-    "q_pipeline_store_lifecycle" -> ((s, dir) => {
-      val root = s"$scratchRoot/graft_store_lifecycle_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      // daily KOBIS-shaped raw batch derived from orders: every 7th
-      // open_dt is garbage so the F3 coerce→null → P7 drop path runs
-      def raw(lo: String, hi: String) = t(s, dir, "orders")
-        .filter(to_date(col("o_orderdate")).between(lit(lo), lit(hi)))
-        .select(
-          to_date(col("o_orderdate")).as("target_dt"),
-          col("o_orderkey").as("movie_cd"),
-          when(col("o_orderkey") % 7 === 0, lit("not-a-date"))
-            .otherwise(date_format(
-              date_sub(to_date(col("o_orderdate")),
-                       (col("o_orderkey") % 60).cast("int")), "yyyy-MM-dd"))
-            .as("open_dt"),
-          col("o_totalprice").as("sales"))
-      val p = graft.pipelines.BoxOfficePipeline
-      p.ingestDaily(s, root, raw("1995-01-01", "1995-01-07"), "1995-01-07")
-      // ST5: the identical call again — watermark makes it a no-op
-      p.ingestDaily(s, root, raw("1995-01-01", "1995-01-07"), "1995-01-07")
-      // ST1 gap-advance: spine resumes at watermark+1, raw overlap ignored
-      p.ingestDaily(s, root, raw("1995-01-01", "1995-01-10"), "1995-01-10")
-      // S13: re-fetch days 3-5 upstream (sales doubled), rewrite exactly
-      // those partitions via dynamic partition overwrite
-      val repl = raw("1995-01-03", "1995-01-05")
-        .withColumn("open_dt", try_to_date(col("open_dt")))
-        .filter(col("open_dt").isNotNull)
-        .withColumn("elapsed_dt", datediff(col("target_dt"), col("open_dt")))
-        .withColumn("sales", col("sales") * 2)
-      p.backfillRange(s, root, repl)
-      StoreTable.read(s, s"$root/boxoffice")
-        .select(col("movie_cd"),
-          date_format(col("target_dt"), "yyyy-MM-dd").as("target_dt"),
-          date_format(col("open_dt"), "yyyy-MM-dd").as("open_dt"),
-          col("elapsed_dt").cast("int").as("elapsed_dt"), col("sales"))
-        .orderBy("movie_cd")
-    }),
-
-    // S14 CSV dump at the oracle tier: the debug dump must survive a
-    // full write→read round trip value-exact — free-text columns with
-    // spaces/punctuation and shortest-round-trip doubles included —
-    // against the source table read straight from parquet by the oracle
-    "q_pipeline_csv_roundtrip" -> ((s, dir) => {
-      val root = s"$scratchRoot/graft_csv_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val src = t(s, dir, "part")
-      graft.pipelines.BoxOfficePipeline.dumpCsv(src, s"$root/part_csv")
-      s.read.option("header", "true").schema(src.schema)
-        .csv(s"$root/part_csv")
-        .orderBy("p_partkey")
-    }),
-
-    // S1 daily-box-office source adapter at the oracle tier (previously
-    // spec-only): a deterministic KOBIS JSON fixture (written fresh to
-    // /tmp each run) through the full adapter chain — nested drill →
-    // explode → snake_case → target_dt stamp → open_dt coerce→null→drop
-    // (row 2) → numeric coercions with fill-zero ("abc"/"" → 0) →
-    // elapsed_dt. The oracle states the exact expected rows, so any
-    // drift in drill path, rename rule, coercion or date arithmetic
-    // breaks the hash.
-    "q_source_kobis_daily" -> ((s, dir) => {
-      val fixture =
-        """{"boxOfficeResult": {"boxofficeType": "일별 박스오피스",
-          |  "showRange": "20240115~20240115",
-          |  "dailyBoxOfficeList": [
-          |   {"rnum":"1","rank":"1","rankInten":"0","rankOldAndNew":"OLD",
-          |    "movieCd":"20240001","movieNm":"Alpha","openDt":"2024-01-01",
-          |    "salesAmt":"1000000","salesShare":"45.5","salesInten":"-5000",
-          |    "salesChange":"-0.5","salesAcc":"9000000","audiCnt":"1200",
-          |    "audiInten":"-50","audiChange":"abc","audiAcc":"150000",
-          |    "scrnCnt":"800","showCnt":"3200"},
-          |   {"rnum":"2","rank":"2","rankInten":"1","rankOldAndNew":"NEW",
-          |    "movieCd":"20240002","movieNm":"Beta","openDt":"not-a-date",
-          |    "salesAmt":"1","salesShare":"1","salesInten":"1","salesChange":"1",
-          |    "salesAcc":"1","audiCnt":"1","audiInten":"1","audiChange":"1",
-          |    "audiAcc":"1","scrnCnt":"1","showCnt":"1"},
-          |   {"rnum":"3","rank":"3","rankInten":"-1","rankOldAndNew":"OLD",
-          |    "movieCd":"20240003","movieNm":"Gamma","openDt":"2023-12-25",
-          |    "salesAmt":"","salesShare":"oops","salesInten":"10",
-          |    "salesChange":"1.5","salesAcc":"500000","audiCnt":"900",
-          |    "audiInten":"20","audiChange":"-30","audiAcc":"90000",
-          |    "scrnCnt":"700","showCnt":"2800"}]}}""".stripMargin
-      val p = java.nio.file.Paths.get(s"$scratchRoot/graft_kobis_fixture/daily_20240115.json")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, fixture)
-      graft.sources.KobisSource.dailyBoxOffice(s, p.toString,
-          java.time.LocalDate.parse("2024-01-15"))
-        .select(col("rnum"), col("rank"), col("movie_cd"), col("movie_nm"),
-          date_format(col("open_dt"), "yyyy-MM-dd").as("open_dt"),
-          date_format(col("target_dt"), "yyyy-MM-dd").as("target_dt"),
-          col("sales_amt"), col("sales_share"), col("audi_cnt"),
-          col("audi_change"), col("scrn_cnt"), col("show_cnt"),
-          col("elapsed_dt"))
-        .orderBy("rnum")
-    }),
-
-    // F1 at the oracle tier (round-8 verdict #8 — the last §2 id whose
-    // evidence was spec-only): the camelCase→snake_case rename asserted
-    // RELATIONALLY by emitting the renamed schema as data. Covers the
-    // rule's boundary cases — no-op lowercase, two-step acronym runs
-    // (rankOldAndNew), short trailing groups (movieCd), and the
-    // digit→Upper boundary (seat2Cnt) — against a literal VALUES oracle
-    // of the names utils.py:4-9 would produce.
-    "q_f1_snake_schema" -> ((s, dir) => {
-      import s.implicits._
-      val camel = s.range(1).select(
-        lit(1L).as("rnum"), lit(0L).as("rankInten"),
-        lit("OLD").as("rankOldAndNew"), lit("20240001").as("movieCd"),
-        lit(1L).as("salesAmt"), lit(45.5).as("salesShare"),
-        lit(1L).as("audiAcc"), lit(1L).as("showCnt"), lit(1L).as("seat2Cnt"))
-      graft.sources.KobisSource.snakeCased(camel)
-        .columns.zipWithIndex
-        .map { case (c, i) => (i, c) }.toSeq
-        .toDF("ord", "column_name")
-        .orderBy("ord")
-    }),
-
-    // S2/S9 movie-list source adapter at the oracle tier: two page
-    // fixtures in ONE multi-path scan (the collapsed pagination loop),
-    // falsy-dropping directors/companys array extraction → compact JSON,
-    // the P6 predicate trio with pandas null parity (null genre and null
-    // English title PASS; blank English title and zero directors DROP),
-    // and the yyyyMMdd → yyyy-MM-dd reformat with ""→null coercion.
-    "q_source_movie_list" -> ((s, dir) => {
-      def page(items: String) =
-        s"""{"movieListResult": {"totCnt": "5", "movieList": [$items]}}"""
-      val p1 = page(
-        """{"movieCd":"M1","movieNm":"큰 위젯","movieNmEn":"Big Widget",
-          | "prdtYear":"2023","openDt":"20230105","typeNm":"장편",
-          | "prdtStatNm":"개봉","nationAlt":"한국","genreAlt":"드라마",
-          | "repNationNm":"한국","repGenreNm":"드라마",
-          | "directors":[{"peopleNm":"Kim"},{"peopleNm":""}],
-          | "companys":[{"companyCd":"C1","companyNm":"Acme"},
-          |             {"companyCd":"","companyNm":"Ghost"}]},
-          |{"movieCd":"M2","movieNm":"성인작","movieNmEn":"Adult",
-          | "prdtYear":"2023","openDt":"20230201","typeNm":"장편",
-          | "prdtStatNm":"개봉","nationAlt":"한국","genreAlt":"성인물(에로)",
-          | "repNationNm":"한국","repGenreNm":"성인물(에로)",
-          | "directors":[{"peopleNm":"Park"}],"companys":[]},
-          |{"movieCd":"M3","movieNm":"무감독","movieNmEn":"NoDirector",
-          | "prdtYear":"2022","openDt":"20220301","typeNm":"장편",
-          | "prdtStatNm":"개봉","nationAlt":"한국","genreAlt":"드라마",
-          | "repNationNm":"한국","repGenreNm":"드라마",
-          | "directors":[],"companys":[]}""".stripMargin)
-      val p2 = page(
-        """{"movieCd":"M4","movieNm":"무영문","movieNmEn":null,
-          | "prdtYear":"2024","openDt":"","typeNm":"장편",
-          | "prdtStatNm":"개봉예정","nationAlt":"한국","genreAlt":"액션",
-          | "repNationNm":"한국","repGenreNm":"액션",
-          | "directors":[{"peopleNm":"Lee"}],"companys":[]},
-          |{"movieCd":"M5","movieNm":"공백영문","movieNmEn":"  ",
-          | "prdtYear":"2024","openDt":"20240401","typeNm":"장편",
-          | "prdtStatNm":"개봉예정","nationAlt":"한국","genreAlt":"액션",
-          | "repNationNm":"한국","repGenreNm":"액션",
-          | "directors":[{"peopleNm":"Choi"}],"companys":[]}""".stripMargin)
-      val root = java.nio.file.Paths.get(s"$scratchRoot/graft_kobis_fixture")
-      java.nio.file.Files.createDirectories(root)
-      java.nio.file.Files.writeString(root.resolve("movies_p1.json"), p1)
-      java.nio.file.Files.writeString(root.resolve("movies_p2.json"), p2)
-      graft.sources.KobisSource.movieList(s,
-          Seq(s"$root/movies_p1.json", s"$root/movies_p2.json"))
-        .select("movie_cd", "movie_nm", "movie_nm_en", "prdt_year",
-          "open_dt", "rep_genre_nm", "directors", "companys")
-        .orderBy("movie_cd")
-    }),
-
-    // S2/S9 at the DataSourceV2 tier: the SAME paginated feed read
-    // through `spark.read.format("kobis-pages")` — the reference's
-    // curPage HTTP loop (kobisdata_extractor.py:56-91) re-expressed as
-    // partition planning (one InputPartition per landed page; column
-    // pruning and LIMIT pushdown reach the reader, pinned in
-    // KobisPagesV2Spec). The oracle states every per-item normalization
-    // the reader performs: snake_case keys, falsy-dropped directors /
-    // companys serialized to compact JSON, JSON-null and missing fields
-    // → SQL NULL, empty strings preserved raw (the scan does NOT
-    // filter — P6 stays a downstream Catalyst op).
-    "q_source_v2_pages" -> ((s, dir) => {
-      def page(items: String) =
-        s"""{"movieListResult": {"totCnt": "5", "movieList": [$items]}}"""
-      val p1 = page(
-        """{"movieCd":"V1","movieNm":"브이 하나","movieNmEn":"Vee One",
-          | "prdtYear":"2024","openDt":"20240101","typeNm":"장편",
-          | "prdtStatNm":"개봉","nationAlt":"한국","genreAlt":"드라마",
-          | "repNationNm":"한국","repGenreNm":"드라마",
-          | "directors":[{"peopleNm":"Kim"},{"peopleNm":""}],
-          | "companys":[{"companyCd":"C1","companyNm":"Acme"},
-          |             {"companyCd":"","companyNm":"Ghost"}]},
-          |{"movieCd":"V2","movieNm":"브이 둘","movieNmEn":null}""".stripMargin)
-      val p2 = page(
-        """{"movieCd":"V3","movieNm":"Vee Three","movieNmEn":"V3 En",
-          | "prdtYear":"2023","openDt":"20240215","typeNm":"장편",
-          | "prdtStatNm":"개봉","nationAlt":"한국","genreAlt":"액션",
-          | "repNationNm":"한국","repGenreNm":"액션",
-          | "directors":[{"peopleNm":"Lee"},{"peopleNm":"Park"}],
-          | "companys":[]},
-          |{"movieCd":"V4","movieNm":"공백","movieNmEn":"  ",
-          | "prdtYear":"2024","openDt":"","typeNm":"장편",
-          | "prdtStatNm":"개봉예정","nationAlt":"한국","genreAlt":"액션",
-          | "repNationNm":"한국","repGenreNm":"액션",
-          | "directors":[],"companys":[]}""".stripMargin)
-      val p3 = page(
-        """{"movieCd":"V5","movieNm":"다섯","movieNmEn":"Five",
-          | "prdtYear":"2024","openDt":"20240501","typeNm":"장편",
-          | "prdtStatNm":"개봉","nationAlt":"한국","genreAlt":"드라마",
-          | "repNationNm":"한국","repGenreNm":"드라마",
-          | "directors":[{"peopleNm":"최감독"}],"companys":[]}""".stripMargin)
-      val root = java.nio.file.Paths.get(s"$scratchRoot/graft_kobis_v2_pages")
-      java.nio.file.Files.createDirectories(root)
-      java.nio.file.Files.writeString(root.resolve("page_0001.json"), p1)
-      java.nio.file.Files.writeString(root.resolve("page_0002.json"), p2)
-      java.nio.file.Files.writeString(root.resolve("page_0003.json"), p3)
-      s.read.format("kobis-pages").option("pageSize", "2")
-        .option("path", root.toString).load()
-        .select("movie_cd", "movie_nm", "movie_nm_en", "open_dt",
-          "rep_genre_nm", "directors", "companys")
-        .orderBy("movie_cd")
-    }),
-
-    // S1 at the DataSourceV2 tier with FILTER pushdown as partition
-    // pruning (round-10 verdict #5): one landed file per targetDt
-    // (`kobisdata_extractor.py:127-150`'s per-day fetch), so the pushed
-    // `target_dt >= DATE'2024-01-02'` plans only the two in-range day
-    // files — KobisDailyV2Spec pins the planned-partition count and
-    // that the pushed conjunct leaves no post-scan Filter. Downstream
-    // casts stay Catalyst ops; the oracle states the date-stamped,
-    // coerced result.
-    "q_source_v2_daily" -> ((s, dir) => {
-      def day(items: String) =
-        s"""{"boxOfficeResult": {"boxofficeType": "일별 박스오피스",
-           |  "showRange": "x~x", "dailyBoxOfficeList": [$items]}}""".stripMargin
-      def item(cd: String, nm: String, rank: Int, audi: String): String =
-        s"""{"rnum":"$rank","rank":"$rank","rankInten":"0",
-           | "rankOldAndNew":"OLD","movieCd":"$cd","movieNm":"$nm",
-           | "openDt":"2024-01-01","salesAmt":"1000","salesShare":"1.5",
-           | "salesInten":"0","salesChange":"0","salesAcc":"9000",
-           | "audiCnt":"$audi","audiInten":"0","audiChange":"0",
-           | "audiAcc":"5000","scrnCnt":"100","showCnt":"400"}""".stripMargin
-      val root = java.nio.file.Paths.get(s"$scratchRoot/graft_kobis_v2_daily")
-      java.nio.file.Files.createDirectories(root)
-      java.nio.file.Files.writeString(root.resolve("daily_20240101.json"),
-        day(Seq(item("D1", "하나", 1, "100"), item("D2", "둘", 2, "90")).mkString(",")))
-      java.nio.file.Files.writeString(root.resolve("daily_20240102.json"),
-        day(item("D3", "셋", 1, "80")))
-      java.nio.file.Files.writeString(root.resolve("daily_20240103.json"),
-        day(Seq(item("D4", "넷", 1, "70"), item("D5", "bad", 2, "oops")).mkString(",")))
-      s.read.format("kobis-daily").option("path", root.toString).load()
-        .filter(col("target_dt") >= lit(java.sql.Date.valueOf("2024-01-02")))
-        .select(date_format(col("target_dt"), "yyyy-MM-dd").as("target_dt"),
-          col("movie_cd"), col("movie_nm"), col("rank"),
-          coalesce(col("audi_cnt").try_cast("bigint"), lit(0L)).as("audi_cnt"))
-        .orderBy("target_dt", "rank")
-    }),
-
-    // S1 streaming tier: the same landing zone consumed as a MICRO-BATCH
-    // STREAM (readStream.format("kobis-daily")) — each day file is one
-    // batch under the forward-only day-watermark offset; the drained
-    // memory-sink contents must equal the batch adapter's rows exactly
-    // (same snake_case schema, same coercions downstream). Fresh
-    // checkpoint + dropped sink view per invocation so re-runs (bench
-    // warm + measured passes) replay from zero instead of appending.
-    "q_source_v2_daily_stream" -> ((s, dir) => {
-      def day(items: String) =
-        s"""{"boxOfficeResult": {"boxofficeType": "일별 박스오피스",
-           |  "showRange": "x~x", "dailyBoxOfficeList": [$items]}}""".stripMargin
-      def item(cd: String, nm: String, rank: Int, audi: String): String =
-        s"""{"rnum":"$rank","rank":"$rank","rankInten":"0",
-           | "rankOldAndNew":"OLD","movieCd":"$cd","movieNm":"$nm",
-           | "openDt":"2024-01-01","salesAmt":"1000","salesShare":"1.5",
-           | "salesInten":"0","salesChange":"0","salesAcc":"9000",
-           | "audiCnt":"$audi","audiInten":"0","audiChange":"0",
-           | "audiAcc":"5000","scrnCnt":"100","showCnt":"400"}""".stripMargin
-      val root = java.nio.file.Paths.get(s"$scratchRoot/graft_kobis_v2_daily_stream")
-      def rmRec(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmRec))
-        f.delete(); ()
-      }
-      rmRec(root.toFile)
-      val feed = root.resolve("feed")
-      java.nio.file.Files.createDirectories(feed)
-      java.nio.file.Files.writeString(feed.resolve("daily_20240101.json"),
-        day(Seq(item("D1", "하나", 1, "100"), item("D2", "둘", 2, "90")).mkString(",")))
-      java.nio.file.Files.writeString(feed.resolve("daily_20240102.json"),
-        day(item("D3", "셋", 1, "80")))
-      java.nio.file.Files.writeString(feed.resolve("daily_20240103.json"),
-        day(Seq(item("D4", "넷", 1, "70"), item("D5", "bad", 2, "oops")).mkString(",")))
-      val sink = "graft_v2_daily_stream_sink"
-      s.catalog.dropTempView(sink)
-      val q = s.readStream.format("kobis-daily").option("path", feed.toString)
-        .load()
-        .select(date_format(col("target_dt"), "yyyy-MM-dd").as("target_dt"),
-          col("movie_cd"), col("movie_nm"), col("rank"),
-          coalesce(col("audi_cnt").try_cast("bigint"), lit(0L)).as("audi_cnt"))
-        .writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(sink).orderBy("target_dt", "rank")
-    }),
-
-    // J6 phased — the reference's full candidate ladder
-    // (movie_events_scraper.py:64-125): recent ∪ opening-soon first, full
-    // catalog second, raw containment third, normalized-self fallback.
-    // 'widget …' and 'rod …' prove the ORDER is semantic: their phase-1
-    // winners (large widget / old rod) differ from the catalog-best
-    // matches (hot widget / hot rod) a single-phase matcher would pick.
-    "q_j6_fuzzy_title_phased" -> ((s, dir) => {
-      val titles = s.sql(
-        """SELECT * FROM VALUES ('widget <collector event>'),
-           ('rod [premiere]'), ('gizmo <limited>'),
-           ('totally unknown title'), ('[2024] <fan event> !!') AS t(title)""")
-      val recent = s.sql(
-        """SELECT * FROM VALUES ('large widget'), ('old rod'),
-           ('blue anvil') AS r(movie_nm)""")
-      FuzzyMatch.phasedBestMatch(titles, "title", recent, "movie_nm",
-          t(s, dir, "part"), "p_name")
-        .select("title", "matched")
-        .orderBy("title")
-    }),
-
-    // TPC-H Q3 shape — segment filter, 3-way join, group, top-k by revenue
-    "q3_shipping_priority" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val ord = t(s, dir, "orders").filter(to_date(col("o_orderdate")) < lit("1998-01-01"))
-      val li = t(s, dir, "lineitem").filter(to_date(col("l_shipdate")) > lit("1998-01-01"))
-      cust.join(ord, col("c_custkey") === col("o_custkey"))
-        .join(li, col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("l_orderkey"), to_date(col("o_orderdate")).as("o_date"),
-                 col("o_orderpriority"))
-        .agg(sumd(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-
-    // TPC-H Q5 shape — 6-way star join, same-nation customer/supplier
-    "q5_local_supplier_volume" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val ord = t(s, dir, "orders")
-        .filter(to_date(col("o_orderdate")) >= lit("1996-01-01")
-             && to_date(col("o_orderdate")) < lit("1998-01-01"))
-      val li = t(s, dir, "lineitem")
-      val supp = t(s, dir, "supplier")
-      val nat = t(s, dir, "nation")
-      val reg = t(s, dir, "region").filter(col("r_name") === "ASIA")
-      cust.join(ord, col("c_custkey") === col("o_custkey"))
-        .join(li, col("o_orderkey") === col("l_orderkey"))
-        .join(Hints.bcast(supp), col("l_suppkey") === col("s_suppkey")
-                            && col("c_nationkey") === col("s_nationkey"))
-        .join(Hints.bcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .join(Hints.bcast(reg), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("n_name")
-        .agg(sumd(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-
-    // TPC-H q9 shape (round-8 verdict #2 — multi-way join evidence): a
-    // 5-table plan with a REAL fact-fact join (lineitem ⋈ orders, both
-    // fact-sized, AQE-planned sort-merge) surrounded by broadcast dims
-    // (part/supplier/nation), grouping ON the join result (nation ×
-    // order-year), and a selective dim predicate (p_name LIKE) that
-    // semi-join-reduces the fact side through the broadcast. The
-    // reference itself caps at 2-way joins (dashboard.py:287), so this
-    // is engine-surface evidence beyond parity: join reordering,
-    // broadcast selection, and the shuffle placement Catalyst picks on
-    // a plan the fuzz grammar (one LEFT JOIN) never generates. No
-    // partsupp table in the testdata star — the cost leg re-derives
-    // from p_retailprice × quantity instead of ps_supplycost.
-    "q9_product_type_profit" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val prt = t(s, dir, "part").filter(col("p_name").contains("bolt"))
-      val supp = t(s, dir, "supplier")
-      val nat = t(s, dir, "nation")
-      val ord = t(s, dir, "orders")
-      li.join(Hints.bcast(prt), col("l_partkey") === col("p_partkey"))
-        .join(Hints.bcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .join(Hints.bcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("n_name").as("nation"),
-          year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(sumd(col("l_extendedprice") * (lit(1) - col("l_discount"))
-               - lit(0.1) * col("p_retailprice") * col("l_quantity")).as("profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    }),
-
-    // TPC-H q18 shape: semi-join reduction — the HAVING subquery (orders
-    // whose total lineitem quantity exceeds the threshold) reduces the
-    // orders fact via LEFT SEMI before the 3-table join + re-aggregation.
-    // The aggregate that feeds the semi join and the final sum_qty both
-    // ride the same lineitem key (l_orderkey), and the top-100 is a
-    // TakeOrderedAndProject, not a global sort.
-    "q18_large_volume" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val bigOrders = li.groupBy("l_orderkey")
-        .agg(sum(dec(col("l_quantity"))).as("__sq"))
-        .filter(col("__sq") > 150)
-        .select(col("l_orderkey").as("o_orderkey"))
-      val ord = t(s, dir, "orders").join(bigOrders, Seq("o_orderkey"), "left_semi")
-      val cust = t(s, dir, "customer")
-      cust.join(ord, col("c_custkey") === col("o_custkey"))
-        .join(li, col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("c_name"), col("c_custkey"), col("o_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_orderdate"),
-          col("o_totalprice"))
-        .agg(sumd(col("l_quantity")).as("sum_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(100)
-    }),
-
-    // TPC-H q21 shape — the hallmark correlated EXISTS + NOT EXISTS SELF
-    // correlation on the big fact: per lineitem, (a) ANOTHER supplier
-    // contributed to the same order (left-semi, fact-fact, inequality in
-    // the join condition) and (b) NO other supplier shipped later
-    // (left-anti with a theta leg on the date). Both correlations ride
-    // the l_orderkey equi key, so each is one hash join keyed by the
-    // fact's natural key — no per-row subquery re-execution; the
-    // supplier dim broadcasts; the count is map-side-combinable.
-    "q21_waiting_supplier" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val l1 = li.select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-      val others = li.select(col("l_orderkey").as("__ok"),
-        col("l_suppkey").as("__os"), col("l_shipdate").as("__osd"))
-      val wait = l1
-        .join(others, col("l_orderkey") === col("__ok")
-          && col("__os") =!= col("l_suppkey"), "left_semi")
-        .join(others, col("l_orderkey") === col("__ok")
-          && col("__os") =!= col("l_suppkey")
-          && col("__osd") > col("l_shipdate"), "left_anti")
-      wait
-        .join(t(s, dir, "orders").filter(col("o_orderstatus") === "F"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(Hints.bcast(t(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy("s_name")
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(20)
-    }),
-
-    // F2 — JSON-string column extraction (kobisdata_extractor.py:93-113 /
-    // ai_agent.py:137-139 boundary): events.props is a JSON object
-    "q_f2_json_props" -> ((s, dir) => {
-      t(s, dir, "events")
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-             sum(col("k")).as("sum_k"),
-             max(col("k")).as("max_k"),
-             min(col("k")).as("min_k"))
-        .orderBy("event_type")
-    }),
-
-    // A2 — scalar freshness aggregate (dashboard.py:124-129 MAX(scraped_at))
-    "q_a2_freshness" -> ((s, dir) => {
-      t(s, dir, "events")
-        .agg(max(expr("ts div 1000")).as("max_ts_us"),
-             min(expr("ts div 1000")).as("min_ts_us"),
-             count(lit(1)).as("n_events"))
-    }),
-
-    // F4/F7/F10 — scalar suite: date_format, year, regexp_extract
-    "q_f_scalar_suite" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .transform(Stage.spread) // regexp extraction per row dominates the single-task scan
-        .withColumn("month", date_format(col("o_orderdate"), "yyyy-MM"))
-        .withColumn("yr", year(col("o_orderdate")).cast("long"))
-        .withColumn("pri_num", regexp_extract(col("o_orderpriority"), "^(\\d)-", 1).cast("int"))
-        .withColumn("pri_label", lower(trim(regexp_extract(col("o_orderpriority"), "^\\d-(.+)$", 1))))
-        .groupBy("month", "yr", "pri_num", "pri_label")
-        .agg(count(lit(1)).as("n"),
-             sumd(col("o_totalprice")).as("total_price"))
-        .orderBy("month", "pri_num")
-    }),
-
-    // P6/P7/P12 — conjunctive filters incl. not-null/not-empty + contains
-    // skew-safe two-stage aggregation: salted partial→final decimal sums
-    // are bit-identical to a direct GROUP BY (order-independent), which
-    // is exactly what the oracle proves on the 3-hot-value return flag
-    "q_skew_salted_sum" -> ((s, dir) => {
-      Skew.saltedGroupSum(t(s, dir, "lineitem"), "l_returnflag", "l_quantity",
-          saltBuckets = 16)
-        .select(col("l_returnflag"), col("total").cast("double").as("total"),
-          col("n"))
-        .orderBy("l_returnflag")
-    }),
-
-    "q_p6_multi_filter" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .filter(col("lang").isNotNull && col("lang") =!= ""
-             && col("n_chars") > 200 && col("text").contains("spark"))
-        .select("doc_id", "lang", "source", "n_chars")
-        .orderBy("doc_id")
-    }),
-
-    // the AQE skew lever's demonstration join (round-9 verdict #6): the
-    // fact side shuffles on event_type — FIVE distinct keys, each ~20 %
-    // of the table, the canonical few-hot-keys skew a uniform hash
-    // fan-out cannot spread. Under Verify's defaults this is an
-    // ordinary hash-green join; PlanShapeSpec re-executes it with
-    // broadcast disabled + skew thresholds lowered and pins that AQE's
-    // OptimizeSkewedJoin actually SPLITS the hot partitions
-    // (AQEShuffleRead ... skewed in the final plan) with identical
-    // results — runtime skew-split evidence, complementing the manual
-    // Skew.saltedGroupSum lever
-    "q_skew_join_aqe" -> ((s, dir) => {
-      import s.implicits._
-      val dim = Seq(
-        ("click", "engagement"), ("view", "engagement"),
-        ("purchase", "revenue"), ("signup", "growth"), ("error", "ops"))
-        .toDF("event_type", "tier")
-      t(s, dir, "events")
-        // multi-mapper fact side: a skewed reduce partition splits by
-        // MAPPER ranges, so a single-row-group toy scan (one mapper)
-        // would leave AQE nothing to split — at scale this is a no-op
-        .transform(Stage.spread)
-        .join(dim, "event_type")
-        .groupBy("tier")
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(38,6)")).cast("double").as("total_value"))
-        .orderBy("tier")
-    }),
-
-    // ---- LLM-data-pipeline pack -------------------------------------
-
-    // token counting (whitespace + BPE-ish regex) + type-token ratio
-    "q_text_tokens" -> ((s, dir) => {
-      TextAnalysis.withTokenStats(t(s, dir, "documents"), "text")
-        .withColumn("n_tokens_re",
-          size(regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))))
-        .select("doc_id", "n_tokens", "n_unique", "ttr", "n_tokens_re")
-        .orderBy("doc_id")
-    }),
-
-    // JSONL landing-zone ingest with corrupt-line quarantine: PERMISSIVE
-    // schema-first read keeps every input line accounted for — parseable
-    // lines land typed (missing fields → null, NOT rejected), truncated/
-    // non-JSON lines land whole in the quarantine side; the oracle pins
-    // the exact split and the count of rejected lines
-    "q_source_jsonl_quarantine" -> ((s, dir) => {
-      val fixture = Seq(
-        """{"doc_id": 1, "text": "alpha beta", "lang": "en"}""",
-        """{"doc_id": 2, "text": "gamma", "lang": "de"}""",
-        """{"doc_id": 3, "text": "no lang"}""",
-        """{"doc_id": 4, "text": """,
-        """not json at all""").mkString("\n")
-      // fixed path, cleared on entry (the stream-query temp-dir pattern;
-      // round-9 verdict nit #4) — nothing accumulates across harness runs
-      val root = new org.apache.hadoop.fs.Path(s"$scratchRoot/graft_jsonl_fixture")
-      root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
-      val p = java.nio.file.Paths.get(s"$scratchRoot/graft_jsonl_fixture/docs.jsonl")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, fixture)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("lang",
-          org.apache.spark.sql.types.StringType)))
-      val (clean, bad) =
-        graft.sources.JsonlSource.split(
-          graft.sources.JsonlSource.readWithQuarantine(s, p.toString, schema))
-      clean.crossJoin(Hints.bcast(bad.agg(count(lit(1)).as("n_quarantined"))))
-        .select("doc_id", "text", "lang", "n_quarantined")
-        .orderBy("doc_id")
-    }),
-
-    // corpus-mix drift monitoring: PSI per language between an even-id
-    // reference snapshot and an odd-id current snapshot with 'zh'
-    // removed — the vanished-key side exercises the ε-smoothing path,
-    // the survivors the plain-fraction path
-    "q_drift_report" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Analytics.distributionDrift(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0),
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1 && col("lang") =!= "zh"),
-          "lang")
-        .orderBy("lang")
-    }),
-
-    // numeric PSI drift: the current snapshot is the reference shifted
-    // +20000 — an exact location shift that drains the low reference
-    // bins and floods the top one, exercising both the equi-depth
-    // binning (exact ref-quantile edges, rounded to 6 for cross-engine
-    // bit-identical assignment) and the ε path for emptied bins
-    "q_drift_numeric" -> ((s, dir) => {
-      val ord = t(s, dir, "orders")
-      Analytics.numericDrift(
-          ord.filter(pmod(col("o_orderkey"), lit(2)) === 0)
-            .select(col("o_totalprice")),
-          ord.filter(pmod(col("o_orderkey"), lit(2)) === 1)
-            .select((col("o_totalprice") + 20000.0d).as("o_totalprice")),
-          "o_totalprice", nBins = 8)
-        .orderBy("bin")
-    }),
-
-    // the 100 TB drift form: same PSI report, bin edges from the
-    // mergeable quantile sketch instead of an exact percentile sort
-    // over the reference — and still hash-checked, because the sketch
-    // is engine-portable arithmetic (see Analytics.numericDriftSketch)
-    "q_drift_numeric_sketch" -> ((s, dir) => {
-      val ord = t(s, dir, "orders")
-      Analytics.numericDriftSketch(
-          ord.filter(pmod(col("o_orderkey"), lit(2)) === 0)
-            .select(col("o_totalprice")),
-          ord.filter(pmod(col("o_orderkey"), lit(2)) === 1)
-            .select((col("o_totalprice") + 20000.0d).as("o_totalprice")),
-          "o_totalprice", nBins = 8)
-        .orderBy("bin")
-    }),
-
-    // the STREAMING dual of q_drift_report (one oracle text, two
-    // execution models — the house pattern): a complete-mode
-    // groupBy(lang).count() stream maintains the current snapshot's
-    // counts incrementally (the stateful half — at production volumes
-    // this is the live mix monitor updated per micro-batch), and the
-    // PSI arithmetic derives from the drained count table exactly as
-    // the batch path derives from its aggregation
-    "q_stream_drift" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val raw = Tables.loadRaw(s, dir, "documents")
-      val curCounts = graft.streaming.StreamDrain.drain(s,
-          s"$dir/documents.parquet", raw.schema, "stream_drift", "complete") { src =>
-        src.filter(pmod(col("doc_id"), lit(2)) === 1 && col("lang") =!= "zh")
-          .groupBy("lang").agg(count(lit(1)).as("cur_cnt"))
-      }
-      Analytics.distributionDriftFromCounts(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-            .groupBy("lang").agg(count(lit(1)).as("ref_cnt")),
-          curCounts, "lang")
-        .orderBy("lang")
-    }),
-
-    // exact heavy hitters via Misra–Gries sketch + exact verify: the
-    // sketch's n/(k+1) survival guarantee makes it a COMPLETE candidate
-    // generator, so the verified output equals the oracle's plain
-    // GROUP BY … HAVING cnt·(k+1) > n — approximate machinery, exact
-    // contract (k = 40 puts the 30 uniform vocabulary words above the
-    // threshold and the rare `dup` marker below it, exercising both
-    // sides of the filter)
-    "q_text_heavy_hitters" -> ((s, dir) => {
-      TextAnalysis.heavyHitters(t(s, dir, "documents"), "text", k = 40)
-        .orderBy(col("cnt").desc, col("token"))
-    }),
-
-    // per-group heavy hitters: grouped MG aggregation (≤ k counters per
-    // (partition, group) crossing the exchange) + per-group exact verify
-    // against each group's own token total — per-lang k=40 keeps the
-    // same 30-word outcome per language but with per-group counts
-    "q_text_heavy_hitters_by_lang" -> ((s, dir) => {
-      TextAnalysis.heavyHittersByGroup(t(s, dir, "documents"),
-          "lang", "text", k = 40)
-        .orderBy(col("lang"), col("cnt").desc, col("token"))
-    }),
-
-    // the STREAMING dual: the Misra–Gries sketch maintained
-    // INCREMENTALLY by a complete-mode stream (its state IS the
-    // serialized sketch buffer, merged per micro-batch), then the exact
-    // verify pass over the batch corpus — hash-equal to the batch dual
-    // under the SAME oracle text because the n/(k+1) guarantee holds
-    // under ANY merge order, streaming included; the verify pass makes
-    // the answer exact regardless of which sub-threshold candidates the
-    // streaming merge happened to keep
-    "q_stream_heavy_hitters" -> ((s, dir) => {
-      val raw = Tables.loadRaw(s, dir, "documents")
-      val cands = graft.streaming.StreamDrain.drain(s,
-          s"$dir/documents.parquet", raw.schema,
-          "stream_heavy_hitters", "complete") { src =>
-        src.select(explode(TextAnalysis.tokens(col("text"))).as("token"))
-          .filter(length(col("token")) > 0)
-          .agg(graft.functions.MisraGriesAgg(src.sparkSession,
-            col("token"), 40).as("c"))
-      }.select(explode(col("c")).as("token"))
-      TextAnalysis.heavyHittersVerify(t(s, dir, "documents"), "text", cands, k = 40)
-        .orderBy(col("cnt").desc, col("token"))
-    }),
-
-    // quality scoring: length/stopword/token-shape signals → [0,1] score
-    "q_text_quality" -> ((s, dir) => {
-      TextAnalysis.withQuality(t(s, dir, "documents"), "text")
-        .select("doc_id", "n_tokens", "avg_token_len", "stop_ratio", "quality_score")
-        .orderBy("doc_id")
-    }),
-
-    // heuristic language ID via per-language stopword hits
-    "q_text_langid" -> ((s, dir) => {
-      TextAnalysis.withLangId(t(s, dir, "documents"), "text")
-        .select("doc_id", "lang", "detected",
-                "en_hits", "es_hits", "fr_hits", "de_hits")
-        .orderBy("doc_id")
-    }),
-
-    // document fingerprinting (normalization hash) + collision count
-    "q_text_fingerprint" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .transform(Stage.spreadLarge(_)) // md5+regexp per row; exchange only pays on big inputs
-        .withColumn("fingerprint", TextAnalysis.fingerprint(col("text")))
-      d.withColumn("n_same",
-          count(lit(1)).over(Window.partitionBy(col("fingerprint"))))
-        .select("doc_id", "fingerprint", "n_same")
-        .orderBy("doc_id")
-    }),
-
-    // 64-bit SimHash per document (md5-derived, oracle-reproducible)
-    "q_text_simhash" -> ((s, dir) => {
-      TextAnalysis.withSimhash(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // exact dedup: canonical doc per identical text
-    "q_dedup_exact" -> ((s, dir) => {
-      Dedup.exactCanonical(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("content_hash")
-    }),
-
-    // n-gram Jaccard near-dup pairs (5-gram word shingles, ≥0.8)
-    "q_dedup_ngram_jaccard" -> ((s, dir) => {
-      Dedup.jaccardPairsFromText(t(s, dir, "documents"), "doc_id", "text",
-          k = 5, threshold = 0.8)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // hot-shingle df-cap: same Jaccard pair form, but shingles in more
-    // than maxShingleDf docs leave the universe before the self-join —
-    // the guard that keeps boilerplate from making the direct pair form
-    // quadratic; scores are exact over the capped universe
-    "q_dedup_jaccard_capped" -> ((s, dir) => {
-      Dedup.jaccardPairsFromText(t(s, dir, "documents"), "doc_id", "text",
-          k = 5, threshold = 0.2, maxShingleDf = Some(2L))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // asymmetric containment pairs: |A∩B| / min(|A|,|B|) over 5-gram
-    // shingles — catches a short doc quoted inside a long one, which
-    // Jaccard's union-denominator structurally misses
-    "q_dedup_containment" -> ((s, dir) => {
-      Dedup.containmentPairs(t(s, dir, "documents"), "doc_id", "text",
-          k = 5, threshold = 0.9)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // SimHash near-dup pairs: 16-bit chunk banding + Hamming ≤ 8 verify
-    "q_dedup_simhash_pairs" -> ((s, dir) => {
-      Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text", maxHamming = 8)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // hot-bucket df-cap on the simhash banding (round-13, from the sf10
-    // gate's 169M-pair find): buckets with more than 12 members leave
-    // the candidate universe before the self-join — the maxShingleDf
-    // guard applied to simhash; pairs exact over the capped universe
-    "q_dedup_simhash_capped" -> ((s, dir) => {
-      Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
-          maxHamming = 8, maxBucketDf = Some(12L))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // MinHash (16 hashes) + LSH (4 bands) candidates, exact-Jaccard ≥0.5
-    "q_dedup_minhash_lsh" -> ((s, dir) => {
-      Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-          k = 5, numHashes = 16, numBands = 4, threshold = 0.5)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // incremental ingestion dedup: fresh slice (doc_id % 5 == 0) checked
-    // against the stored index of the rest + itself, via band-key probes
-    "q_dedup_incremental" -> ((s, dir) => {
-      // ONE index pass over the corpus, split by the fresh flag — the
-      // same cost shape as reading a stored index table twice
-      val all = graft.operators.OpCache.persist(
-        Dedup.minhashIndex(t(s, dir, "documents"), "doc_id", "text",
-          k = 5, numHashes = 16, numBands = 4))
-      Dedup.incrementalNearDups(
-          all.filter(pmod(col("doc_id"), lit(5)) =!= 0),
-          all.filter(pmod(col("doc_id"), lit(5)) === 0),
-          "doc_id", threshold = 0.5)
-        .orderBy("id_fresh", "id_other")
-    }),
-
-    // end-to-end corpus dedup: LSH candidates → Jaccard ≥0.5 → connected
-    // components → canonical survivor per cluster, with cluster sizes
-    "q_dedup_corpus" -> ((s, dir) => {
-      Dedup.dedupCorpus(t(s, dir, "documents"), "doc_id", "text",
-          k = 5, numHashes = 16, numBands = 4, threshold = 0.5)
-        .orderBy("doc_id")
-    }),
-
-    // quality-preferring corpus dedup: each near-dup cluster keeps its
-    // LONGEST member (n_chars desc, id tie-break) — the CCNet/
-    // RefinedWeb keep-best-rendition policy, vs dedupCorpus's min-id
-    "q_dedup_corpus_best" -> ((s, dir) => {
-      Dedup.dedupCorpusBy(t(s, dir, "documents"), "doc_id", "text", "n_chars",
-          k = 5, numHashes = 16, numBands = 4, threshold = 0.5)
-        .orderBy("doc_id")
-    }),
-
-    // most-duplicated passages: top-20 word 4-grams by total occurrence
-    // count — the boilerplate diagnostic behind span dedup
-    "q_dedup_top_grams" -> ((s, dir) => {
-      Dedup.topDuplicatedGrams(t(s, dir, "documents"), "doc_id", "text",
-          k = 4, topN = 20)
-        .orderBy(col("n_occurrences").desc, col("gram").asc)
-    }),
-
-    // per-document k-gram novelty: fraction of the doc's distinct
-    // 4-grams appearing in no other document — the prune-ranking score
-    "q_text_novelty" -> ((s, dir) => {
-      Dedup.noveltyScore(t(s, dir, "documents"), "doc_id", "text", k = 4)
-        .orderBy("doc_id")
-    }),
-
-    // exact-substring span dedup (Lee et al. 2022): maximal 1-based token
-    // spans covered by any word 4-gram occurring >= 2 times corpus-wide
-    // (counting repeats within a document)
-    "q_dedup_spans" -> ((s, dir) => {
-      Dedup.duplicateSpans(t(s, dir, "documents"), "doc_id", "text", k = 4)
-        .orderBy("doc_id", "span_start")
-    }),
-
-    // the matching removal: every document with its duplicated spans cut
-    // out (kept tokens re-joined in order) and the removed-token count
-    "q_dedup_span_removal" -> ((s, dir) => {
-      Dedup.removeDuplicateSpans(t(s, dir, "documents"), "doc_id", "text", k = 4)
-        .orderBy("doc_id")
-    }),
-
-    // stored-index BUILD half of the incremental-dedup pair (see the
-    // memo at the top of the object): hash the corpus slice (doc_id %
-    // 5 != 0), write the (band,key)-bucketed + id-bucketed tables.
-    // Rebuilds every call — this entry's bench time IS the build cost.
-    // Result: per-band entry/distinct-key counts read back from the
-    // stored table, so the oracle checks the written keys themselves.
-    "q_dedup_index_build" -> ((s, dir) => {
-      buildDedupIndex(s, dir)
-      s.table(DedupIdxBands)
-        .groupBy(col("band").cast("long").as("band"))
-        .agg(count(lit(1)).as("n_entries"), countDistinct(col("key")).as("n_keys"))
-        .orderBy("band")
-    }),
-
-    // stored-index PROBE half: the fresh batch (doc_id % 5 == 0) is
-    // hashed and served against the bucketed tables — corpus text was
-    // hashed once at build time, the probe join co-locates against the
-    // bucketed scan (≤1 exchange, asserted by DedupSpec). The index is
-    // built lazily once per session if the build entry hasn't run.
-    "q_dedup_incremental_stored" -> ((s, dir) => {
-      ensureDedupIndex(s, dir)
-      val fresh = Dedup.minhashIndex(
-        t(s, dir, "documents").filter(pmod(col("doc_id"), lit(5)) === 0),
-        "doc_id", "text", k = 5, numHashes = 16, numBands = 4)
-      Dedup.incrementalNearDupsStored(s, DedupIdxBands, DedupIdxDocs,
-          fresh, "doc_id", threshold = 0.5)
-        .orderBy("id_fresh", "id_other")
-    }),
-
-    // brute-force cosine top-3 per query vector (exact ANN baseline)
-    "q_sim_cosine_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(
-          emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    // int8-quantized cosine top-3: the 4× memory/bandwidth scale lever;
-    // scoring is exact integer code dots, so the oracle checks it exactly
-    "q_sim_int8_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.int8TopK(emb.filter(col("vec_id") < 5), emb,
-          "vec_id", "embedding", k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    // hard-negative mining (exact tier): for each of 5 query vectors,
-    // the 3 most cosine-similar vectors with a DIFFERENT label — the
-    // near-boundary negatives a contrastive loss trains on
-    "q_sim_hard_negatives" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.hardNegatives(emb.filter(col("vec_id") < 5), emb,
-          "vec_id", "embedding", "label", k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    // hard-negative mining, IVF-cell-bounded (the 100 TB form): same
-    // different-label predicate over the deterministic-cell candidate
-    // join (cells = vec_id < 16, nProbe = 2), so candidate generation
-    // AND scores are oracle-exact
-    "q_sim_hard_negatives_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.hardNegativesIvf(emb, emb.filter(col("vec_id") < 5),
-          nCells = 16, "vec_id", "embedding", "label", k = 3, nProbe = 2)
-        .orderBy("query_id", "rank")
-    }),
-
-    // product-quantization ADC top-3 with deterministic codebooks
-    // (subvectors of vec_id < 4): codes and approximate dots are
-    // decimal-exact, so the PQ approximation itself is oracle-checked
-    "q_sim_pq_adc" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.pqAdcDeterministic(emb.filter(col("vec_id") < 5), emb,
-          "vec_id", "embedding", dim = 64, m = 4, ksub = 4, k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    // composed IVF-PQ with deterministic cells (vec_id < 16) and
-    // deterministic codebooks (subvectors of vec_id < 4): candidate set
-    // AND approximate scores are decimal-exact → the whole two-level
-    // approximation is oracle-checked
-    "q_sim_ivfpq_adc" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfPqAdcDeterministic(emb.filter(col("vec_id") < 5), emb,
-          "vec_id", "embedding", dim = 64, nCells = 16, m = 4, ksub = 4, k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    // two-stage retrieval at the oracle tier: the SAME deterministic ADC
-    // chain shortlists 10 per query, then the exact fixed-point cosine
-    // reranks — the production shortlist-then-rerank shape whose trained
-    // face (ivfPqRerankTopK) carries the bench recall metric
-    "q_sim_ivfpq_rerank" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfPqAdcRerankDeterministic(emb.filter(col("vec_id") < 5), emb,
-          "vec_id", "embedding", dim = 64, nCells = 16, m = 4, ksub = 4,
-          k = 3, rerank = 10)
-        .orderBy("query_id", "rank")
-    }),
-
-    // RESIDUAL IVFADC at the oracle tier (round-9 verdict #2): residuals
-    // r = x − cell-centroid in exact decimal, codebook = residuals of
-    // vec_ids 16..19, score = exact cell dot + residual ADC — the
-    // residual decomposition the trained ivfPqResidualTopK uses, with
-    // every arithmetic step recomputed by the DuckDB oracle
-    "q_sim_ivfpq_residual" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfPqResidualAdcDeterministic(emb.filter(col("vec_id") < 5), emb,
-          "vec_id", "embedding", dim = 64, nCells = 16, m = 4, ksub = 4, k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    // LSH-bucketed ANN top-3 (8 sign-projection planes) — the scale path
-    "q_sim_ann_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.annTopK(emb, emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", nPlanes = 8, dim = 64, k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    // multimodal plumbing: binary payload column → typed feature extract
-    "q_multimodal_meta" -> ((s, dir) => {
-      val media = t(s, dir, "documents").select(
-        col("doc_id"),
-        concat(lit("image/"), col("source")).as("media_type"),
-        col("text").cast("binary").as("blob"))
-      Multimodal.extractFeatures(s, media).orderBy("doc_id")
-    }),
-
-    // REAL image codec round trip (round-5 verdict stretch #8): per doc,
-    // a deterministic PNG ENCODED through the JDK's ImageIO writer (the
-    // testdata carries no image files; dims cycle with doc_id % 32, so
-    // the 32 representative images are encoded once per JVM and reused)
-    // and the engine's header-only metadata probe DECODES it back PER
-    // ROW; the oracle states the synthesis arithmetic, so agreement
-    // proves actual decode execution per row — encode dims survive a
-    // real PNG round trip, format detected "png".
-    "q_multimodal_decode" -> ((s, dir) => {
-      // base PNGs only = the cached aHash corpus below the perturbed-id
-      // offset (round-15 verdict #1: the encode is fixture; the per-row
-      // DECODE — the operator the oracle proves — still runs from the
-      // blobs every run)
-      val media = ahashCorpus(s, dir).filter(col("doc_id") < 100000000L)
-      Multimodal.decodeImageMeta(s, media).orderBy("doc_id")
-    }),
-
-    // perceptual aHash over REAL decoded pixels: decode→8×8 average
-    // pool→threshold, oracle restates the (lossless) fixture's pixel
-    // formula as closed-form arithmetic — content decode verified, not
-    // just headers. Corpus = base fixtures + XOR-perturbed variants
-    // (doc_id + 100000000, clear of real ids at every sf), which seed
-    // genuine near-dup pairs below
-    "q_multimodal_ahash" -> ((s, dir) => {
-      Multimodal.imageAHashBands(s, ahashCorpus(s, dir)).orderBy("doc_id")
-    }),
-
-    // image near-dup at the oracle tier: banded candidates (pairs share
-    // an exact 16-bit band — the SimHash chunk shape, never all-pairs)
-    // verified by bit_count Hamming ≤ τ; perturbed copies land near
-    // their base, different bases stay far
-    "q_multimodal_image_neardup" -> ((s, dir) => {
-      Multimodal.imageNearDupPairs(s,
-          Multimodal.imageAHashBands(s, ahashCorpus(s, dir)), tau = 8)
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // per-document pair budget over the same search (round-9 verdict
-    // #9): each doc reports its 2 best partners by (dist, doc_b) — the
-    // Θ(Σ group²) report term bounded to corpus×cap, dist-0 partners
-    // generated by lead() instead of the group self-join; the oracle is
-    // the uncapped derivation under a LIMIT-per-group window
-    "q_multimodal_image_neardup_capped" -> ((s, dir) => {
-      Multimodal.imageNearDupPairsCapped(s,
-          Multimodal.imageAHashBands(s, ahashCorpus(s, dir)), tau = 8,
-          maxPairsPerDoc = 2)
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // streaming dual of the aHash pass: BINARY payloads through
-    // readStream, the same stateless typed mapPartitions decode per
-    // micro-batch — same oracle SQL text as the batch q_multimodal_ahash
-    // (the corpus-gate dual pattern, extended to the multimodal surface)
-    "q_stream_multimodal_ahash" -> ((s, dir) => {
-      val corpus = ahashCorpus(s, dir)
-      // FEED cached per sf dir (round-15, guide §1.4: time the operator,
-      // not the fixture): the two-batch PNG feed is a deterministic
-      // function of the documents table, and re-encoding the synthetic
-      // corpus to parquet on every run only added two corpus-sized
-      // writes in front of the drain being measured. The drain itself —
-      // readStream + per-micro-batch decode, the operator under test —
-      // still runs from scratch every time (fresh checkpoint inside
-      // StreamDrain).
-      val streamDir = cachedFeed(s,
-          s"graft_feed_mmstream_${dir.replaceAll("[^A-Za-z0-9]", "_")}",
-          srcToken(s, dir, "documents")) { feedDir =>
-        emitFeedFile(corpus.filter(pmod(col("doc_id"), lit(2)) === 0),
-          feedDir, "b1", 1000000L)
-        emitFeedFile(corpus.filter(pmod(col("doc_id"), lit(2)) === 1),
-          feedDir, "b2", 2000000L)
-      }
-      graft.streaming.StreamDrain.drain(s, streamDir,
-          corpus.schema, "stream_multimodal_ahash", "append",
-          sourceOptions = Map("maxFilesPerTrigger" -> "1")) { src =>
-        Multimodal.imageAHashBands(s, src)
-      }.orderBy("doc_id")
-    }),
-
-    // the audio dual of the aHash pair: REAL javax.sound PCM parse →
-    // 64-window energy-envelope fingerprint, oracle = closed-form
-    // arithmetic over the WAV fixture's sample formula
-    "q_multimodal_audio_fp" -> ((s, dir) => {
-      Multimodal.audioFingerprintBands(s, audioFpCorpus(s, dir))
-        .orderBy("doc_id")
-    }),
-
-    // audio near-dup pairs through the SAME modality-agnostic banded
-    // search as images — bands in, Hamming-verified pairs out
-    "q_multimodal_audio_neardup" -> ((s, dir) => {
-      Multimodal.imageNearDupPairs(s,
-          Multimodal.audioFingerprintBands(s, audioFpCorpus(s, dir)), tau = 8)
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // the multimodal dedup story end to end: aHash → banded pairs →
-    // connected components → cluster labels (same star-contraction
-    // machinery as text dedup; the oracle walks the closed-form pair
-    // set with a recursive CTE)
-    // the LINEAR cluster path (round-9: representatives + member edges,
-    // never the Θ(Σ group²) pair set) against the SAME oracle that the
-    // full-pair-graph clustering passed — the plan swap is hash-proven
-    // output-identical
-    "q_multimodal_dedup_clusters" -> ((s, dir) => {
-      Multimodal.mediaDedupClusters(s,
-          Multimodal.imageAHashBands(s, ahashCorpus(s, dir)), tau = 8)
-        .select(col("id").as("doc_id"), col("comp").as("cluster_id"))
-        .orderBy("doc_id")
-    }),
-
-    // audio chunking at the oracle tier: the windows' offset arithmetic
-    // (stride = chunk - overlap, tail chunks with no new samples
-    // dropped, last chunk truncated to the remaining samples) is pure
-    // integer math on the payload length — both engines state it over
-    // the documents text bytes standing in as 16-bit PCM
-    "q_multimodal_chunks" -> ((s, dir) => {
-      val media = t(s, dir, "documents").select(
-        col("doc_id"), lit("audio").as("media_type"),
-        col("text").cast("binary").as("blob"))
-      Multimodal.chunkAudio(s, media, chunkSamples = 256, overlap = 64)
-        .select("doc_id", "chunk_idx", "start_sample", "n_samples")
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // REAL audio container round trip: deterministic 16-bit PCM WAVs
-    // through the JDK's javax.sound writer, header-parsed back to
-    // (sample_rate, channels, n_frames) against the synthesis arithmetic
-    "q_multimodal_audio" -> ((s, dir) => {
-      // base WAVs only = the cached audio corpus below the perturbed-id
-      // offset (see q_multimodal_decode — encode is fixture, the header
-      // parse under test still runs per row)
-      val media = audioFpCorpus(s, dir).filter(col("doc_id") < 100000000L)
-      Multimodal.decodeAudioMeta(s, media).orderBy("doc_id")
-    }),
-
-    // corrupt-blob quarantine at the oracle tier (round-6 verdict #6):
-    // even doc_ids carry a REAL synthetic PNG, odd ones carry raw text
-    // bytes no ImageIO reader recognizes — the probe must land the PNGs
-    // on the synthesis arithmetic AND route every non-image to
-    // (-1, -1, 'unknown') instead of throwing, per row, in one pass
-    "q_multimodal_unknown" -> ((s, dir) => {
-      // corpus cached per sf dir (encode/byte-packing is fixture; the
-      // per-row decode-or-quarantine routing under test runs every run)
-      val media = cachedMediaCorpus(s, dir, "graft_mm_unknown") {
-        import s.implicits._
-        t(s, dir, "documents")
-          .select(col("doc_id"), col("text")).as[(Long, String)]
-          .mapPartitions(_.map { case (id, text) =>
-            graft.operators.Multimodal.MediaRecord(id, "image",
-              if (id % 2 == 0) graft.operators.Multimodal.syntheticPngFixture(id)
-              else text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }).toDF()
-      }
-      Multimodal.decodeImageMeta(s, media).orderBy("doc_id")
-    }),
-
-    // F2 — nested-array ↔ JSON-string boundary (kobisdata_extractor.py:93-113
-    // encode; ai_agent.py:137-139 decode; P15 '[]' convention)
-    "q_f2_json_roundtrip" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .withColumn("arr", slice(TextAnalysis.tokens(col("text")), 1, 3))
-        .withColumn("arr_json", to_json(col("arr")))
-        .withColumn("back", from_json(col("arr_json"), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StringType)))
-      d.select(col("doc_id"), col("arr_json"),
-          size(col("back")).as("n_items"),
-          (col("arr_json") === "[]").as("is_empty"),
-          array_contains(col("back"), "data").as("has_data"))
-        .orderBy("doc_id")
-    }),
-
-    // F11 — data-driven alias normalization (movie_events_scraper.py:151-188):
-    // broadcast alias map + left join + coalesce(canonical, raw)
-    "q_f11_alias_normalize" -> ((s, dir) => {
-      val aliases = s.sql(
-        """SELECT * FROM VALUES ('red widget', 'crimson widget'),
-           ('blue bolt', 'cobalt bolt') AS t(raw, canonical)""")
-      t(s, dir, "part")
-        .join(Hints.bcast(aliases), col("p_name") === col("raw"), "left")
-        .withColumn("norm_name", coalesce(col("canonical"), col("p_name")))
-        .groupBy("norm_name")
-        .agg(count(lit(1)).as("n"),
-             sumd(col("p_retailprice")).as("total_price"))
-        .orderBy("norm_name")
-    }),
-
-    // O7 — shortest-string pick per group (movie_events_scraper.py:123-125
-    // sort(key=len)[0]), deterministic via window
-    "q_o7_shortest_name" -> ((s, dir) => {
-      val w = Window.partitionBy(col("p_brand"))
-        .orderBy(length(col("p_name")).asc, col("p_name").asc)
-      t(s, dir, "part")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("p_brand"), col("p_name").as("shortest_name"))
-        .orderBy("p_brand")
-    }),
-
-    // §2.11 — representative text-to-SQL agent output (ai_agent.py:95-97
-    // idioms: date range, REPLACE+LIKE fuzzy match, top-k)
-    "q_sql_agent_topk" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(AgentSql)
-    }),
-
-    // §2.11 — windowed agent SQL, same text in both engines (CTE + window)
-    "q_sql_agent_window" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(AgentWindowSql)
-    }),
-
-    // §2.11 — correlated EXISTS / NOT EXISTS agent SQL (same text both
-    // engines); Spark plans these as semi/anti joins
-    "q_sql_exists" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(AgentExistsSql)
-    }),
-
-    // IVF ANN top-3: nearest-centroid cells (16 deterministic centroids),
-    // exact cosine within the query's cell (nProbe=1)
-    "q_sim_ivf_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 5), nCells = 16,
-          "vec_id", "embedding", k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    // embedding-cosine near-dup pairs: LSH-prefiltered exact cosine ≥ 0.3
-    "q_dedup_embedding_cosine" -> ((s, dir) => {
-      Similarity.nearDupPairs(t(s, dir, "embeddings"),
-          "vec_id", "embedding", nPlanes = 4, dim = 64, threshold = 0.3)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // SemDeDup semantic dedup (Abbas et al. 2023): 16 deterministic
-    // cells, within-cell cosine ≥ 0.3 components, min-id survivor per
-    // component with its cluster size. The generous maxCellSize keeps
-    // the oversized-cell guard in the exercised plan (it never trips on
-    // balanced cells — it exists to fail degenerate centroid sets loudly)
-    "q_dedup_semantic" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.semanticDedup(emb, "vec_id", "embedding",
-          emb.filter(col("vec_id") < 16), threshold = 0.3,
-          maxCellSize = Some(1000000L))
-        .orderBy("vec_id")
-    }),
-
-    // J7 — as-of join: latest event value per user at each week start
-    // (temporal join over the union-window shape; see Joins.asOf)
-    "q_asof_latest_value" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .withColumn("ts_us", expr("ts div 1000"))
-        .withColumn("ed", tsDate("ts"))
-      val weeks = ev.agg(trunc(min(col("ed")), "week").as("lo"),
-                         trunc(max(col("ed")), "week").as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"),
-          expr("interval 1 week"))).as("d"))
-      val probes = ev.select("user_id").distinct()
-        .crossJoin(weeks)
-        .withColumn("pt_us", expr("unix_date(d) * 86400000000"))
-      Joins.asOf(probes, ev.select("user_id", "ts_us", "event_id", "value"),
-          keys = Seq("user_id"), probeTimeCol = "pt_us", eventTimeCol = "ts_us",
-          carryCols = Seq("event_id", "value"), tieBreak = Seq("event_id"))
-        .select(col("user_id"), col("d"),
-                col("event_id").as("last_event_id"), col("value").as("last_value"))
-        .orderBy("user_id", "d")
-    }),
-
-    // U2 — CDC merge with tombstones: a Debezium-style I/U/D change feed
-    // applied to the store; out-of-order and multi-change keys resolve
-    // by sequence (U then D deletes; D then U resurrects). The oracle
-    // states the NET FINAL STATE directly — semantic, not a replay
-    "q_u2_cdc_merge" -> ((s, dir) => {
-      val (base, changes) = cdcFixture(s, dir)
-      Upsert.applyCdc(base, changes, Seq("c_custkey"), "op", "seq")
-        .orderBy("c_custkey")
-    }),
-
-    // SCD-2 history from the same CDC feed: every version kept as a
-    // [seq, next-seq) interval, tombstones close intervals without
-    // opening one, is_current marks open versions
-    "q_scd2_from_cdc" -> ((s, dir) => {
-      val (_, changes) = cdcFixture(s, dir)
-      Upsert.scd2FromCdc(changes, Seq("c_custkey"), "op", "seq")
-        .orderBy("c_custkey", "valid_from")
-    }),
-
-    // the same CDC feed as a STREAM: two seq-ordered micro-batches fold
-    // into an AtomicStore via foreachBatch applyCdc — cross-batch
-    // tombstone/resurrect semantics against the SAME semantic oracle
-    "q_stream_cdc_merge" -> ((s, dir) => {
-      val (base, changes) = cdcFixture(s, dir)
-      val san = dir.replaceAll("[^A-Za-z0-9]", "_")
-      // store + checkpoint reset per run (the drain must fold from
-      // scratch); the FEED — a deterministic function of the customer
-      // table — is cached per sf dir outside the timed region (guide
-      // §1.4, the q_stream_quantile_sketch pattern)
-      val root = new org.apache.hadoop.fs.Path(
-        s"$scratchRoot/graft_stream_cdc_$san")
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(root, true)
-      // log order: everything at seq 1 lands before everything at seq 2
-      val feedDir = cachedFeed(s, s"graft_feed_cdc_$san",
-          srcToken(s, dir, "customer")) { fd =>
-        emitFeedFile(changes.filter(col("seq") === 1), fd, "b1", 1000000L)
-        emitFeedFile(changes.filter(col("seq") === 2), fd, "b2", 2000000L)
-      }
-      val store = s"$root/store"
-      graft.pipelines.AtomicStore.overwrite(base, store)
-      val q = graft.streaming.StreamingUpsert.startCdc(s,
-        s.readStream.schema(changes.schema)
-          .option("maxFilesPerTrigger", "1").parquet(feedDir),
-        store, Seq("c_custkey"), "op", "seq", s"$root/ckpt")
-      try {
-        if (!q.awaitTermination(600000L))
-          throw new IllegalStateException(
-            "stream cdc drain did not terminate within 600s")
-      } finally if (q.isActive) q.stop()
-      StoreTable.read(s, store).orderBy("c_custkey")
-    }),
-
-    // J7b — forward as-of: for each (user, week-start) probe, the FIRST
-    // event at-or-after it (the backward query's mirror, same merge-
-    // sorted single-window shape)
-    "q_asof_next_value" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .withColumn("ts_us", expr("ts div 1000"))
-        .withColumn("ed", tsDate("ts"))
-      val weeks = ev.agg(trunc(min(col("ed")), "week").as("lo"),
-                         trunc(max(col("ed")), "week").as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"),
-          expr("interval 1 week"))).as("d"))
-      val probes = ev.select("user_id").distinct()
-        .crossJoin(weeks)
-        .withColumn("pt_us", expr("unix_date(d) * 86400000000"))
-      Joins.asOfForward(probes, ev.select("user_id", "ts_us", "event_id", "value"),
-          keys = Seq("user_id"), probeTimeCol = "pt_us", eventTimeCol = "ts_us",
-          carryCols = Seq("event_id", "value"), tieBreak = Seq("event_id"))
-        .select(col("user_id"), col("d"),
-                col("event_id").as("next_event_id"), col("value").as("next_value"))
-        .orderBy("user_id", "d")
-    }),
-
-    // J8 — range (interval) join via bucket decomposition: lineitems
-    // shipped within each high-value order's first week
-    "q_range_join_week" -> ((s, dir) => {
-      val iv = t(s, dir, "orders").filter(col("o_totalprice") > 495000)
-        .select(col("o_orderkey"),
-          expr("unix_date(CAST(o_orderdate AS DATE))").cast("long").as("lo"))
-        .withColumn("hi", col("lo") + 6)
-      val pt = t(s, dir, "lineitem")
-        .select(expr("unix_date(CAST(l_shipdate AS DATE))").cast("long").as("pd"),
-                col("l_extendedprice"))
-      Joins.rangeJoin(pt, iv, "pd", "lo", "hi", bucketWidth = 7)
-        .groupBy("o_orderkey")
-        .agg(count(lit(1)).as("n_items"),
-             sumd(col("l_extendedprice")).as("total_shipped"))
-        .orderBy("o_orderkey")
-    }),
-
-    // A11 — ROLLUP with subtotals + grand total: ONE SQL text executed
-    // verbatim by both engines (same convention as the agent queries)
-    "q_rollup_region" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(RollupSql)
-    }),
-
-    // A12 — pivot: month × order-priority matrix of total price
-    "q_pivot_priority" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .withColumn("month", date_format(col("o_orderdate"), "yyyy-MM"))
-        .groupBy("month")
-        .pivot("o_orderpriority",
-          Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"))
-        .agg(sumd(col("o_totalprice")))
-        .withColumnRenamed("1-URGENT", "p1_urgent")
-        .withColumnRenamed("2-HIGH", "p2_high")
-        .withColumnRenamed("3-MEDIUM", "p3_medium")
-        .withColumnRenamed("4-NOT SPECIFIED", "p4_not_specified")
-        .withColumnRenamed("5-LOW", "p5_low")
-        .orderBy("month")
-    }),
-
-    // A12b — unpivot/melt: the pivot's inverse (wide measure columns to
-    // long (id, metric, value) rows; single map-side Expand, no shuffle)
-    "q_unpivot_metrics" -> ((s, dir) => {
-      Analytics.meltLong(
-        t(s, dir, "lineitem")
-          .filter(col("l_orderkey") <= 1000)
-          .select(col("l_orderkey"), col("l_linenumber"),
-            col("l_quantity").cast("double").as("quantity"),
-            col("l_extendedprice").cast("double").as("extendedprice"),
-            col("l_discount").cast("double").as("discount")),
-        Seq("l_orderkey", "l_linenumber"),
-        Seq("quantity", "extendedprice", "discount"))
-        .orderBy("l_orderkey", "l_linenumber", "metric")
-    }),
-
-    // time-series regularization: per-customer daily totals gap-filled
-    // onto a dense date spine with LOCF + fill attribution
-    "q_timeseries_fill" -> ((s, dir) => {
-      val daily = t(s, dir, "orders")
-        .filter(col("o_custkey") <= 40)
-        .withColumn("d", col("o_orderdate").cast("date"))
-        .filter(year(col("d")) === 1997)
-        .groupBy("o_custkey", "d")
-        .agg(sumd(col("o_totalprice")).as("v"))
-      Analytics.gapFillLocf(daily, Seq("o_custkey"), "d", "v")
-        .orderBy("o_custkey", "d")
-    }),
-
-    // PCA step 1 (the only data-sized pass): exact second-moment sums +
-    // covariance of the embedding column — the driver-side Jacobi eigen
-    // step consumes exactly these 2 080 scalars (spec-verified); this
-    // oracle proves the distributed pass bit-exactly
-    "q_sim_covariance" -> ((s, dir) => {
-      Similarity.covarianceSums(t(s, dir, "embeddings"), "embedding", dim = 64)
-        .orderBy("i", "j")
-    }),
-
-    // training-free JL reduction: exact top-k cosine in 16-dim Hadamard-
-    // projected space — the projection, norms, dots, and ranking are ALL
-    // oracle-verified (unnormalized ±sums stay exact 9-place decimals)
-    "q_sim_ann_hadamard" -> ((s, dir) => {
-      val proj = Similarity.hadamardProject(t(s, dir, "embeddings"),
-        "vec_id", "embedding", k = 16, dim = 64)
-      Similarity.bruteForceTopK(proj.filter(col("vec_id") < 5), proj,
-        "vec_id", "proj", k = 3)
-    }),
-
-    // ANN quality as a hash-checked query: recall@3 of the Hadamard-
-    // reduced search against the full-space exact top-k — both sides
-    // deterministic, so the DuckDB oracle reproduces the evaluation
-    "q_sim_recall_eval" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val exact = Similarity.bruteForceTopK(
-        emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 3)
-      val proj = Similarity.hadamardProject(emb, "vec_id", "embedding",
-        k = 16, dim = 64)
-      val approx = Similarity.bruteForceTopK(
-        proj.filter(col("vec_id") < 5), proj, "vec_id", "proj", 3)
-      Similarity.recallAtK(approx, exact).orderBy("query_id")
-    }),
-
-    // chunk→doc / class-centroid pooling: per-label element-wise mean
-    // of the embedding column, decimal-exact in long format
-    "q_sim_meanpool" -> ((s, dir) => {
-      Similarity.meanPoolEmbeddings(t(s, dir, "embeddings"),
-          "label", "embedding", dim = 64)
-        .orderBy("label", "i")
-    }),
-
-    // incremental PCA maintenance: three batch partials folded by exact
-    // decimal addition must hash-equal the one-shot covariance pass —
-    // SAME oracle SQL as q_sim_covariance (the mergeability proof)
-    "q_sim_covariance_incremental" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val parts = (0 to 2).map { b =>
-        Similarity.covariancePartials(
-          emb.filter(pmod(col("vec_id"), lit(3)) === b), "embedding", dim = 64)
-      }
-      Similarity.finalizeCovariance(parts.reduce(Similarity.mergeCovariance))
-        .orderBy("i", "j")
-    }),
-
-    // A13 — exact percentiles (linear interpolation) per group
-    "q_percentiles" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(round(expr("percentile(o_totalprice, 0.5)"), 6).as("median_price"),
-             round(expr("percentile(o_totalprice, 0.9)"), 6).as("p90_price"),
-             count(lit(1)).as("n"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // A14 — KMV distinct-count sketch (deterministic, oracle-reproducible)
-    "q_sketch_distinct" -> ((s, dir) => {
-      Analytics.kmvDistinctEstimate(t(s, dir, "lineitem"), "l_partkey", k = 64)
-    }),
-
-    // A15 — mergeable relative-error quantile sketch (the decimal
-    // DDSketch; see QuantileSketch scaladoc): the 100 TB swap for exact
-    // per-group percentiles — one partial-aggregable bucket-count pass,
-    // answers within 5 % relative error, state mergeable by key-sum.
-    // Unlike approx_percentile the whole sketch is engine-portable
-    // arithmetic, so the oracle recomputes it and must hash-match.
-    "q_quantile_sketch" -> ((s, dir) => {
-      QuantileSketch.groupQuantiles(t(s, dir, "orders"), "o_totalprice",
-          Seq("o_orderpriority"), Seq(0.5, 0.9, 0.99))
-        .orderBy("o_orderpriority", "q")
-    }),
-
-    // the stored/mergeable face: three ingestion batches sketched
-    // independently, folded by bucket-count sum, quantiles read off the
-    // merged state — must equal the one-shot sketch over full history
-    // (oracle text shared VERBATIM with q_quantile_sketch, so the
-    // equality IS the check — the IncrementalAgg discipline)
-    "q_quantile_sketch_merged" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val parts = (0 to 2).map { i =>
-        QuantileSketch.build(o.filter(pmod(col("o_orderkey"), lit(3)) === i),
-          "o_totalprice", Seq("o_orderpriority"))
-      }
-      val merged = parts.reduce(
-        QuantileSketch.merge(_, _, Seq("o_orderpriority")))
-      QuantileSketch.quantiles(merged, Seq("o_orderpriority"),
-          Seq(0.5, 0.9, 0.99))
-        .orderBy("o_orderpriority", "q")
-    }),
-
-    // the nightly-state lifecycle: three ingestion batches folded into
-    // a DURABLE sketch store (a one-bucket BucketedFoldStore),
-    // quantiles read off the final stored table — must equal the
-    // one-shot sketch over full history (oracle text shared VERBATIM
-    // with q_quantile_sketch, the store-lifecycle analogue of the
-    // in-memory merged face)
-    "q_quantile_sketch_stored" -> ((s, dir) => {
-      val root = s"$scratchRoot/graft_qsketch_store_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val hp = new org.apache.hadoop.fs.Path(root)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val o = t(s, dir, "orders")
-      (0 to 2).foreach { i =>
-        // fold batch 1 TWICE: the re-delivery must be a ledger no-op
-        // for this to keep matching the one-shot oracle (round-13
-        // verdict #3 — the exactly-once claim rides the shared oracle)
-        val reps = if (i == 1) 2 else 1
-        (1 to reps).foreach { _ =>
-          QuantileSketch.foldIntoStore(s,
-            o.filter(pmod(col("o_orderkey"), lit(3)) === i),
-            "o_totalprice", Seq("o_orderpriority"), root, s"batch_$i")
-        }
-      }
-      QuantileSketch.quantiles(QuantileSketch.readStore(s, root),
-          Seq("o_orderpriority"), Seq(0.5, 0.9, 0.99))
-        .orderBy("o_orderpriority", "q")
-    }),
-
-    // overflow face: a derived value column where one key in a thousand
-    // is scaled past the DECIMAL(18,6) domain (~4.6e15 ≫ 1e12) — the
-    // routing into the ±overflow sentinel bucket happens on REAL gate
-    // data in both engines (try_cast in Spark, TRY_CAST in the oracle),
-    // and because overflow rows still count toward n_rows, the oracle
-    // checks the degraded-not-dead contract end to end
-    "q_quantile_sketch_overflow" -> ((s, dir) => {
-      val o = t(s, dir, "orders").withColumn("v",
-        col("o_totalprice") * when(pmod(col("o_orderkey"), lit(1000)) === 0,
-          lit(1.0e10)).otherwise(lit(1.0)))
-      QuantileSketch.groupQuantiles(o, "v",
-          Seq("o_orderpriority"), Seq(0.5, 0.9, 0.999))
-        .orderBy("o_orderpriority", "q")
-    }),
-
-    // the ONLINE dual of the stored face: three feed files drained one
-    // per micro-batch, each folded into the durable sketch store via
-    // foreachBatch with the MICRO-BATCH ID as the ledger key — restarts
-    // re-deliver the same id, so the fold is exactly-once with no
-    // external ledger. Oracle text shared VERBATIM with
-    // q_quantile_sketch: the drained store must reproduce the one-shot
-    // sketch over full history.
-    "q_stream_quantile_sketch" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-      val san = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val root = new org.apache.hadoop.fs.Path(
-        s"$scratchRoot/graft_stream_qsketch_$san")
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      // store + checkpoint reset per run (the exactly-once drain must
-      // start from scratch); the FEED is a deterministic function of the
-      // orders table and is materialized ONCE per sf dir, outside the
-      // timed region — the bench then times the drain + folds, not a
-      // corpus-sized fixture write (round-14 verdict: the face's decade
-      // α=0.66 was the feed write's, not the operator's)
-      fs.delete(root, true)
-      // 8 files per ingestion slice + maxFilesPerTrigger=8: each
-      // micro-batch scans its slice with file-level parallelism instead
-      // of one near-single-task file (fold merges are exactly
-      // batching-independent, so the drained store — and the oracle —
-      // don't care how the slice is filed)
-      val feed = cachedFeed(s, s"graft_feed_qsketch8_$san",
-          srcToken(s, dir, "orders")) { feedDir =>
-        (0 to 2).foreach { i =>
-          o.filter(pmod(col("o_orderkey"), lit(3)) === i)
-            .repartition(8).write.mode("append").parquet(feedDir)
-        }
-      }
-      val store = s"$root/store"
-      val q = graft.streaming.StreamingQuantileSketch.start(s,
-        s.readStream.schema(o.schema).option("maxFilesPerTrigger", "8")
-          .parquet(feed),
-        store, "o_totalprice", Seq("o_orderpriority"),
-        checkpoint = s"$root/ckpt")
-      try {
-        if (!q.awaitTermination(600000L))
-          throw new IllegalStateException(
-            "stream quantile-sketch drain did not terminate within 600s")
-      } finally if (q.isActive) q.stop()
-      QuantileSketch.quantiles(QuantileSketch.readStore(s, store),
-          Seq("o_orderpriority"), Seq(0.5, 0.9, 0.99))
-        .orderBy("o_orderpriority", "q")
-    }),
-
-    // sign path in the gate, not just the spec: c_acctbal spans
-    // negatives, so the s·lo bucket ordering across the sign change and
-    // the negative-midpoint arithmetic are oracle-checked on real data
-    "q_quantile_sketch_signed" -> ((s, dir) => {
-      QuantileSketch.groupQuantiles(t(s, dir, "customer"), "c_acctbal",
-          Seq("c_mktsegment"), Seq(0.1, 0.5, 0.9))
-        .orderBy("c_mktsegment", "q")
-    }),
-
-    // incremental materialized-view maintenance: three ingestion batches
-    // folded into a mergeable per-key state (n/sum/min/max + KMV
-    // distinct sketch) — the finalized store must equal a one-shot
-    // aggregate over full history, INCLUDING the sketch estimate
-    // (KMV union is exactly mergeable), which is what the oracle proves
-    "q_incremental_agg" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("event_type"), col("user_id"),
-          col("value"))
-      val states = (0 to 2).map { i =>
-        IncrementalAgg.aggregateBatch(
-          ev.filter(pmod(col("event_id"), lit(3)) === i),
-          Seq("event_type"), "value", "user_id", k = 32)
-      }
-      val store = states.reduce(
-        IncrementalAgg.merge(_, _, Seq("event_type"), k = 32))
-      IncrementalAgg.finalize(store, Seq("event_type"), k = 32)
-        .orderBy("event_type")
-    }),
-
-    // streaming deployment of the same store: three feed slices drained
-    // one per micro-batch, each folded into the durable store via
-    // foreachBatch + BucketedFoldStore — the drained store, finalized,
-    // must hash-equal the SAME one-shot full-history oracle
-    "q_stream_incremental_agg" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("event_type"), col("user_id"),
-          col("value"))
-      val san = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val root = new org.apache.hadoop.fs.Path(
-        s"$scratchRoot/graft_stream_incr_$san")
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(root, true)
-      // feed cached per sf dir outside the timed region (see the
-      // quantile-sketch face); store + checkpoint reset per run.
-      // Since round 15 the store is a BUCKETED fold store: each
-      // micro-batch rewrites only the hash buckets its keys touch
-      // (O(delta), round-14 verdict #1) and the ledger check is a
-      // driver-side manifest lookup — the oracle is unchanged, the
-      // per-batch swap cost is what moved.
-      val feed = cachedFeed(s, s"graft_feed_incr8_$san",
-          srcToken(s, dir, "events")) { feedDir =>
-        (0 to 2).foreach { i =>
-          ev.filter(pmod(col("event_id"), lit(3)) === i)
-            .repartition(8).write.mode("append").parquet(feedDir)
-        }
-      }
-      val store = s"$root/store"
-      val q = graft.streaming.StreamingIncrementalAgg.start(s,
-        s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "8")
-          .parquet(feed),
-        store, Seq("event_type"), "value", "user_id", k = 32,
-        checkpoint = s"$root/ckpt", numBuckets = 8)
-      try {
-        if (!q.awaitTermination(600000L))
-          throw new IllegalStateException(
-            "stream incremental-agg drain did not terminate within 600s")
-      } finally if (q.isActive) q.stop()
-      IncrementalAgg.finalize(
-          graft.pipelines.BucketedFoldStore.readState(s, store),
-          Seq("event_type"), k = 32)
-        .orderBy("event_type")
-    }),
-
-    // the BATCH face of the bucketed O(delta) fold store (round-14
-    // verdict #1): three nightly deltas folded in with batch 1
-    // deliberately RE-DELIVERED (exactly-once no-op), the ledger then
-    // COMPACTED to a watermark and batch 0 re-delivered AGAIN (the
-    // pre-watermark id must stay a no-op) — after all of which the
-    // finalized store must still hash-equal the one-shot full-history
-    // aggregate (oracle text shared VERBATIM with q_incremental_agg).
-    // Each fold rewrites only the buckets its delta touches; the
-    // rewrite granularity itself is pinned in BucketedFoldStoreSpec.
-    "q_fold_bucketed_store" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("event_type"), col("user_id"),
-          col("value"))
-      val root = s"$scratchRoot/graft_fold_bucketed_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val hp = new org.apache.hadoop.fs.Path(root)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val keys = Seq("event_type")
-      def fold(i: Int): Boolean =
-        graft.pipelines.BucketedFoldStore.foldOnce(s, root, s"night_$i",
-          IncrementalAgg.aggregateBatch(
-            ev.filter(pmod(col("event_id"), lit(3)) === i),
-            keys, "value", "user_id", k = 32),
-          keys, numBuckets = 8)(
-          IncrementalAgg.merge(_, _, keys, k = 32))
-      (0 to 2).foreach { i =>
-        val reps = if (i == 1) 2 else 1 // deliberate re-delivery of batch 1
-        (1 to reps).foreach(_ => fold(i))
-      }
-      graft.pipelines.BucketedFoldStore.compactLedger(s, root, retainLast = 1)
-      fold(0) // pre-watermark re-delivery after compaction: must no-op
-      IncrementalAgg.finalize(
-          graft.pipelines.BucketedFoldStore.readState(s, root),
-          keys, k = 32)
-        .orderBy("event_type")
-    }),
-
-    // T3/T4 — EXCEPT / INTERSECT (distinct set semantics)
-    "q_t3_set_ops" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").select(col("c_mktsegment").as("seg"),
-                                              col("c_nationkey").as("nk"))
-      val big = cust.filter(col("nk") < 10)
-      val small = cust.filter(col("nk") >= 5)
-      big.intersect(small).withColumn("op", lit("both"))
-        .union(big.except(small).withColumn("op", lit("only_low")))
-        .orderBy("op", "seg", "nk")
-    }),
-
-    // Z-order (Morton) clustering key: bit-interleave of two bucketed
-    // dims — the multi-dimensional data-skipping sort key; zorderWrite
-    // sorts storage by it (file-skip win measured in ZOrderSpec)
-    "q_zorder_key" -> ((s, dir) => {
-      t(s, dir, "part")
-        .select(col("p_partkey"),
-          ZOrder.zorderKey(Seq(pmod(col("p_partkey"), lit(64)),
-            pmod(col("p_size"), lit(64))), bits = 6).as("zkey"))
-        .orderBy("zkey", "p_partkey")
-    }),
-
-    // A15 — deterministic hash-based corpus subsample (5%)
-    "q_sample_deterministic" -> ((s, dir) => {
-      Analytics.deterministicSample(t(s, dir, "documents"), "doc_id", 0.05)
-        .select("doc_id", "lang", "n_chars")
-        .orderBy("doc_id")
-    }),
-
-    // Efraimidis-Spirakis weighted sampling without replacement:
-    // n_chars-weighted top-100, md5-deterministic draw (salt "r4")
-    "q_sample_weighted" -> ((s, dir) => {
-      Analytics.weightedSample(t(s, dir, "documents"), "doc_id", "n_chars",
-          n = 100, salt = "r4")
-        .select("doc_id", "lang", "n_chars")
-        .orderBy("doc_id")
-    }),
-
-    // per-group quota form: up to 20 docs per language, weight-
-    // proportional within each language cell (same deterministic draw)
-    "q_sample_weighted_group" -> ((s, dir) => {
-      Analytics.weightedSamplePerGroup(t(s, dir, "documents"), Seq("lang"),
-          "doc_id", "n_chars", nPerGroup = 20, salt = "r4")
-        .select("doc_id", "lang", "n_chars")
-        .orderBy("doc_id")
-    }),
-
-    // deterministic train/val/test split (10% val, 10% test): label is a
-    // pure function of doc_id — stable under corpus growth, no RNG
-    "q_split_train_test" -> ((s, dir) => {
-      Analytics.withSplit(t(s, dir, "documents"), "doc_id",
-          valRate = 0.1, testRate = 0.1)
-        .select("doc_id", "lang", "split")
-        .orderBy("doc_id")
-    }),
-
-    // one-pass column profiling over lineitem: counts, nulls, exact
-    // distincts, min/max per column
-    "q_profile_columns" -> ((s, dir) => {
-      Analytics.profile(
-          t(s, dir, "lineitem").withColumn("l_shipdate",
-            col("l_shipdate").cast("date")),
-          Seq("l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus",
-            "l_shipdate"))
-        .orderBy("column_name")
-    }),
-
-    // declarative data-quality admission control (the engine-side form
-    // of the reference's per-source coerce/drop guards): ALL row rules
-    // in one scan, uniqueness/referential rules as single aggregates —
-    // a mix of passing and violated rules so both outcomes are oracled
-    "q_quality_expectations" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val lineitem = t(s, dir, "lineitem")
-      Expectations.report(orders, Seq(
-          Expectations.notNull("o_orderdate"),
-          Expectations.inRange("o_totalprice", 0d, 400000d),
-          Expectations.inSet("o_orderstatus", Seq("O", "F")),
-          Expectations.matches("o_orderpriority", "^[1-5]-"),
-          Expectations.Unique("unique_o_orderkey", Seq("o_orderkey")),
-          Expectations.RefIntegrity("orders_custkey_in_customer",
-            "o_custkey", t(s, dir, "customer"), "c_custkey")))
-        .unionByName(Expectations.report(lineitem, Seq(
-          Expectations.Unique("unique_l_order_line",
-            Seq("l_orderkey", "l_linenumber")),
-          Expectations.Unique("unique_l_orderkey", Seq("l_orderkey")),
-          Expectations.RefIntegrity("lineitem_partkey_in_part",
-            "l_partkey", t(s, dir, "part"), "p_partkey"))))
-        .orderBy("rule")
-    }),
-
-    // the admission-control gate on the CORPUS tables: text presence,
-    // cross-column consistency (n_chars must equal length(text) — a rule
-    // shape the orders gate doesn't exercise), vocab/range rules, key
-    // uniqueness, and corpus↔embedding alignment (every doc embedded)
-    "q_quality_corpus" -> ((s, dir) => {
-      Expectations.report(t(s, dir, "documents"), Seq(
-          Expectations.notNull("text"),
-          Expectations.RowRule("text_nonempty", length(col("text")) > 0),
-          Expectations.RowRule("nchars_consistent",
-            col("n_chars") === length(col("text"))),
-          Expectations.inSet("lang", Seq("en", "de", "fr", "es")),
-          Expectations.inRange("n_chars", 1, 100000),
-          Expectations.Unique("unique_doc_id", Seq("doc_id")),
-          Expectations.RefIntegrity("doc_has_embedding", "doc_id",
-            t(s, dir, "embeddings"), "vec_id")))
-        .orderBy("rule")
-    }),
-
-    // quarantine-with-attribution dual: offending rows + every rule they
-    // failed, comma-joined — map-side filter+project only
-    "q_quality_quarantine" -> ((s, dir) => {
-      Expectations.quarantine(t(s, dir, "orders"), Seq(
-          Expectations.inRange("o_totalprice", 0d, 400000d),
-          Expectations.inSet("o_orderstatus", Seq("O", "F")),
-          Expectations.matches("o_orderpriority", "^[1-3]-")),
-          keepCols = Seq("o_orderkey"))
-        .orderBy("o_orderkey")
-    }),
-
-    // exact equi-width histogram of a fact column (distribution profile
-    // for banding decisions): broadcast bounds, map-side bucketing
-    "q_histogram" -> ((s, dir) => {
-      Analytics.histogram(t(s, dir, "lineitem"), "l_extendedprice", nBins = 16)
-        .orderBy("bin")
-    }),
-
-    // equi-DEPTH histogram — quantile bin edges (skew-proof binning;
-    // the CBO's equi-height column-histogram statistic)
-    "q_histogram_equidepth" -> ((s, dir) => {
-      Analytics.equiDepthHistogram(t(s, dir, "orders"), "o_totalprice", nBins = 4)
-        .orderBy("bucket")
-    }),
-
-    // curriculum ordering: quantile difficulty buckets + deterministic
-    // md5 within-bucket shuffle — the reproducible training schedule
-    "q_curriculum_order" -> ((s, dir) => {
-      Analytics.curriculumOrder(t(s, dir, "documents"),
-          "doc_id", "n_chars", nBuckets = 4, salt = "cur8")
-        .select("doc_id", "bucket", "ord")
-        .orderBy("bucket", "ord")
-    }),
-
-    // per-group z-score normalization (feature preprocessing): group
-    // stats via one decimal-exact agg, broadcast back, map-side z
-    "q_zscore_group" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").filter(pmod(col("l_orderkey"), lit(20)) === 0)
-      Analytics.zscorePerGroup(li, Seq("l_returnflag"), "l_quantity")
-        .select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity", "zscore")
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // exact Pearson correlation matrix over lineitem's numeric columns
-    // (feature-selection profile; one pass, decimal-exact sums)
-    "q_correlation" -> ((s, dir) => {
-      Analytics.correlationMatrix(t(s, dir, "lineitem"),
-          Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-        .orderBy("col_a", "col_b")
-    }),
-
-    // per-group robust scaling (median/IQR) — the outlier-resistant
-    // normalization for heavy-tailed features
-    "q_robust_scale" -> ((s, dir) => {
-      val o = t(s, dir, "orders").filter(pmod(col("o_orderkey"), lit(10)) === 0)
-      Analytics.robustScalePerGroup(o, Seq("o_orderpriority"), "o_totalprice")
-        .select("o_orderkey", "o_orderpriority", "o_totalprice", "robust_z")
-        .orderBy("o_orderkey")
-    }),
-
-    // ordered funnel view → click → purchase: first time each stage is
-    // reached strictly after the previous one, per user (micros upfront
-    // so both engines compare identical integers)
-    "q_funnel_stages" -> ((s, dir) => {
-      val ev = t(s, dir, "events").withColumn("ts_us", expr("ts div 1000"))
-      Analytics.funnel(ev, "user_id", "event_type", "ts_us",
-          Seq("view", "click", "purchase"))
-        .select(col("user_id"), col("t_1").as("t_view_us"),
-          col("t_2").as("t_click_us"), col("t_3").as("t_purchase_us"))
-        .orderBy("user_id")
-    }),
-
-    // cohort retention triangle: cohort = user's first active day,
-    // distinct users per (cohort day, day offset)
-    "q_retention_cohorts" -> ((s, dir) => {
-      val ev = t(s, dir, "events").withColumn("ts_us", expr("ts div 1000"))
-      Analytics.retentionCohorts(ev, "user_id", "ts_us",
-          bucket = 86400L * 1000000L)
-        .orderBy("cohort", "bucket_offset")
-    }),
-
-    // W3 — gap-based sessionization (4h gap): lag-break + running-sum
-    // windows, then per-session rollup
-    "q_sessionize" -> ((s, dir) => {
-      val ev = t(s, dir, "events").withColumn("ts_us", expr("ts div 1000"))
-      Analytics.sessionize(ev, Seq("user_id"), "ts_us", Seq("event_id"),
-          gap = 4L * 3600 * 1000000)
-        .groupBy("user_id", "session_id")
-        .agg(count(lit(1)).as("n_events"),
-             min(col("ts_us")).as("start_us"),
-             max(col("ts_us")).as("end_us"),
-             sumd(col("value")).as("total_value"))
-        .orderBy("user_id", "session_id")
-    }),
-
-    // ---- streaming batch-agreement gates (VERDICT r4 #4): each drains
-    // an AvailableNow run of a streaming component over the same parquet
-    // the batch dual reads, and the DuckDB oracle states the batch
-    // semantics — hash-level agreement, not just spec assertions ----
-
-    // streaming exact dedup vs batch distinct-content set: the emitted
-    // row set of dropDuplicates(content_hash) is one row per distinct
-    // content; WHICH duplicate survives is arrival-order-dependent, so
-    // the agreement surface is the deterministic hash set
-    "q_stream_dedup_firstseen" -> ((s, dir) => {
-      val batch = t(s, dir, "documents")
-      graft.streaming.StreamDrain.drain(s, s"$dir/documents.parquet",
-          batch.schema, "stream_dedup_firstseen", "append") { src =>
-        graft.streaming.StreamingDedup.firstSeen(src, "doc_id", "text")
-          .select("content_hash")
-      }.orderBy("content_hash")
-    }),
-
-    // streaming gap sessionization (session_window, complete mode) vs
-    // the batch gaps-and-islands dual: final session state must equal
-    // batch sessions exactly — start = first event, end = last event +
-    // gap, count and decimal-exact value total per session. value rides
-    // as DECIMAL(38,6) through the streaming sum so partial-aggregation
-    // order can't perturb the double (the sumd discipline), and
-    // timestamps compare as epoch micros in both engines.
-    "q_stream_sessionize" -> ((s, dir) => {
-      // Stateful fan-out sized for a COMPUTE-heavy single-store op
-      // (round-15, guide §2.5/§2.6): the drain default (1 partition per
-      // 64 MB, the TTL-drain measurement where per-batch COMMIT files
-      // dominate) leaves the session-window fold single-threaded while
-      // 31 cores idle. This op is the opposite profile — one state
-      // store per partition (cheap commits) and per-row session
-      // assembly (expensive compute) — and the measured knee at sf0.1
-      // (200k rows) is p=8: addBatch 1.55 s (p=1) → 0.82 s (p=8) →
-      // 1.25 s (p=32). Size it from INPUT BYTES (≈256 KB ≈ 25k rows
-      // per partition), clamped [1, 32] — scale-adaptive, not a core
-      // constant; a production stream pins this once at first start
-      // (checkpoint locks it) per the StreamDrain scaladoc. The
-      // interval-join faces KEEP the commit-minimizing default: 4
-      // stores/partition, and p=8 measured SLOWER (2.5 → 3.0 s).
-      val evPath = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-      val evBytes =
-        try evPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(evPath).getLength
-        catch { case _: Exception => 0L }
-      val fanout = math.max(1L, math.min(32L, (evBytes + (256L << 10) - 1) / (256L << 10)))
-      drainEvents(s, dir, "stream_sessionize", "complete",
-          confs = Map("spark.sql.shuffle.partitions" -> fanout.toString)) { src =>
-        val ev = src.select(col("user_id"),
-          timestamp_micros(expr("ts div 1000")).as("event_ts"),
-          dec(col("value")).as("value"))
-        graft.streaming.SessionWindows.sessionTotals(
-          ev, "event_ts", "user_id", gap = "4 hours")
-      }.select(col("user_id"),
-          unix_micros(col("session_start")).as("session_start_us"),
-          unix_micros(col("session_end")).as("session_end_us"),
-          col("n_events"),
-          col("total_value").cast("double").as("total_value"))
-        .orderBy("user_id", "session_start_us")
-    }),
-
-    // watermarked stream-stream interval join vs the batch range join:
-    // click→purchase attribution within 1 hour on the same user. The
-    // generous watermark keeps every row in state for the whole bounded
-    // drain (nothing evicts, nothing is late), so the inner-join output
-    // must equal the batch pair set exactly.
-    "q_stream_interval_join" -> ((s, dir) => {
-      drainEvents(s, dir, "stream_interval_join", "append") { src =>
-        def side(kind: String) = src.filter(col("event_type") === kind)
-          .select(col("user_id"),
-            timestamp_micros(expr("ts div 1000")).as("event_ts"),
-            col("event_id"))
-        graft.streaming.StreamStreamJoin.intervalJoin(
-          side("click"), side("purchase"), "user_id", "event_ts",
-          within = "1 hour", watermark = "3650 days")
-      }.select(col("user_id"),
-          unix_micros(col("event_ts")).as("ts_us"), col("event_id"),
-          unix_micros(col("event_ts_r")).as("ts_r_us"), col("event_id_r"))
-        .orderBy("user_id", "ts_us", "event_id", "ts_r_us", "event_id_r")
-    }),
-
-    // watermarked tumbling-window totals (complete mode) vs the batch
-    // hour-bucket group-by: final window state must match exactly, with
-    // value decimal-routed so partial-agg order can't perturb the double
-    "q_stream_windowed_counts" -> ((s, dir) => {
-      drainEvents(s, dir, "stream_windowed_counts", "complete") { src =>
-        val ev = src.select(
-          timestamp_micros(expr("ts div 1000")).as("event_ts"),
-          col("event_type"), dec(col("value")).as("value"))
-        graft.streaming.WindowedEventCounts.windowedTotals(ev, "event_ts")
-      }.select(unix_micros(col("window_start")).as("window_start_us"),
-          col("event_type"), col("n_events"),
-          col("total_value").cast("double").as("total_value"))
-        .orderBy("window_start_us", "event_type")
-    }),
-
-    // stream-static dimension enrichment (streaming J1): the event
-    // stream joins the static customer dim per micro-batch — stateless,
-    // no watermark — then complete-mode totals per (segment, type);
-    // the drained final state must equal the batch join+agg oracle
-    "q_stream_static_enrich" -> ((s, dir) => {
-      drainEvents(s, dir, "stream_static_enrich", "complete") { src =>
-        // the dim must load on the DRAIN's dedicated session — a frame
-        // from the caller's session cannot join a stream of another
-        val dim = Tables.load(src.sparkSession, dir, "customer")
-        val ev = src.select(col("user_id"), col("event_type"),
-          dec(col("value")).as("value"))
-        graft.streaming.StreamStaticEnrich.enrichedTotals(
-          ev, dim, "user_id", "c_custkey", "c_mktsegment")
-      }.select(col("c_mktsegment"), col("event_type"), col("n_events"),
-          col("total_value").cast("double").as("total_value"))
-        .orderBy("c_mktsegment", "event_type")
-    }),
-
-    // streaming monotone funnel frontier vs the batch sequential funnel:
-    // the bounded drain is one micro-batch (single source file), where
-    // the stage-advancement emissions are EXACTLY the batch funnel's
-    // strictly-after stage times, unpivoted to (user, stage, ts) rows
-    "q_stream_funnel" -> ((s, dir) => {
-      drainEvents(s, dir, "stream_funnel", "update") { src =>
-        import s.implicits._
-        val ev = src.select(col("user_id"), col("event_type"),
-            expr("ts div 1000").as("ts"))
-          .as[graft.streaming.StreamingFunnel.FunnelEvent]
-        graft.streaming.StreamingFunnel.stageProgress(s, ev,
-          Seq("view", "click", "purchase")).toDF()
-      }.select(col("user_id"), col("stage").cast("long").as("stage"),
-          col("ts").as("ts_us"))
-        .orderBy("user_id", "stage")
-    }),
-
-    // streaming dual of q_timeseries_fill: per-key LOCF gap filling as
-    // observations arrive, drained over THREE date-ordered micro-batches
-    // (append emissions are final, so cross-batch state carry is part of
-    // the oracle-verified surface) — same oracle SQL text as the batch
-    "q_stream_timeseries_fill" -> ((s, dir) => {
-      import s.implicits._
-      val daily = t(s, dir, "orders")
-        .filter(col("o_custkey") <= 40)
-        .withColumn("d", col("o_orderdate").cast("date"))
-        .filter(year(col("d")) === 1997)
-        .groupBy("o_custkey", "d")
-        .agg(sumd(col("o_totalprice")).as("v"))
-        .select(col("o_custkey").as("key"),
-          datediff(col("d"), to_date(lit("1970-01-01"))).as("day"),
-          col("v"))
-      // FEED (and the O(1) bounds scalars that only shape its tercile
-      // split) cached per sf dir — a deterministic function of the
-      // orders table; the drain + stateful gap fill is the timed body
-      // (guide §1.4, the q_stream_quantile_sketch pattern)
-      val streamDir = cachedFeed(s,
-          s"graft_feed_gapfill_${dir.replaceAll("[^A-Za-z0-9]", "_")}",
-          srcToken(s, dir, "orders")) { fd =>
-        val bounds = daily.agg(min("day"), max("day")).head() // O(1) scalars
-        val (lo, hi) = (bounds.getInt(0), bounds.getInt(1))
-        val c1 = lo + (hi - lo) / 3
-        val c2 = lo + 2 * (hi - lo) / 3
-        emitFeedFile(daily.filter(col("day") <= c1), fd, "b1", 1000000L)
-        emitFeedFile(daily.filter(col("day") > c1 && col("day") <= c2),
-          fd, "b2", 2000000L)
-        emitFeedFile(daily.filter(col("day") > c2), fd, "b3", 3000000L)
-      }
-      graft.streaming.StreamDrain.drain(s, streamDir,
-          daily.schema, "stream_timeseries_fill", "append",
-          sourceOptions = Map("maxFilesPerTrigger" -> "1")) { src =>
-        graft.streaming.StreamingGapFill.filled(s,
-          src.as[graft.streaming.StreamingGapFill.Obs]).toDF()
-      }
-        .select(col("key").as("o_custkey"),
-          date_add(to_date(lit("1970-01-01")), col("day")).as("d"),
-          col("v"), col("is_gap"))
-        .orderBy("o_custkey", "d")
-    }),
-
-    // ST4 at the oracle tier — the reference's one genuinely stateful
-    // semantic (dashboard.py:104-119 "current stock"): the drained
-    // flatMapGroupsWithState winners must equal the batch flagship
-    // exactly (same oracle SQL as q_w1_latest_per_key)
-    "q_stream_latest_per_key" -> ((s, dir) =>
-      drainLatestPerKey(s, dir, "stream_latest_per_key", Map.empty)),
-
-    // the SAME drain on the RocksDB state-store provider — the provider
-    // a 100 TB deployment needs (per-key state spills to executor-local
-    // disk + spill-to-DFS snapshots instead of living on heap; see
-    // SCALE.md "Streaming state-store provider"): agreement here pins
-    // provider-independence of the stateful semantics
-    "q_stream_latest_rocksdb" -> ((s, dir) =>
-      drainLatestPerKey(s, dir, "stream_latest_rocksdb",
-        Map("spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))),
-
-    // U1 from a STREAM: the foreachBatch upsert drains the q_u1_upsert
-    // fresh slice into an AtomicStore-swapped parquet table seeded with
-    // the base rows; the FINAL STORE must equal the batch upsert exactly
-    // (same oracle shape as q_u1_upsert) — exercising the
-    // recover→readOrEmpty→merge→atomic-swap path end to end, not just
-    // its spec. Scratch lives under a fixed per-sf /tmp root rebuilt
-    // from zero each invocation (fresh replay, bounded garbage).
-    "q_stream_upsert" -> ((s, dir) => {
-      val base = t(s, dir, "events")
-        .withColumn("ts_us", expr("ts div 1000"))
-        .select("event_id", "ts_us", "user_id", "event_type", "value", "props")
-      val fresh = base.filter(col("event_id") % 10 < 3)
-        .withColumn("value", col("value") + 1000)
-        .withColumn("props", lit("{\"upd\": true}"))
-      val san = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val root = new org.apache.hadoop.fs.Path(
-        s"$scratchRoot/graft_stream_upsert_$san")
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(root, true)
-      // FEED cached per sf dir (deterministic projection of events —
-      // the round-14 verdict #4 discipline); the STORE is seeded fresh
-      // every run: it is the operator's mutable state, never cached.
-      val feed = cachedFeed(s, s"graft_feed_upsert_$san",
-          srcToken(s, dir, "events")) { fd =>
-        fresh.coalesce(1).write.parquet(fd)
-      }
-      val store = s"$root/store"
-      graft.pipelines.AtomicStore.overwrite(base, store)
-      val q = graft.streaming.StreamingUpsert.start(s,
-        s.readStream.schema(fresh.schema).parquet(feed), store,
-        Seq("event_id"), "ts_us", s"$root/ckpt")
-      try {
-        if (!q.awaitTermination(600000L))
-          throw new IllegalStateException(
-            "stream upsert drain did not terminate within 600s")
-      } finally if (q.isActive) q.stop()
-      StoreTable.read(s, store).orderBy("event_id")
-    }),
-
-    // streaming LSH near-dup candidates vs the batch band-bucket join:
-    // the drained per-band stateful emissions, de-banded and distinct'd,
-    // must equal the batch candidate pair set exactly. maxBucket sits
-    // far above any bucket at these scales so the cap (its spec's job)
-    // never truncates the agreement surface — cap/TTL off IS the
-    // bounded-drain configuration, matching the batch dual.
-    "q_stream_neardup" -> ((s, dir) => {
-      val batch = t(s, dir, "documents")
-      // FEED cached per sf dir as 8 files (guide §2/§6 — scan
-      // parallelism): documents.parquet is ONE file ≈ one scan task, so
-      // the banding (the drain's dominant map-side work, measured ~3 s
-      // of the 4.2 s at sf0.1) ran single-threaded. All 8 files land in
-      // the SAME AvailableNow micro-batch (no maxFilesPerTrigger), so
-      // bucket state sees the identical arrival set and the emitted
-      // candidate-pair SET is unchanged — pair emission within one batch
-      // is arrival-order-invariant below the (1<<20) cap, and the query
-      // takes distinct() anyway. Same 8-files-per-slice discipline as
-      // the quantile-sketch/incremental-agg feeds.
-      val streamDir = cachedFeed(s,
-          s"graft_feed_neardup8_${dir.replaceAll("[^A-Za-z0-9]", "_")}",
-          srcToken(s, dir, "documents")) { fd =>
-        batch.repartition(8).write.parquet(fd)
-      }
-      graft.streaming.StreamDrain.drain(s, streamDir,
-          batch.schema, "stream_neardup", "append") { src =>
-        graft.streaming.StreamingNearDup.candidatePairs(s,
-          graft.streaming.StreamingNearDup.banded(src, "doc_id", "text",
-            k = 5, numHashes = 16, numBands = 4),
-          maxBucket = 1 << 20).toDF()
-      }.filter(!col("truncated"))
-        .select("id_a", "id_b").distinct()
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ST6 at the oracle tier for the near-dup path itself (round-7
-    // verdict #7): candidatePairsExpiring's EVENT-TIME eviction, driven
-    // through a 3-micro-batch drain. Docs get a synthetic event time
-    // (doc_id minutes) and arrive as doc_id terciles via
-    // maxFilesPerTrigger=1 over three mod-time-ordered files. The
-    // OBSERVABLE eviction contract under Spark's timeout mechanics
-    // (timeouts fire only for buckets with NO data in the batch): a
-    // batch1→batch3 candidate pair is suppressed iff its bucket has no
-    // batch-2 member AND the bucket's last batch-1 arrival lies more
-    // than ttl before batch 1's watermark (max event time, 0s delay) —
-    // every other pair is identical to the non-TTL dual. The +30 s ttl
-    // offset keeps every bucket a half-minute clear of the eviction
-    // boundary, so >-vs-≥ timeout strictness can't flip a row (same
-    // margin discipline as the interval-join oracle). At sf0.01 this
-    // suppresses 6 of 25 pairs and keeps surviving idle buckets — both
-    // behaviors exercised, and the oracle re-derives the suppressed set
-    // relationally in doc_id units.
-    "q_stream_neardup_ttl" -> ((s, dir) => {
-      // ts = (doc_id + 1) minutes, NOT doc_id minutes: doc 0 at epoch 0
-      // collides with the INITIAL watermark (0 ms) and Spark's stateful
-      // late-row filter silently drops it in batch 1, losing its pairs
-      // (surfaced at sf0.001, where doc 0 shares a batch-1 bucket; the
-      // sf0.01 gate was blind luck). The uniform +1-minute shift cancels
-      // in the oracle's suppression inequality (m1*60+ttl < w*60 shifts
-      // both sides by 60), so the oracle SQL is unchanged.
-      val batch = t(s, dir, "documents")
-        .withColumn("ts",
-          timestamp_micros((col("doc_id") + lit(1L)) * lit(60000000L)))
-      val mx = batch.agg(max("doc_id")).head().getLong(0) // O(1) scalar
-      val d1 = mx / 3
-      val d2 = (2 * mx) / 3
-      val ttlSecs = (d1 * 4 / 10) * 60 + 30
-      // FEED cached per sf dir (deterministic tercile split of the
-      // documents table); the mx scalar above stays per-run because the
-      // OPERATOR's ttl derives from it. The drain — banding + stateful
-      // TTL eviction, the semantics under test — runs from scratch every
-      // time (guide §1.4, the q_stream_quantile_sketch pattern).
-      // 8 files per tercile + maxFilesPerTrigger=8 (guide §2, scan
-      // parallelism — the one-file-per-batch layout ran the banding
-      // single-threaded): each tercile is pmod-split into EXACTLY 8
-      // files (an empty pmod slice still writes its schema-only file, so
-      // batch boundaries never drift) sharing that tercile's mod time,
-      // so micro-batch composition — and therefore watermark advance and
-      // eviction — is byte-identical to the one-file-per-batch layout,
-      // and within a batch the pair set is arrival-order-invariant
-      // below the (1<<20) cap. Oracle unchanged.
-      val streamDir = cachedFeed(s,
-          s"graft_feed_neardup_ttl8_${dir.replaceAll("[^A-Za-z0-9]", "_")}",
-          srcToken(s, dir, "documents")) { fd =>
-        val slices = Seq(
-          ("b1", batch.filter(col("doc_id") <= d1), 1000000L),
-          ("b2", batch.filter(col("doc_id") > d1 && col("doc_id") <= d2), 2000000L),
-          ("b3", batch.filter(col("doc_id") > d2), 3000000L))
-        for ((name, slice, modMs) <- slices; j <- 0 until 8)
-          emitFeedFile(slice.filter(pmod(col("doc_id"), lit(8)) === j),
-            fd, s"${name}_$j", modMs)
-      }
-      graft.streaming.StreamDrain.drain(s, streamDir,
-          batch.schema, "stream_neardup_ttl", "append",
-          sourceOptions = Map("maxFilesPerTrigger" -> "8")) { src =>
-        graft.streaming.StreamingNearDup.candidatePairsExpiring(s,
-          graft.streaming.StreamingNearDup.banded(src, "doc_id", "text",
-            k = 5, numHashes = 16, numBands = 4, carryCols = Seq("ts"))
-            .withWatermark("ts", "0 seconds"),
-          ttl = java.time.Duration.ofSeconds(ttlSecs),
-          maxBucket = 1 << 20).toDF()
-      }.filter(!col("truncated"))
-        .select("id_a", "id_b").distinct()
-        .orderBy("id_a", "id_b")
-    }),
-
-    // watermark-DELAYED outer emission — the subtlest streaming
-    // semantic in the repo (StreamStreamJoin.intervalJoinLeftOuter): an
-    // unmatched click emits its null-purchase row only once the
-    // watermark passes the end of its match window. Each side's
-    // watermark node sees only ITS filtered substream, so the global
-    // watermark (multipleWatermarkPolicy=min) lands at
-    // min(max click ts, max purchase ts) — NOT the table max — and the
-    // drain's trailing no-data batch flushes every left row whose match
-    // window closed before that. Both engines restrict to windows
-    // closing ≥1h clear of that boundary so eviction-edge strictness
-    // can't flip a row.
-    "q_stream_interval_join_outer" -> ((s, dir) => {
-      val batch = t(s, dir, "events")
-      val horizon = batch
-        .filter(col("event_type").isin("click", "purchase"))
-        .groupBy("event_type").agg(max(expr("ts div 1000")).as("m"))
-        .agg(min(col("m"))).head().getLong(0) -
-        7200000000L // 2h = the 1h match window + 1h boundary margin
-      drainEvents(s, dir, "stream_interval_join_outer", "append") { src =>
-        def side(kind: String) = src.filter(col("event_type") === kind)
-          .select(col("user_id"),
-            timestamp_micros(expr("ts div 1000")).as("event_ts"),
-            col("event_id"))
-        graft.streaming.StreamStreamJoin.intervalJoinLeftOuter(
-          side("click"), side("purchase"), "user_id", "event_ts",
-          within = "1 hour", watermark = "0 seconds")
-      }.filter(unix_micros(col("event_ts")) <= lit(horizon))
-        .select(col("user_id"),
-          unix_micros(col("event_ts")).as("ts_us"), col("event_id"),
-          unix_micros(col("event_ts_r")).as("ts_r_us"), col("event_id_r"))
-        .orderBy("user_id", "ts_us", "event_id", "ts_r_us", "event_id_r")
-    }),
-
-    // dedup clustering: near-dup pairs → connected components → canonical
-    // cluster id (min doc id) per document
-    "q_dedup_clusters" -> ((s, dir) => {
-      val pairs = Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
-          maxHamming = 8)
-      Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .select(col("id").as("doc_id"), col("comp").as("cluster_id"))
-        .orderBy("doc_id")
-    }),
-
-    // incremental dedup clustering: old labels + the pairs touching the
-    // newly ingested half must fold to the SAME labels as a full
-    // recompute (same oracle SQL as q_dedup_clusters)
-    "q_dedup_clusters_incremental" -> ((s, dir) => {
-      // Two pair derivations on purpose: a one-pass persist-and-filter
-      // variant (pairs(A) = persisted pairs(corpus) ∩ A×A, valid by
-      // pairwise-locality) measured SLOWER at sf0.1 (7.0 s vs 6.0 s) —
-      // the half-corpus signature pass is cheaper than materializing
-      // the full pair set, and the CC rounds dominate either way. A
-      // deployment doesn't face the choice: the old era's pairs are
-      // never re-derived at all, only its label table is read.
-      val docs = t(s, dir, "documents")
-      val oldPairs = Dedup.simhashPairs(
-        docs.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", "text",
-        maxHamming = 8)
-      val labels = Dedup.connectedComponents(oldPairs, "id_a", "id_b")
-      val newPairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 8)
-        .filter(pmod(col("id_a"), lit(2)) === 1 || pmod(col("id_b"), lit(2)) === 1)
-      Dedup.incrementalClusters(labels, newPairs, "id_a", "id_b")
-        .select(col("id").as("doc_id"), col("comp").as("cluster_id"))
-        .orderBy("doc_id")
-    }),
-
-    // PII redaction: count + mask urls/emails/ips/phones. The corpus text
-    // has no PII, so both engines first append a deterministic synthetic
-    // tail derived from doc_id, then scrub it.
-    "q_text_redact" -> ((s, dir) => {
-      val withPii = t(s, dir, "documents").withColumn("pii_text",
-        concat(col("text"), lit(" mail u"), col("doc_id"), lit("@ex.org see http://ex.org/"),
-               col("doc_id"), lit(" ip 10.1.2."), pmod(col("doc_id"), lit(250)),
-               lit(" tel 010-1234-"), lit(1000) + pmod(col("doc_id"), lit(9000))))
-      TextAnalysis.withRedaction(withPii, "pii_text")
-        .select("doc_id", "n_urls", "n_emails", "n_ips", "n_phones", "redacted")
-        .orderBy("doc_id")
-    }),
-
-    // bigram repetition ratio (Gopher-style quality signal)
-    "q_text_repetition" -> ((s, dir) => {
-      TextAnalysis.withRepetition(t(s, dir, "documents"), "text")
-        .select("doc_id", "n_bigrams", "n_unique_bigrams", "rep_ratio")
-        .orderBy("doc_id")
-    }),
-
-    // per-document top TF-IDF term (two-phase agg + broadcast idf join)
-    "q_text_tfidf" -> ((s, dir) => {
-      TextAnalysis.tfidfTop1(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // unigram-LM cross-entropy quality signal (CCNet-style): token-weighted
-    // mean −ln p(term) against the corpus's own unigram distribution
-    "q_text_unigram_ce" -> ((s, dir) => {
-      TextAnalysis.unigramCrossEntropy(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // interpolated bigram-LM cross-entropy (CCNet/KenLM-style perplexity
-    // filter): λ·bigram MLE + (1−λ)·add-one unigram back-off, λ=0.75;
-    // in-row bigram formation, adaptive LM join (broadcast at test scale,
-    // gram-keyed shuffle at 100 TB)
-    "q_text_bigram_ce" -> ((s, dir) => {
-      TextAnalysis.bigramCrossEntropy(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // Naive-Bayes log-odds quality/domain classifier (fastText-filter
-    // analog): train (class token counts, add-one smoothing) and score
-    // fused in one plan; label = lang='en'; pred decided on the rounded
-    // score so the boolean is engine-exact
-    "q_text_nb_logodds" -> ((s, dir) => {
-      TextAnalysis.nbLogOdds(t(s, dir, "documents"), "doc_id", "text",
-          coalesce(col("lang") === lit("en"), lit(false)))
-        .orderBy("doc_id")
-    }),
-
-    // DSIR importance log-weights: hashed uni+bigram bucket LLR of every
-    // raw doc against a curated target slice (lang='en'); the hashed
-    // model is O(buckets) by construction, so the score join broadcasts
-    // at any corpus scale
-    "q_text_dsir" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TextAnalysis.dsirLogWeights(docs, docs.where(col("lang") === lit("en")),
-          "doc_id", "text", buckets = 4096)
-        .orderBy("doc_id")
-    }),
-
-    // mergeable DSIR model: two models built over DISJOINT halves of
-    // the corpus, folded by bucket-keyed sum, then scored — must equal
-    // the one-shot model bit-for-bit (same oracle text), proving the
-    // 100 TB keep-the-model-fold-the-delta posture
-    "q_text_dsir_incremental" -> ((s, dir) => {
-      // the fused one-featurization form (round-13 verdict #9): half
-      // models + merge + score off ONE persisted (id, bucket, tf) table
-      // instead of ~3 corpus tokenize+hash passes; output bit-identical
-      // to the composed dsirModel×2 + dsirMergeModels + dsirScore chain
-      // (the shared one-shot oracle is the proof)
-      val docs = t(s, dir, "documents")
-      val en = coalesce(col("lang") === lit("en"), lit(false))
-      TextAnalysis.dsirIncrementalScore(docs, en,
-          col("doc_id") % 10 === 0, "doc_id", "text", buckets = 4096)
-        .orderBy("doc_id")
-    }),
-
-    // stored/merged bigram-LM scoring (round-11 verdict #2): the CE
-    // model is trained as a TABLE over two disjoint corpus halves,
-    // folded by gram-keyed sum, then scores the whole corpus — must
-    // equal the fused train+score plan bit-for-bit (same oracle text),
-    // proving the CCNet train-once/score-nightly posture
-    "q_text_bigram_ce_stored" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merged = TextAnalysis.bigramCeMergeModels(
-        TextAnalysis.bigramCeModel(docs.where(col("doc_id") % 10 =!= 0), "text"),
-        TextAnalysis.bigramCeModel(docs.where(col("doc_id") % 10 === 0), "text"))
-      TextAnalysis.bigramCeScore(docs, merged, "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // stored/merged Naive-Bayes scoring: class counts + the doc-count
-    // sentinel row trained over two disjoint halves, merged by term-
-    // keyed sum, scored label-free — equals the fused plan (same oracle
-    // text), the fastText train-once posture
-    "q_text_nb_stored" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val en = coalesce(col("lang") === lit("en"), lit(false))
-      val merged = TextAnalysis.nbMergeModels(
-        TextAnalysis.nbModel(docs.where(col("doc_id") % 10 =!= 0), "text", en),
-        TextAnalysis.nbModel(docs.where(col("doc_id") % 10 === 0), "text", en))
-      TextAnalysis.nbScore(docs, merged, "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // streaming DSIR: documents stream scored against the stored model
-    // via a STATELESS stream-static broadcast join + ONE streaming agg
-    // (the Σ tf·lnr = Σ_instances lnr fold); instance-level oracle
-    "q_stream_dsir" -> ((s, dir) => {
-      val batch = t(s, dir, "documents")
-      // 8-file cached feed (guide §2, scan parallelism): the scoring
-      // explode — tokenize + hash per feature instance, the drain's
-      // dominant map-side work — ran as one scan task over the single
-      // documents.parquet file. All 8 files land in the same
-      // AvailableNow micro-batch, and every doc's features explode from
-      // its own row, so the complete-mode per-doc aggregate is
-      // identical. Shares the q_stream_neardup feed (same repartition(8)
-      // of the documents table).
-      val streamDir = cachedFeed(s,
-          s"graft_feed_neardup8_${dir.replaceAll("[^A-Za-z0-9]", "_")}",
-          srcToken(s, dir, "documents")) { fd =>
-        batch.repartition(8).write.parquet(fd)
-      }
-      graft.streaming.StreamDrain.drain(s, streamDir,
-          batch.schema, "stream_dsir", "complete") { src =>
-        // the model must build on the DRAIN's dedicated session. It
-        // reads the SAME rows via the cached 8-file feed (round-15
-        // verdict #9) — the feed IS repartition(8) of the documents
-        // table, token-invalidated with it — so the per-batch model
-        // featurization gets 8 scan tasks instead of the one-file
-        // table's single task. The model is count aggregation over
-        // longs (layout-independent), so its rows are unchanged.
-        val docs = StoreTable.read(src.sparkSession, streamDir)
-        val en = coalesce(col("lang") === lit("en"), lit(false))
-        val model = TextAnalysis.dsirModel(docs, docs.where(en), "text",
-          buckets = 4096)
-        graft.streaming.StreamingDsir.scored(src, model, "doc_id", "text",
-          buckets = 4096)
-      }.orderBy("doc_id")
-    }),
-
-    // the composed training-mix pipeline: bigram-CE + NB + DSIR scorers
-    // → rounded-threshold keep → Gumbel-top-k importance draw → md5
-    // split; checks the STAGE BOUNDARIES of the statistical corpus flow
-    "q_pipeline_training_mix" -> ((s, dir) => {
-      CorpusPrep.trainingMix(t(s, dir, "documents"), "doc_id", "text",
-          coalesce(col("lang") === lit("en"), lit(false)),
-          maxBigramCe = 3.4, n = 50, salt = "r11",
-          valRate = 0.1, testRate = 0.1, buckets = 4096)
-        .orderBy("doc_id")
-    }),
-
-    // the same pipeline with the DISTRIBUTED threshold draw (round-11
-    // verdict #1): gumbelSelect replaces the TakeOrderedAndProject heap
-    // — identical selected set at equal (n, salt), proven by sharing
-    // the heap form's oracle text verbatim; no driver-side k-row merge
-    "q_pipeline_training_mix_threshold" -> ((s, dir) => {
-      CorpusPrep.trainingMix(t(s, dir, "documents"), "doc_id", "text",
-          coalesce(col("lang") === lit("en"), lit(false)),
-          maxBigramCe = 3.4, n = 50, salt = "r11",
-          valRate = 0.1, testRate = 0.1, buckets = 4096,
-          thresholdSelect = true)
-        .orderBy("doc_id")
-    }),
-
-    // BM25 keyword retrieval: top-15 documents for a 4-term query —
-    // Lucene-idf + saturation/length normalization, per-doc sums routed
-    // through DECIMAL(38,6) so the ranking is engine-exact
-    "q_text_bm25" -> ((s, dir) => {
-      TextAnalysis.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-          Seq("spark", "window", "merge", "stream"), topK = 15)
-    }),
-
-    // corpus-vs-corpus token-distribution divergence (even/odd doc
-    // split): add-one-smoothed KL(P‖Q) + cross-entropy over the union
-    // vocabulary — the domain-shift diagnostic
-    "q_text_divergence" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TextAnalysis.tokenDivergence(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0),
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1), "text")
-    }),
-
-    // per-language drift ranking: each language's KL against the whole
-    // corpus's token distribution (closed-form absent-term correction —
-    // no group×vocab cross product)
-    "q_text_divergence_group" -> ((s, dir) => {
-      TextAnalysis.perGroupDivergence(t(s, dir, "documents"), "lang", "text")
-        .orderBy(col("lang").asc_nulls_last)
-    }),
-
-    // inverted index: per-term document frequency + sorted posting list
-    "q_text_inverted_index" -> ((s, dir) => {
-      TextAnalysis.invertedIndex(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("term")
-    }),
-
-    // benchmark decontamination: corpus docs sharing any word 5-gram with
-    // the probe slice (doc_id % 20 == 0)
-    "q_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.contaminationReport(
-          docs.filter(pmod(col("doc_id"), lit(20)) =!= 0),
-          docs.filter(pmod(col("doc_id"), lit(20)) === 0),
-          "doc_id", "text", k = 5)
-        .orderBy("doc_id")
-    }),
-
-    // composed split→leakage audit: the check a corpus owner runs after
-    // cutting train/test — which TRAIN docs share 5-gram shingles with
-    // the TEST split (withSplit's md5 split is reproduced by the oracle,
-    // so the whole composition is hash-verified end to end)
-    "q_split_leakage" -> ((s, dir) => {
-      val split = Analytics.withSplit(t(s, dir, "documents"), "doc_id",
-        valRate = 0.1, testRate = 0.1)
-      Dedup.contaminationReport(
-          split.filter(col("split") === "train"),
-          split.filter(col("split") === "test"),
-          "doc_id", "text", k = 5)
-        .orderBy("doc_id")
-    }),
-
-    // leakage-SAFE split: the fix for what q_split_leakage measures —
-    // the split key is the near-dup cluster representative (coalesced to
-    // the doc itself for unclustered docs), so near-duplicates land in
-    // the same split by construction
-    "q_split_by_cluster" -> ((s, dir) => {
-      Dedup.splitByCluster(t(s, dir, "documents"), "doc_id", "text",
-          valRate = 0.1, testRate = 0.1,
-          k = 5, numHashes = 16, numBands = 4, threshold = 0.5)
-        .select("doc_id", "lang", "cluster_key", "split")
-        .orderBy("doc_id")
-    }),
-
-    // the big-probe-set dual: Bloom-sketch prefilter in-plan (scalar
-    // subquery, no broadcast, no driver collect), exact confirm join —
-    // byte-identical output to q_decontaminate, same oracle SQL
-    "q_decontaminate_bloom" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.contaminationReportBloom(
-          docs.filter(pmod(col("doc_id"), lit(20)) =!= 0),
-          docs.filter(pmod(col("doc_id"), lit(20)) === 0),
-          "doc_id", "text", k = 5)
-        .orderBy("doc_id")
-    }),
-
-    // context-window chunking: 40-token windows, 10-token overlap; chunk
-    // text exported as md5 so the compare stays exact and narrow
-    "q_text_chunks" -> ((s, dir) => {
-      TextAnalysis.chunkTokens(t(s, dir, "documents"), "doc_id", "text",
-          chunkTokens = 40, overlap = 10)
-        .select(col("doc_id"), col("chunk_idx"), col("start_tok"),
-                col("n_tokens"), md5(col("chunk_text")).as("chunk_md5"))
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // token-budget packing: deterministic prefix-sum binning at 2000
-    // tokens per training sequence
-    "q_text_packing" -> ((s, dir) => {
-      TextAnalysis.packByTokenBudget(t(s, dir, "documents"), "doc_id", "text",
-          budget = 2000L)
-        .select("doc_id", "n_tokens", "bin_id")
-        .orderBy("doc_id")
-    }),
-
-    // composed corpus gate: min-tokens, repetition, quality, language
-    // rules with first-failing-rule drop attribution
-    "q_text_corpus_gate" -> ((s, dir) => {
-      TextAnalysis.corpusGate(t(s, dir, "documents"), "doc_id", "text",
-          minTokens = 40, maxRepetition = 0.1, minQuality = 0.55,
-          allowedLangs = Seq("en", "es", "fr", "de"))
-        .select("doc_id", "n_tokens", "rep_ratio", "quality_score",
-                "detected", "kept", "drop_reason")
-        .orderBy("doc_id")
-    }),
-
-    // the SAME corpus-gate column program over a documents STREAM
-    // (append mode, stateless, no watermark): proves the claim that the
-    // text-analysis operators compose into readStream plans unchanged
-    // (Stage scaladoc) at the oracle tier — identical SQL text as the
-    // batch gate, so the drained rows must equal batch row-for-row
-    "q_stream_corpus_gate" -> ((s, dir) => {
-      val batch = t(s, dir, "documents")
-      graft.streaming.StreamDrain.drain(s, s"$dir/documents.parquet",
-          batch.schema, "stream_corpus_gate", "append") { src =>
-        TextAnalysis.corpusGate(src, "doc_id", "text",
-            minTokens = 40, maxRepetition = 0.1, minQuality = 0.55,
-            allowedLangs = Seq("en", "es", "fr", "de"))
-          .select("doc_id", "n_tokens", "rep_ratio", "quality_score",
-                  "detected", "kept", "drop_reason")
-      }.orderBy("doc_id")
-    }),
-
-    // sharded token-budget packing — the 100 TB form: cumsum windows run
-    // PER SHARD (here: language), so no single reducer sees the corpus
-    "q_text_packing_sharded" -> ((s, dir) => {
-      TextAnalysis.packByTokenBudget(t(s, dir, "documents"), "doc_id", "text",
-          budget = 2000L, extraParts = Seq("lang"))
-        .select("doc_id", "lang", "n_tokens", "bin_id")
-        .orderBy("doc_id")
-    }),
-
-    // weighted training mix: 200 docs at en/es/fr/de = 5/2/2/1 (zh
-    // excluded), deterministic md5-ordered picks per language
-    "q_sample_mix" -> ((s, dir) => {
-      Analytics.weightedMix(t(s, dir, "documents"), "lang", "doc_id",
-          Map("en" -> 0.5, "es" -> 0.2, "fr" -> 0.2, "de" -> 0.1), total = 200)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    }),
-
-    // composed corpus preparation: quality gate → exact dedup →
-    // temperature mix, quotas over the SURVIVOR counts — one oracle
-    // checks the stage boundaries the unit queries can't see
-    "q_pipeline_corpus_prep" -> ((s, dir) => {
-      graft.operators.CorpusPrep.prepare(t(s, dir, "documents"),
-          "doc_id", "text", "lang", minTokens = 40, maxRepetition = 0.1,
-          minQuality = 0.55, allowedLangs = Seq("en", "es", "fr", "de"),
-          alpha = 0.5, total = 120)
-        .orderBy("doc_id")
-    }),
-
-    // temperature-scaled mix: quotas from the data itself (w = sqrt of
-    // each language's count, quota = floor(300·w/Σw)) — the multilingual
-    // balancing rule; decimal weight sum keeps quotas engine-exact
-    "q_mix_temperature" -> ((s, dir) => {
-      Analytics.temperatureMix(t(s, dir, "documents"), "lang", "doc_id",
-          alpha = 0.5, total = 300)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    }),
-
-    // training-mix quota: at most 50 docs per source, chosen by md5 order
-    "q_sample_stratified" -> ((s, dir) => {
-      Analytics.cappedPerGroup(t(s, dir, "documents"), Seq("source"), "doc_id", 50)
-        .select("doc_id", "source", "lang")
-        .orderBy("doc_id")
-    }),
-
-    // SCD-2 validity intervals over the event log (users 0-49)
-    "q_scd2_versions" -> ((s, dir) => {
-      val ev = t(s, dir, "events").withColumn("ts_us", expr("ts div 1000"))
-        .filter(col("user_id") < 50)
-      Analytics.scd2Intervals(ev, Seq("user_id"), "ts_us", Seq("event_id"))
-        .select(col("user_id"), col("version"), col("valid_from"),
-                col("valid_to"), col("is_current"))
-        .orderBy("user_id", "version")
-    }),
-
-    // S15 — schema introspection as a relation (ai_agent.py:26-38;
-    // round-7 verdict #2 promotes the last spec-only §2 id to the oracle
-    // tier). Spark side describes the ENGINE-facing schemas (Tables.load:
-    // events.ts is the epoch-nanos Long contract whatever the physical
-    // layout); the oracle maps DuckDB's information_schema type names to
-    // the same dialect-neutral categories, with events.ts pinned 'long'
-    // explicitly — asserting the engine contract, not the footer type.
-    "q_s15_describe_store" -> ((s, dir) => {
-      pipelines.BoxOfficePipeline
-        .describeTables(s, Tables.all.map(n => n -> Tables.load(s, dir, n)))
-        .orderBy("tbl", "ord")
-    })
-  )
-
-  /** §2.11 differential fuzz family (round-7 verdict #1): every generated
-    * case is ONE SQL text run verbatim by spark.sql here and by DuckDB as
-    * its oracle — see [[SqlFuzz]] and tools/sqlfuzz.py for the grammar and
-    * the dialect-portability rules it enforces.
+  private val families: Seq[Family] = Seq(CoreFaces, SqlFaces, StoreFaces,
+    StreamingFaces, TextFaces, DedupFaces, SimilarityFaces, MultimodalFaces)
+
+  /** Each face by name, with the family that declares it. A name declared
+    * twice throws, naming it: two faces must never share one key.
     */
-  private def sqlFuzzQueries: Map[String, (SparkSession, String) => DataFrame] =
-    (SqlFuzz.cases ++ SqlFuzz.dualCases.map { case (n, sparkSql, _) =>
-      n -> sparkSql
-    }).map { case (name, sql) =>
-      name -> ((s: SparkSession, dir: String) => {
-        Tables.registerAll(s, dir); s.sql(sql)
-      })
-    }.toMap
-
-  /** One SQL text, executed verbatim by BOTH engines (§2.11: the engine
-    * requirement behind the AI agent is "run arbitrary SELECTs").
-    *
-    * The decimal→double exports are VARCHAR-mediated (valid in both
-    * dialects as VARCHAR(48)): DuckDB's native DECIMAL(38,6)→DOUBLE
-    * double-rounds once the scaled value exceeds 2^53 — sf1's ~1.7e11
-    * running total is 1 ULP off without the hop (round-11 sf1-gate
-    * find); Spark's decimal→varchar→double is identical to its direct
-    * cast, so the shared text stays semantics-preserving there.
-    */
-  private val AgentWindowSql =
-    """SELECT mo, CAST(CAST(total AS VARCHAR(48)) AS DOUBLE) AS total,
-              CAST(CAST(SUM(total) OVER (ORDER BY mo
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS VARCHAR(48)) AS DOUBLE) AS cum_total
-       FROM (SELECT date_trunc('month', o_orderdate) AS mo,
-                    SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS total
-             FROM orders GROUP BY 1) m
-       ORDER BY mo"""
-
-  private val AgentExistsSql =
-    """SELECT c_custkey, c_name FROM customer c
-       WHERE EXISTS (SELECT 1 FROM orders o
-                     WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-         AND NOT EXISTS (SELECT 1 FROM orders o2
-                         WHERE o2.o_custkey = c.c_custkey AND o2.o_orderpriority = '5-LOW')
-       ORDER BY c_custkey"""
-
-  /** Shared by `q_sim_covariance` (one-shot pass) and
-    * `q_sim_covariance_incremental` (three merged batch partials) — the
-    * mergeability claim IS that both hash-equal this one text. The
-    * VARCHAR hop pins DuckDB's DECIMAL(38,18)→DOUBLE double-rounding
-    * divergence (see `Similarity.covarianceSums` scaladoc).
-    */
-  /** Oracle for the decimal-DDSketch quantile family: recomputes the
-    * ENTIRE sketch in DuckDB from the same integer/string arithmetic —
-    * VARCHAR-hop micros → (s,e,d) buckets → RPAD powers of ten → window
-    * cumsum pick → one exact-integer midpoint division. A genuinely
-    * cross-checked approximate quantile, which an engine-private
-    * `approx_percentile` buffer can never be.
-    * `q_quantile_sketch_merged` shares the orders text VERBATIM: the
-    * three-batch merged sketch must reproduce the one-shot sketch
-    * EXACTLY (bucket counts sum by key) — the equality IS the check.
-    */
-  private def quantileSketchOracle(table: String, valueCol: String,
-      groupCol: String, fractions: Seq[Double]): String = {
-    val fs = fractions.map(f => s"($f)").mkString(", ")
-    // TRY_CAST + the m-IS-NULL branches mirror the engine's overflow
-    // routing (QuantileSketch.withBuckets): a finite value past the
-    // DECIMAL(18,6) domain lands in the ±overflow sentinel bucket
-    // (e=19, lo=10^18, w=0) in BOTH engines instead of throwing in one
-    s"""WITH vals AS (SELECT $groupCol AS g,
-               CAST(TRY_CAST(CAST(CAST($valueCol AS DOUBLE) AS VARCHAR) AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS m,
-               CASE WHEN CAST($valueCol AS DOUBLE) < 0 THEN -1 ELSE 1 END AS vsgn
-             FROM $table
-             WHERE $valueCol IS NOT NULL AND isfinite(CAST($valueCol AS DOUBLE))),
-       b AS (SELECT g,
-               CASE WHEN m IS NULL THEN vsgn WHEN m > 0 THEN 1 WHEN m < 0 THEN -1 ELSE 0 END AS s,
-               CASE WHEN m IS NULL THEN 19 WHEN m = 0 THEN 0 ELSE LENGTH(CAST(ABS(m) AS VARCHAR)) - 1 END AS e,
-               CASE WHEN m IS NULL THEN 0 WHEN m = 0 THEN 0 ELSE CAST(SUBSTRING(CAST(ABS(m) AS VARCHAR), 1, 2) AS INT) END AS d
-             FROM vals),
-       sk AS (SELECT g, s, e, d,
-               CASE WHEN e = 19 THEN CAST(1000000000000000000 AS BIGINT) WHEN s = 0 THEN CAST(0 AS BIGINT) ELSE CAST(RPAD(CAST(d AS VARCHAR), CAST(e + 1 AS INT), '0') AS BIGINT) END AS lo,
-               CASE WHEN e = 19 THEN CAST(0 AS BIGINT) WHEN s = 0 THEN CAST(0 AS BIGINT) ELSE CAST(RPAD('1', CAST(GREATEST(e, 1) AS INT), '0') AS BIGINT) END AS w,
-               COUNT(*) AS cnt
-             FROM b GROUP BY 1, 2, 3, 4, 5, 6),
-       fr AS (SELECT CAST(f AS DOUBLE) AS q FROM (VALUES $fs) t(f)),
-       c AS (SELECT g, q, s, lo, w,
-               CAST(SUM(cnt) OVER (PARTITION BY g, q ORDER BY s * lo
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-               CAST(SUM(cnt) OVER (PARTITION BY g, q) AS BIGINT) AS n_rows
-             FROM sk CROSS JOIN fr),
-       p AS (SELECT g, q, s, lo, w, n_rows,
-               ROW_NUMBER() OVER (PARTITION BY g, q ORDER BY s * lo) AS rn
-             FROM c WHERE cum >= CEIL(q * CAST(n_rows AS DOUBLE)))
-       SELECT g AS $groupCol, q,
-              CAST(s * (2 * lo + w) AS DOUBLE) / 2000000.0 AS est,
-              n_rows
-       FROM p WHERE rn = 1
-       ORDER BY $groupCol, q"""
+  private[graft] def byName(families: Seq[Family]): Map[String, (String, Face)] = {
+    val all = for (fam <- families; f <- fam.faces) yield f.name -> (fam.family, f)
+    val dups = all.groupBy(_._1).collect { case (n, xs) if xs.size > 1 => n }
+    require(dups.isEmpty,
+      s"face names declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    all.toMap
   }
 
-  private val CovarianceOracle =
-    """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-            e AS (SELECT vec_id, i, CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x
-                  FROM embeddings CROSS JOIN ser
-                  WHERE i <= len(embedding) AND len(embedding) = 64
-                    AND len(list_filter(embedding,
-                          x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0),
-            p AS (SELECT a.i AS i, b.i AS j, COUNT(*) AS n,
-                         SUM(CAST(a.x * b.x AS DECIMAL(38,18))) AS s_ij
-                  FROM e a JOIN e b ON a.vec_id = b.vec_id AND b.i >= a.i
-                  GROUP BY 1, 2),
-            s1 AS (SELECT i, SUM(CAST(x AS DECIMAL(38,18))) AS s FROM e GROUP BY i)
-       SELECT CAST(p.i - 1 AS INTEGER) AS i, CAST(p.j - 1 AS INTEGER) AS j, p.n AS n,
-              CAST(CAST(si.s AS VARCHAR) AS DOUBLE) AS s_i,
-              CAST(CAST(sj.s AS VARCHAR) AS DOUBLE) AS s_j,
-              CAST(CAST(p.s_ij AS VARCHAR) AS DOUBLE) AS s_ij,
-              CAST(CAST(p.s_ij AS VARCHAR) AS DOUBLE) / p.n
-                - (CAST(CAST(si.s AS VARCHAR) AS DOUBLE) / p.n)
-                  * (CAST(CAST(sj.s AS VARCHAR) AS DOUBLE) / p.n) AS cov
-       FROM p JOIN s1 si ON si.i = p.i JOIN s1 sj ON sj.i = p.j
-       ORDER BY i, j"""
+  private lazy val index = byName(families)
 
-  /** The deterministic IVF-PQ ADC pipeline as CTEs ending at the ranked
-    * shortlist `r` — shared by `q_sim_ivfpq_adc` (rank ≤ 3 head) and
-    * `q_sim_ivfpq_rerank` (rank ≤ 10 shortlist reranked by exact
-    * cosine): one chain, two retrieval depths.
-    */
-  private val IvfPqAdcCoreSql =
-    """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              es AS (SELECT vec_id, i,
-                            CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x,
-                            (i - 1) // 16 AS s
-                     FROM embeddings CROSS JOIN ser WHERE i <= len(embedding)),
-              nrm AS (SELECT vec_id, sqrt(CAST(SUM(x * x) AS DOUBLE)) AS nrm
-                      FROM es GROUP BY vec_id),
-              adots AS (SELECT v.vec_id, c.vec_id AS centroid_id, SUM(v.x * c.x) AS dot
-                        FROM es v JOIN es c ON c.i = v.i AND c.vec_id < 16
-                        GROUP BY 1, 2),
-              asg AS (SELECT vec_id, centroid_id
-                      FROM (SELECT a.vec_id, a.centroid_id,
-                                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                     ORDER BY round(CAST(a.dot AS DOUBLE) / (nv.nrm * nc.nrm), 6) DESC,
-                                              a.centroid_id) AS rn
-                            FROM adots a
-                            JOIN nrm nv ON nv.vec_id = a.vec_id
-                            JOIN nrm nc ON nc.vec_id = a.centroid_id) t
-                      WHERE rn = 1),
-              cent AS (SELECT vec_id AS cid, s, i, x FROM es WHERE vec_id < 4),
-              d2 AS (SELECT v.vec_id, v.s, c.cid,
-                            SUM(CAST(CAST(v.x - c.x AS DECIMAL(18,9))
-                                     * CAST(v.x - c.x AS DECIMAL(18,9))
-                                     AS DECIMAL(38,18))) AS d2
-                     FROM es v JOIN cent c ON v.i = c.i
-                     GROUP BY 1, 2, 3),
-              code AS (SELECT vec_id, s, cid
-                       FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                               ORDER BY d2, cid) AS rn FROM d2)
-                       WHERE rn = 1),
-              q AS (SELECT vec_id AS query_id, centroid_id FROM asg WHERE vec_id < 5),
-              cand AS (SELECT q.query_id, a.vec_id AS cand_id, q.centroid_id
-                       FROM q JOIN asg a ON a.centroid_id = q.centroid_id
-                                        AND a.vec_id <> q.query_id),
-              adc AS (SELECT cand.query_id, cand.cand_id, cand.centroid_id,
-                             SUM(CAST(qe.x * c.x AS DECIMAL(38,18))) AS adot
-                      FROM cand
-                      JOIN es qe ON qe.vec_id = cand.query_id
-                      JOIN code cd ON cd.vec_id = cand.cand_id AND cd.s = qe.s
-                      JOIN cent c ON c.cid = cd.cid AND c.s = qe.s AND c.i = qe.i
-                      GROUP BY 1, 2, 3),
-              r AS (SELECT query_id, centroid_id, cand_id,
-                           round(CAST(adot AS DOUBLE), 6) AS approx_dot,
-                           CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                             ORDER BY round(CAST(adot AS DOUBLE), 6) DESC, cand_id)
-                             AS INTEGER) AS rank
-                    FROM adc)"""
+  /** One entry per implemented operator from SURVEY.md §2. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    index.map { case (n, (_, f)) => n -> f.plan }
 
-  /** Shared by `q_text_heavy_hitters` (batch sketch) and
-    * `q_stream_heavy_hitters` (incrementally maintained sketch) — the
-    * exact GROUP BY … HAVING form both sketch+verify paths must equal.
-    */
-  private val HeavyHittersOracle =
-    """WITH tok AS (SELECT unnest(list_filter(string_split(text, ' '),
-                                              x -> x <> '')) AS token
-                    FROM documents),
-            tot AS (SELECT COUNT(*) AS n FROM tok),
-            c AS (SELECT token, COUNT(*) AS cnt FROM tok GROUP BY token)
-       SELECT token, cnt FROM c, tot
-       WHERE cnt * 41 > n
-       ORDER BY cnt DESC, token"""
+  /** For each query, the DuckDB SQL its result must equal. */
+  lazy val oracleSql: Map[String, String] = index.map { case (n, (_, f)) => n -> f.oracle }
 
-  /** Shared by `q_drift_report` (batch) and `q_stream_drift` (the
-    * complete-mode count-maintenance dual) — one oracle text, two
-    * execution models.
-    */
-  private val DriftOracle =
-    """WITH ref AS (SELECT lang FROM documents WHERE doc_id % 2 = 0),
-              cur AS (SELECT lang FROM documents
-                      WHERE doc_id % 2 = 1 AND lang <> 'zh'),
-              rc AS (SELECT lang, COUNT(*) AS n FROM ref GROUP BY 1),
-              cc AS (SELECT lang, COUNT(*) AS n FROM cur GROUP BY 1),
-              rt AS (SELECT SUM(n) AS t FROM rc),
-              ct AS (SELECT SUM(n) AS t FROM cc),
-              j AS (SELECT COALESCE(rc.lang, cc.lang) AS lang,
-                           COALESCE(rc.n, 0) AS ref_cnt,
-                           COALESCE(cc.n, 0) AS cur_cnt,
-                           COALESCE(CAST(rc.n AS DOUBLE) / rt.t, 0) AS p,
-                           COALESCE(CAST(cc.n AS DOUBLE) / ct.t, 0) AS q,
-                           GREATEST(COALESCE(CAST(rc.n AS DOUBLE) / rt.t, 0), 1e-6) AS ps,
-                           GREATEST(COALESCE(CAST(cc.n AS DOUBLE) / ct.t, 0), 1e-6) AS qs
-                    FROM rc FULL OUTER JOIN cc ON rc.lang = cc.lang, rt, ct)
-         SELECT lang, ref_cnt, cur_cnt,
-                round(p, 6) AS ref_frac, round(q, 6) AS cur_frac,
-                round(qs - ps, 6) AS frac_diff,
-                round((qs - ps) * ln(qs / ps), 6) AS psi_term
-         FROM j ORDER BY lang"""
-
-  /** Shared by `q_timeseries_fill` (batch) and `q_stream_timeseries_fill`
-    * (drained streaming dual) — one oracle text, two execution models.
-    */
-  private val TimeseriesFillOracle =
-    """WITH d AS (SELECT o_custkey, CAST(o_orderdate AS DATE) AS d,
-                         CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS v
-                  FROM orders
-                  WHERE o_custkey <= 40
-                    AND YEAR(CAST(o_orderdate AS DATE)) = 1997
-                  GROUP BY 1, 2),
-            b AS (SELECT o_custkey, MIN(d) AS lo, MAX(d) AS hi FROM d GROUP BY 1),
-            spine AS (SELECT o_custkey,
-                             CAST(UNNEST(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS d
-                      FROM b),
-            j AS (SELECT s.o_custkey, s.d, dd.v
-                  FROM spine s LEFT JOIN d dd
-                    ON dd.o_custkey = s.o_custkey AND dd.d = s.d)
-       SELECT o_custkey, d,
-              last_value(v IGNORE NULLS) OVER (PARTITION BY o_custkey ORDER BY d
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v,
-              CASE WHEN v IS NULL THEN 1 ELSE 0 END AS is_gap
-       FROM j ORDER BY o_custkey, d"""
-
-  /** Shared corpus for the aHash queries: every document's base PNG
-    * fixture plus an XOR-perturbed variant (doc_id + 100_000_000) for
-    * doc_id < 64 — the perturbed copies are the planted near-dups.
-    * The variant offset must clear every real doc_id at EVERY scale
-    * factor: the original 10000 collided with live ids on the sf1
-    * corpus (50 k docs), where the oracle's GROUP BY doc_id silently
-    * merged a real document's pixels with a perturbed variant's — a
-    * scale-dependent fixture bug only the sf1 gate could catch.
-    */
-  private def ahashCorpus(s: SparkSession, dir: String): DataFrame =
-    // corpus cached per sf dir (round-15 verdict #1, guide §1.4): the
-    // PNG ENCODE is fixture construction; the decode+hash operators
-    // downstream still run per row from the parquet blobs every run
-    cachedMediaCorpus(s, dir, "graft_mm_ahash") {
-      import s.implicits._
-      val base = t(s, dir, "documents").select("doc_id").as[Long]
-        .mapPartitions(_.map(id => Multimodal.MediaRecord(id, "image",
-          Multimodal.syntheticPngFixture(id))))
-      val pert = t(s, dir, "documents").select("doc_id").as[Long]
-        .filter((id: Long) => id < 64)
-        .mapPartitions(_.map(id => Multimodal.MediaRecord(id + 100000000L, "image",
-          Multimodal.syntheticPngPerturbedFixture(id))))
-      base.union(pert).toDF()
-    }
-
-  /** The aHash bit derivation restated as closed-form SQL over the
-    * fixture pixel formula (syntheticPng: rgb = (r·2654435761 + x·31 +
-    * y·131) & 0xffffff at residue r = doc_id % 32, w = 16+r,
-    * h = 16+(7r)%32; perturbed = rgb XOR 0x0f0f0f) — shared CTE chain
-    * for both aHash oracles.
-    */
-  private val AHashBandsCte =
-    """WITH ids AS (SELECT doc_id, doc_id % 32 AS r, 0 AS pert FROM documents
-                    UNION ALL
-                    SELECT doc_id + 100000000, doc_id % 32, 1 FROM documents
-                    WHERE doc_id < 64),
-            dims AS (SELECT doc_id, r, pert, 16 + r AS w,
-                            16 + (r * 7) % 32 AS h FROM ids),
-            px AS (SELECT doc_id, w, h, xs.i AS x, ys.i AS y,
-                          xor((r * 2654435761 + xs.i * 31 + ys.i * 131) & 16777215,
-                              CASE WHEN pert = 1 THEN 986895 ELSE 0 END) AS rgb
-                   FROM dims
-                   CROSS JOIN (SELECT unnest(generate_series(0, 47)) AS i) xs
-                   CROSS JOIN (SELECT unnest(generate_series(0, 47)) AS i) ys
-                   WHERE xs.i < w AND ys.i < h),
-            inten AS (SELECT doc_id, x, y,
-                             ((rgb >> 16) & 255) + ((rgb >> 8) & 255) + (rgb & 255) AS it,
-                             (y * 8 // h) * 8 + (x * 8 // w) AS c
-                      FROM px),
-            cells AS (SELECT doc_id, c, SUM(it) AS cs, COUNT(*) AS cn
-                      FROM inten GROUP BY 1, 2),
-            tot AS (SELECT doc_id, SUM(it) AS gs, COUNT(*) AS gn
-                    FROM inten GROUP BY 1),
-            bits AS (SELECT cells.doc_id AS doc_id, c,
-                            CASE WHEN cs * gn > gs * cn THEN 1 ELSE 0 END AS bit
-                     FROM cells JOIN tot ON cells.doc_id = tot.doc_id),
-            bands AS (SELECT doc_id,
-                             CAST(COALESCE(SUM(CASE WHEN c // 16 = 0
-                               THEN bit << (c % 16) ELSE 0 END), 0) AS INTEGER) AS b0,
-                             CAST(COALESCE(SUM(CASE WHEN c // 16 = 1
-                               THEN bit << (c % 16) ELSE 0 END), 0) AS INTEGER) AS b1,
-                             CAST(COALESCE(SUM(CASE WHEN c // 16 = 2
-                               THEN bit << (c % 16) ELSE 0 END), 0) AS INTEGER) AS b2,
-                             CAST(COALESCE(SUM(CASE WHEN c // 16 = 3
-                               THEN bit << (c % 16) ELSE 0 END), 0) AS INTEGER) AS b3
-                      FROM bits GROUP BY doc_id)"""
-
-  /** Semantic oracle shared by `q_u2_cdc_merge` (batch) and
-    * `q_stream_cdc_merge` (two seq-ordered micro-batches through
-    * foreachBatch): it states the NET FINAL STATE the feed must reach,
-    * not a merge replay — so both execution models answer to the same
-    * ground truth.
-    */
-  private val CdcMergeOracle =
-    """WITH base AS (SELECT c_custkey, c_name, c_acctbal FROM customer
-                     WHERE c_custkey <= 700),
-            m AS (SELECT *, c_custkey % 7 AS m FROM base)
-       SELECT c_custkey, c_name,
-              CASE WHEN m = 1 THEN c_acctbal + 100
-                   WHEN m = 3 THEN c_acctbal + 50
-                   ELSE c_acctbal END AS c_acctbal
-       FROM m WHERE m NOT IN (0, 2)
-       UNION ALL
-       SELECT c_custkey + 100000, c_name, c_acctbal FROM m WHERE m = 4
-       ORDER BY c_custkey"""
-
-  /** Shared by the batch and streaming CDC-merge queries: the customer
-    * store plus a deterministic I/U/D feed with multi-change keys
-    * (m=0 delete; m=1 update; m=2 U→D net delete; m=3 D→U resurrect;
-    * m=4 spawns a brand-new inserted key).
-    */
-  private def cdcFixture(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val base = t(s, dir, "customer")
-      .select("c_custkey", "c_name", "c_acctbal")
-      .filter(col("c_custkey") <= 700)
-    val b = base.withColumn("__m", pmod(col("c_custkey"), lit(7)))
-    def ch(df: DataFrame, op: String, seq: Long,
-           bal: org.apache.spark.sql.Column): DataFrame =
-      df.select(col("c_custkey"), col("c_name"), bal.as("c_acctbal"),
-        lit(op).as("op"), lit(seq).as("seq"))
-    val changes = ch(b.filter(col("__m") === 0), "D", 1, col("c_acctbal"))
-      .unionByName(ch(b.filter(col("__m") === 1), "U", 1, col("c_acctbal") + 100))
-      .unionByName(ch(b.filter(col("__m") === 2), "U", 1, col("c_acctbal") + 999))
-      .unionByName(ch(b.filter(col("__m") === 2), "D", 2, col("c_acctbal")))
-      .unionByName(ch(b.filter(col("__m") === 3), "D", 1, col("c_acctbal")))
-      .unionByName(ch(b.filter(col("__m") === 3), "U", 2, col("c_acctbal") + 50))
-      .unionByName(ch(b.filter(col("__m") === 4)
-        .withColumn("c_custkey", col("c_custkey") + 100000), "I", 1,
-        col("c_acctbal")))
-    (base, changes)
-  }
-
-  /** Shared corpus for the audio-fingerprint queries — base WAV fixtures
-    * plus PCM-XOR-perturbed variants (doc_id + 100_000_000, clear of real
-    * ids at every scale factor — see ahashCorpus) for doc_id < 64.
-    */
-  private def audioFpCorpus(s: SparkSession, dir: String): DataFrame =
-    // cached per sf dir — see ahashCorpus (the WAV encode is fixture)
-    cachedMediaCorpus(s, dir, "graft_mm_audiofp") {
-      import s.implicits._
-      val base = t(s, dir, "documents").select("doc_id").as[Long]
-        .mapPartitions(_.map(id => Multimodal.MediaRecord(id, "audio",
-          Multimodal.syntheticWavFixture(id))))
-      val pert = t(s, dir, "documents").select("doc_id").as[Long]
-        .filter((id: Long) => id < 64)
-        .mapPartitions(_.map(id => Multimodal.MediaRecord(id + 100000000L, "audio",
-          Multimodal.syntheticWavPerturbedFixture(id))))
-      base.union(pert).toDF()
-    }
-
-  /** The audio fingerprint restated over the WAV fixture's PCM formula
-    * (syntheticWav at residue r = doc_id % 100: byte i =
-    * (r·31 + i·7) & 0xff, n = (100 + r%50)·(1 + r%2) 16-bit LE signed
-    * samples; perturbed = byte XOR 0x08).
-    */
-  private val AudioFpBandsCte =
-    """WITH ids AS (SELECT doc_id, doc_id % 100 AS r, 0 AS pert FROM documents
-                    UNION ALL
-                    SELECT doc_id + 100000000, doc_id % 100, 1 FROM documents
-                    WHERE doc_id < 64),
-            meta AS (SELECT doc_id, r, pert,
-                            (100 + r % 50) * (1 + r % 2) AS n FROM ids),
-            smp AS (SELECT doc_id, n, ks.k AS k,
-                           xor((r * 31 + (2 * ks.k) * 7) & 255,
-                               CASE WHEN pert = 1 THEN 8 ELSE 0 END) AS lo,
-                           xor((r * 31 + (2 * ks.k + 1) * 7) & 255,
-                               CASE WHEN pert = 1 THEN 8 ELSE 0 END) AS hi
-                    FROM meta
-                    CROSS JOIN (SELECT unnest(generate_series(0, 297)) AS k) ks
-                    WHERE ks.k < n),
-            it AS (SELECT doc_id, n, k,
-                          abs(lo + hi * 256
-                              - CASE WHEN lo + hi * 256 >= 32768
-                                     THEN 65536 ELSE 0 END) AS it,
-                          CAST(k * 64 // n AS INTEGER) AS c
-                   FROM smp),
-            wins AS (SELECT doc_id, c, SUM(it) AS cs, COUNT(*) AS cn
-                     FROM it GROUP BY 1, 2),
-            tot AS (SELECT doc_id, SUM(it) AS gs, COUNT(*) AS gn
-                    FROM it GROUP BY 1),
-            bits AS (SELECT wins.doc_id AS doc_id, c,
-                            CASE WHEN cs * gn > gs * cn THEN 1 ELSE 0 END AS bit
-                     FROM wins JOIN tot ON wins.doc_id = tot.doc_id),
-            bands AS (SELECT doc_id,
-                             CAST(COALESCE(SUM(CASE WHEN c // 16 = 0
-                               THEN bit << (c % 16) ELSE 0 END), 0) AS INTEGER) AS b0,
-                             CAST(COALESCE(SUM(CASE WHEN c // 16 = 1
-                               THEN bit << (c % 16) ELSE 0 END), 0) AS INTEGER) AS b1,
-                             CAST(COALESCE(SUM(CASE WHEN c // 16 = 2
-                               THEN bit << (c % 16) ELSE 0 END), 0) AS INTEGER) AS b2,
-                             CAST(COALESCE(SUM(CASE WHEN c // 16 = 3
-                               THEN bit << (c % 16) ELSE 0 END), 0) AS INTEGER) AS b3
-                      FROM bits GROUP BY doc_id)"""
-
-  /** Shared by `q_dedup_clusters` (one-shot) and
-    * `q_dedup_clusters_incremental` (labels-as-edges ∪ new pairs) — the
-    * incremental fold must reach the exact same labels.
-    */
-  private lazy val ClustersOracle =
-    s"""$SimhashCandCte,
-            pairs AS (SELECT id_a, id_b FROM cand WHERE hamming(sim_a, sim_b) <= 8),
-            nodes AS (SELECT id_a AS id FROM pairs UNION SELECT id_b FROM pairs),
-            edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                      UNION SELECT id_b, id_a FROM pairs),
-            reach AS (SELECT id, id AS comp FROM nodes
-                      UNION
-                      SELECT e.dst AS id, r.comp
-                      FROM reach r JOIN edges e ON e.src = r.id)
-       SELECT id AS doc_id, MIN(comp) AS cluster_id
-       FROM reach GROUP BY id ORDER BY doc_id"""
-
-  private val CubeSql =
-    """SELECT COALESCE(r_name, 'ALL') AS region_name,
-              COALESCE(c_mktsegment, 'ALL') AS segment,
-              COUNT(*) AS n_customers,
-              CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS total_acctbal
-       FROM customer
-       JOIN nation ON c_nationkey = n_nationkey
-       JOIN region ON n_regionkey = r_regionkey
-       GROUP BY CUBE(r_name, c_mktsegment)
-       ORDER BY region_name, segment"""
-
-  private val RollupSql =
-    """SELECT COALESCE(r_name, 'ALL') AS region_name, COALESCE(n_name, 'ALL') AS nation_name,
-              COUNT(*) AS n_customers,
-              CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS total_acctbal
-       FROM customer
-       JOIN nation ON c_nationkey = n_nationkey
-       JOIN region ON n_regionkey = r_regionkey
-       GROUP BY ROLLUP(r_name, n_name)
-       ORDER BY region_name, nation_name"""
-
-  private val AgentSql =
-    """SELECT c_name, CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total_spent
-       FROM orders JOIN customer ON o_custkey = c_custkey
-       WHERE CAST(o_orderdate AS DATE) BETWEEN DATE '1997-01-01' AND DATE '1997-12-31'
-         AND REPLACE(c_name, '#', '') LIKE '%Customer00000012%'
-       GROUP BY c_name ORDER BY total_spent DESC, c_name LIMIT 5"""
-
-  /** Shared CTE chain for the MinHash-LSH oracles: shingles → doubled
-    * md5 hashes → 16 windowed-min signatures → 4 band keys.
-    */
-  /** The three quality-scorer oracle texts, factored so the composed
-    * training-mix oracle can embed them verbatim as derived tables —
-    * guaranteeing the composition is checked against EXACTLY the
-    * per-operator semantics, not a re-derivation that could drift.
-    */
-  private val BigramCeSql: String =
-    """WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-                       FROM documents),
-              unic AS (SELECT w2, COUNT(*) AS cu
-                       FROM (SELECT unnest(t) AS w2 FROM toks) GROUP BY 1),
-              tot AS (SELECT CAST(SUM(cu) AS DOUBLE) AS n, CAST(COUNT(*) AS DOUBLE) AS v FROM unic),
-              bi AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1, unnest(t[2:len(t)]) AS w2
-                     FROM toks WHERE len(t) >= 2),
-              tf AS (SELECT doc_id, w1, w2, COUNT(*) AS tf FROM bi GROUP BY 1, 2, 3),
-              blm AS (SELECT w1, w2, SUM(tf) AS cb FROM tf GROUP BY 1, 2),
-              ctx AS (SELECT w1, SUM(cb) AS cw1 FROM blm GROUP BY 1),
-              lm AS (SELECT blm.w1, blm.w2,
-                            ln(0.75 * (CAST(cb AS DOUBLE) / CAST(cw1 AS DOUBLE))
-                               + 0.25 * ((CAST(cu AS DOUBLE) + 1.0) / (n + v))) AS lp
-                     FROM blm JOIN ctx USING (w1) JOIN unic USING (w2) CROSS JOIN tot)
-         SELECT doc_id, n_bigrams,
-                CAST(CAST(CAST(ce AS VARCHAR) AS DECIMAL(18,6)) AS DOUBLE) AS bigram_ce
-         FROM (SELECT tf.doc_id, CAST(SUM(tf.tf) AS BIGINT) AS n_bigrams,
-                      -CAST(SUM(CAST(tf.tf * lm.lp AS DECIMAL(38,6))) AS DOUBLE)
-                      / CAST(SUM(tf.tf) AS DOUBLE) AS ce
-               FROM tf JOIN lm USING (w1, w2)
-               GROUP BY tf.doc_id) r
-         ORDER BY doc_id"""
-
-  private val NbLogOddsSql: String =
-    """WITH toks AS (SELECT doc_id, COALESCE(lang = 'en', FALSE) AS y,
-                              list_filter(string_split(text, ' '), x -> x <> '') AS t
-                       FROM documents),
-              tf AS (SELECT doc_id, y, term, COUNT(*) AS tf
-                     FROM (SELECT doc_id, y, unnest(t) AS term FROM toks)
-                     GROUP BY 1, 2, 3),
-              cls AS (SELECT term,
-                             SUM(CASE WHEN y THEN tf ELSE 0 END) AS c1,
-                             SUM(CASE WHEN NOT y THEN tf ELSE 0 END) AS c0
-                      FROM tf GROUP BY 1),
-              tot AS (SELECT CAST(SUM(c1) AS DOUBLE) AS t1, CAST(SUM(c0) AS DOUBLE) AS t0,
-                             CAST(COUNT(*) AS DOUBLE) AS v FROM cls),
-              pri AS (SELECT CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS DOUBLE) AS n1,
-                             CAST(SUM(CASE WHEN NOT y THEN 1 ELSE 0 END) AS DOUBLE) AS n0
-                      FROM toks WHERE len(t) >= 1),
-              lnr AS (SELECT term,
-                             ln((CAST(c1 AS DOUBLE) + 1.0) / (t1 + v))
-                             - ln((CAST(c0 AS DOUBLE) + 1.0) / (t0 + v)) AS lnr
-                      FROM cls CROSS JOIN tot)
-         SELECT doc_id, n_tokens,
-                CAST(CAST(CAST(score AS VARCHAR) AS DECIMAL(18,6)) AS DOUBLE) AS nb_log_odds,
-                CAST(CAST(CAST(score AS VARCHAR) AS DECIMAL(18,6)) AS DOUBLE) > 0.0 AS pred
-         FROM (SELECT tf.doc_id, CAST(SUM(tf.tf) AS BIGINT) AS n_tokens,
-                      ln(n1 / n0) + CAST(SUM(CAST(tf.tf * lnr.lnr AS DECIMAL(38,6))) AS DOUBLE) AS score
-               FROM tf JOIN lnr USING (term) CROSS JOIN pri
-               GROUP BY tf.doc_id, n1, n0) r
-         ORDER BY doc_id"""
-
-  private val DsirCtes: String =
-    """WITH toks AS (SELECT doc_id, lang,
-                              list_filter(string_split(text, ' '), x -> x <> '') AS t
-                       FROM documents),
-              feats AS (SELECT doc_id, lang, f FROM
-                          (SELECT doc_id, lang, unnest(t) AS f FROM toks)
-                        UNION ALL
-                        SELECT doc_id, lang, w1 || ' ' || w2 AS f FROM
-                          (SELECT doc_id, lang, unnest(t[1:len(t)-1]) AS w1,
-                                  unnest(t[2:len(t)]) AS w2
-                           FROM toks WHERE len(t) >= 2)),
-              fb AS (SELECT doc_id, lang,
-                            CAST('0x' || substring(md5(f), 1, 13) AS BIGINT) % 4096 AS b
-                     FROM feats),
-              tf AS (SELECT doc_id, b, COUNT(*) AS tf FROM fb GROUP BY 1, 2),
-              ct AS (SELECT b, COUNT(*) AS ct FROM fb WHERE lang = 'en' GROUP BY 1),
-              cr AS (SELECT b, SUM(tf) AS cr FROM tf GROUP BY 1),
-              m AS (SELECT COALESCE(cr.b, ct.b) AS b,
-                           COALESCE(cr, 0) AS cr, COALESCE(ct, 0) AS ct
-                    FROM cr FULL OUTER JOIN ct ON cr.b = ct.b),
-              tot AS (SELECT CAST(SUM(ct) AS DOUBLE) AS tt, CAST(SUM(cr) AS DOUBLE) AS tr FROM m),
-              lnr AS (SELECT b,
-                             ln((CAST(ct AS DOUBLE) + 1.0) / (tt + 4096.0))
-                             - ln((CAST(cr AS DOUBLE) + 1.0) / (tr + 4096.0)) AS lnr
-                      FROM m CROSS JOIN tot)"""
-
-  private val DsirSql: String =
-    s"""$DsirCtes
-         SELECT doc_id, n_feats,
-                CAST(CAST(CAST(w AS VARCHAR) AS DECIMAL(18,6)) AS DOUBLE) AS dsir_log_weight
-         FROM (SELECT tf.doc_id, CAST(SUM(tf.tf) AS BIGINT) AS n_feats,
-                      CAST(SUM(CAST(tf.tf * lnr.lnr AS DECIMAL(38,6))) AS DOUBLE) AS w
-               FROM tf JOIN lnr USING (b)
-               GROUP BY tf.doc_id) r
-         ORDER BY doc_id"""
-
-  /** The streaming dual quantizes PER FEATURE INSTANCE (the single-agg
-    * identity Σ tf·lnr = Σ_instances lnr holds exactly only before the
-    * per-term DECIMAL(38,6) rounding), so its oracle aggregates fb
-    * directly instead of the bucket-level tf.
-    */
-  private val StreamDsirSql: String =
-    s"""$DsirCtes
-         SELECT doc_id, n_feats,
-                CAST(CAST(CAST(w AS VARCHAR) AS DECIMAL(18,6)) AS DOUBLE) AS dsir_log_weight
-         FROM (SELECT fb.doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-                      CAST(SUM(CAST(lnr.lnr AS DECIMAL(38,6))) AS DOUBLE) AS w
-               FROM fb JOIN lnr USING (b)
-               GROUP BY fb.doc_id) r
-         ORDER BY doc_id"""
-
-  /** The composed training-mix oracle: the three scorer texts above run
-    * verbatim as derived-table CTEs, then keep (pred AND ce<=3.4) →
-    * Gumbel-top-k on the log-weight (same md5 uniform as Spark) →
-    * md5-fraction split. Shared by the heap-select query AND its
-    * threshold-select twin — the set equality is the round-12 check.
-    */
-  private lazy val TrainingMixSql: String =
-    s"""WITH ce AS (SELECT * FROM ($BigramCeSql)),
-              nb AS (SELECT * FROM ($NbLogOddsSql)),
-              ds AS (SELECT * FROM ($DsirSql)),
-              kept AS (SELECT ce.doc_id, ce.bigram_ce, nb.nb_log_odds, ds.dsir_log_weight
-                       FROM ce JOIN nb USING (doc_id) JOIN ds USING (doc_id)
-                       WHERE nb.pred AND ce.bigram_ce <= 3.4),
-              sel AS (SELECT doc_id, bigram_ce, nb_log_odds, dsir_log_weight,
-                             dsir_log_weight
-                             - ln(-ln((CAST(CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR) || '_r11'), 1, 13) AS BIGINT) AS DOUBLE) + 0.5)
-                                      / 4503599627370496.0)) AS gk
-                      FROM kept WHERE isfinite(dsir_log_weight)),
-              top AS (SELECT doc_id, bigram_ce, nb_log_odds, dsir_log_weight
-                      FROM sel ORDER BY gk DESC, doc_id LIMIT 50),
-              u AS (SELECT *, CAST(CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
-                                / 4503599627370496.0 AS u
-                    FROM top)
-         SELECT doc_id, bigram_ce, nb_log_odds, dsir_log_weight,
-                CASE WHEN u < 0.1 THEN 'test' WHEN u < 0.2 THEN 'val'
-                     ELSE 'train' END AS split
-         FROM u ORDER BY doc_id"""
-
-  private val MinhashBkCte: String =
-    """WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-                       FROM documents),
-              ser AS (SELECT unnest(generate_series(1, (SELECT COALESCE(MAX(len(t)), 1) FROM toks))) AS i),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+4], ' ') AS s
-                     FROM toks JOIN ser ON i <= len(t) - 4),
-              hh AS (SELECT doc_id, md5(s) || md5(s) AS hv FROM sh),
-              sig AS (SELECT doc_id,
-                             MIN(substring(hv, 1, 16)) AS s0,
-                             MIN(substring(hv, 3, 16)) AS s1,
-                             MIN(substring(hv, 5, 16)) AS s2,
-                             MIN(substring(hv, 7, 16)) AS s3,
-                             MIN(substring(hv, 9, 16)) AS s4,
-                             MIN(substring(hv, 11, 16)) AS s5,
-                             MIN(substring(hv, 13, 16)) AS s6,
-                             MIN(substring(hv, 15, 16)) AS s7,
-                             MIN(substring(hv, 17, 16)) AS s8,
-                             MIN(substring(hv, 19, 16)) AS s9,
-                             MIN(substring(hv, 21, 16)) AS s10,
-                             MIN(substring(hv, 23, 16)) AS s11,
-                             MIN(substring(hv, 25, 16)) AS s12,
-                             MIN(substring(hv, 27, 16)) AS s13,
-                             MIN(substring(hv, 29, 16)) AS s14,
-                             MIN(substring(hv, 31, 16)) AS s15
-                      FROM hh GROUP BY doc_id),
-              bk AS (SELECT doc_id, b,
-                            CASE b WHEN 0 THEN md5(s0 || s1 || s2 || s3)
-                                   WHEN 1 THEN md5(s4 || s5 || s6 || s7)
-                                   WHEN 2 THEN md5(s8 || s9 || s10 || s11)
-                                   ELSE md5(s12 || s13 || s14 || s15) END AS key
-                     FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b))"""
-
-  /** Incremental-dedup oracle, shared verbatim by the inline-index and
-    * stored-index queries — both must produce the identical result.
-    */
-  private lazy val IncrementalDedupOracle: String =
-    s"""$MinhashBkCte,
-              candAll AS (SELECT DISTINCT a.doc_id AS x, c.doc_id AS y
-                          FROM bk a JOIN bk c ON a.b = c.b AND a.key = c.key
-                                             AND a.doc_id <> c.doc_id),
-              orient AS (SELECT DISTINCT
-                                CASE WHEN x % 5 = 0 AND y % 5 = 0
-                                     THEN LEAST(x, y) ELSE x END AS id_fresh,
-                                CASE WHEN x % 5 = 0 AND y % 5 = 0
-                                     THEN GREATEST(x, y) ELSE y END AS id_other
-                         FROM candAll WHERE x % 5 = 0),
-              cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              shr AS (SELECT id_fresh, id_other, COUNT(*) AS shared
-                      FROM orient
-                      JOIN sh sa ON sa.doc_id = id_fresh
-                      JOIN sh sb ON sb.doc_id = id_other AND sb.s = sa.s
-                      GROUP BY 1, 2)
-         SELECT id_fresh, id_other,
-                CAST(shared AS DOUBLE) / CAST(ca.n + cb.n - shared AS DOUBLE) AS jaccard
-         FROM shr JOIN cnt ca ON ca.doc_id = id_fresh JOIN cnt cb ON cb.doc_id = id_other
-         WHERE CAST(shared AS DOUBLE) / CAST(ca.n + cb.n - shared AS DOUBLE) >= 0.5
-         ORDER BY id_fresh, id_other"""
-
-  /** Shared candidate CTE for the simhash-pair oracles (RECURSIVE is
-    * harmless when unused and required by the clusters oracle).
-    */
-  /** The simhash banding candidate CTE chain, optionally with the
-    * hot-bucket df-cap mirrored (buckets with more than `cap` members
-    * leave the universe before the self-join — the Spark side's
-    * `maxBucketDf` guard, round-13).
-    */
-  private def simhashCandCte(cap: Option[Long]): String = {
-    val base =
-      """WITH RECURSIVE toks AS (SELECT doc_id,
-                              unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
-                       FROM documents),
-              js AS (SELECT unnest(generate_series(0, 63)) AS j),
-              bits AS (SELECT doc_id, j,
-                              ((strpos('0123456789abcdef', substring(md5(tok), 1 + (j // 4), 1)) - 1)
-                               >> (3 - (j % 4))) % 2 AS bit
-                       FROM toks CROSS JOIN js),
-              bal AS (SELECT doc_id, j, SUM(bit * 2 - 1) AS bal FROM bits GROUP BY 1, 2),
-              sb AS (SELECT doc_id, j, CASE WHEN bal >= 0 THEN '1' ELSE '0' END AS b FROM bal),
-              sim AS (SELECT doc_id, string_agg(b, '' ORDER BY j) AS simhash
-                      FROM sb GROUP BY doc_id),
-              ch AS (SELECT doc_id, simhash, c AS band,
-                            substring(simhash, c * 16 + 1, 16) AS key
-                     FROM sim CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS c))"""
-    val (capCtes, src) = cap match {
-      case Some(c) => (
-        s""",
-              hot AS (SELECT band, key FROM ch GROUP BY band, key HAVING COUNT(*) > $c),
-              chc AS (SELECT ch.doc_id, ch.simhash, ch.band, ch.key
-                      FROM ch LEFT JOIN hot ON ch.band = hot.band AND ch.key = hot.key
-                      WHERE hot.band IS NULL)""", "chc")
-      case None => ("", "ch")
-    }
-    base + capCtes +
-      s""",
-              cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-                              a.simhash AS sim_a, b.simhash AS sim_b
-                       FROM $src a JOIN $src b ON a.band = b.band AND a.key = b.key
-                                          AND a.doc_id < b.doc_id)"""
-  }
-
-  private val SimhashCandCte: String = simhashCandCte(None)
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  /** Shared by the batch gate and its streaming dual: one SQL text, one
-    * agreement surface — the streaming drain must land on the batch rows
-    * exactly (stateless column program, append mode, no watermark).
-    */
-  private val CorpusGateOracle: String =
-    """WITH t AS (SELECT doc_id, text,
-                         list_filter(string_split(text, ' '), x -> x <> '') AS tk
-                  FROM documents),
-            q AS (SELECT doc_id, CAST(len(tk) AS INTEGER) AS n_tokens,
-                         CAST(length(replace(text, ' ', '')) AS DOUBLE)
-                           / CAST(len(tk) AS DOUBLE) AS avg_token_len,
-                         CAST(len(list_filter(tk, x -> x IN ('the','a','is','and','of','to','in'))) AS DOUBLE)
-                           / CAST(len(tk) AS DOUBLE) AS stop_ratio
-                  FROM t),
-            qs AS (SELECT doc_id, n_tokens,
-                          greatest(0.0, least(1.0,
-                            stop_ratio * 0.3
-                            + least(1.0, CAST(n_tokens AS DOUBLE) / 100.0) * 0.4
-                            + least(1.0, avg_token_len / 8.0) * 0.3)) AS quality_score
-                   FROM q),
-            ser AS (SELECT unnest(generate_series(1, (SELECT COALESCE(MAX(len(tk)), 1) FROM t))) AS i),
-            bgr AS (SELECT doc_id, tk[i] || ' ' || tk[i + 1] AS b
-                    FROM t CROSS JOIN ser WHERE i <= len(tk) - 1),
-            rp0 AS (SELECT doc_id, COUNT(*) AS nb, COUNT(DISTINCT b) AS nub
-                    FROM bgr GROUP BY doc_id),
-            rp AS (SELECT t.doc_id,
-                          COALESCE(round(CAST(rp0.nb - rp0.nub AS DOUBLE)
-                                         / CAST(rp0.nb AS DOUBLE), 6), 0.0) AS rep_ratio
-                   FROM t LEFT JOIN rp0 ON t.doc_id = rp0.doc_id),
-            lh AS (SELECT doc_id,
-                          CAST(len(list_filter(tk, x -> x IN ('the','a','is','and','of'))) AS INTEGER) AS en_hits,
-                          CAST(len(list_filter(tk, x -> x IN ('el','la','de','que','y'))) AS INTEGER) AS es_hits,
-                          CAST(len(list_filter(tk, x -> x IN ('le','les','des','et','une'))) AS INTEGER) AS fr_hits,
-                          CAST(len(list_filter(tk, x -> x IN ('der','die','und','das','ist'))) AS INTEGER) AS de_hits
-                   FROM t),
-            ld AS (SELECT doc_id,
-                          CASE WHEN en_hits >= es_hits AND en_hits >= fr_hits
-                                AND en_hits >= de_hits AND en_hits > 0 THEN 'en'
-                               WHEN es_hits >= fr_hits AND es_hits >= de_hits
-                                AND es_hits > 0 THEN 'es'
-                               WHEN fr_hits >= de_hits AND fr_hits > 0 THEN 'fr'
-                               WHEN de_hits > 0 THEN 'de'
-                               ELSE 'und' END AS detected
-                   FROM lh),
-            j AS (SELECT qs.doc_id, qs.n_tokens, rp.rep_ratio, qs.quality_score, ld.detected
-                  FROM qs JOIN rp ON qs.doc_id = rp.doc_id
-                          JOIN ld ON qs.doc_id = ld.doc_id),
-            g AS (SELECT *, CASE WHEN n_tokens < 40 THEN 'too_short'
-                                 WHEN rep_ratio > 0.1 THEN 'too_repetitive'
-                                 WHEN quality_score < 0.55 THEN 'low_quality'
-                                 WHEN detected NOT IN ('en','es','fr','de') THEN 'lang'
-                            END AS drop_reason
-                  FROM j)
-       SELECT doc_id, n_tokens, rep_ratio, quality_score, detected,
-              (drop_reason IS NULL) AS kept, drop_reason
-       FROM g ORDER BY doc_id"""
-
-  def oracleSql: Map[String, String] = Map(
-
-    "q_w1_latest_per_key" ->
-      """SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us, value
-         FROM (SELECT user_id, event_type, event_id, ts, value,
-                      ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-                                         ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-               FROM events) t
-         WHERE rn = 1 ORDER BY user_id, event_type""",
-
-    // The decimal→double exports go through a VARCHAR hop: DuckDB's
-    // native DECIMAL(38,6)→DOUBLE double-rounds (int128→double, then
-    // ÷10^6 — two IEEE roundings) once the scaled sum exceeds 2^53,
-    // which sf1's ~2.8e10 charge sums do; Spark/BigDecimal round ONCE.
-    // decimal→VARCHAR→DOUBLE is exact-then-correctly-rounded in both
-    // engines (found by the sf1 gate, round 11 — invisible at sf0.01
-    // where every scaled sum fits in 2^53).
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-                CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_qty,
-                CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_base_price,
-                CAST(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_disc_price,
-                CAST(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_charge,
-                CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_qty,
-                CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_price,
-                CAST(CAST(SUM(CAST(l_discount AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_disc,
-                COUNT(*) AS count_order
-         FROM lineitem
-         WHERE CAST(l_shipdate AS DATE) <= DATE '1998-09-02'
-         GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-
-    "q_a3_topk_customers" ->
-      """SELECT o_custkey, CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total_spent,
-                COUNT(*) AS n_orders
-         FROM orders GROUP BY o_custkey
-         ORDER BY total_spent DESC, o_custkey LIMIT 10""",
-
-    "q_a4_top_days" ->
-      """SELECT CAST(ts AS DATE) AS d, CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
-         FROM events GROUP BY 1
-         ORDER BY total_value DESC, d LIMIT 3""",
-
-    "q_a6_genre_rollup" ->
-      """SELECT n_name, COUNT(DISTINCT c_custkey) AS n_customers,
-                array_to_string(list_sort(list_distinct(list(c_name))), ', ') AS customer_list
-         FROM customer JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY n_name ORDER BY n_name""",
-
-    "q_j1_dim_rollup" ->
-      """SELECT r_name, n_name, COUNT(*) AS n_customers,
-                CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS total_acctbal,
-                CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_acctbal
-         FROM customer
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name ORDER BY r_name, n_name""",
-
-    "q_j2_customers_no_orders" ->
-      """SELECT c_custkey, c_name FROM customer c
-         WHERE NOT EXISTS (SELECT 1 FROM orders o
-                           WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-         ORDER BY c_custkey""",
-
-    "q_j2b_customers_with_orders" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer c
-         WHERE EXISTS (SELECT 1 FROM orders o
-                       WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
-         ORDER BY c_custkey""",
-
-    "q_f15_stock_status" ->
-      """SELECT CASE WHEN l_quantity > 40 THEN '보유'
-                     WHEN l_quantity > 10 THEN '소진중'
-                     WHEN l_quantity > 0 THEN '소량보유'
-                     ELSE '소진' END AS status,
-                COUNT(*) AS n, CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS total_qty
-         FROM lineitem GROUP BY 1 ORDER BY status""",
-
-    "q_t1_union_names" ->
-      """SELECT c_name AS name FROM customer
-         UNION SELECT s_name AS name FROM supplier
-         ORDER BY name""",
-
-    "q_st1_date_spine" ->
-      """SELECT CAST(x AS DATE) AS d
-         FROM (SELECT UNNEST(generate_series(
-                 (SELECT MAX(CAST(o_orderdate AS DATE)) FROM orders) + 1,
-                 DATE '2001-12-31', INTERVAL 1 DAY)) AS x)
-         ORDER BY d""",
-
-    "q_u1_upsert" ->
-      """WITH base AS (SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value, props FROM events),
-              fresh AS (SELECT event_id, ts_us, user_id, event_type, value + 1000 AS value,
-                               '{"upd": true}' AS props
-                        FROM base WHERE event_id % 10 < 3),
-              u AS (SELECT *, 1 AS pri FROM fresh UNION ALL SELECT *, 0 AS pri FROM base),
-              r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_id
-                                                 ORDER BY pri DESC, ts_us DESC) AS rn FROM u)
-         SELECT event_id, ts_us, user_id, event_type, value, props
-         FROM r WHERE rn = 1 ORDER BY event_id""",
-
-    "q_f5_ship_delay" ->
-      """SELECT o_orderpriority,
-                CAST(SUM(CAST(datediff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)) AS DECIMAL(38,6))) AS DOUBLE)
-                  / CAST(COUNT(*) AS DOUBLE) AS avg_ship_delay_days,
-                COUNT(*) AS n_items
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-
-    "q_w2_daily_rank" ->
-      """WITH daily AS (SELECT user_id, CAST(ts AS DATE) AS d,
-                               CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS day_value
-                        FROM events GROUP BY 1, 2)
-         SELECT user_id, d, day_value, CAST(rnk AS INTEGER) AS rnk
-         FROM (SELECT *, RANK() OVER (PARTITION BY d
-                                      ORDER BY day_value DESC, user_id) AS rnk
-               FROM daily) t
-         WHERE rnk <= 5 ORDER BY d, rnk, user_id""",
-
-    "q_w2_lag_cumsum" ->
-      """SELECT user_id, epoch_us(ts) AS ts_us, event_id, value,
-                LAG(value, 1) OVER w AS prev_value,
-                value - (LAG(value, 1) OVER w) AS delta,
-                CAST(SUM(CAST(value AS DECIMAL(38,6))) OVER (PARTITION BY user_id
-                  ORDER BY epoch_us(ts), event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_value
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-         ORDER BY user_id, ts_us, event_id""",
-
-    "q_p_scan_filter_sort" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice,
-                l_returnflag, l_shipdate
-         FROM lineitem
-         WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
-                              AND TIMESTAMP '1996-12-31 00:00:00'
-           AND l_returnflag IN ('R', 'A')
-         ORDER BY l_shipdate DESC, l_orderkey, l_linenumber""",
-
-    "q_sql_fuzzy_like" ->
-      """SELECT p_partkey, p_name, p_retailprice FROM part
-         WHERE REPLACE(p_name, ' ', '') LIKE '%redwidget%'
-         ORDER BY p_partkey""",
-
-    "q_w3_window_suite" ->
-      """SELECT o_custkey, o_orderkey,
-                CAST(ntile(4) OVER w AS INTEGER) AS quartile,
-                round(percent_rank() OVER w, 6) AS pct_rank,
-                round(cume_dist() OVER w, 6) AS cume,
-                first_value(o_orderkey) OVER wrun AS first_key,
-                last_value(o_orderkey) OVER wrun AS last_key,
-                nth_value(o_orderkey, 2) OVER wrun AS second_key
-         FROM orders WHERE o_custkey % 10 = 0
-         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-                wrun AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         ORDER BY o_custkey, o_orderkey""",
-
-    "q_j4_enrich_fallback" ->
-      """WITH f AS (SELECT l_partkey, l_returnflag, l_quantity FROM lineitem),
-              p AS (SELECT p_partkey, p_retailprice * 0.9 AS eff FROM part WHERE p_size > 30),
-              a AS (SELECT p_partkey, p_retailprice AS eff FROM part)
-         SELECT l_returnflag, COUNT(*) AS n_items,
-                CAST(SUM(CAST(COALESCE(p.eff, a.eff) * l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS total_eff
-         FROM f LEFT JOIN p ON f.l_partkey = p.p_partkey
-                LEFT JOIN a ON f.l_partkey = a.p_partkey
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "q_j6_fuzzy_title" ->
-      """WITH q(title) AS (VALUES ('red widget premiere [2024]'),
-                                  ('the blue bolt: limited run'),
-                                  ('hot gear <fan event>'),
-                                  ('totally unknown title')),
-              n AS (SELECT title,
-                           trim(regexp_replace(regexp_replace(regexp_replace(title,
-                                '[<\[].*?[>\]]', ' ', 'g'),
-                                '[^가-힣a-zA-Z0-9\s]', '', 'g'),
-                                '\s+', ' ', 'g')) AS nt
-                    FROM q),
-              nq AS (SELECT title, replace(replace(replace(nt, ' ', ''), ':', ''), '_', '') AS qc FROM n),
-              c AS (SELECT p_name, replace(replace(replace(p_name, ' ', ''), ':', ''), '_', '') AS cc
-                    FROM (SELECT DISTINCT p_name FROM part)
-                    WHERE length(replace(replace(replace(p_name, ' ', ''), ':', ''), '_', '')) > 0),
-              j AS (SELECT nq.title, nq.qc, c.p_name, c.cc
-                    FROM nq LEFT JOIN c ON contains(nq.qc, c.cc)),
-              r AS (SELECT title, p_name,
-                           ROW_NUMBER() OVER (PARTITION BY title
-                             ORDER BY abs(length(cc) - length(qc)), length(p_name), p_name) AS rn
-                    FROM j)
-         SELECT title, COALESCE(p_name, title) AS matched
-         FROM r WHERE rn = 1 ORDER BY title""",
-
-    "q_f12_lotte_goods" ->
-      """WITH ev(event_id, event_name, goods_full_name) AS (
-              VALUES (CAST(1 AS BIGINT), '<엔드게임> 시그니처 아트카드 증정', '오리지널 티켓 (1주차, 포스터)'),
-                     (CAST(2 AS BIGINT), '<위젯> SPECIAL ART CARD EVENT', 'any goods name'),
-                     (CAST(3 AS BIGINT), '<기타> 주간 굿즈', '<한정> 오리지널 티켓 (4주차, A3 포스터)'),
-                     (CAST(4 AS BIGINT), '브래킷 없는 이벤트', '<한정판> 포토카드 세트'),
-                     (CAST(5 AS BIGINT), '행사', '티켓 (,)')),
-              c AS (SELECT event_id, event_name,
-                           trim(regexp_replace(goods_full_name, '<[^<>]+>', '', 'g')) AS cleaned
-                    FROM ev)
-         SELECT event_id,
-                CASE WHEN length(regexp_extract(event_name, '<([^<>]+)>', 1)) > 0
-                     THEN trim(regexp_extract(event_name, '<([^<>]+)>', 1)) END AS movie_title_raw,
-                CASE WHEN contains(event_name, '시그니처 아트카드') THEN '시그니처 아트카드'
-                     WHEN contains(event_name, 'SPECIAL ART CARD') THEN '스페셜 아트카드'
-                     WHEN regexp_matches(cleaned, ',\s*.*?\s*\)')
-                     THEN regexp_extract(cleaned, ',\s*(.*?)\s*\)', 1)
-                     ELSE cleaned END AS goods_name
-         FROM c ORDER BY event_id""",
-
-    "q_f13_megabox_dates" ->
-      """WITH src(event_id, goods_name, event_title, period) AS (
-              VALUES (CAST(1 AS BIGINT), '[퀴어] 오리지널 포토카드', '이벤트 안내', '2025.01.01 ~ 2025.01.31'),
-                     (CAST(2 AS BIGINT), '스페셜 배지', '<판타스틱4> 개봉 기념', '2025.07.01~2025.07.15'),
-                     (CAST(3 AS BIGINT), '<엔드게임>', '<엔드게임> 아트카드 증정', '2025.03.01 ~ 2025.03.31'),
-                     (CAST(4 AS BIGINT), '포토카드 세트', '주간 이벤트', '2025.05.01'),
-                     (CAST(5 AS BIGINT), '<> 굿즈', '[하얼빈] 이벤트', CAST(NULL AS VARCHAR)),
-                     (CAST(6 AS BIGINT), '[A] 카드', 'ev', '1 ~ 2 ~ 3')),
-              ext AS (SELECT *,
-                             NULLIF(trim(regexp_extract(goods_name, '[<\[](.*?)[>\]]', 1)), '') AS tg,
-                             NULLIF(trim(regexp_extract(event_title, '[<\[](.*?)[>\]]', 1)), '') AS te,
-                             trim(regexp_replace(goods_name, '\s*[<\[].*?[>\]]\s*', '', 'g')) AS sg,
-                             trim(regexp_replace(event_title, '\s*[<\[].*?[>\]]\s*', '', 'g')) AS se,
-                             string_split(period, '~') AS parts
-                      FROM src)
-         SELECT event_id, COALESCE(tg, te) AS movie_title_raw,
-                CASE WHEN COALESCE(tg, te) IS NULL THEN goods_name
-                     WHEN length(sg) > 0 THEN sg ELSE se END AS goods_name_out,
-                trim(parts[1]) AS start_date,
-                CASE WHEN len(parts) >= 2 THEN trim(parts[2]) END AS end_date
-         FROM ext ORDER BY event_id""",
-
-    "q_pipeline_goods_enrich" ->
-      """WITH goods(event_id, movie_title, goods_name, start_date, end_date, event_url, image_url) AS (
-              VALUES (CAST(1 AS BIGINT), 'widget <collector event>', 'sx poster',
-                      '2024-01-01', '2024-01-31', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)),
-                     (CAST(2 AS BIGINT), 'gizmo <limited>', 'poster b',
-                      '2024-02-01', '2024-02-28', NULL, 'own_img2'),
-                     (CAST(3 AS BIGINT), CAST(NULL AS VARCHAR), 'u4dx label',
-                      '2024-03-01', '2024-03-31', 'own_url3', NULL),
-                     (CAST(4 AS BIGINT), 'totally unknown title', 'poster x',
-                      CAST(NULL AS VARCHAR), '2024-04-30', NULL, NULL)),
-              al(raw, canonical) AS (VALUES ('sx poster', 'screenx poster'),
-                                            ('u4dx label', 'ultra 4dx label')),
-              rec(movie_nm) AS (VALUES ('large widget'), ('old rod')),
-              me(movie_title, goods_name, start_date, end_date, event_url, image_url) AS (
-              VALUES ('large widget', 'screenx poster', '2024-01-05', '2024-01-25', 'http://m1', 'img1'),
-                     ('hot gizmo', 'different goods', '2024-02-01', '2024-02-28', 'http://m2', 'img2'),
-                     (CAST(NULL AS VARCHAR), 'ultra 4dx label', '2024-03-05', '2024-03-20',
-                      CAST(NULL AS VARCHAR), 'img3'),
-                     ('ultra 4dx label', 'other goods', '2024-03-01', '2024-03-31', 'http://m4', 'img4')),
-              g1 AS (SELECT event_id, movie_title, COALESCE(canonical, goods_name) AS goods_name,
-                            start_date, end_date, event_url, image_url
-                     FROM goods LEFT JOIN al ON goods_name = raw),
-              n AS (SELECT DISTINCT movie_title AS title FROM g1 WHERE movie_title IS NOT NULL),
-              nn AS (SELECT title,
-                            trim(regexp_replace(regexp_replace(regexp_replace(title,
-                                 '[<\[].*?[>\]]', ' ', 'g'),
-                                 '[^가-힣a-zA-Z0-9\s]', '', 'g'),
-                                 '\s+', ' ', 'g')) AS qn
-                     FROM n),
-              nq AS (SELECT title, qn,
-                            replace(replace(replace(qn, ' ', ''), ':', ''), '_', '') AS qc
-                     FROM nn),
-              cat AS (SELECT DISTINCT p_name AS cand FROM part),
-              tagged AS (SELECT cand, 1 AS phase FROM (SELECT DISTINCT movie_nm AS cand FROM rec)
-                         UNION ALL SELECT cand, 2 FROM cat
-                         UNION ALL SELECT cand, 3 FROM cat),
-              c AS (SELECT cand, phase,
-                           replace(replace(replace(cand, ' ', ''), ':', ''), '_', '') AS cc
-                    FROM tagged
-                    WHERE length(replace(replace(replace(cand, ' ', ''), ':', ''), '_', '')) > 0),
-              mj AS (SELECT nq.title, nq.qn, nq.qc, c.cand, c.phase, c.cc
-                     FROM nq LEFT JOIN c
-                       ON (c.phase <= 2 AND length(nq.qc) > 0 AND contains(c.cc, nq.qc))
-                       OR (c.phase = 3 AND length(nq.qn) > 0 AND contains(c.cand, nq.qn))),
-              mr AS (SELECT title, qn, cand,
-                            ROW_NUMBER() OVER (PARTITION BY title ORDER BY phase,
-                              CASE WHEN phase <= 2 THEN length(cc) - length(qc)
-                                   ELSE length(cand) END,
-                              length(cand), cand) AS rn
-                     FROM mj),
-              mt AS (SELECT title, CASE WHEN length(qn) = 0 THEN ''
-                                        ELSE COALESCE(cand, qn) END AS matched
-                     FROM mr WHERE rn = 1),
-              g2 AS (SELECT event_id, mt.matched AS movie_title, goods_name,
-                            start_date, end_date, event_url, image_url
-                     FROM g1 LEFT JOIN mt ON g1.movie_title = mt.title),
-              idg AS (SELECT *, CASE WHEN movie_title IS NOT NULL AND length(movie_title) > 0
-                                     THEN movie_title ELSE goods_name END AS ident FROM g2),
-              mei AS (SELECT *, CASE WHEN movie_title IS NOT NULL AND length(movie_title) > 0
-                                     THEN movie_title ELSE goods_name END AS ident FROM me),
-              bg AS (SELECT ident, goods_name, event_url AS ev1, image_url AS img1,
-                            ROW_NUMBER() OVER (PARTITION BY ident, goods_name
-                              ORDER BY event_url DESC NULLS LAST, image_url DESC NULLS LAST) AS rn
-                     FROM mei WHERE ident IS NOT NULL AND goods_name IS NOT NULL),
-              bd AS (SELECT ident, start_date, end_date, event_url AS ev2, image_url AS img2,
-                            ROW_NUMBER() OVER (PARTITION BY ident, start_date, end_date
-                              ORDER BY event_url DESC NULLS LAST, image_url DESC NULLS LAST) AS rn
-                     FROM mei WHERE ident IS NOT NULL AND start_date IS NOT NULL
-                                AND end_date IS NOT NULL),
-              j AS (SELECT g.event_id, g.movie_title, g.goods_name,
-                           g.event_url AS own_url, g.image_url AS own_img,
-                           bg.ev1, bg.img1, (bg.ident IS NOT NULL) AS hit1, bd.ev2, bd.img2
-                    FROM idg g
-                    LEFT JOIN (SELECT * FROM bg WHERE rn = 1) bg
-                      ON g.ident = bg.ident AND g.goods_name = bg.goods_name
-                    LEFT JOIN (SELECT * FROM bd WHERE rn = 1) bd
-                      ON g.ident = bd.ident AND g.start_date = bd.start_date
-                         AND g.end_date = bd.end_date)
-         SELECT event_id, movie_title, goods_name,
-                CASE WHEN hit1 THEN COALESCE(ev1, own_url) ELSE COALESCE(ev2, own_url) END AS event_url,
-                CASE WHEN hit1 THEN COALESCE(own_img, img1) ELSE COALESCE(own_img, img2) END AS image_url
-         FROM j ORDER BY event_id""",
-
-    // the surviving store: bootstrap + advance ingests of 1995-01-01..10
-    // (invalid open_dt rows dropped), days 3-5 replaced with doubled sales
-    "q_pipeline_store_lifecycle" ->
-      """WITH raw AS (SELECT CAST(o_orderdate AS DATE) AS target_dt,
-                             o_orderkey AS movie_cd,
-                             CASE WHEN o_orderkey % 7 = 0 THEN NULL
-                                  ELSE CAST(o_orderdate AS DATE)
-                                       - CAST(o_orderkey % 60 AS INTEGER) END AS open_dt,
-                             o_totalprice AS sales
-                      FROM orders
-                      WHERE CAST(o_orderdate AS DATE)
-                            BETWEEN DATE '1995-01-01' AND DATE '1995-01-10')
-         SELECT movie_cd,
-                strftime(target_dt, '%Y-%m-%d') AS target_dt,
-                strftime(open_dt, '%Y-%m-%d') AS open_dt,
-                CAST(target_dt - open_dt AS INTEGER) AS elapsed_dt,
-                sales * (CASE WHEN target_dt BETWEEN DATE '1995-01-03'
-                                                 AND DATE '1995-01-05'
-                              THEN 2 ELSE 1 END) AS sales
-         FROM raw WHERE open_dt IS NOT NULL ORDER BY movie_cd""",
-
-    "q_pipeline_csv_roundtrip" ->
-      """SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice
-         FROM part ORDER BY p_partkey""",
-
-    // the exact rows the S1 adapter must land on: row 2 dropped by the
-    // open_dt coercion, "abc"/""/"oops" numerics coerced to zero
-    "q_source_kobis_daily" ->
-      """SELECT * FROM (VALUES
-           (CAST(1 AS BIGINT), CAST(1 AS BIGINT), '20240001', 'Alpha',
-            '2024-01-01', '2024-01-15', CAST(1000000 AS BIGINT),
-            CAST(45.5 AS DOUBLE), CAST(1200 AS BIGINT), CAST(0 AS BIGINT),
-            CAST(800 AS BIGINT), CAST(3200 AS BIGINT), CAST(14 AS INTEGER)),
-           (3, 3, '20240003', 'Gamma', '2023-12-25', '2024-01-15',
-            0, 0.0, 900, -30, 700, 2800, 21))
-         AS t(rnum, rank, movie_cd, movie_nm, open_dt, target_dt, sales_amt,
-              sales_share, audi_cnt, audi_change, scrn_cnt, show_cnt,
-              elapsed_dt)
-         ORDER BY rnum""",
-
-    "q_f1_snake_schema" ->
-      """SELECT * FROM (VALUES
-           (CAST(0 AS INTEGER), 'rnum'), (1, 'rank_inten'),
-           (2, 'rank_old_and_new'), (3, 'movie_cd'), (4, 'sales_amt'),
-           (5, 'sales_share'), (6, 'audi_acc'), (7, 'show_cnt'),
-           (8, 'seat2_cnt'))
-         AS t(ord, column_name)
-         ORDER BY ord""",
-
-    // S2: M2 dropped (adult genre), M3 dropped (no directors), M5 dropped
-    // (blank English title); M4's null title/date survive as NULLs
-    "q_source_movie_list" ->
-      """SELECT * FROM (VALUES
-           ('M1', '큰 위젯', 'Big Widget', '2023', '2023-01-05', '드라마',
-            '["Kim"]', '[{"company_cd":"C1","company_nm":"Acme"}]'),
-           ('M4', '무영문', CAST(NULL AS VARCHAR), '2024',
-            CAST(NULL AS VARCHAR), '액션', '["Lee"]', '[]'))
-         AS t(movie_cd, movie_nm, movie_nm_en, prdt_year, open_dt,
-              rep_genre_nm, directors, companys)
-         ORDER BY movie_cd""",
-
-    "q_source_v2_pages" ->
-      """SELECT * FROM (VALUES
-           ('V1', '브이 하나', 'Vee One', '20240101', '드라마',
-            '["Kim"]', '[{"company_cd":"C1","company_nm":"Acme"}]'),
-           ('V2', '브이 둘', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-            CAST(NULL AS VARCHAR), '[]', '[]'),
-           ('V3', 'Vee Three', 'V3 En', '20240215', '액션',
-            '["Lee","Park"]', '[]'),
-           ('V4', '공백', '  ', '', '액션', '[]', '[]'),
-           ('V5', '다섯', 'Five', '20240501', '드라마',
-            '["최감독"]', '[]'))
-         AS t(movie_cd, movie_nm, movie_nm_en, open_dt, rep_genre_nm,
-              directors, companys)
-         ORDER BY movie_cd""",
-
-    // the pushed `target_dt >= 2024-01-02` drops the whole 2024-01-01
-    // file at planning time; D5's non-numeric audiCnt coerces to 0
-    "q_source_v2_daily" ->
-      """SELECT * FROM (VALUES
-           ('2024-01-02', 'D3', '셋', '1', CAST(80 AS BIGINT)),
-           ('2024-01-03', 'D4', '넷', '1', CAST(70 AS BIGINT)),
-           ('2024-01-03', 'D5', 'bad', '2', CAST(0 AS BIGINT)))
-         AS t(target_dt, movie_cd, movie_nm, "rank", audi_cnt)
-         ORDER BY target_dt, "rank"""",
-
-    // the stream drains ALL three day files (no pushed filter); D5's
-    // non-numeric audiCnt coerces to 0 exactly as in the batch tier
-    "q_source_v2_daily_stream" ->
-      """SELECT * FROM (VALUES
-           ('2024-01-01', 'D1', '하나', '1', CAST(100 AS BIGINT)),
-           ('2024-01-01', 'D2', '둘', '2', CAST(90 AS BIGINT)),
-           ('2024-01-02', 'D3', '셋', '1', CAST(80 AS BIGINT)),
-           ('2024-01-03', 'D4', '넷', '1', CAST(70 AS BIGINT)),
-           ('2024-01-03', 'D5', 'bad', '2', CAST(0 AS BIGINT)))
-         AS t(target_dt, movie_cd, movie_nm, "rank", audi_cnt)
-         ORDER BY target_dt, "rank"""",
-
-    "q_j6_fuzzy_title_phased" ->
-      """WITH q(title) AS (VALUES ('widget <collector event>'),
-                                  ('rod [premiere]'), ('gizmo <limited>'),
-                                  ('totally unknown title'), ('[2024] <fan event> !!')),
-              rec(movie_nm) AS (VALUES ('large widget'), ('old rod'), ('blue anvil')),
-              n AS (SELECT title,
-                           trim(regexp_replace(regexp_replace(regexp_replace(title,
-                                '[<\[].*?[>\]]', ' ', 'g'),
-                                '[^가-힣a-zA-Z0-9\s]', '', 'g'),
-                                '\s+', ' ', 'g')) AS qn
-                    FROM q),
-              nq AS (SELECT title, qn,
-                            replace(replace(replace(qn, ' ', ''), ':', ''), '_', '') AS qc
-                     FROM n),
-              cat AS (SELECT DISTINCT p_name AS cand FROM part),
-              tagged AS (SELECT cand, 1 AS phase FROM (SELECT DISTINCT movie_nm AS cand FROM rec)
-                         UNION ALL SELECT cand, 2 FROM cat
-                         UNION ALL SELECT cand, 3 FROM cat),
-              c AS (SELECT cand, phase,
-                           replace(replace(replace(cand, ' ', ''), ':', ''), '_', '') AS cc
-                    FROM tagged
-                    WHERE length(replace(replace(replace(cand, ' ', ''), ':', ''), '_', '')) > 0),
-              j AS (SELECT nq.title, nq.qn, nq.qc, c.cand, c.phase, c.cc
-                    FROM nq LEFT JOIN c
-                      ON (c.phase <= 2 AND length(nq.qc) > 0 AND contains(c.cc, nq.qc))
-                      OR (c.phase = 3 AND length(nq.qn) > 0 AND contains(c.cand, nq.qn))),
-              r AS (SELECT title, qn, cand,
-                           ROW_NUMBER() OVER (PARTITION BY title ORDER BY phase,
-                             CASE WHEN phase <= 2 THEN length(cc) - length(qc)
-                                  ELSE length(cand) END,
-                             length(cand), cand) AS rn
-                    FROM j)
-         SELECT title, CASE WHEN length(qn) = 0 THEN ''
-                            ELSE COALESCE(cand, qn) END AS matched
-         FROM r WHERE rn = 1 ORDER BY title""",
-
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey, CAST(o_orderdate AS DATE) AS o_date, o_orderpriority,
-                CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-         FROM customer
-         JOIN orders ON c_custkey = o_custkey
-         JOIN lineitem ON o_orderkey = l_orderkey
-         WHERE c_mktsegment = 'BUILDING'
-           AND CAST(o_orderdate AS DATE) < DATE '1998-01-01'
-           AND CAST(l_shipdate AS DATE) > DATE '1998-01-01'
-         GROUP BY l_orderkey, o_date, o_orderpriority
-         ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-
-    "q5_local_supplier_volume" ->
-      """SELECT n_name,
-                CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-         FROM customer
-         JOIN orders ON c_custkey = o_custkey
-         JOIN lineitem ON o_orderkey = l_orderkey
-         JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-         JOIN nation ON s_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         WHERE r_name = 'ASIA'
-           AND CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
-           AND CAST(o_orderdate AS DATE) < DATE '1998-01-01'
-         GROUP BY n_name ORDER BY revenue DESC, n_name""",
-
-    "q9_product_type_profit" ->
-      """SELECT n_name AS nation, year(o_orderdate) AS o_year,
-                CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                              - 0.1 * p_retailprice * l_quantity
-                         AS DECIMAL(38,6))) AS DOUBLE) AS profit
-         FROM lineitem
-         JOIN part ON l_partkey = p_partkey
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation ON s_nationkey = n_nationkey
-         JOIN orders ON l_orderkey = o_orderkey
-         WHERE p_name LIKE '%bolt%'
-         GROUP BY 1, 2 ORDER BY nation, o_year DESC""",
-
-    "q18_large_volume" ->
-      """SELECT c_name, c_custkey, o_orderkey,
-                strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate, o_totalprice,
-                CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty
-         FROM customer
-         JOIN orders ON c_custkey = o_custkey
-         JOIN lineitem ON o_orderkey = l_orderkey
-         WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
-                              GROUP BY l_orderkey
-                              HAVING SUM(CAST(l_quantity AS DECIMAL(38,6))) > 150)
-         GROUP BY 1, 2, 3, 4, 5
-         ORDER BY o_totalprice DESC, o_orderkey
-         LIMIT 100""",
-
-    "q21_waiting_supplier" ->
-      """SELECT s_name, COUNT(*) AS numwait
-         FROM lineitem l1
-         JOIN orders ON o_orderkey = l1.l_orderkey AND o_orderstatus = 'F'
-         JOIN supplier ON s_suppkey = l1.l_suppkey
-         WHERE EXISTS (SELECT 1 FROM lineitem l2
-                       WHERE l2.l_orderkey = l1.l_orderkey
-                         AND l2.l_suppkey <> l1.l_suppkey)
-           AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                           WHERE l3.l_orderkey = l1.l_orderkey
-                             AND l3.l_suppkey <> l1.l_suppkey
-                             AND l3.l_shipdate > l1.l_shipdate)
-         GROUP BY s_name
-         ORDER BY numwait DESC, s_name
-         LIMIT 20""",
-
-    "q_f2_json_props" ->
-      """SELECT event_type, COUNT(*) AS n,
-                CAST(SUM(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
-                MAX(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS max_k,
-                MIN(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS min_k
-         FROM events GROUP BY event_type ORDER BY event_type""",
-
-    "q_a2_freshness" ->
-      """SELECT MAX(epoch_us(ts)) AS max_ts_us, MIN(epoch_us(ts)) AS min_ts_us,
-                COUNT(*) AS n_events FROM events""",
-
-    "q_f_scalar_suite" ->
-      """SELECT strftime(o_orderdate, '%Y-%m') AS month,
-                year(o_orderdate) AS yr,
-                CAST(regexp_extract(o_orderpriority, '^(\d)-', 1) AS INTEGER) AS pri_num,
-                lower(trim(regexp_extract(o_orderpriority, '^\d-(.+)$', 1))) AS pri_label,
-                COUNT(*) AS n,
-                CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total_price
-         FROM orders
-         GROUP BY month, yr, pri_num, pri_label
-         ORDER BY month, pri_num""",
-
-    "q_skew_salted_sum" ->
-      """SELECT l_returnflag,
-                CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS total,
-                CAST(COUNT(*) AS BIGINT) AS n
-         FROM lineitem GROUP BY 1 ORDER BY l_returnflag""",
-
-    "q_skew_join_aqe" ->
-      """WITH dim(event_type, tier) AS (VALUES
-              ('click', 'engagement'), ('view', 'engagement'),
-              ('purchase', 'revenue'), ('signup', 'growth'),
-              ('error', 'ops'))
-         SELECT tier, COUNT(*) AS n,
-                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
-         FROM events JOIN dim USING (event_type)
-         GROUP BY tier ORDER BY tier""",
-
-    "q_p6_multi_filter" ->
-      """SELECT doc_id, lang, source, n_chars FROM documents
-         WHERE lang IS NOT NULL AND lang <> '' AND n_chars > 200
-           AND contains(text, 'spark')
-         ORDER BY doc_id""",
-
-    "q_text_tokens" ->
-      """WITH t AS (SELECT doc_id, text,
-                           list_filter(string_split(text, ' '), x -> x <> '') AS tk
-                    FROM documents)
-         SELECT doc_id, CAST(len(tk) AS INTEGER) AS n_tokens,
-                CAST(len(list_distinct(tk)) AS INTEGER) AS n_unique,
-                CASE WHEN len(tk) > 0
-                     THEN CAST(len(list_distinct(tk)) AS DOUBLE)
-                          / CAST(len(tk) AS DOUBLE) END AS ttr,
-                CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS INTEGER) AS n_tokens_re
-         FROM t ORDER BY doc_id""",
-
-    "q_drift_report" -> DriftOracle,
-
-    // streaming dual: the SAME oracle text (batch aggregation vs
-    // complete-mode incremental count maintenance must agree exactly)
-    "q_stream_drift" -> DriftOracle,
-
-    "q_drift_numeric" ->
-      """WITH ref AS (SELECT o_totalprice AS v FROM orders WHERE o_orderkey % 2 = 0),
-              cur AS (SELECT o_totalprice + 20000.0 AS v FROM orders
-                      WHERE o_orderkey % 2 = 1),
-              e AS (SELECT list_transform(
-                             quantile_cont(v, [0.125, 0.25, 0.375, 0.5,
-                                               0.625, 0.75, 0.875]),
-                             x -> round(x, 6)) AS edges FROM ref),
-              rb AS (SELECT CAST(len(list_filter(e.edges, x -> rf.v > x)) AS INTEGER) AS bin
-                     FROM ref rf, e),
-              cb AS (SELECT CAST(len(list_filter(e.edges, x -> cu.v > x)) AS INTEGER) AS bin
-                     FROM cur cu, e),
-              rc AS (SELECT bin, COUNT(*) AS n FROM rb GROUP BY 1),
-              cc AS (SELECT bin, COUNT(*) AS n FROM cb GROUP BY 1),
-              rt AS (SELECT SUM(n) AS t FROM rc),
-              ct AS (SELECT SUM(n) AS t FROM cc),
-              j AS (SELECT COALESCE(rc.bin, cc.bin) AS bin,
-                           COALESCE(rc.n, 0) AS ref_cnt,
-                           COALESCE(cc.n, 0) AS cur_cnt,
-                           COALESCE(CAST(rc.n AS DOUBLE) / rt.t, 0) AS p,
-                           COALESCE(CAST(cc.n AS DOUBLE) / ct.t, 0) AS q,
-                           GREATEST(COALESCE(CAST(rc.n AS DOUBLE) / rt.t, 0), 1e-6) AS ps,
-                           GREATEST(COALESCE(CAST(cc.n AS DOUBLE) / ct.t, 0), 1e-6) AS qs
-                    FROM rc FULL OUTER JOIN cc ON rc.bin = cc.bin, rt, ct)
-         SELECT bin, ref_cnt, cur_cnt,
-                round(p, 6) AS ref_frac, round(q, 6) AS cur_frac,
-                round(qs - ps, 6) AS frac_diff,
-                round((qs - ps) * ln(qs / ps), 6) AS psi_term
-         FROM j ORDER BY bin""",
-
-    // same PSI arithmetic as q_drift_numeric, but the edge CTEs
-    // recompute the decimal-DDSketch (quantileSketchOracle's text,
-    // ungrouped) instead of quantile_cont — the sketch edges are
-    // engine-portable, so even the APPROXIMATE drift path hash-checks
-    "q_drift_numeric_sketch" ->
-      """WITH ref AS (SELECT o_totalprice AS v FROM orders WHERE o_orderkey % 2 = 0),
-              cur AS (SELECT o_totalprice + 20000.0 AS v FROM orders
-                      WHERE o_orderkey % 2 = 1),
-              vals AS (SELECT CAST(CAST(CAST(CAST(v AS DOUBLE) AS VARCHAR) AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS m
-                       FROM ref WHERE v IS NOT NULL AND isfinite(CAST(v AS DOUBLE))),
-              bk AS (SELECT CASE WHEN m > 0 THEN 1 WHEN m < 0 THEN -1 ELSE 0 END AS s,
-                            CASE WHEN m = 0 THEN 0 ELSE LENGTH(CAST(ABS(m) AS VARCHAR)) - 1 END AS e,
-                            CASE WHEN m = 0 THEN 0 ELSE CAST(SUBSTRING(CAST(ABS(m) AS VARCHAR), 1, 2) AS INT) END AS d
-                     FROM vals),
-              sk AS (SELECT s, e, d,
-                            CASE WHEN s = 0 THEN CAST(0 AS BIGINT) ELSE CAST(RPAD(CAST(d AS VARCHAR), CAST(e + 1 AS INT), '0') AS BIGINT) END AS lo,
-                            CASE WHEN s = 0 THEN CAST(0 AS BIGINT) ELSE CAST(RPAD('1', CAST(GREATEST(e, 1) AS INT), '0') AS BIGINT) END AS w,
-                            COUNT(*) AS cnt
-                     FROM bk GROUP BY 1, 2, 3, 4, 5),
-              fr AS (SELECT CAST(f AS DOUBLE) AS q FROM (VALUES (0.125), (0.25), (0.375),
-                       (0.5), (0.625), (0.75), (0.875)) t(f)),
-              cw AS (SELECT q, s, lo, w,
-                            CAST(SUM(cnt) OVER (PARTITION BY q ORDER BY s * lo
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-                            CAST(SUM(cnt) OVER (PARTITION BY q) AS BIGINT) AS n_rows
-                     FROM sk CROSS JOIN fr),
-              pk AS (SELECT q, s, lo, w, n_rows,
-                            ROW_NUMBER() OVER (PARTITION BY q ORDER BY s * lo) AS rn
-                     FROM cw WHERE cum >= CEIL(q * CAST(n_rows AS DOUBLE))),
-              est AS (SELECT q, CAST(s * (2 * lo + w) AS DOUBLE) / 2000000.0 AS est
-                      FROM pk WHERE rn = 1),
-              e AS (SELECT list_sort(list(est)) AS edges FROM est),
-              rb AS (SELECT CAST(len(list_filter(e.edges, x -> rf.v > x)) AS INTEGER) AS bin
-                     FROM ref rf, e),
-              cb AS (SELECT CAST(len(list_filter(e.edges, x -> cu.v > x)) AS INTEGER) AS bin
-                     FROM cur cu, e),
-              rc AS (SELECT bin, COUNT(*) AS n FROM rb GROUP BY 1),
-              cc AS (SELECT bin, COUNT(*) AS n FROM cb GROUP BY 1),
-              rt AS (SELECT SUM(n) AS t FROM rc),
-              ct AS (SELECT SUM(n) AS t FROM cc),
-              j AS (SELECT COALESCE(rc.bin, cc.bin) AS bin,
-                           COALESCE(rc.n, 0) AS ref_cnt,
-                           COALESCE(cc.n, 0) AS cur_cnt,
-                           COALESCE(CAST(rc.n AS DOUBLE) / rt.t, 0) AS p,
-                           COALESCE(CAST(cc.n AS DOUBLE) / ct.t, 0) AS q,
-                           GREATEST(COALESCE(CAST(rc.n AS DOUBLE) / rt.t, 0), 1e-6) AS ps,
-                           GREATEST(COALESCE(CAST(cc.n AS DOUBLE) / ct.t, 0), 1e-6) AS qs
-                    FROM rc FULL OUTER JOIN cc ON rc.bin = cc.bin, rt, ct)
-         SELECT bin, ref_cnt, cur_cnt,
-                round(p, 6) AS ref_frac, round(q, 6) AS cur_frac,
-                round(qs - ps, 6) AS frac_diff,
-                round((qs - ps) * ln(qs / ps), 6) AS psi_term
-         FROM j ORDER BY bin""",
-
-    "q_source_jsonl_quarantine" ->
-      """SELECT * FROM (VALUES
-           (CAST(1 AS BIGINT), 'alpha beta', 'en', CAST(2 AS BIGINT)),
-           (2, 'gamma', 'de', 2),
-           (3, 'no lang', CAST(NULL AS VARCHAR), 2))
-         AS t(doc_id, text, lang, n_quarantined)
-         ORDER BY doc_id""",
-
-    // the exact form the sketch+verify must equal: plain GROUP BY with
-    // the n/(k+1) threshold, k = 41 counters' worth of guarantee
-    "q_text_heavy_hitters" -> HeavyHittersOracle,
-
-    // streaming dual: same oracle text — the guarantee holds under any
-    // merge order, so the incrementally maintained sketch verifies to
-    // the identical exact answer
-    "q_stream_heavy_hitters" -> HeavyHittersOracle,
-
-    "q_text_heavy_hitters_by_lang" ->
-      """WITH tok AS (SELECT lang,
-                             unnest(list_filter(string_split(text, ' '),
-                                                x -> x <> '')) AS token
-                      FROM documents),
-              tot AS (SELECT lang, COUNT(*) AS n FROM tok GROUP BY lang),
-              c AS (SELECT lang, token, COUNT(*) AS cnt
-                    FROM tok GROUP BY lang, token)
-         SELECT c.lang, c.token, c.cnt
-         FROM c JOIN tot ON c.lang = tot.lang
-         WHERE c.cnt * 41 > tot.n
-         ORDER BY c.lang, c.cnt DESC, c.token""",
-
-    "q_text_quality" ->
-      """WITH t AS (SELECT doc_id, text,
-                           list_filter(string_split(text, ' '), x -> x <> '') AS tk
-                    FROM documents),
-              s AS (SELECT doc_id, CAST(len(tk) AS INTEGER) AS n_tokens,
-                           CAST(length(replace(text, ' ', '')) AS DOUBLE)
-                             / CAST(len(tk) AS DOUBLE) AS avg_token_len,
-                           CAST(len(list_filter(tk, x -> x IN ('the','a','is','and','of','to','in'))) AS DOUBLE)
-                             / CAST(len(tk) AS DOUBLE) AS stop_ratio
-                    FROM t)
-         SELECT doc_id, n_tokens, avg_token_len, stop_ratio,
-                greatest(0.0, least(1.0,
-                  stop_ratio * 0.3
-                  + least(1.0, CAST(n_tokens AS DOUBLE) / 100.0) * 0.4
-                  + least(1.0, avg_token_len / 8.0) * 0.3)) AS quality_score
-         FROM s ORDER BY doc_id""",
-
-    "q_text_langid" ->
-      """WITH t AS (SELECT doc_id, lang,
-                           list_filter(string_split(text, ' '), x -> x <> '') AS tk
-                    FROM documents),
-              h AS (SELECT doc_id, lang,
-                           CAST(len(list_filter(tk, x -> x IN ('the','a','is','and','of'))) AS INTEGER) AS en_hits,
-                           CAST(len(list_filter(tk, x -> x IN ('el','la','de','que','y'))) AS INTEGER) AS es_hits,
-                           CAST(len(list_filter(tk, x -> x IN ('le','les','des','et','une'))) AS INTEGER) AS fr_hits,
-                           CAST(len(list_filter(tk, x -> x IN ('der','die','und','das','ist'))) AS INTEGER) AS de_hits
-                    FROM t)
-         SELECT doc_id, lang,
-                CASE WHEN en_hits >= es_hits AND en_hits >= fr_hits
-                      AND en_hits >= de_hits AND en_hits > 0 THEN 'en'
-                     WHEN es_hits >= fr_hits AND es_hits >= de_hits
-                      AND es_hits > 0 THEN 'es'
-                     WHEN fr_hits >= de_hits AND fr_hits > 0 THEN 'fr'
-                     WHEN de_hits > 0 THEN 'de'
-                     ELSE 'und' END AS detected,
-                en_hits, es_hits, fr_hits, de_hits
-         FROM h ORDER BY doc_id""",
-
-    "q_text_fingerprint" ->
-      """SELECT doc_id,
-                md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fingerprint,
-                COUNT(*) OVER (PARTITION BY md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))) AS n_same
-         FROM documents ORDER BY doc_id""",
-
-    "q_text_simhash" ->
-      """WITH toks AS (SELECT doc_id,
-                              unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
-                       FROM documents),
-              js AS (SELECT unnest(generate_series(0, 63)) AS j),
-              bits AS (SELECT doc_id, j,
-                              ((strpos('0123456789abcdef', substring(md5(tok), 1 + (j // 4), 1)) - 1)
-                               >> (3 - (j % 4))) % 2 AS bit
-                       FROM toks CROSS JOIN js),
-              bal AS (SELECT doc_id, j, SUM(bit * 2 - 1) AS bal FROM bits GROUP BY 1, 2),
-              sb AS (SELECT doc_id, j, CASE WHEN bal >= 0 THEN '1' ELSE '0' END AS b FROM bal)
-         SELECT doc_id, string_agg(b, '' ORDER BY j) AS simhash
-         FROM sb GROUP BY doc_id ORDER BY doc_id""",
-
-    "q_dedup_exact" ->
-      """SELECT md5(text) AS content_hash, MIN(doc_id) AS kept_id, COUNT(*) AS n_copies
-         FROM documents GROUP BY 1 ORDER BY content_hash""",
-
-    "q_dedup_ngram_jaccard" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-                       FROM documents),
-              ser AS (SELECT unnest(generate_series(1, (SELECT COALESCE(MAX(len(t)), 1) FROM toks))) AS i),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+4], ' ') AS s
-                     FROM toks JOIN ser ON i <= len(t) - 4),
-              cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared
-                    FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2)
-         SELECT id_a, id_b, shared,
-                CAST(shared AS DOUBLE) / CAST(ca.n + cb.n - shared AS DOUBLE) AS jaccard
-         FROM p JOIN cnt ca ON ca.doc_id = id_a JOIN cnt cb ON cb.doc_id = id_b
-         WHERE CAST(shared AS DOUBLE) / CAST(ca.n + cb.n - shared AS DOUBLE) >= 0.8
-         ORDER BY id_a, id_b""",
-
-    // capped universe: shingles with df > 2 are dropped BEFORE the pair
-    // join, and per-doc counts are recomputed over the survivors — the
-    // engine's maxShingleDf semantics, mirrored term for term
-    "q_dedup_jaccard_capped" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-                       FROM documents),
-              ser AS (SELECT unnest(generate_series(1, (SELECT COALESCE(MAX(len(t)), 1) FROM toks))) AS i),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+4], ' ') AS s
-                     FROM toks JOIN ser ON i <= len(t) - 4),
-              hot AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) > 2),
-              u AS (SELECT sh.doc_id, sh.s FROM sh ANTI JOIN hot USING (s)),
-              cnt AS (SELECT doc_id, COUNT(*) AS n FROM u GROUP BY doc_id),
-              p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared
-                    FROM u a JOIN u b ON a.s = b.s AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2)
-         SELECT id_a, id_b, shared,
-                CAST(shared AS DOUBLE) / CAST(ca.n + cb.n - shared AS DOUBLE) AS jaccard
-         FROM p JOIN cnt ca ON ca.doc_id = id_a JOIN cnt cb ON cb.doc_id = id_b
-         WHERE CAST(shared AS DOUBLE) / CAST(ca.n + cb.n - shared AS DOUBLE) >= 0.2
-         ORDER BY id_a, id_b""",
-
-    "q_dedup_containment" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-                       FROM documents),
-              ser AS (SELECT unnest(generate_series(1, (SELECT COALESCE(MAX(len(t)), 1) FROM toks))) AS i),
-              sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+4], ' ') AS s
-                     FROM toks JOIN ser ON i <= len(t) - 4),
-              cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared
-                    FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2)
-         SELECT id_a, id_b, ca.n AS n_a, cb.n AS n_b, shared,
-                CAST(shared AS DOUBLE) / CAST(least(ca.n, cb.n) AS DOUBLE) AS containment
-         FROM p JOIN cnt ca ON ca.doc_id = id_a JOIN cnt cb ON cb.doc_id = id_b
-         WHERE CAST(shared AS DOUBLE) / CAST(least(ca.n, cb.n) AS DOUBLE) >= 0.9
-         ORDER BY id_a, id_b""",
-
-    "q_dedup_top_grams" ->
-      """WITH docs AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-                       FROM documents),
-              pos AS (SELECT doc_id, unnest(range(1, len(ts) - 2))::BIGINT AS p0, ts FROM docs),
-              g AS (SELECT doc_id, array_to_string(ts[p0:p0+3], ' ') AS gram FROM pos)
-         SELECT gram, COUNT(*) AS n_occurrences, COUNT(DISTINCT doc_id) AS n_docs
-         FROM g GROUP BY gram ORDER BY n_occurrences DESC, gram LIMIT 20""",
-
-    "q_text_novelty" ->
-      """WITH docs AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-                       FROM documents),
-              pos AS (SELECT doc_id, unnest(range(1, len(ts) - 2))::BIGINT AS p0, ts FROM docs),
-              g AS (SELECT doc_id, array_to_string(ts[p0:p0+3], ' ') AS gram FROM pos),
-              dg AS (SELECT DISTINCT doc_id, gram FROM g),
-              f AS (SELECT gram, COUNT(*) AS n_docs FROM dg GROUP BY gram)
-         SELECT dg.doc_id, COUNT(*) AS n_grams,
-                CAST(SUM(CASE WHEN n_docs = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-                CAST(SUM(CASE WHEN n_docs = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                  / COUNT(*) AS novelty
-         FROM dg JOIN f USING (gram) GROUP BY dg.doc_id ORDER BY doc_id""",
-
-    "q_text_inverted_index" ->
-      """WITH tk AS (SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS term
-                     FROM documents),
-              td AS (SELECT DISTINCT term, doc_id FROM tk)
-         SELECT term, COUNT(*) AS df,
-                string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
-         FROM td GROUP BY term ORDER BY term""",
-
-    "q_dedup_spans" ->
-      """WITH docs AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-                       FROM documents),
-              pos AS (SELECT doc_id, unnest(range(1, len(ts) - 2))::BIGINT AS p0, ts FROM docs),
-              g AS (SELECT doc_id, p0, array_to_string(ts[p0:p0+3], ' ') AS s FROM pos),
-              dup AS (SELECT s FROM g GROUP BY s HAVING COUNT(*) >= 2),
-              cov AS (SELECT DISTINCT g.doc_id, g.p0 + r.range AS p
-                      FROM g JOIN dup USING (s) CROSS JOIN range(0, 4) r),
-              runs AS (SELECT doc_id, p,
-                              p - row_number() OVER (PARTITION BY doc_id ORDER BY p) AS grp
-                       FROM cov)
-         SELECT doc_id, MIN(p) AS span_start, MAX(p) AS span_end, COUNT(*) AS span_len
-         FROM runs GROUP BY doc_id, grp ORDER BY doc_id, span_start""",
-
-    "q_dedup_span_removal" ->
-      """WITH docs AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-                       FROM documents),
-              pos AS (SELECT doc_id, unnest(range(1, len(ts) - 2))::BIGINT AS p0, ts FROM docs),
-              g AS (SELECT doc_id, p0, array_to_string(ts[p0:p0+3], ' ') AS s FROM pos),
-              dup AS (SELECT s FROM g GROUP BY s HAVING COUNT(*) >= 2),
-              cov AS (SELECT DISTINCT g.doc_id, g.p0 + r.range AS p
-                      FROM g JOIN dup USING (s) CROSS JOIN range(0, 4) r),
-              toks AS (SELECT doc_id, unnest(ts) AS tok,
-                              generate_subscripts(ts, 1)::BIGINT AS p FROM docs),
-              kept AS (SELECT t.doc_id, t.tok, t.p
-                       FROM toks t LEFT JOIN cov c ON c.doc_id = t.doc_id AND c.p = t.p
-                       WHERE c.p IS NULL),
-              agg AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS clean_text
-                      FROM kept GROUP BY doc_id),
-              nr AS (SELECT doc_id, COUNT(*) AS n_removed FROM cov GROUP BY doc_id)
-         SELECT d.doc_id, COALESCE(a.clean_text, '') AS clean_text,
-                COALESCE(nr.n_removed, 0) AS n_removed
-         FROM docs d LEFT JOIN agg a USING (doc_id) LEFT JOIN nr USING (doc_id)
-         ORDER BY d.doc_id""",
-
-    "q_dedup_simhash_pairs" ->
-      s"""$SimhashCandCte
-         SELECT id_a, id_b, CAST(hamming(sim_a, sim_b) AS INTEGER) AS hamming
-         FROM cand WHERE hamming(sim_a, sim_b) <= 8
-         ORDER BY id_a, id_b""",
-
-    "q_dedup_simhash_capped" ->
-      s"""${simhashCandCte(Some(12L))}
-         SELECT id_a, id_b, CAST(hamming(sim_a, sim_b) AS INTEGER) AS hamming
-         FROM cand WHERE hamming(sim_a, sim_b) <= 8
-         ORDER BY id_a, id_b""",
-
-    "q_dedup_clusters" -> ClustersOracle,
-
-    // incremental maintenance must converge to the SAME labels as the
-    // full recompute — one oracle text serves both
-    "q_dedup_clusters_incremental" -> ClustersOracle,
-
-    "q_funnel_stages" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tu FROM events),
-              s1 AS (SELECT user_id, MIN(tu) AS t1 FROM e
-                     WHERE event_type = 'view' GROUP BY 1),
-              s2 AS (SELECT e.user_id, MIN(tu) AS t2 FROM e JOIN s1 USING (user_id)
-                     WHERE event_type = 'click' AND tu > t1 GROUP BY 1),
-              s3 AS (SELECT e.user_id, MIN(tu) AS t3 FROM e JOIN s2 USING (user_id)
-                     WHERE event_type = 'purchase' AND tu > t2 GROUP BY 1)
-         SELECT s1.user_id, t1 AS t_view_us, t2 AS t_click_us, t3 AS t_purchase_us
-         FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
-         ORDER BY user_id""",
-
-    "q_retention_cohorts" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS d FROM events),
-              f AS (SELECT user_id, d, MIN(d) OVER (PARTITION BY user_id) AS first_d FROM e)
-         SELECT first_d AS cohort, d - first_d AS bucket_offset,
-                COUNT(DISTINCT user_id) AS n_users
-         FROM f GROUP BY 1, 2 ORDER BY cohort, bucket_offset""",
-
-    "q_sessionize" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, value FROM events),
-              l AS (SELECT *, LAG(ts_us) OVER (PARTITION BY user_id
-                      ORDER BY ts_us, event_id) AS prev FROM ev),
-              b AS (SELECT *, CASE WHEN prev IS NULL OR ts_us - prev > 14400000000
-                                   THEN 1 ELSE 0 END AS brk FROM l),
-              sid AS (SELECT *, CAST(SUM(brk) OVER (PARTITION BY user_id
-                        ORDER BY ts_us, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-                        AS session_id FROM b)
-         SELECT user_id, session_id, COUNT(*) AS n_events,
-                MIN(ts_us) AS start_us, MAX(ts_us) AS end_us,
-                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
-         FROM sid GROUP BY user_id, session_id ORDER BY user_id, session_id""",
-
-    // streaming agreement oracles: each states the BATCH semantics the
-    // drained streaming run must reproduce exactly
-    "q_stream_dedup_firstseen" ->
-      """SELECT DISTINCT md5(text) AS content_hash FROM documents
-         ORDER BY content_hash""",
-
-    // session_window merges events whose gap is STRICTLY under 4h
-    // (windows [t, t+gap) that merely touch do not overlap), so the
-    // batch break condition is >= gap; end = last event + gap
-    "q_stream_sessionize" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS ts_us, value FROM events),
-              l AS (SELECT *, LAG(ts_us) OVER (PARTITION BY user_id
-                      ORDER BY ts_us) AS prev FROM ev),
-              b AS (SELECT *, CASE WHEN prev IS NULL OR ts_us - prev >= 14400000000
-                                   THEN 1 ELSE 0 END AS brk FROM l),
-              sid AS (SELECT *, CAST(SUM(brk) OVER (PARTITION BY user_id
-                        ORDER BY ts_us
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-                        AS session_id FROM b)
-         SELECT user_id, MIN(ts_us) AS session_start_us,
-                MAX(ts_us) + 14400000000 AS session_end_us,
-                COUNT(*) AS n_events,
-                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
-         FROM sid GROUP BY user_id, session_id
-         ORDER BY user_id, session_start_us""",
-
-    "q_stream_interval_join" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id, event_type
-                    FROM events)
-         SELECT l.user_id, l.us AS ts_us, l.event_id,
-                r.us AS ts_r_us, r.event_id AS event_id_r
-         FROM e l JOIN e r ON l.user_id = r.user_id
-           AND l.event_type = 'click' AND r.event_type = 'purchase'
-           AND r.us >= l.us AND r.us <= l.us + 3600000000
-         ORDER BY 1, 2, 3, 4, 5""",
-
-    // Spark's window(ts, '1 hour') starts are epoch-aligned hour floors —
-    // integer division of the micros timestamp in any engine
-    "q_stream_windowed_counts" ->
-      """SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS window_start_us,
-                event_type, COUNT(*) AS n_events,
-                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    // stream-static join enrichment: final state = the batch join+agg
-    "q_stream_static_enrich" ->
-      """SELECT c_mktsegment, event_type, COUNT(*) AS n_events,
-                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
-         FROM events e JOIN customer c ON e.user_id = c.c_custkey
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    // sequential funnel, strictly-after stage times, unpivoted: stage i
-    // is the MIN event time of its type strictly after stage i-1's time
-    "q_stream_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-              s1 AS (SELECT user_id, MIN(us) AS t FROM e
-                     WHERE event_type = 'view' GROUP BY 1),
-              s2 AS (SELECT e.user_id, MIN(us) AS t FROM e
-                     JOIN s1 USING (user_id)
-                     WHERE event_type = 'click' AND us > s1.t GROUP BY 1),
-              s3 AS (SELECT e.user_id, MIN(us) AS t FROM e
-                     JOIN s2 USING (user_id)
-                     WHERE event_type = 'purchase' AND us > s2.t GROUP BY 1)
-         SELECT user_id, CAST(1 AS BIGINT) AS stage, t AS ts_us FROM s1
-         UNION ALL SELECT user_id, CAST(2 AS BIGINT), t FROM s2
-         UNION ALL SELECT user_id, CAST(3 AS BIGINT), t FROM s3
-         ORDER BY user_id, stage""",
-
-    // ST4 drains state the batch flagship's semantics verbatim — both
-    // providers must reproduce q_w1_latest_per_key exactly
-    "q_stream_latest_per_key" ->
-      """SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us, value
-         FROM (SELECT user_id, event_type, event_id, ts, value,
-                      ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-                                         ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-               FROM events) t
-         WHERE rn = 1 ORDER BY user_id, event_type""",
-
-    "q_stream_latest_rocksdb" ->
-      """SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us, value
-         FROM (SELECT user_id, event_type, event_id, ts, value,
-                      ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-                                         ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-               FROM events) t
-         WHERE rn = 1 ORDER BY user_id, event_type""",
-
-    // the streamed upsert's final store must equal the batch
-    // last-write-wins merge — the q_u1_upsert semantics verbatim
-    "q_stream_upsert" ->
-      """WITH base AS (SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value, props FROM events),
-              fresh AS (SELECT event_id, ts_us, user_id, event_type, value + 1000 AS value,
-                               '{"upd": true}' AS props
-                        FROM base WHERE event_id % 10 < 3),
-              u AS (SELECT *, 1 AS pri FROM fresh UNION ALL SELECT *, 0 AS pri FROM base),
-              r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_id
-                                                 ORDER BY pri DESC, ts_us DESC) AS rn FROM u)
-         SELECT event_id, ts_us, user_id, event_type, value, props
-         FROM r WHERE rn = 1 ORDER BY event_id""",
-
-    // streaming LSH candidates = the batch band-bucket equi-join's
-    // distinct pair set (min, max orientation)
-    "q_stream_neardup" ->
-      s"""$MinhashBkCte
-         SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-         FROM bk a JOIN bk c ON a.b = c.b AND a.key = c.key
-                            AND a.doc_id < c.doc_id
-         ORDER BY id_a, id_b""",
-
-    // the non-TTL pair set MINUS batch1→batch3 pairs whose bucket went
-    // idle past the ttl (no batch-2 member, last batch-1 arrival more
-    // than ttl_sec before batch 1's max event time) — the query-side
-    // comment derives why this is exactly the eviction-visible set.
-    // Constants mirror the Spark side in doc_id units: terciles of
-    // MAX(doc_id), ts = doc_id minutes, ttl = (d1*4/10)*60+30 seconds.
-    "q_stream_neardup_ttl" ->
-      s"""$MinhashBkCte,
-              lim AS (SELECT MAX(doc_id) // 3 AS d1,
-                             (2 * MAX(doc_id)) // 3 AS d2,
-                             ((MAX(doc_id) // 3) * 4 // 10) * 60 + 30 AS ttl_sec
-                      FROM documents),
-              mem AS (SELECT doc_id, b, key,
-                             CASE WHEN doc_id <= (SELECT d1 FROM lim) THEN 1
-                                  WHEN doc_id <= (SELECT d2 FROM lim) THEN 2
-                                  ELSE 3 END AS bat
-                      FROM bk),
-              bu AS (SELECT b, key,
-                            MAX(CASE WHEN bat = 1 THEN doc_id END) AS m1,
-                            SUM(CASE WHEN bat = 2 THEN 1 ELSE 0 END) AS n2
-                     FROM mem GROUP BY b, key),
-              w1 AS (SELECT MAX(doc_id) AS w FROM mem WHERE bat = 1)
-         SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-         FROM mem a JOIN mem c ON a.b = c.b AND a.key = c.key
-                              AND a.doc_id < c.doc_id
-         JOIN bu ON bu.b = a.b AND bu.key = a.key
-         WHERE NOT (a.bat = 1 AND c.bat = 3 AND bu.n2 = 0
-                    AND bu.m1 * 60 + (SELECT ttl_sec FROM lim)
-                        < (SELECT w FROM w1) * 60)
-         ORDER BY id_a, id_b""",
-
-    // batch left-outer range join over the same boundary-clear left set:
-    // matched clicks carry every in-window purchase, unmatched clicks
-    // carry nulls — exactly what the watermark-flushed drain must emit
-    "q_stream_interval_join_outer" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id, event_type
-                    FROM events),
-              l AS (SELECT user_id, us, event_id FROM e
-                    WHERE event_type = 'click'
-                      AND us <= LEAST(
-                            (SELECT MAX(us) FROM e WHERE event_type = 'click'),
-                            (SELECT MAX(us) FROM e WHERE event_type = 'purchase'))
-                          - 7200000000),
-              r AS (SELECT user_id, us, event_id FROM e
-                    WHERE event_type = 'purchase')
-         SELECT l.user_id, l.us AS ts_us, l.event_id,
-                r.us AS ts_r_us, r.event_id AS event_id_r
-         FROM l LEFT JOIN r ON l.user_id = r.user_id
-           AND r.us >= l.us AND r.us <= l.us + 3600000000
-         ORDER BY l.user_id, ts_us, l.event_id, ts_r_us, event_id_r""",
-
-    "q_dedup_minhash_lsh" ->
-      s"""$MinhashBkCte,
-              cand AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-                       FROM bk a JOIN bk c ON a.b = c.b AND a.key = c.key
-                                          AND a.doc_id < c.doc_id),
-              cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              shr AS (SELECT id_a, id_b, COUNT(*) AS shared
-                      FROM cand
-                      JOIN sh sa ON sa.doc_id = id_a
-                      JOIN sh sb ON sb.doc_id = id_b AND sb.s = sa.s
-                      GROUP BY 1, 2)
-         SELECT id_a, id_b,
-                CAST(shared AS DOUBLE) / CAST(ca.n + cb.n - shared AS DOUBLE) AS jaccard
-         FROM shr JOIN cnt ca ON ca.doc_id = id_a JOIN cnt cb ON cb.doc_id = id_b
-         WHERE CAST(shared AS DOUBLE) / CAST(ca.n + cb.n - shared AS DOUBLE) >= 0.5
-         ORDER BY id_a, id_b""",
-
-    // WITH RECURSIVE prefix: harmless for the non-recursive shared CTEs,
-    // required by the reachability CTE (same pattern as SimhashCandCte)
-    "q_dedup_corpus" ->
-      s"""${MinhashBkCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              candAll AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-                          FROM bk a JOIN bk c ON a.b = c.b AND a.key = c.key
-                                             AND a.doc_id < c.doc_id),
-              cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              shr AS (SELECT id_a, id_b, COUNT(*) AS shared
-                      FROM candAll
-                      JOIN sh sa ON sa.doc_id = id_a
-                      JOIN sh sb ON sb.doc_id = id_b AND sb.s = sa.s
-                      GROUP BY 1, 2),
-              pairs AS (SELECT id_a, id_b
-                        FROM shr JOIN cnt ca ON ca.doc_id = id_a
-                                 JOIN cnt cb ON cb.doc_id = id_b
-                        WHERE CAST(shared AS DOUBLE)
-                              / CAST(ca.n + cb.n - shared AS DOUBLE) >= 0.5),
-              nodes AS (SELECT id_a AS id FROM pairs UNION SELECT id_b FROM pairs),
-              edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                        UNION SELECT id_b, id_a FROM pairs),
-              reach AS (SELECT id, id AS comp FROM nodes
-                        UNION
-                        SELECT e.dst AS id, r.comp
-                        FROM reach r JOIN edges e ON e.src = r.id),
-              lab AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id),
-              canon AS (SELECT comp AS doc_id, COUNT(*) AS cluster_size
-                        FROM lab GROUP BY comp),
-              uniq AS (SELECT doc_id, CAST(1 AS BIGINT) AS cluster_size
-                       FROM documents WHERE doc_id NOT IN (SELECT id FROM lab))
-         SELECT doc_id, cluster_size
-         FROM (SELECT * FROM canon UNION ALL SELECT * FROM uniq)
-         ORDER BY doc_id""",
-
-    // same clustering as q_dedup_corpus; the survivor is the per-component
-    // best by (n_chars DESC, id) instead of the min id
-    "q_dedup_corpus_best" ->
-      s"""${MinhashBkCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              candAll AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-                          FROM bk a JOIN bk c ON a.b = c.b AND a.key = c.key
-                                             AND a.doc_id < c.doc_id),
-              cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              shr AS (SELECT id_a, id_b, COUNT(*) AS shared
-                      FROM candAll
-                      JOIN sh sa ON sa.doc_id = id_a
-                      JOIN sh sb ON sb.doc_id = id_b AND sb.s = sa.s
-                      GROUP BY 1, 2),
-              pairs AS (SELECT id_a, id_b
-                        FROM shr JOIN cnt ca ON ca.doc_id = id_a
-                                 JOIN cnt cb ON cb.doc_id = id_b
-                        WHERE CAST(shared AS DOUBLE)
-                              / CAST(ca.n + cb.n - shared AS DOUBLE) >= 0.5),
-              nodes AS (SELECT id_a AS id FROM pairs UNION SELECT id_b FROM pairs),
-              edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                        UNION SELECT id_b, id_a FROM pairs),
-              reach AS (SELECT id, id AS comp FROM nodes
-                        UNION
-                        SELECT g.dst AS id, r.comp
-                        FROM reach r JOIN edges g ON g.src = r.id),
-              lab AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id),
-              sz AS (SELECT comp, COUNT(*) AS cluster_size FROM lab GROUP BY comp),
-              best AS (SELECT id, comp
-                       FROM (SELECT lab.id, lab.comp,
-                                    ROW_NUMBER() OVER (PARTITION BY lab.comp
-                                      ORDER BY d.n_chars DESC, lab.id) AS rn
-                             FROM lab JOIN documents d ON d.doc_id = lab.id) t
-                       WHERE rn = 1),
-              canon AS (SELECT best.id AS doc_id, sz.cluster_size
-                        FROM best JOIN sz ON sz.comp = best.comp),
-              uniq AS (SELECT doc_id, CAST(1 AS BIGINT) AS cluster_size
-                       FROM documents WHERE doc_id NOT IN (SELECT id FROM lab))
-         SELECT doc_id, cluster_size
-         FROM (SELECT * FROM canon UNION ALL SELECT * FROM uniq)
-         ORDER BY doc_id""",
-
-    "q_dedup_incremental" -> IncrementalDedupOracle,
-
-    // same contract as q_dedup_incremental: the stored-table round-trip
-    // must be result-invisible — only the physical serving shape changes
-    "q_dedup_incremental_stored" -> IncrementalDedupOracle,
-
-    // the build half: the written band table must hold exactly the
-    // corpus slice's band keys — per-band row and distinct-key counts
-    // recomputed from text in SQL
-    "q_dedup_index_build" ->
-      s"""$MinhashBkCte
-         SELECT b AS band, COUNT(*) AS n_entries, COUNT(DISTINCT key) AS n_keys
-         FROM bk WHERE doc_id % 5 <> 0
-         GROUP BY b ORDER BY band""",
-
-    "q_sim_cosine_topk" ->
-      """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              e AS (SELECT vec_id, i, CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x
-                    FROM embeddings CROSS JOIN ser WHERE i <= len(embedding)),
-              nrm AS (SELECT vec_id, sqrt(CAST(SUM(x * x) AS DOUBLE)) AS nrm
-                      FROM e GROUP BY vec_id),
-              q AS (SELECT vec_id AS query_id, i, x FROM e WHERE vec_id < 5),
-              dots AS (SELECT q.query_id, c.vec_id AS cand_id, SUM(q.x * c.x) AS dot
-                       FROM q JOIN e c ON q.i = c.i AND q.query_id <> c.vec_id
-                       GROUP BY 1, 2),
-              sc AS (SELECT query_id, cand_id,
-                            round(CAST(dot AS DOUBLE) / (nq.nrm * nc.nrm), 6) AS cos_sim
-                     FROM dots
-                     JOIN nrm nq ON nq.vec_id = query_id
-                     JOIN nrm nc ON nc.vec_id = cand_id),
-              r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS INTEGER) AS rank
-                    FROM sc)
-         SELECT query_id, cand_id, cos_sim, rank
-         FROM r WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "q_sim_hard_negatives" ->
-      """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              e AS (SELECT vec_id, i, CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x
-                    FROM embeddings CROSS JOIN ser WHERE i <= len(embedding)),
-              nrm AS (SELECT vec_id, sqrt(CAST(SUM(x * x) AS DOUBLE)) AS nrm
-                      FROM e GROUP BY vec_id),
-              q AS (SELECT vec_id AS query_id, i, x FROM e WHERE vec_id < 5),
-              lab AS (SELECT vec_id, label FROM embeddings),
-              dots AS (SELECT q.query_id, c.vec_id AS cand_id, SUM(q.x * c.x) AS dot
-                       FROM q JOIN e c ON q.i = c.i AND q.query_id <> c.vec_id
-                       JOIN lab lq ON lq.vec_id = q.query_id
-                       JOIN lab lc ON lc.vec_id = c.vec_id
-                       WHERE lc.label IS DISTINCT FROM lq.label
-                       GROUP BY 1, 2),
-              sc AS (SELECT query_id, cand_id,
-                            round(CAST(dot AS DOUBLE) / (nq.nrm * nc.nrm), 6) AS cos_sim
-                     FROM dots
-                     JOIN nrm nq ON nq.vec_id = query_id
-                     JOIN nrm nc ON nc.vec_id = cand_id),
-              r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS INTEGER) AS rank
-                    FROM sc)
-         SELECT query_id, cand_id, cos_sim, rank
-         FROM r WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "q_sim_hard_negatives_ivf" ->
-      """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              e AS (SELECT vec_id, i, CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x
-                    FROM embeddings CROSS JOIN ser WHERE i <= len(embedding)),
-              nrm AS (SELECT vec_id, sqrt(CAST(SUM(x * x) AS DOUBLE)) AS nrm
-                      FROM e GROUP BY vec_id),
-              adots AS (SELECT v.vec_id, c.vec_id AS centroid_id, SUM(v.x * c.x) AS dot
-                        FROM e v JOIN e c ON c.i = v.i AND c.vec_id < 16
-                        GROUP BY 1, 2),
-              ascored AS (SELECT a.vec_id, a.centroid_id,
-                                 round(CAST(a.dot AS DOUBLE) / (nv.nrm * nc.nrm), 6) AS cs
-                          FROM adots a
-                          JOIN nrm nv ON nv.vec_id = a.vec_id
-                          JOIN nrm nc ON nc.vec_id = a.centroid_id),
-              asg AS (SELECT vec_id, centroid_id
-                      FROM (SELECT vec_id, centroid_id,
-                                   ROW_NUMBER() OVER (PARTITION BY vec_id
-                                     ORDER BY cs DESC, centroid_id) AS rn
-                            FROM ascored) t
-                      WHERE rn = 1),
-              probe AS (SELECT vec_id AS query_id, centroid_id
-                        FROM (SELECT vec_id, centroid_id,
-                                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                       ORDER BY cs DESC, centroid_id) AS rn
-                              FROM ascored WHERE vec_id < 5) t
-                        WHERE rn <= 2),
-              lab AS (SELECT vec_id, label FROM embeddings),
-              cand AS (SELECT DISTINCT p.query_id, a.vec_id AS cand_id
-                       FROM probe p
-                       JOIN asg a ON a.centroid_id = p.centroid_id
-                                 AND a.vec_id <> p.query_id
-                       JOIN lab lq ON lq.vec_id = p.query_id
-                       JOIN lab lc ON lc.vec_id = a.vec_id
-                       WHERE lc.label IS DISTINCT FROM lq.label),
-              dots AS (SELECT cand.query_id, cand.cand_id, SUM(qa.x * qb.x) AS dot
-                       FROM cand
-                       JOIN e qa ON qa.vec_id = cand.query_id
-                       JOIN e qb ON qb.vec_id = cand.cand_id AND qb.i = qa.i
-                       GROUP BY 1, 2),
-              sc AS (SELECT query_id, cand_id,
-                            round(CAST(dot AS DOUBLE) / (nq.nrm * nc2.nrm), 6) AS cos_sim
-                     FROM dots
-                     JOIN nrm nq ON nq.vec_id = query_id
-                     JOIN nrm nc2 ON nc2.vec_id = cand_id),
-              r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS INTEGER) AS rank
-                    FROM sc)
-         SELECT query_id, cand_id, cos_sim, rank
-         FROM r WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "q_sim_pq_adc" ->
-      """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              es AS (SELECT vec_id, i,
-                            CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x,
-                            (i - 1) // 16 AS s
-                     FROM embeddings CROSS JOIN ser WHERE i <= len(embedding)),
-              cent AS (SELECT vec_id AS cid, s, i, x FROM es WHERE vec_id < 4),
-              d2 AS (SELECT v.vec_id, v.s, c.cid,
-                            SUM(CAST(CAST(v.x - c.x AS DECIMAL(18,9))
-                                     * CAST(v.x - c.x AS DECIMAL(18,9))
-                                     AS DECIMAL(38,18))) AS d2
-                     FROM es v JOIN cent c ON v.i = c.i
-                     GROUP BY 1, 2, 3),
-              code AS (SELECT vec_id, s, cid
-                       FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                               ORDER BY d2, cid) AS rn FROM d2)
-                       WHERE rn = 1),
-              adc AS (SELECT q.vec_id AS query_id, cd.vec_id AS cand_id,
-                             SUM(CAST(q.x * c.x AS DECIMAL(38,18))) AS adot
-                      FROM es q
-                      JOIN code cd ON cd.s = q.s
-                      JOIN cent c ON c.cid = cd.cid AND c.s = q.s AND c.i = q.i
-                      WHERE q.vec_id < 5 AND cd.vec_id <> q.vec_id
-                      GROUP BY 1, 2),
-              r AS (SELECT query_id, cand_id,
-                           round(CAST(adot AS DOUBLE), 6) AS approx_dot,
-                           CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                             ORDER BY round(CAST(adot AS DOUBLE), 6) DESC, cand_id)
-                             AS INTEGER) AS rank
-                    FROM adc)
-         SELECT query_id, cand_id, approx_dot, rank
-         FROM r WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "q_sim_ivfpq_adc" ->
-      (IvfPqAdcCoreSql +
-      """
-         SELECT query_id, centroid_id, cand_id, approx_dot, rank
-         FROM r WHERE rank <= 3 ORDER BY query_id, rank"""),
-
-    // the ADC shortlist (rank ≤ 10 from the SAME CTE chain) reranked by
-    // the exact fixed-point cosine — the two-stage retrieval oracle
-    "q_sim_ivfpq_rerank" ->
-      (IvfPqAdcCoreSql + """,
-              rr AS (SELECT query_id, cand_id FROM r WHERE rank <= 10),
-              ex AS (SELECT rr.query_id, rr.cand_id,
-                            round(CAST(SUM(a.x * b.x) AS DOUBLE)
-                                  / (na.nrm * nb.nrm), 6) AS cos_sim
-                     FROM rr
-                     JOIN es a ON a.vec_id = rr.query_id
-                     JOIN es b ON b.vec_id = rr.cand_id AND b.i = a.i
-                     JOIN nrm na ON na.vec_id = rr.query_id
-                     JOIN nrm nb ON nb.vec_id = rr.cand_id
-                     GROUP BY rr.query_id, rr.cand_id, na.nrm, nb.nrm),
-              fin AS (SELECT query_id, cand_id, cos_sim,
-                             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS INTEGER) AS rank
-                      FROM ex)
-         SELECT query_id, cand_id, cos_sim, rank
-         FROM fin WHERE rank <= 3 ORDER BY query_id, rank"""),
-
-    // residual IVFADC: same cell-assignment CTEs as IvfPqAdcCoreSql,
-    // then residual elements, residual codebook (vec_ids 16..19),
-    // argmin-L2 codes over residuals, and score = exact decimal cell
-    // dot + residual ADC — the residual decomposition recomputed
-    "q_sim_ivfpq_residual" ->
-      """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              es AS (SELECT vec_id, i,
-                            CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x,
-                            (i - 1) // 16 AS s
-                     FROM embeddings CROSS JOIN ser WHERE i <= len(embedding)),
-              nrm AS (SELECT vec_id, sqrt(CAST(SUM(x * x) AS DOUBLE)) AS nrm
-                      FROM es GROUP BY vec_id),
-              adots AS (SELECT v.vec_id, c.vec_id AS centroid_id, SUM(v.x * c.x) AS dot
-                        FROM es v JOIN es c ON c.i = v.i AND c.vec_id < 16
-                        GROUP BY 1, 2),
-              asg AS (SELECT vec_id, centroid_id
-                      FROM (SELECT a.vec_id, a.centroid_id,
-                                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                     ORDER BY round(CAST(a.dot AS DOUBLE) / (nv.nrm * nc.nrm), 6) DESC,
-                                              a.centroid_id) AS rn
-                            FROM adots a
-                            JOIN nrm nv ON nv.vec_id = a.vec_id
-                            JOIN nrm nc ON nc.vec_id = a.centroid_id) t
-                      WHERE rn = 1),
-              res AS (SELECT v.vec_id, v.i, v.s,
-                             CAST(v.x - c.x AS DECIMAL(18,9)) AS rx
-                      FROM es v
-                      JOIN asg ON asg.vec_id = v.vec_id
-                      JOIN es c ON c.vec_id = asg.centroid_id AND c.i = v.i),
-              cent AS (SELECT CAST(vec_id - 16 AS INTEGER) AS cid, s, i, rx
-                       FROM res WHERE vec_id >= 16 AND vec_id < 20),
-              d2 AS (SELECT v.vec_id, v.s, c.cid,
-                            SUM(CAST(CAST(v.rx - c.rx AS DECIMAL(18,9))
-                                     * CAST(v.rx - c.rx AS DECIMAL(18,9))
-                                     AS DECIMAL(38,18))) AS d2
-                     FROM res v JOIN cent c ON v.i = c.i
-                     GROUP BY 1, 2, 3),
-              code AS (SELECT vec_id, s, cid
-                       FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                               ORDER BY d2, cid) AS rn FROM d2)
-                       WHERE rn = 1),
-              q AS (SELECT vec_id AS query_id, centroid_id FROM asg WHERE vec_id < 5),
-              cdot AS (SELECT q2.query_id,
-                              SUM(CAST(qe.x * ce.x AS DECIMAL(38,18))) AS cdot
-                       FROM q q2
-                       JOIN es qe ON qe.vec_id = q2.query_id
-                       JOIN es ce ON ce.vec_id = q2.centroid_id AND ce.i = qe.i
-                       GROUP BY 1),
-              cand AS (SELECT q.query_id, a.vec_id AS cand_id, q.centroid_id
-                       FROM q JOIN asg a ON a.centroid_id = q.centroid_id
-                                        AND a.vec_id <> q.query_id),
-              adc AS (SELECT cand.query_id, cand.cand_id,
-                             SUM(CAST(qe.x * c.rx AS DECIMAL(38,18))) AS adot
-                      FROM cand
-                      JOIN es qe ON qe.vec_id = cand.query_id
-                      JOIN code cd ON cd.vec_id = cand.cand_id AND cd.s = qe.s
-                      JOIN cent c ON c.cid = cd.cid AND c.s = qe.s AND c.i = qe.i
-                      GROUP BY 1, 2),
-              r AS (SELECT a.query_id, a.cand_id,
-                           round(CAST(cd.cdot + a.adot AS DOUBLE), 6) AS approx_dot,
-                           CAST(ROW_NUMBER() OVER (PARTITION BY a.query_id
-                             ORDER BY round(CAST(cd.cdot + a.adot AS DOUBLE), 6) DESC,
-                                      a.cand_id) AS INTEGER) AS rank
-                    FROM adc a JOIN cdot cd ON cd.query_id = a.query_id)
-         SELECT query_id, cand_id, approx_dot, rank
-         FROM r WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "q_sim_int8_topk" ->
-      """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              e AS (SELECT vec_id, i, CAST(embedding[i] AS DOUBLE) AS x
-                    FROM embeddings CROSS JOIN ser WHERE i <= len(embedding)),
-              sc AS (SELECT vec_id,
-                            CASE WHEN MAX(abs(x)) > 0 THEN MAX(abs(x)) / 127.0
-                                 ELSE 1.0 END AS scale
-                     FROM e GROUP BY vec_id),
-              c AS (SELECT e.vec_id, i, CAST(round(x / scale) AS BIGINT) AS cd
-                    FROM e JOIN sc ON e.vec_id = sc.vec_id),
-              nrm AS (SELECT vec_id, sqrt(CAST(SUM(cd * cd) AS DOUBLE)) AS nrm
-                      FROM c GROUP BY vec_id),
-              q AS (SELECT vec_id AS query_id, i, cd FROM c WHERE vec_id < 5),
-              dots AS (SELECT q.query_id, t.vec_id AS cand_id, SUM(q.cd * t.cd) AS dot
-                       FROM q JOIN c t ON q.i = t.i AND q.query_id <> t.vec_id
-                       GROUP BY 1, 2),
-              scd AS (SELECT query_id, cand_id,
-                             CASE WHEN nq.nrm * nc.nrm > 0
-                                  THEN round(CAST(dot AS DOUBLE) / (nq.nrm * nc.nrm), 6)
-                                  ELSE 0.0 END AS cos_sim
-                      FROM dots
-                      JOIN nrm nq ON nq.vec_id = query_id
-                      JOIN nrm nc ON nc.vec_id = cand_id),
-              r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS INTEGER) AS rank
-                    FROM scd)
-         SELECT query_id, cand_id, cos_sim, rank
-         FROM r WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "q_sim_ann_lsh" ->
-      """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              pl AS (SELECT unnest(generate_series(0, 7)) AS p),
-              sgn AS (SELECT p, i,
-                             CASE WHEN (strpos('0123456789abcdef',
-                                    substring(md5(CAST(p AS VARCHAR) || '_' || CAST(i - 1 AS VARCHAR)), 1, 1)) - 1) % 2 = 1
-                                  THEN 1 ELSE -1 END AS sgn
-                      FROM pl CROSS JOIN ser),
-              e AS (SELECT vec_id, i, CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x
-                    FROM embeddings CROSS JOIN ser WHERE i <= len(embedding)),
-              proj AS (SELECT vec_id, p, SUM(x * sgn) AS proj
-                       FROM e JOIN sgn ON e.i = sgn.i GROUP BY 1, 2),
-              bucket AS (SELECT vec_id,
-                                string_agg(CASE WHEN proj >= 0 THEN '1' ELSE '0' END, ''
-                                           ORDER BY p) AS bucket
-                         FROM proj GROUP BY vec_id),
-              nrm AS (SELECT vec_id, sqrt(CAST(SUM(x * x) AS DOUBLE)) AS nrm
-                      FROM e GROUP BY vec_id),
-              q AS (SELECT vec_id AS query_id, bucket FROM bucket WHERE vec_id < 5),
-              cand AS (SELECT q.query_id, c.vec_id AS cand_id, q.bucket
-                       FROM q JOIN bucket c ON c.bucket = q.bucket
-                                           AND c.vec_id <> q.query_id),
-              dots AS (SELECT cand.query_id, cand.cand_id, cand.bucket,
-                              SUM(a.x * b.x) AS dot
-                       FROM cand
-                       JOIN e a ON a.vec_id = cand.query_id
-                       JOIN e b ON b.vec_id = cand.cand_id AND b.i = a.i
-                       GROUP BY 1, 2, 3),
-              sc AS (SELECT query_id, bucket, cand_id,
-                            round(CAST(dot AS DOUBLE) / (nq.nrm * nc.nrm), 6) AS cos_sim
-                     FROM dots
-                     JOIN nrm nq ON nq.vec_id = query_id
-                     JOIN nrm nc ON nc.vec_id = cand_id),
-              r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS INTEGER) AS rank
-                    FROM sc)
-         SELECT query_id, bucket, cand_id, cos_sim, rank
-         FROM r WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "q_multimodal_meta" ->
-      """SELECT doc_id, 'image/' || source AS media_type,
-                CAST(octet_length(encode(text)) AS INTEGER) AS n_bytes,
-                md5(text) AS content_hash,
-                CAST(64 + (octet_length(encode(text)) % 32) AS INTEGER) AS width,
-                CAST(64 + ((octet_length(encode(text)) * 7) % 32) AS INTEGER) AS height,
-                1 AS frames
-         FROM documents ORDER BY doc_id""",
-
-    // the synthesis arithmetic the real PNG/WAV round trips must land on
-    "q_multimodal_decode" ->
-      """SELECT doc_id,
-                CAST(16 + doc_id % 32 AS INTEGER) AS width,
-                CAST(16 + (doc_id * 7) % 32 AS INTEGER) AS height,
-                'png' AS format
-         FROM documents ORDER BY doc_id""",
-
-    "q_multimodal_ahash" ->
-      s"""$AHashBandsCte
-         SELECT doc_id, b0, b1, b2, b3 FROM bands ORDER BY doc_id""",
-
-    "q_stream_multimodal_ahash" ->
-      s"""$AHashBandsCte
-         SELECT doc_id, b0, b1, b2, b3 FROM bands ORDER BY doc_id""",
-
-    "q_multimodal_dedup_clusters" ->
-      s"""${AHashBandsCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-                    FROM bands a JOIN bands b
-                      ON a.doc_id < b.doc_id
-                     AND (a.b0 = b.b0 OR a.b1 = b.b1 OR
-                          a.b2 = b.b2 OR a.b3 = b.b3)
-                    WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-                        + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 8),
-              nodes AS (SELECT id_a AS id FROM p UNION SELECT id_b FROM p),
-              edges AS (SELECT id_a AS src, id_b AS dst FROM p
-                        UNION SELECT id_b, id_a FROM p),
-              reach AS (SELECT id, id AS comp FROM nodes
-                        UNION
-                        SELECT e.dst AS id, r.comp
-                        FROM reach r JOIN edges e ON e.src = r.id)
-         SELECT id AS doc_id, MIN(comp) AS cluster_id
-         FROM reach GROUP BY id ORDER BY doc_id""",
-
-    "q_multimodal_image_neardup" ->
-      s"""$AHashBandsCte,
-              pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               CAST(bit_count(xor(a.b0, b.b0))
-                                  + bit_count(xor(a.b1, b.b1))
-                                  + bit_count(xor(a.b2, b.b2))
-                                  + bit_count(xor(a.b3, b.b3)) AS INTEGER) AS dist
-                        FROM bands a JOIN bands b
-                          ON a.doc_id < b.doc_id
-                         AND (a.b0 = b.b0 OR a.b1 = b.b1 OR
-                              a.b2 = b.b2 OR a.b3 = b.b3))
-         SELECT doc_a, doc_b, dist FROM pairs WHERE dist <= 8
-         ORDER BY doc_a, doc_b""",
-
-    // the same derivation under a per-doc_a LIMIT window — the capped
-    // report's oracle shape
-    "q_multimodal_image_neardup_capped" ->
-      s"""$AHashBandsCte,
-              pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               CAST(bit_count(xor(a.b0, b.b0))
-                                  + bit_count(xor(a.b1, b.b1))
-                                  + bit_count(xor(a.b2, b.b2))
-                                  + bit_count(xor(a.b3, b.b3)) AS INTEGER) AS dist
-                        FROM bands a JOIN bands b
-                          ON a.doc_id < b.doc_id
-                         AND (a.b0 = b.b0 OR a.b1 = b.b1 OR
-                              a.b2 = b.b2 OR a.b3 = b.b3)),
-              capped AS (SELECT doc_a, doc_b, dist,
-                                ROW_NUMBER() OVER (PARTITION BY doc_a
-                                  ORDER BY dist, doc_b) AS rn
-                         FROM pairs WHERE dist <= 8)
-         SELECT doc_a, doc_b, dist FROM capped WHERE rn <= 2
-         ORDER BY doc_a, doc_b""",
-
-    "q_multimodal_audio_fp" ->
-      s"""$AudioFpBandsCte
-         SELECT doc_id, b0, b1, b2, b3 FROM bands ORDER BY doc_id""",
-
-    "q_multimodal_audio_neardup" ->
-      s"""$AudioFpBandsCte,
-              pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               CAST(bit_count(xor(a.b0, b.b0))
-                                  + bit_count(xor(a.b1, b.b1))
-                                  + bit_count(xor(a.b2, b.b2))
-                                  + bit_count(xor(a.b3, b.b3)) AS INTEGER) AS dist
-                        FROM bands a JOIN bands b
-                          ON a.doc_id < b.doc_id
-                         AND (a.b0 = b.b0 OR a.b1 = b.b1 OR
-                              a.b2 = b.b2 OR a.b3 = b.b3))
-         SELECT doc_a, doc_b, dist FROM pairs WHERE dist <= 8
-         ORDER BY doc_a, doc_b""",
-
-    "q_multimodal_chunks" ->
-      """WITH d AS (SELECT doc_id, octet_length(encode(text)) // 2 AS total
-                    FROM documents),
-              s AS (SELECT doc_id, total,
-                           unnest(generate_series(0, total - 1, 192)) AS start_sample
-                    FROM d WHERE total > 0),
-              f AS (SELECT doc_id, start_sample, total,
-                           ROW_NUMBER() OVER (PARTITION BY doc_id
-                                              ORDER BY start_sample) - 1 AS chunk_idx
-                    FROM s WHERE start_sample = 0 OR start_sample + 64 < total)
-         SELECT doc_id, CAST(chunk_idx AS INTEGER) AS chunk_idx, start_sample,
-                CAST(LEAST(256, total - start_sample) AS INTEGER) AS n_samples
-         FROM f ORDER BY doc_id, chunk_idx""",
-
-    "q_multimodal_audio" ->
-      """SELECT doc_id,
-                CAST(8000 + (doc_id % 4) * 4000 AS INTEGER) AS sample_rate,
-                CAST(1 + doc_id % 2 AS INTEGER) AS channels,
-                CAST(100 + doc_id % 50 AS BIGINT) AS n_frames
-         FROM documents ORDER BY doc_id""",
-
-    // even ids: the PNG synthesis arithmetic; odd ids: the quarantine row
-    "q_multimodal_unknown" ->
-      """SELECT doc_id,
-                CAST(CASE WHEN doc_id % 2 = 0 THEN 16 + doc_id % 32
-                          ELSE -1 END AS INTEGER) AS width,
-                CAST(CASE WHEN doc_id % 2 = 0 THEN 16 + (doc_id * 7) % 32
-                          ELSE -1 END AS INTEGER) AS height,
-                CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'unknown' END AS format
-         FROM documents ORDER BY doc_id""",
-
-    "q_f2_json_roundtrip" ->
-      """WITH t AS (SELECT doc_id,
-                           list_filter(string_split(text, ' '), x -> x <> '')[1:3] AS arr
-                    FROM documents)
-         SELECT doc_id, to_json(arr) AS arr_json,
-                CAST(len(arr) AS INTEGER) AS n_items,
-                (to_json(arr) = '[]') AS is_empty,
-                list_contains(arr, 'data') AS has_data
-         FROM t ORDER BY doc_id""",
-
-    "q_f11_alias_normalize" ->
-      """WITH aliases(raw, canonical) AS (VALUES ('red widget', 'crimson widget'),
-                                                 ('blue bolt', 'cobalt bolt'))
-         SELECT COALESCE(canonical, p_name) AS norm_name, COUNT(*) AS n,
-                CAST(SUM(CAST(p_retailprice AS DECIMAL(38,6))) AS DOUBLE) AS total_price
-         FROM part LEFT JOIN aliases ON p_name = raw
-         GROUP BY 1 ORDER BY norm_name""",
-
-    "q_o7_shortest_name" ->
-      """SELECT p_brand, p_name AS shortest_name
-         FROM (SELECT p_brand, p_name,
-                      ROW_NUMBER() OVER (PARTITION BY p_brand
-                        ORDER BY length(p_name), p_name) AS rn
-               FROM part) t
-         WHERE rn = 1 ORDER BY p_brand""",
-
-    "q_sql_agent_topk" ->
-      """SELECT c_name, CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total_spent
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         WHERE CAST(o_orderdate AS DATE) BETWEEN DATE '1997-01-01' AND DATE '1997-12-31'
-           AND REPLACE(c_name, '#', '') LIKE '%Customer00000012%'
-         GROUP BY c_name ORDER BY total_spent DESC, c_name LIMIT 5""",
-
-    // identical text to AgentWindowSql (the §2.11 shared-text contract);
-    // the VARCHAR(48) hops sidestep DuckDB's double-rounding
-    // DECIMAL(38,6)→DOUBLE above 2^53 (round-11 sf1-gate find)
-    "q_sql_agent_window" ->
-      """SELECT mo, CAST(CAST(total AS VARCHAR(48)) AS DOUBLE) AS total,
-              CAST(CAST(SUM(total) OVER (ORDER BY mo
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS VARCHAR(48)) AS DOUBLE) AS cum_total
-       FROM (SELECT date_trunc('month', o_orderdate) AS mo,
-                    SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS total
-             FROM orders GROUP BY 1) m
-       ORDER BY mo""",
-
-    "q_sim_ivf_topk" ->
-      """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              e AS (SELECT vec_id, i, CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x
-                    FROM embeddings CROSS JOIN ser WHERE i <= len(embedding)),
-              nrm AS (SELECT vec_id, sqrt(CAST(SUM(x * x) AS DOUBLE)) AS nrm
-                      FROM e GROUP BY vec_id),
-              adots AS (SELECT v.vec_id, c.vec_id AS centroid_id, SUM(v.x * c.x) AS dot
-                        FROM e v JOIN e c ON c.i = v.i AND c.vec_id < 16
-                        GROUP BY 1, 2),
-              asg AS (SELECT vec_id, centroid_id
-                      FROM (SELECT a.vec_id, a.centroid_id,
-                                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                     ORDER BY round(CAST(a.dot AS DOUBLE) / (nv.nrm * nc.nrm), 6) DESC,
-                                              a.centroid_id) AS rn
-                            FROM adots a
-                            JOIN nrm nv ON nv.vec_id = a.vec_id
-                            JOIN nrm nc ON nc.vec_id = a.centroid_id) t
-                      WHERE rn = 1),
-              q AS (SELECT vec_id AS query_id, centroid_id FROM asg WHERE vec_id < 5),
-              cand AS (SELECT q.query_id, a.vec_id AS cand_id, q.centroid_id
-                       FROM q JOIN asg a ON a.centroid_id = q.centroid_id
-                                        AND a.vec_id <> q.query_id),
-              dots AS (SELECT cand.query_id, cand.cand_id, cand.centroid_id,
-                              SUM(qa.x * qb.x) AS dot
-                       FROM cand
-                       JOIN e qa ON qa.vec_id = cand.query_id
-                       JOIN e qb ON qb.vec_id = cand.cand_id AND qb.i = qa.i
-                       GROUP BY 1, 2, 3),
-              sc AS (SELECT query_id, centroid_id, cand_id,
-                            round(CAST(dot AS DOUBLE) / (nq.nrm * nc2.nrm), 6) AS cos_sim
-                     FROM dots
-                     JOIN nrm nq ON nq.vec_id = query_id
-                     JOIN nrm nc2 ON nc2.vec_id = cand_id),
-              r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS INTEGER) AS rank
-                    FROM sc)
-         SELECT query_id, centroid_id, cand_id, cos_sim, rank
-         FROM r WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "q_dedup_embedding_cosine" ->
-      """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              pl AS (SELECT unnest(generate_series(0, 3)) AS p),
-              sgn AS (SELECT p, i,
-                             CASE WHEN (strpos('0123456789abcdef',
-                                    substring(md5(CAST(p AS VARCHAR) || '_' || CAST(i - 1 AS VARCHAR)), 1, 1)) - 1) % 2 = 1
-                                  THEN 1 ELSE -1 END AS sgn
-                      FROM pl CROSS JOIN ser),
-              e AS (SELECT vec_id, i, CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x
-                    FROM embeddings CROSS JOIN ser WHERE i <= len(embedding)),
-              proj AS (SELECT vec_id, p, SUM(x * sgn) AS proj
-                       FROM e JOIN sgn ON e.i = sgn.i GROUP BY 1, 2),
-              bucket AS (SELECT vec_id,
-                                string_agg(CASE WHEN proj >= 0 THEN '1' ELSE '0' END, ''
-                                           ORDER BY p) AS bucket
-                         FROM proj GROUP BY vec_id),
-              nrm AS (SELECT vec_id, sqrt(CAST(SUM(x * x) AS DOUBLE)) AS nrm
-                      FROM e GROUP BY vec_id),
-              cand AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.bucket
-                       FROM bucket a JOIN bucket b ON a.bucket = b.bucket
-                                                  AND a.vec_id < b.vec_id),
-              dots AS (SELECT id_a, id_b, bucket, SUM(qa.x * qb.x) AS dot
-                       FROM cand
-                       JOIN e qa ON qa.vec_id = id_a
-                       JOIN e qb ON qb.vec_id = id_b AND qb.i = qa.i
-                       GROUP BY 1, 2, 3),
-              sc AS (SELECT id_a, id_b, bucket,
-                            round(CAST(dot AS DOUBLE) / (na.nrm * nb.nrm), 6) AS cos_sim
-                     FROM dots
-                     JOIN nrm na ON na.vec_id = id_a
-                     JOIN nrm nb ON nb.vec_id = id_b)
-         SELECT id_a, id_b, bucket, cos_sim
-         FROM sc WHERE cos_sim >= 0.3 ORDER BY id_a, id_b""",
-
-    // semantic dedup: the cell assignment is the q_sim_ivf_topk asg CTE
-    // verbatim (same rounded-cosine argmax, same tie-break), pairs are
-    // within-cell exact cosine ≥ 0.3, components via the recursive
-    // reachability of the dedup-corpus oracle, survivor = min id
-    "q_dedup_semantic" ->
-      """WITH RECURSIVE ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              e AS (SELECT vec_id, i, CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x
-                    FROM embeddings CROSS JOIN ser WHERE i <= len(embedding)),
-              nrm AS (SELECT vec_id, sqrt(CAST(SUM(x * x) AS DOUBLE)) AS nrm
-                      FROM e GROUP BY vec_id),
-              adots AS (SELECT v.vec_id, c.vec_id AS centroid_id, SUM(v.x * c.x) AS dot
-                        FROM e v JOIN e c ON c.i = v.i AND c.vec_id < 16
-                        GROUP BY 1, 2),
-              asg AS (SELECT vec_id, centroid_id
-                      FROM (SELECT a.vec_id, a.centroid_id,
-                                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                     ORDER BY round(CAST(a.dot AS DOUBLE) / (nv.nrm * nc.nrm), 6) DESC,
-                                              a.centroid_id) AS rn
-                            FROM adots a
-                            JOIN nrm nv ON nv.vec_id = a.vec_id
-                            JOIN nrm nc ON nc.vec_id = a.centroid_id) t
-                      WHERE rn = 1),
-              cand AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-                       FROM asg a JOIN asg b ON a.centroid_id = b.centroid_id
-                                            AND a.vec_id < b.vec_id),
-              dots AS (SELECT id_a, id_b, SUM(qa.x * qb.x) AS dot
-                       FROM cand
-                       JOIN e qa ON qa.vec_id = id_a
-                       JOIN e qb ON qb.vec_id = id_b AND qb.i = qa.i
-                       GROUP BY 1, 2),
-              pairs AS (SELECT id_a, id_b
-                        FROM dots
-                        JOIN nrm na ON na.vec_id = id_a
-                        JOIN nrm nb ON nb.vec_id = id_b
-                        WHERE round(CAST(dot AS DOUBLE) / (na.nrm * nb.nrm), 6) >= 0.3),
-              nodes AS (SELECT id_a AS id FROM pairs UNION SELECT id_b FROM pairs),
-              edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                        UNION SELECT id_b, id_a FROM pairs),
-              reach AS (SELECT id, id AS comp FROM nodes
-                        UNION
-                        SELECT g.dst AS id, r.comp
-                        FROM reach r JOIN edges g ON g.src = r.id),
-              lab AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id),
-              canon AS (SELECT comp AS vec_id, COUNT(*) AS cluster_size
-                        FROM lab GROUP BY comp),
-              uniq AS (SELECT vec_id, CAST(1 AS BIGINT) AS cluster_size
-                       FROM embeddings WHERE vec_id NOT IN (SELECT id FROM lab))
-         SELECT u.vec_id, asg.centroid_id, cluster_size
-         FROM (SELECT * FROM canon UNION ALL SELECT * FROM uniq) u
-         JOIN asg ON asg.vec_id = u.vec_id
-         ORDER BY u.vec_id""",
-
-    "q_asof_latest_value" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, value FROM events),
-              b AS (SELECT date_trunc('week', MIN(CAST(ts AS DATE))) AS lo,
-                           date_trunc('week', MAX(CAST(ts AS DATE))) AS hi FROM events),
-              weeks AS (SELECT CAST(unnest(generate_series(
-                          (SELECT lo FROM b), (SELECT hi FROM b), INTERVAL 1 WEEK)) AS DATE) AS d),
-              probes AS (SELECT user_id, d
-                         FROM (SELECT DISTINCT user_id FROM events) u CROSS JOIN weeks)
-         SELECT p.user_id, p.d, l.event_id AS last_event_id, l.value AS last_value
-         FROM probes p LEFT JOIN LATERAL (
-           SELECT event_id, value FROM ev e
-           WHERE e.user_id = p.user_id AND e.ts_us <= epoch_us(CAST(p.d AS TIMESTAMP))
-           ORDER BY e.ts_us DESC, e.event_id DESC LIMIT 1) l ON TRUE
-         ORDER BY user_id, d""",
-
-    "q_u2_cdc_merge" -> CdcMergeOracle,
-
-    "q_stream_cdc_merge" -> CdcMergeOracle,
-
-    "q_scd2_from_cdc" ->
-      """WITH base AS (SELECT c_custkey, c_name, c_acctbal FROM customer
-                       WHERE c_custkey <= 700),
-              m AS (SELECT *, c_custkey % 7 AS m FROM base),
-              feed AS (
-                SELECT c_custkey, c_name, c_acctbal, 'D' AS op,
-                       CAST(1 AS BIGINT) AS seq FROM m WHERE m = 0
-                UNION ALL SELECT c_custkey, c_name, c_acctbal + 100, 'U',
-                       CAST(1 AS BIGINT) FROM m WHERE m = 1
-                UNION ALL SELECT c_custkey, c_name, c_acctbal + 999, 'U',
-                       CAST(1 AS BIGINT) FROM m WHERE m = 2
-                UNION ALL SELECT c_custkey, c_name, c_acctbal, 'D',
-                       CAST(2 AS BIGINT) FROM m WHERE m = 2
-                UNION ALL SELECT c_custkey, c_name, c_acctbal, 'D',
-                       CAST(1 AS BIGINT) FROM m WHERE m = 3
-                UNION ALL SELECT c_custkey, c_name, c_acctbal + 50, 'U',
-                       CAST(2 AS BIGINT) FROM m WHERE m = 3
-                UNION ALL SELECT c_custkey + 100000, c_name, c_acctbal, 'I',
-                       CAST(1 AS BIGINT) FROM m WHERE m = 4),
-              w AS (SELECT *, LEAD(seq) OVER (PARTITION BY c_custkey
-                               ORDER BY seq) AS valid_to FROM feed)
-         SELECT c_custkey, c_name, c_acctbal, seq AS valid_from, valid_to,
-                (valid_to IS NULL) AS is_current
-         FROM w WHERE op <> 'D' ORDER BY c_custkey, valid_from""",
-
-    "q_asof_next_value" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, value FROM events),
-              b AS (SELECT date_trunc('week', MIN(CAST(ts AS DATE))) AS lo,
-                           date_trunc('week', MAX(CAST(ts AS DATE))) AS hi FROM events),
-              weeks AS (SELECT CAST(unnest(generate_series(
-                          (SELECT lo FROM b), (SELECT hi FROM b), INTERVAL 1 WEEK)) AS DATE) AS d),
-              probes AS (SELECT user_id, d
-                         FROM (SELECT DISTINCT user_id FROM events) u CROSS JOIN weeks)
-         SELECT p.user_id, p.d, l.event_id AS next_event_id, l.value AS next_value
-         FROM probes p LEFT JOIN LATERAL (
-           SELECT event_id, value FROM ev e
-           WHERE e.user_id = p.user_id AND e.ts_us >= epoch_us(CAST(p.d AS TIMESTAMP))
-           ORDER BY e.ts_us ASC, e.event_id ASC LIMIT 1) l ON TRUE
-         ORDER BY user_id, d""",
-
-    "q_range_join_week" ->
-      """WITH iv AS (SELECT o_orderkey, CAST(o_orderdate AS DATE) AS lo,
-                            CAST(o_orderdate AS DATE) + 6 AS hi
-                     FROM orders WHERE o_totalprice > 495000),
-              pt AS (SELECT CAST(l_shipdate AS DATE) AS d, l_extendedprice FROM lineitem)
-         SELECT o_orderkey, COUNT(*) AS n_items,
-                CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS total_shipped
-         FROM iv JOIN pt ON pt.d BETWEEN iv.lo AND iv.hi
-         GROUP BY o_orderkey ORDER BY o_orderkey""",
-
-    "q_rollup_region" -> RollupSql,
-
-    "q_cube_region_segment" -> CubeSql,
-
-    "q_j_full_outer" ->
-      """WITH sup AS (SELECT s_nationkey AS nk, COUNT(*) AS n_suppliers
-                      FROM supplier WHERE s_acctbal > 4000 GROUP BY 1),
-              cust AS (SELECT c_nationkey AS nk, COUNT(*) AS n_customers
-                       FROM customer WHERE c_acctbal > 9000 GROUP BY 1)
-         SELECT COALESCE(sup.nk, cust.nk) AS nk,
-                COALESCE(n_suppliers, 0) AS n_suppliers,
-                COALESCE(n_customers, 0) AS n_customers
-         FROM sup FULL OUTER JOIN cust ON sup.nk = cust.nk
-         ORDER BY nk""",
-
-    "q_pivot_priority" ->
-      """SELECT strftime(o_orderdate, '%Y-%m') AS month,
-                CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT'
-                  THEN CAST(o_totalprice AS DECIMAL(38,6)) END) AS DOUBLE) AS p1_urgent,
-                CAST(SUM(CASE WHEN o_orderpriority = '2-HIGH'
-                  THEN CAST(o_totalprice AS DECIMAL(38,6)) END) AS DOUBLE) AS p2_high,
-                CAST(SUM(CASE WHEN o_orderpriority = '3-MEDIUM'
-                  THEN CAST(o_totalprice AS DECIMAL(38,6)) END) AS DOUBLE) AS p3_medium,
-                CAST(SUM(CASE WHEN o_orderpriority = '4-NOT SPECIFIED'
-                  THEN CAST(o_totalprice AS DECIMAL(38,6)) END) AS DOUBLE) AS p4_not_specified,
-                CAST(SUM(CASE WHEN o_orderpriority = '5-LOW'
-                  THEN CAST(o_totalprice AS DECIMAL(38,6)) END) AS DOUBLE) AS p5_low
-         FROM orders GROUP BY month ORDER BY month""",
-
-    "q_unpivot_metrics" ->
-      """WITH src AS (SELECT l_orderkey, l_linenumber,
-                             CAST(l_quantity AS DOUBLE) AS quantity,
-                             CAST(l_extendedprice AS DOUBLE) AS extendedprice,
-                             CAST(l_discount AS DOUBLE) AS discount
-                      FROM lineitem WHERE l_orderkey <= 1000)
-         SELECT l_orderkey, l_linenumber, metric, value FROM (
-           SELECT l_orderkey, l_linenumber, 'quantity' AS metric,
-                  quantity AS value FROM src
-           UNION ALL SELECT l_orderkey, l_linenumber, 'extendedprice',
-                  extendedprice FROM src
-           UNION ALL SELECT l_orderkey, l_linenumber, 'discount',
-                  discount FROM src) u
-         ORDER BY l_orderkey, l_linenumber, metric""",
-
-    "q_timeseries_fill" -> TimeseriesFillOracle,
-
-    "q_stream_timeseries_fill" -> TimeseriesFillOracle,
-
-    "q_sim_recall_eval" ->
-      """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              e AS (SELECT vec_id, i, CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x
-                    FROM embeddings CROSS JOIN ser
-                    WHERE i <= len(embedding) AND len(embedding) = 64),
-              nrmx AS (SELECT vec_id, sqrt(CAST(SUM(x * x) AS DOUBLE)) AS nrm
-                       FROM e GROUP BY vec_id),
-              qx AS (SELECT vec_id AS query_id, i, x FROM e WHERE vec_id < 5),
-              dotsx AS (SELECT qx.query_id, c.vec_id AS cand_id, SUM(qx.x * c.x) AS dot
-                        FROM qx JOIN e c ON qx.i = c.i AND qx.query_id <> c.vec_id
-                        GROUP BY 1, 2),
-              scx AS (SELECT query_id, cand_id,
-                             round(CAST(dot AS DOUBLE) / (nq.nrm * nc.nrm), 6) AS cos_sim
-                      FROM dotsx
-                      JOIN nrmx nq ON nq.vec_id = query_id
-                      JOIN nrmx nc ON nc.vec_id = cand_id),
-              rx AS (SELECT query_id, cand_id,
-                            ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY cos_sim DESC, cand_id) AS rank
-                     FROM scx),
-              cs AS (SELECT unnest(generate_series(0, 15)) AS c),
-              proj AS (SELECT vec_id, c,
-                              CAST(SUM(CASE WHEN bit_count((e.i - 1) & (cs.c * 4)) % 2 = 0
-                                       THEN CAST(x AS DECIMAL(38,9))
-                                       ELSE -CAST(x AS DECIMAL(38,9)) END)
-                                   AS DECIMAL(18,9)) AS y
-                       FROM e CROSS JOIN cs GROUP BY 1, 2),
-              nrmh AS (SELECT vec_id, sqrt(CAST(SUM(y * y) AS DOUBLE)) AS nrm
-                       FROM proj GROUP BY vec_id),
-              qh AS (SELECT vec_id AS query_id, c, y FROM proj WHERE vec_id < 5),
-              dotsh AS (SELECT qh.query_id, p.vec_id AS cand_id, SUM(qh.y * p.y) AS dot
-                        FROM qh JOIN proj p ON qh.c = p.c AND qh.query_id <> p.vec_id
-                        GROUP BY 1, 2),
-              sch AS (SELECT query_id, cand_id,
-                             round(CAST(dot AS DOUBLE) / (nq.nrm * nc.nrm), 6) AS cos_sim
-                      FROM dotsh
-                      JOIN nrmh nq ON nq.vec_id = query_id
-                      JOIN nrmh nc ON nc.vec_id = cand_id),
-              rh AS (SELECT query_id, cand_id,
-                            ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY cos_sim DESC, cand_id) AS rank
-                     FROM sch)
-         SELECT x.query_id, COUNT(*) AS n_exact, COUNT(h.cand_id) AS n_hit,
-                CAST(COUNT(h.cand_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS recall
-         FROM (SELECT query_id, cand_id FROM rx WHERE rank <= 3) x
-         LEFT JOIN (SELECT query_id, cand_id FROM rh WHERE rank <= 3) h
-           ON x.query_id = h.query_id AND x.cand_id = h.cand_id
-         GROUP BY 1 ORDER BY x.query_id""",
-
-    "q_sim_ann_hadamard" ->
-      """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              e AS (SELECT vec_id, i, CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x
-                    FROM embeddings CROSS JOIN ser
-                    WHERE i <= len(embedding) AND len(embedding) = 64),
-              cs AS (SELECT unnest(generate_series(0, 15)) AS c),
-              proj AS (SELECT vec_id, c,
-                              CAST(SUM(CASE WHEN bit_count((e.i - 1) & (cs.c * 4)) % 2 = 0
-                                       THEN CAST(x AS DECIMAL(38,9))
-                                       ELSE -CAST(x AS DECIMAL(38,9)) END)
-                                   AS DECIMAL(18,9)) AS y
-                       FROM e CROSS JOIN cs GROUP BY 1, 2),
-              nrm AS (SELECT vec_id, sqrt(CAST(SUM(y * y) AS DOUBLE)) AS nrm
-                      FROM proj GROUP BY vec_id),
-              q AS (SELECT vec_id AS query_id, c, y FROM proj WHERE vec_id < 5),
-              dots AS (SELECT q.query_id, p.vec_id AS cand_id, SUM(q.y * p.y) AS dot
-                       FROM q JOIN proj p ON q.c = p.c AND q.query_id <> p.vec_id
-                       GROUP BY 1, 2),
-              sc AS (SELECT query_id, cand_id,
-                            round(CAST(dot AS DOUBLE) / (nq.nrm * nc.nrm), 6) AS cos_sim
-                     FROM dots
-                     JOIN nrm nq ON nq.vec_id = query_id
-                     JOIN nrm nc ON nc.vec_id = cand_id),
-              r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS INTEGER) AS rank
-                    FROM sc)
-         SELECT query_id, cand_id, cos_sim, rank
-         FROM r WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "q_sim_meanpool" ->
-      """WITH ser AS (SELECT unnest(generate_series(1, 64)) AS i),
-              e AS (SELECT label, i,
-                           CAST(CAST(CAST(embedding[i] AS DOUBLE) AS VARCHAR) AS DECIMAL(18,9)) AS x
-                    FROM embeddings CROSS JOIN ser
-                    WHERE i <= len(embedding) AND len(embedding) = 64
-                      AND len(list_filter(embedding,
-                            x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0),
-              g AS (SELECT label, i, COUNT(*) AS n,
-                           SUM(CAST(x AS DECIMAL(38,18))) AS s
-                    FROM e GROUP BY 1, 2)
-         SELECT label, CAST(i - 1 AS INTEGER) AS i, n,
-                CAST(CAST(s AS VARCHAR) AS DOUBLE) / n AS mean
-         FROM g ORDER BY label, i""",
-
-    "q_sim_covariance" -> CovarianceOracle,
-
-    "q_sim_covariance_incremental" -> CovarianceOracle,
-
-    "q_percentiles" ->
-      """SELECT o_orderpriority,
-                round(quantile_cont(o_totalprice, 0.5), 6) AS median_price,
-                round(quantile_cont(o_totalprice, 0.9), 6) AS p90_price,
-                COUNT(*) AS n
-         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-
-    "q_sketch_distinct" ->
-      """WITH v AS (SELECT DISTINCT
-                      CAST(CAST('0x' || substring(md5(CAST(l_partkey AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
-                        / 4503599627370496.0 AS v
-                    FROM lineitem),
-              mins AS (SELECT v FROM v ORDER BY v LIMIT 64),
-              e AS (SELECT COUNT(*) AS k, MAX(v) AS vk FROM mins)
-         SELECT k, round(CAST(k - 1 AS DOUBLE) / vk, 6) AS est_distinct,
-                (SELECT COUNT(DISTINCT l_partkey) FROM lineitem) AS true_distinct
-         FROM e""",
-
-    // the decimal-DDSketch quantile family — the merged face shares the
-    // one-shot text VERBATIM (exact mergeability IS the check)
-    "q_quantile_sketch" ->
-      quantileSketchOracle("orders", "o_totalprice", "o_orderpriority",
-        Seq(0.5, 0.9, 0.99)),
-    "q_quantile_sketch_merged" ->
-      quantileSketchOracle("orders", "o_totalprice", "o_orderpriority",
-        Seq(0.5, 0.9, 0.99)),
-    "q_quantile_sketch_stored" ->
-      quantileSketchOracle("orders", "o_totalprice", "o_orderpriority",
-        Seq(0.5, 0.9, 0.99)),
-    "q_quantile_sketch_signed" ->
-      quantileSketchOracle("customer", "c_acctbal", "c_mktsegment",
-        Seq(0.1, 0.5, 0.9)),
-    // the overflow face reuses the SAME oracle text generator — the
-    // TRY_CAST routing lives in the shared template, so the sentinel
-    // bucket arithmetic is what the hash checks
-    "q_quantile_sketch_overflow" ->
-      quantileSketchOracle(
-        """(SELECT o_orderpriority,
-              o_totalprice * CASE WHEN o_orderkey % 1000 = 0
-                                  THEN 1.0e10 ELSE 1.0 END AS v
-            FROM orders) ov""",
-        "v", "o_orderpriority", Seq(0.5, 0.9, 0.999)),
-    // streaming fold of the SAME store (micro-batch ids as the ledger
-    // keys): oracle text shared VERBATIM with q_quantile_sketch — the
-    // drained stream must reproduce the one-shot sketch exactly
-    "q_stream_quantile_sketch" ->
-      quantileSketchOracle("orders", "o_totalprice", "o_orderpriority",
-        Seq(0.5, 0.9, 0.99)),
-
-    // one-shot aggregate over FULL history == the incrementally merged
-    // store (mergeable-state algebra; KMV union is exactly mergeable)
-    "q_incremental_agg" ->
-      """WITH base AS (SELECT event_type, COUNT(*) AS n,
-                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total,
-                MIN(value) AS "min", MAX(value) AS "max",
-                round(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)
-                        / CAST(COUNT(*) AS DOUBLE), 6) AS avg
-              FROM events GROUP BY 1),
-         v AS (SELECT DISTINCT event_type,
-                 CAST(CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
-                   / 4503599627370496.0 AS v
-               FROM events),
-         r AS (SELECT event_type, v,
-                 row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn
-               FROM v),
-         sk AS (SELECT event_type, COUNT(*) AS sz, MAX(v) AS vk
-                FROM r WHERE rn <= 32 GROUP BY 1),
-         est AS (SELECT event_type,
-                   CASE WHEN sz < 32 THEN CAST(sz AS DOUBLE)
-                        ELSE round(31.0 / vk, 6) END AS est_distinct
-                 FROM sk)
-         SELECT b.event_type, n, total, "min", "max", avg, est_distinct
-         FROM base b JOIN est USING (event_type) ORDER BY b.event_type""",
-
-    // identical contract for the bucketed O(delta) fold store, across a
-    // re-delivery AND a ledger compaction (oracle shared VERBATIM)
-    "q_fold_bucketed_store" ->
-      """WITH base AS (SELECT event_type, COUNT(*) AS n,
-                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total,
-                MIN(value) AS "min", MAX(value) AS "max",
-                round(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)
-                        / CAST(COUNT(*) AS DOUBLE), 6) AS avg
-              FROM events GROUP BY 1),
-         v AS (SELECT DISTINCT event_type,
-                 CAST(CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
-                   / 4503599627370496.0 AS v
-               FROM events),
-         r AS (SELECT event_type, v,
-                 row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn
-               FROM v),
-         sk AS (SELECT event_type, COUNT(*) AS sz, MAX(v) AS vk
-                FROM r WHERE rn <= 32 GROUP BY 1),
-         est AS (SELECT event_type,
-                   CASE WHEN sz < 32 THEN CAST(sz AS DOUBLE)
-                        ELSE round(31.0 / vk, 6) END AS est_distinct
-                 FROM sk)
-         SELECT b.event_type, n, total, "min", "max", avg, est_distinct
-         FROM base b JOIN est USING (event_type) ORDER BY b.event_type""",
-
-    // identical contract for the streaming deployment of the store
-    "q_stream_incremental_agg" ->
-      """WITH base AS (SELECT event_type, COUNT(*) AS n,
-                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total,
-                MIN(value) AS "min", MAX(value) AS "max",
-                round(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)
-                        / CAST(COUNT(*) AS DOUBLE), 6) AS avg
-              FROM events GROUP BY 1),
-         v AS (SELECT DISTINCT event_type,
-                 CAST(CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
-                   / 4503599627370496.0 AS v
-               FROM events),
-         r AS (SELECT event_type, v,
-                 row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn
-               FROM v),
-         sk AS (SELECT event_type, COUNT(*) AS sz, MAX(v) AS vk
-                FROM r WHERE rn <= 32 GROUP BY 1),
-         est AS (SELECT event_type,
-                   CASE WHEN sz < 32 THEN CAST(sz AS DOUBLE)
-                        ELSE round(31.0 / vk, 6) END AS est_distinct
-                 FROM sk)
-         SELECT b.event_type, n, total, "min", "max", avg, est_distinct
-         FROM base b JOIN est USING (event_type) ORDER BY b.event_type""",
-
-    "q_t3_set_ops" ->
-      """WITH cust AS (SELECT c_mktsegment AS seg, c_nationkey AS nk FROM customer),
-              big AS (SELECT * FROM cust WHERE nk < 10),
-              small AS (SELECT * FROM cust WHERE nk >= 5)
-         SELECT seg, nk, op FROM (
-           SELECT seg, nk, 'both' AS op FROM (SELECT * FROM big INTERSECT SELECT * FROM small)
-           UNION ALL
-           SELECT seg, nk, 'only_low' AS op FROM (SELECT * FROM big EXCEPT SELECT * FROM small))
-         ORDER BY op, seg, nk""",
-
-    "q_zorder_key" -> {
-      // same bit-interleave as ZOrder.zorderKey: bit b of dim i lands at
-      // position b*2+i (dims: 0 = p_partkey%64, 1 = p_size%64)
-      val terms = (0 until 6).flatMap(b => Seq(
-        s"((((p_partkey % 64) >> $b) & 1) * ${1L << (2 * b)})",
-        s"((((p_size % 64) >> $b) & 1) * ${1L << (2 * b + 1)})"))
-      s"""SELECT p_partkey, CAST(${terms.mkString(" + ")} AS BIGINT) AS zkey
-          FROM part ORDER BY zkey, p_partkey"""
-    },
-
-    "q_sample_deterministic" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-         WHERE CAST(CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
-                 / 4503599627370496.0 < 0.05
-         ORDER BY doc_id""",
-
-    // E-S key: ln(u)/w with u = (h52 + 0.5)/2^52 — identical
-    // parenthesization to the Spark side so both engines rank the same
-    // doubles; top-100 by (key DESC, doc_id), then the total ORDER BY
-    "q_sample_weighted" ->
-      """WITH k AS (SELECT doc_id, lang, n_chars,
-                           ln((CAST(CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR) || '_r4'), 1, 13) AS BIGINT) AS DOUBLE) + 0.5)
-                              / 4503599627370496.0)
-                             / CAST(n_chars AS DOUBLE) AS esk
-                    FROM documents
-                    WHERE isfinite(CAST(n_chars AS DOUBLE)) AND CAST(n_chars AS DOUBLE) > 0),
-              top AS (SELECT doc_id, lang, n_chars FROM k
-                      ORDER BY esk DESC, doc_id LIMIT 100)
-         SELECT doc_id, lang, n_chars FROM top ORDER BY doc_id""",
-
-    "q_sample_weighted_group" ->
-      """WITH k AS (SELECT doc_id, lang, n_chars,
-                           ln((CAST(CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR) || '_r4'), 1, 13) AS BIGINT) AS DOUBLE) + 0.5)
-                              / 4503599627370496.0)
-                             / CAST(n_chars AS DOUBLE) AS esk
-                    FROM documents
-                    WHERE isfinite(CAST(n_chars AS DOUBLE)) AND CAST(n_chars AS DOUBLE) > 0),
-              r AS (SELECT doc_id, lang, n_chars,
-                           ROW_NUMBER() OVER (PARTITION BY lang
-                             ORDER BY esk DESC, doc_id) AS rn
-                    FROM k)
-         SELECT doc_id, lang, n_chars FROM r WHERE rn <= 20 ORDER BY doc_id""",
-
-    "q_split_train_test" ->
-      """WITH u AS (SELECT doc_id, lang,
-                CAST(CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
-                  / 4503599627370496.0 AS u
-              FROM documents)
-         SELECT doc_id, lang,
-                CASE WHEN u < 0.1 THEN 'test' WHEN u < 0.2 THEN 'val'
-                     ELSE 'train' END AS split
-         FROM u ORDER BY doc_id""",
-
-    // leakage-safe split: q_dedup_corpus's component labels give the
-    // cluster representative, coalesced to the doc itself; then the
-    // q_split_train_test md5 rule runs on that cluster_key
-    "q_split_by_cluster" ->
-      s"""${MinhashBkCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-              candAll AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-                          FROM bk a JOIN bk c ON a.b = c.b AND a.key = c.key
-                                             AND a.doc_id < c.doc_id),
-              cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-              shr AS (SELECT id_a, id_b, COUNT(*) AS shared
-                      FROM candAll
-                      JOIN sh sa ON sa.doc_id = id_a
-                      JOIN sh sb ON sb.doc_id = id_b AND sb.s = sa.s
-                      GROUP BY 1, 2),
-              pairs AS (SELECT id_a, id_b
-                        FROM shr JOIN cnt ca ON ca.doc_id = id_a
-                                 JOIN cnt cb ON cb.doc_id = id_b
-                        WHERE CAST(shared AS DOUBLE)
-                              / CAST(ca.n + cb.n - shared AS DOUBLE) >= 0.5),
-              nodes AS (SELECT id_a AS id FROM pairs UNION SELECT id_b FROM pairs),
-              edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                        UNION SELECT id_b, id_a FROM pairs),
-              reach AS (SELECT id, id AS comp FROM nodes
-                        UNION
-                        SELECT e.dst AS id, r.comp
-                        FROM reach r JOIN edges e ON e.src = r.id),
-              lab AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id),
-              ck AS (SELECT d.doc_id, d.lang,
-                            COALESCE(l.comp, d.doc_id) AS cluster_key
-                     FROM documents d LEFT JOIN lab l ON l.id = d.doc_id),
-              u AS (SELECT doc_id, lang, cluster_key,
-                CAST(CAST('0x' || substring(md5(CAST(cluster_key AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
-                  / 4503599627370496.0 AS u
-              FROM ck)
-         SELECT doc_id, lang, cluster_key,
-                CASE WHEN u < 0.1 THEN 'test' WHEN u < 0.2 THEN 'val'
-                     ELSE 'train' END AS split
-         FROM u ORDER BY doc_id""",
-
-    "q_correlation" -> {
-      // mirrors Analytics.correlationMatrix exactly: per-row fixed-point
-      // p = floor(v·10⁶) decomposed into three base-2²⁰ long limbs (all
-      // IEEE-identical double/long arithmetic), limb sums reassembled as
-      // exact HUGEINT integers (Spark side: DECIMAL(38,0)), then the
-      // scale-free identity r = A/√(Bx·By) with the same double casts,
-      // division order and 6-dp round
-      val corrCols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      def limbs(e: String, tag: String, both: String) = {
-        val p = s"(($e) * 1000000.0)"
-        val q1 = s"CAST(floor($p / 1048576.0) AS BIGINT)"
-        val h = s"CAST(floor($p / 1099511627776.0) AS BIGINT)"
-        s"""SUM(CASE WHEN $both THEN $h END) AS h_$tag,
-            SUM(CASE WHEN $both THEN $q1 - $h * 1048576 END) AS m_$tag,
-            SUM(CASE WHEN $both THEN CAST(floor($p) AS BIGINT) - $q1 * 1048576 END) AS l_$tag"""
-      }
-      def s(tag: String) =
-        s"(CAST(CAST(h_$tag AS HUGEINT) * 1099511627776 + CAST(m_$tag AS HUGEINT) * 1048576 + l_$tag AS DOUBLE) / 1000000.0)"
-      val pairSql = (for {
-        i <- corrCols.indices; j <- (i + 1) until corrCols.size
-      } yield {
-        val (a, b) = (corrCols(i), corrCols(j))
-        val both = s"$a IS NOT NULL AND $b IS NOT NULL " +
-          s"AND isfinite(CAST($a AS DOUBLE)) AND isfinite(CAST($b AS DOUBLE))"
-        val (x, y) = (s"CAST($a AS DOUBLE)", s"CAST($b AS DOUBLE)")
-        s"""SELECT '$a' AS col_a, '$b' AS col_b, n,
-              CASE WHEN (nd * sx2 - sx * sx) * (nd * sy2 - sy * sy) > 0
-                   THEN round((nd * sxy - sx * sy)
-                              / sqrt((nd * sx2 - sx * sx) * (nd * sy2 - sy * sy)), 6)
-              END AS corr
-            FROM (SELECT n, CAST(n AS DOUBLE) AS nd,
-                         ${s("x")} AS sx, ${s("y")} AS sy, ${s("xy")} AS sxy,
-                         ${s("x2")} AS sx2, ${s("y2")} AS sy2
-                  FROM (SELECT CAST(COUNT(CASE WHEN $both THEN 1 END) AS BIGINT) AS n,
-                               ${limbs(x, "x", both)}, ${limbs(y, "y", both)},
-                               ${limbs(s"$x * $y", "xy", both)},
-                               ${limbs(s"$x * $x", "x2", both)},
-                               ${limbs(s"$y * $y", "y2", both)}
-                        FROM lineitem))"""
-      }).mkString(" UNION ALL ")
-      s"SELECT * FROM ($pairSql) ORDER BY col_a, col_b"
-    },
-
-    "q_robust_scale" ->
-      """WITH sub AS (SELECT *,
-                             CASE WHEN isfinite(CAST(o_totalprice AS DOUBLE))
-                                  THEN o_totalprice END AS fin_v
-                      FROM orders WHERE o_orderkey % 10 = 0),
-              st AS (SELECT o_orderpriority,
-                            round(quantile_cont(fin_v, 0.5), 6) AS med,
-                            round(quantile_cont(fin_v, 0.75), 6)
-                              - round(quantile_cont(fin_v, 0.25), 6) AS iqr
-                     FROM sub GROUP BY 1)
-         SELECT o_orderkey, o.o_orderpriority, o_totalprice,
-                CASE WHEN fin_v IS NULL THEN NULL
-                     WHEN iqr > 0 THEN round((o_totalprice - med) / iqr, 6)
-                     ELSE 0.0 END AS robust_z
-         FROM sub o JOIN st ON o.o_orderpriority IS NOT DISTINCT FROM st.o_orderpriority
-         ORDER BY o_orderkey""",
-
-    "q_j6_fuzzy_levenshtein" ->
-      """WITH probes(probe) AS (VALUES ('GERMANY'), ('FRANC'), ('UNTED STATES'),
-                                       ('ROMANIA X'), ('QQQQQQQQQQ')),
-              scored AS (SELECT probe, n_name, levenshtein(probe, n_name) AS d
-                         FROM probes CROSS JOIN nation WHERE LENGTH(n_name) > 0),
-              best AS (SELECT probe, n_name, d,
-                              ROW_NUMBER() OVER (PARTITION BY probe
-                                ORDER BY d, LENGTH(n_name), n_name) AS rn
-                       FROM scored)
-         SELECT probe,
-                CASE WHEN d <= 6 THEN n_name ELSE probe END AS matched,
-                CASE WHEN d <= 6 THEN CAST(d AS INTEGER) END AS distance
-         FROM best WHERE rn = 1 ORDER BY probe""",
-
-    "q_curriculum_order" ->
-      """WITH v AS (SELECT doc_id, CAST(n_chars AS DOUBLE) AS s FROM documents
-                    WHERE n_chars IS NOT NULL
-                      AND isfinite(CAST(n_chars AS DOUBLE))),
-              b AS (SELECT round(quantile_cont(s, 0.25), 6) AS b1,
-                           round(quantile_cont(s, 0.50), 6) AS b2,
-                           round(quantile_cont(s, 0.75), 6) AS b3 FROM v),
-              x AS (SELECT doc_id,
-                           (CASE WHEN s > b1 THEN 1 ELSE 0 END
-                          + CASE WHEN s > b2 THEN 1 ELSE 0 END
-                          + CASE WHEN s > b3 THEN 1 ELSE 0 END) AS bucket
-                    FROM v, b)
-         SELECT doc_id, bucket,
-                CAST(ROW_NUMBER() OVER (PARTITION BY bucket
-                  ORDER BY md5(CAST(doc_id AS VARCHAR) || ':cur8'), doc_id)
-                  AS INTEGER) AS ord
-         FROM x ORDER BY bucket, ord""",
-
-    "q_histogram_equidepth" ->
-      """WITH v AS (SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
-                    WHERE o_totalprice IS NOT NULL
-                      AND isfinite(CAST(o_totalprice AS DOUBLE))),
-              b AS (SELECT round(quantile_cont(v, 0.25), 6) AS b1,
-                           round(quantile_cont(v, 0.50), 6) AS b2,
-                           round(quantile_cont(v, 0.75), 6) AS b3 FROM v),
-              x AS (SELECT v,
-                           (CASE WHEN v > b1 THEN 1 ELSE 0 END
-                          + CASE WHEN v > b2 THEN 1 ELSE 0 END
-                          + CASE WHEN v > b3 THEN 1 ELSE 0 END) AS bucket
-                    FROM v, b)
-         SELECT bucket, COUNT(*) AS n, MIN(v) AS lo, MAX(v) AS hi
-         FROM x GROUP BY bucket ORDER BY bucket""",
-
-    "q_histogram" ->
-      """WITH src AS (SELECT CAST(l_extendedprice AS DOUBLE) AS l_extendedprice
-                      FROM lineitem
-                      WHERE l_extendedprice IS NOT NULL
-                        AND isfinite(CAST(l_extendedprice AS DOUBLE))),
-              b AS (SELECT MIN(l_extendedprice) AS lo,
-                           MAX(l_extendedprice) AS hi FROM src),
-              x AS (SELECT CASE WHEN hi = lo THEN 0
-                                ELSE least(15, CAST(floor((l_extendedprice - lo)
-                                                          / ((hi - lo) / 16)) AS INTEGER)) END AS bin,
-                           lo, hi
-                    FROM src, b)
-         SELECT bin, COUNT(*) AS n,
-                lo + bin * ((hi - lo) / 16) AS bin_lo,
-                lo + (bin + 1) * ((hi - lo) / 16) AS bin_hi
-         FROM x GROUP BY bin, lo, hi ORDER BY bin""",
-
-    "q_zscore_group" ->
-      """WITH sub AS (SELECT * FROM lineitem WHERE l_orderkey % 20 = 0),
-              st AS (SELECT l_returnflag,
-                            CAST(COUNT(CASE WHEN isfinite(CAST(l_quantity AS DOUBLE)) THEN 1 END) AS DOUBLE) AS n,
-                            CAST(SUM(CASE WHEN isfinite(CAST(l_quantity AS DOUBLE)) THEN CAST(l_quantity AS DECIMAL(38,6)) END) AS DOUBLE) AS s,
-                            CAST(SUM(CASE WHEN isfinite(CAST(l_quantity AS DOUBLE)) THEN CAST(l_quantity * l_quantity AS DECIMAL(38,6)) END) AS DOUBLE) AS s2
-                     FROM sub GROUP BY 1)
-         SELECT l_orderkey, l_linenumber, l.l_returnflag, l_quantity,
-                CASE WHEN l_quantity IS NULL OR NOT isfinite(CAST(l_quantity AS DOUBLE)) THEN NULL
-                     WHEN sqrt(greatest(0.0, s2/n - (s/n)*(s/n))) > 0
-                     THEN round((l_quantity - s/n) / sqrt(greatest(0.0, s2/n - (s/n)*(s/n))), 6)
-                     ELSE 0.0 END AS zscore
-         FROM sub l JOIN st ON l.l_returnflag IS NOT DISTINCT FROM st.l_returnflag
-         ORDER BY l_orderkey, l_linenumber""",
-
-    "q_profile_columns" ->
-      """WITH src AS (SELECT l_orderkey, l_linenumber, l_returnflag, l_linestatus,
-                             CAST(l_shipdate AS DATE) AS l_shipdate FROM lineitem)
-         SELECT 'l_orderkey' AS column_name, COUNT(*) AS n_rows,
-                COUNT(*) - COUNT(l_orderkey) AS n_null,
-                COUNT(DISTINCT l_orderkey) AS n_distinct,
-                CAST(MIN(l_orderkey) AS VARCHAR) AS min_val,
-                CAST(MAX(l_orderkey) AS VARCHAR) AS max_val FROM src
-         UNION ALL
-         SELECT 'l_linenumber', COUNT(*), COUNT(*) - COUNT(l_linenumber),
-                COUNT(DISTINCT l_linenumber),
-                CAST(MIN(l_linenumber) AS VARCHAR), CAST(MAX(l_linenumber) AS VARCHAR) FROM src
-         UNION ALL
-         SELECT 'l_returnflag', COUNT(*), COUNT(*) - COUNT(l_returnflag),
-                COUNT(DISTINCT l_returnflag),
-                CAST(MIN(l_returnflag) AS VARCHAR), CAST(MAX(l_returnflag) AS VARCHAR) FROM src
-         UNION ALL
-         SELECT 'l_linestatus', COUNT(*), COUNT(*) - COUNT(l_linestatus),
-                COUNT(DISTINCT l_linestatus),
-                CAST(MIN(l_linestatus) AS VARCHAR), CAST(MAX(l_linestatus) AS VARCHAR) FROM src
-         UNION ALL
-         SELECT 'l_shipdate', COUNT(*), COUNT(*) - COUNT(l_shipdate),
-                COUNT(DISTINCT l_shipdate),
-                CAST(MIN(l_shipdate) AS VARCHAR), CAST(MAX(l_shipdate) AS VARCHAR) FROM src
-         ORDER BY column_name""",
-
-    // violation = predicate not TRUE (NULL predicate counts as violation)
-    "q_quality_expectations" ->
-      """SELECT * FROM (
-           SELECT 'not_null_o_orderdate' AS rule,
-                  (SELECT COUNT(*) FROM orders) AS n_checked,
-                  (SELECT COUNT(*) FROM orders WHERE o_orderdate IS NULL) AS n_violations
-           UNION ALL
-           SELECT 'in_range_o_totalprice', (SELECT COUNT(*) FROM orders),
-                  (SELECT COUNT(*) FROM orders
-                   WHERE o_totalprice IS NULL OR o_totalprice < 0 OR o_totalprice > 400000)
-           UNION ALL
-           SELECT 'in_set_o_orderstatus', (SELECT COUNT(*) FROM orders),
-                  (SELECT COUNT(*) FROM orders
-                   WHERE o_orderstatus IS NULL OR o_orderstatus NOT IN ('O', 'F'))
-           UNION ALL
-           SELECT 'matches_o_orderpriority', (SELECT COUNT(*) FROM orders),
-                  (SELECT COUNT(*) FROM orders
-                   WHERE o_orderpriority IS NULL OR NOT regexp_matches(o_orderpriority, '^[1-5]-'))
-           UNION ALL
-           SELECT 'unique_o_orderkey', (SELECT COUNT(*) FROM orders),
-                  (SELECT COUNT(*) - COUNT(DISTINCT o_orderkey) FROM orders)
-           UNION ALL
-           SELECT 'orders_custkey_in_customer', (SELECT COUNT(*) FROM orders),
-                  (SELECT COUNT(*) FROM orders o WHERE NOT EXISTS
-                     (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))
-           UNION ALL
-           SELECT 'unique_l_order_line', (SELECT COUNT(*) FROM lineitem),
-                  (SELECT COUNT(*) - COUNT(DISTINCT (l_orderkey, l_linenumber)) FROM lineitem)
-           UNION ALL
-           SELECT 'unique_l_orderkey', (SELECT COUNT(*) FROM lineitem),
-                  (SELECT COUNT(*) - COUNT(DISTINCT l_orderkey) FROM lineitem)
-           UNION ALL
-           SELECT 'lineitem_partkey_in_part', (SELECT COUNT(*) FROM lineitem),
-                  (SELECT COUNT(*) FROM lineitem l WHERE NOT EXISTS
-                     (SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey))
-         ) ORDER BY rule""",
-
-    "q_quality_corpus" ->
-      """SELECT * FROM (
-           SELECT 'not_null_text' AS rule,
-                  (SELECT COUNT(*) FROM documents) AS n_checked,
-                  (SELECT COUNT(*) FROM documents WHERE text IS NULL) AS n_violations
-           UNION ALL
-           SELECT 'text_nonempty', (SELECT COUNT(*) FROM documents),
-                  (SELECT COUNT(*) FROM documents
-                   WHERE text IS NULL OR NOT (length(text) > 0))
-           UNION ALL
-           SELECT 'nchars_consistent', (SELECT COUNT(*) FROM documents),
-                  (SELECT COUNT(*) FROM documents
-                   WHERE text IS NULL OR n_chars IS NULL
-                      OR NOT (n_chars = length(text)))
-           UNION ALL
-           SELECT 'in_set_lang', (SELECT COUNT(*) FROM documents),
-                  (SELECT COUNT(*) FROM documents
-                   WHERE lang IS NULL OR lang NOT IN ('en', 'de', 'fr', 'es'))
-           UNION ALL
-           SELECT 'in_range_n_chars', (SELECT COUNT(*) FROM documents),
-                  (SELECT COUNT(*) FROM documents
-                   WHERE n_chars IS NULL OR n_chars < 1 OR n_chars > 100000)
-           UNION ALL
-           SELECT 'unique_doc_id', (SELECT COUNT(*) FROM documents),
-                  (SELECT COUNT(*) - COUNT(DISTINCT doc_id) FROM documents)
-           UNION ALL
-           SELECT 'doc_has_embedding', (SELECT COUNT(*) FROM documents),
-                  (SELECT COUNT(*) FROM documents d WHERE NOT EXISTS
-                     (SELECT 1 FROM embeddings e WHERE e.vec_id = d.doc_id))
-         ) ORDER BY rule""",
-
-    "q_quality_quarantine" ->
-      """SELECT o_orderkey, failed_rules FROM (
-           SELECT o_orderkey, concat_ws(',',
-             CASE WHEN o_totalprice IS NULL OR o_totalprice < 0 OR o_totalprice > 400000
-                  THEN 'in_range_o_totalprice' END,
-             CASE WHEN o_orderstatus IS NULL OR o_orderstatus NOT IN ('O', 'F')
-                  THEN 'in_set_o_orderstatus' END,
-             CASE WHEN o_orderpriority IS NULL OR NOT regexp_matches(o_orderpriority, '^[1-3]-')
-                  THEN 'matches_o_orderpriority' END) AS failed_rules
-           FROM orders)
-         WHERE failed_rules <> '' ORDER BY o_orderkey""",
-
-    "q_text_redact" ->
-      """WITH pii AS (SELECT doc_id,
-                text || ' mail u' || doc_id || '@ex.org see http://ex.org/' || doc_id
-                     || ' ip 10.1.2.' || (doc_id % 250)
-                     || ' tel 010-1234-' || (1000 + doc_id % 9000) AS s
-              FROM documents)
-         SELECT doc_id,
-                CAST(len(regexp_extract_all(s, 'https?://[^ ]+')) AS INTEGER) AS n_urls,
-                CAST(len(regexp_extract_all(s, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INTEGER) AS n_emails,
-                CAST(len(regexp_extract_all(s, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS INTEGER) AS n_ips,
-                CAST(len(regexp_extract_all(s, '\+?[0-9][0-9-]{7,}[0-9]')) AS INTEGER) AS n_phones,
-                regexp_replace(regexp_replace(regexp_replace(regexp_replace(s,
-                  'https?://[^ ]+', '<URL>', 'g'),
-                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                  '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
-                  '\+?[0-9][0-9-]{7,}[0-9]', '<PHONE>', 'g') AS redacted
-         FROM pii ORDER BY doc_id""",
-
-    "q_text_repetition" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-                       FROM documents),
-              ser AS (SELECT unnest(generate_series(1, (SELECT COALESCE(MAX(len(t)), 1) FROM toks))) AS i),
-              bg AS (SELECT doc_id, t[i] || ' ' || t[i + 1] AS b
-                     FROM toks CROSS JOIN ser WHERE i <= len(t) - 1),
-              agg AS (SELECT doc_id, CAST(COUNT(*) AS INTEGER) AS n_bigrams,
-                             CAST(COUNT(DISTINCT b) AS INTEGER) AS n_unique_bigrams
-                      FROM bg GROUP BY doc_id)
-         SELECT d.doc_id, COALESCE(a.n_bigrams, 0) AS n_bigrams,
-                COALESCE(a.n_unique_bigrams, 0) AS n_unique_bigrams,
-                COALESCE(round(CAST(a.n_bigrams - a.n_unique_bigrams AS DOUBLE)
-                               / CAST(a.n_bigrams AS DOUBLE), 6), 0.0) AS rep_ratio
-         FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-         ORDER BY d.doc_id""",
-
-    "q_text_tfidf" ->
-      """WITH toks AS (SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS term
-                       FROM documents),
-              tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-              idf AS (SELECT term,
-                             ln((CAST((SELECT COUNT(DISTINCT doc_id) FROM tf) AS DOUBLE) + 1.0)
-                                / (CAST(COUNT(*) AS DOUBLE) + 1.0)) AS idf
-                      FROM tf GROUP BY term),
-              scored AS (SELECT tf.doc_id, tf.term, round(tf.tf * idf.idf, 6) AS score,
-                                ROW_NUMBER() OVER (PARTITION BY tf.doc_id
-                                  ORDER BY round(tf.tf * idf.idf, 6) DESC, tf.term) AS rn
-                         FROM tf JOIN idf USING (term))
-         SELECT doc_id, term AS top_term, score AS tfidf
-         FROM scored WHERE rn = 1 ORDER BY doc_id""",
-
-    // the VARCHAR→DECIMAL(18,6) hop replaces round(ce, 6): Spark's round
-    // is HALF_UP over the double's SHORTEST decimal string
-    // (BigDecimal.valueOf), and sf1 produced five CE values of the form
-    // x.xxxxx4999999998 that DuckDB's round() pushes UP where Spark
-    // rounds down — the hop reproduces Spark's string-based semantics
-    // exactly (round-11 sf1-gate find)
-    "q_text_unigram_ce" ->
-      """WITH toks AS (SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS term
-                       FROM documents),
-              tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-              lm AS (SELECT term,
-                            ln(CAST(SUM(tf) AS DOUBLE)
-                               / (SELECT CAST(SUM(tf) AS DOUBLE) FROM tf)) AS lp
-                     FROM tf GROUP BY term)
-         SELECT doc_id, n_tokens,
-                CAST(CAST(CAST(ce AS VARCHAR) AS DECIMAL(18,6)) AS DOUBLE) AS unigram_ce
-         FROM (SELECT tf.doc_id, CAST(SUM(tf.tf) AS BIGINT) AS n_tokens,
-                      -CAST(SUM(CAST(tf.tf * lm.lp AS DECIMAL(38,6))) AS DOUBLE)
-                      / CAST(SUM(tf.tf) AS DOUBLE) AS ce
-               FROM tf JOIN lm USING (term)
-               GROUP BY tf.doc_id) r
-         ORDER BY doc_id""",
-
-    // interpolated bigram LM: DuckDB zips the two shifted-slice unnests
-    // positionally (same pairs as Spark's zip_with over slices); the
-    // interpolation constants 0.75/0.25 are exactly binary-representable
-    // so the double arithmetic is engine-identical; per-doc sum routed
-    // through DECIMAL(38,6); final 6-dp via the VARCHAR hop (Spark round
-    // semantics, see q_text_unigram_ce)
-    "q_text_bigram_ce" -> BigramCeSql,
-
-    // NB log-odds: add-one smoothed class-conditional token LMs over the
-    // shared vocabulary, identical parenthesization; evidence sum routed
-    // through DECIMAL(38,6); prior added in double AFTER the cast; 6-dp
-    // via the VARCHAR hop; pred compares the rounded value
-    "q_text_nb_logodds" -> NbLogOddsSql,
-
-    // stored/merged-model scoring must equal the fused train+score plan:
-    // both stored queries share the fused oracles VERBATIM — the
-    // equality IS the check (gram/term counts over disjoint doc sets
-    // are additive; totals and smoothing derive from the model table)
-    "q_text_bigram_ce_stored" -> BigramCeSql,
-    "q_text_nb_stored" -> NbLogOddsSql,
-    // DSIR hashed-n-gram importance weights: feature stream = unigrams
-    // UNION ALL space-joined bigrams (zipped shifted-slice unnests);
-    // portable md5-window bucket hash ('0x'||hex ≡ Spark conv(...,16,10));
-    // add-one smoothed bucket LLR, evidence through DECIMAL(38,6), 6-dp
-    // via the VARCHAR hop
-    "q_text_dsir" -> DsirSql,
-
-    // merged-model scoring must equal the one-shot model: the
-    // incremental query shares the ONE-SHOT oracle text verbatim — the
-    // equality IS the check (counts over disjoint doc sets are additive)
-    "q_text_dsir_incremental" -> DsirSql,
-
-    // streaming DSIR scoring: the drained complete-mode state vs the
-    // instance-level batch dual (see StreamDsirSql scaladoc)
-    "q_stream_dsir" -> StreamDsirSql,
-
-    // the composed training-mix pipeline: the three scorer texts above
-    // run verbatim as derived-table CTEs (DuckDB allows WITH inside a
-    // subquery), then keep (pred AND ce<=3.4) → Gumbel-top-k on the
-    // log-weight (log-space softmax draw, same md5 uniform as Spark) →
-    // md5-fraction split; every threshold compares the scorers'
-    // 6-dp-rounded outputs so the kept set is engine-exact
-    "q_pipeline_training_mix" -> TrainingMixSql,
-
-    // the threshold-select twin must pick the IDENTICAL set: it shares
-    // the heap form's oracle text verbatim — the equality is the check
-    "q_pipeline_training_mix_threshold" -> TrainingMixSql,
-
-    // BM25: Lucene idf + saturation/length normalization, identical
-    // parenthesization both engines; per-doc sum through DECIMAL(38,6)
-    "q_text_bm25" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-                       FROM documents),
-              st AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, CAST(SUM(len(t)) AS DOUBLE) AS tl
-                     FROM toks),
-              tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf
-                     FROM (SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM toks)
-                     WHERE term IN ('spark', 'window', 'merge', 'stream')
-                     GROUP BY 1, 2, 3),
-              dft AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-              sc AS (SELECT doc_id,
-                            ln(1.0 + (st.n - CAST(df AS DOUBLE) + 0.5)
-                                     / (CAST(df AS DOUBLE) + 0.5))
-                            * (CAST(tf AS DOUBLE) * 2.2)
-                            / (CAST(tf AS DOUBLE)
-                               + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / (st.tl / st.n)))) AS s
-                     FROM tf JOIN dft USING (term) CROSS JOIN st)
-         SELECT doc_id, COUNT(*) AS n_matched,
-                round(CAST(SUM(CAST(s AS DECIMAL(38,6))) AS DOUBLE), 6) AS bm25
-         FROM sc GROUP BY doc_id
-         ORDER BY bm25 DESC, doc_id LIMIT 15""",
-
-    // count-scale sums (see TextAnalysis.tokenDivergence): per-term
-    // decimal routing at O(count) magnitude, closed-form remainder in
-    // identical double parenthesization
-    "q_text_divergence" ->
-      """WITH ta AS (SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS term
-                     FROM documents WHERE doc_id % 2 = 0),
-              tb AS (SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS term
-                     FROM documents WHERE doc_id % 2 = 1),
-              ga AS (SELECT term, COUNT(*) AS cnt_a FROM ta GROUP BY term),
-              gb AS (SELECT term, COUNT(*) AS cnt_b FROM tb GROUP BY term),
-              j AS (SELECT COALESCE(ga.cnt_a, 0) AS cnt_a,
-                           COALESCE(gb.cnt_b, 0) AS cnt_b
-                    FROM ga FULL JOIN gb ON ga.term = gb.term),
-              s AS (SELECT COUNT(*) AS vocab,
-                           SUM(cnt_a) AS na, SUM(cnt_b) AS nb,
-                           SUM(CAST((CAST(cnt_a AS DOUBLE) + 1.0)
-                                 * ln((CAST(cnt_a AS DOUBLE) + 1.0)
-                                      / (CAST(cnt_b AS DOUBLE) + 1.0)) AS DECIMAL(38,6))) AS s1,
-                           SUM(CAST((CAST(cnt_a AS DOUBLE) + 1.0)
-                                 * ln(CAST(cnt_b AS DOUBLE) + 1.0) AS DECIMAL(38,6))) AS s2
-                    FROM j)
-         SELECT CAST(vocab AS BIGINT) AS vocab,
-                CAST(na AS BIGINT) AS n_tokens_a,
-                CAST(nb AS BIGINT) AS n_tokens_b,
-                round(CAST(s1 AS DOUBLE) / (CAST(na AS DOUBLE) + CAST(vocab AS DOUBLE))
-                      + ln((CAST(nb AS DOUBLE) + CAST(vocab AS DOUBLE))
-                           / (CAST(na AS DOUBLE) + CAST(vocab AS DOUBLE))), 6) AS kl_ab,
-                round(ln(CAST(nb AS DOUBLE) + CAST(vocab AS DOUBLE))
-                      - CAST(s2 AS DOUBLE) / (CAST(na AS DOUBLE) + CAST(vocab AS DOUBLE)), 6) AS cross_entropy_ab
-         FROM s""",
-
-    // KL_g = (U_g − T)/A_g + ln(B/A_g): per-present-term u rows +
-    // one corpus scalar T — the same closed form as the Spark side
-    "q_text_divergence_group" ->
-      """WITH toks AS (SELECT lang, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS term
-                       FROM documents),
-              gt AS (SELECT lang, term, COUNT(*) AS cgt FROM toks GROUP BY 1, 2),
-              ct AS (SELECT term, SUM(cgt) AS ct FROM gt GROUP BY term),
-              tot AS (SELECT COUNT(*) AS v, SUM(ct) AS n,
-                             SUM(CAST(ln(CAST(ct AS DOUBLE) + 1.0) AS DECIMAL(38,6))) AS t
-                      FROM ct),
-              pg AS (SELECT lang, SUM(cgt) AS n_tokens,
-                            SUM(CAST((CAST(cgt AS DOUBLE) + 1.0)
-                                  * ln((CAST(cgt AS DOUBLE) + 1.0)
-                                       / (CAST(ct AS DOUBLE) + 1.0))
-                                  + ln(CAST(ct AS DOUBLE) + 1.0) AS DECIMAL(38,6))) AS u
-                     FROM gt JOIN ct USING (term) GROUP BY lang)
-         SELECT lang, CAST(n_tokens AS BIGINT) AS n_tokens,
-                round((CAST(u AS DOUBLE) - CAST(t AS DOUBLE))
-                        / (CAST(n_tokens AS DOUBLE) + CAST(v AS DOUBLE))
-                      + ln((CAST(n AS DOUBLE) + CAST(v AS DOUBLE))
-                           / (CAST(n_tokens AS DOUBLE) + CAST(v AS DOUBLE))), 6) AS kl_vs_corpus
-         FROM pg CROSS JOIN tot ORDER BY lang""",
-
-    "q_decontaminate" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-                       FROM documents),
-              ser AS (SELECT unnest(generate_series(1, (SELECT COALESCE(MAX(len(t)), 1) FROM toks))) AS i),
-              sh AS (SELECT DISTINCT doc_id,
-                            t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4] AS s
-                     FROM toks CROSS JOIN ser WHERE len(t) >= 5 AND i <= len(t) - 4),
-              probe AS (SELECT DISTINCT s FROM sh WHERE doc_id % 20 = 0),
-              corpus AS (SELECT doc_id, s FROM sh WHERE doc_id % 20 <> 0)
-         SELECT c.doc_id, COUNT(DISTINCT c.s) AS n_shared
-         FROM corpus c JOIN probe p ON c.s = p.s
-         GROUP BY 1 ORDER BY doc_id""",
-
-    // split reproduced from the same md5 arithmetic, then the shingle
-    // leakage join — the full composition hash-verified
-    "q_split_leakage" ->
-      """WITH u AS (SELECT doc_id, text,
-                CAST(CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS BIGINT) AS DOUBLE)
-                  / 4503599627370496.0 AS u
-              FROM documents),
-         sp AS (SELECT doc_id, text,
-                  CASE WHEN u < 0.1 THEN 'test' WHEN u < 0.2 THEN 'val'
-                       ELSE 'train' END AS split
-                FROM u),
-         toks AS (SELECT doc_id, split,
-                    list_filter(string_split(text, ' '), x -> x <> '') AS t
-                  FROM sp),
-         ser AS (SELECT unnest(generate_series(1, (SELECT COALESCE(MAX(len(t)), 1) FROM toks))) AS i),
-         sh AS (SELECT DISTINCT doc_id, split,
-                  t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4] AS s
-                FROM toks CROSS JOIN ser WHERE len(t) >= 5 AND i <= len(t) - 4),
-         probe AS (SELECT DISTINCT s FROM sh WHERE split = 'test'),
-         corpus AS (SELECT doc_id, s FROM sh WHERE split = 'train')
-         SELECT c.doc_id, COUNT(DISTINCT c.s) AS n_shared
-         FROM corpus c JOIN probe p ON c.s = p.s
-         GROUP BY 1 ORDER BY doc_id""",
-
-    // Bloom prefilter + exact confirm ≡ the exact join: same oracle text
-    "q_decontaminate_bloom" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-                       FROM documents),
-              ser AS (SELECT unnest(generate_series(1, (SELECT COALESCE(MAX(len(t)), 1) FROM toks))) AS i),
-              sh AS (SELECT DISTINCT doc_id,
-                            t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4] AS s
-                     FROM toks CROSS JOIN ser WHERE len(t) >= 5 AND i <= len(t) - 4),
-              probe AS (SELECT DISTINCT s FROM sh WHERE doc_id % 20 = 0),
-              corpus AS (SELECT doc_id, s FROM sh WHERE doc_id % 20 <> 0)
-         SELECT c.doc_id, COUNT(DISTINCT c.s) AS n_shared
-         FROM corpus c JOIN probe p ON c.s = p.s
-         GROUP BY 1 ORDER BY doc_id""",
-
-    "q_text_chunks" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-                       FROM documents),
-              d AS (SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) > 0),
-              ser AS (SELECT unnest(generate_series(0,
-                        (SELECT COALESCE(MAX((n - 1) // 30), 0) FROM d))) AS ci),
-              ch AS (SELECT doc_id, ci, ci * 30 AS start_tok,
-                            LEAST(40, n - ci * 30) AS n_tokens, t
-                     FROM d CROSS JOIN ser
-                     WHERE ci <= (n - 1) // 30 AND (ci = 0 OR ci * 30 + 10 < n))
-         SELECT doc_id, CAST(ci AS INTEGER) AS chunk_idx,
-                CAST(start_tok AS INTEGER) AS start_tok,
-                CAST(n_tokens AS INTEGER) AS n_tokens,
-                md5(array_to_string(t[start_tok + 1 : start_tok + n_tokens], ' ')) AS chunk_md5
-         FROM ch ORDER BY doc_id, chunk_idx""",
-
-    "q_text_packing" ->
-      """WITH t AS (SELECT doc_id,
-                           CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tokens
-                    FROM documents),
-              c AS (SELECT doc_id, n_tokens,
-                           SUM(n_tokens) OVER (ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-                    FROM t)
-         SELECT doc_id, n_tokens, CAST((cum - n_tokens) // 2000 AS BIGINT) AS bin_id
-         FROM c ORDER BY doc_id""",
-
-    "q_text_corpus_gate" -> CorpusGateOracle,
-
-    // identical agreement surface: the drained stream must equal batch
-    "q_stream_corpus_gate" -> CorpusGateOracle,
-
-    "q_text_packing_sharded" ->
-      """WITH t AS (SELECT doc_id, lang,
-                           CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tokens
-                    FROM documents),
-              c AS (SELECT doc_id, lang, n_tokens,
-                           SUM(n_tokens) OVER (PARTITION BY lang
-                             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-                    FROM t)
-         SELECT doc_id, lang, n_tokens, CAST((cum - n_tokens) // 2000 AS BIGINT) AS bin_id
-         FROM c ORDER BY doc_id""",
-
-    "q_pipeline_corpus_prep" ->
-      """WITH t AS (SELECT doc_id, text,
-                           list_filter(string_split(text, ' '), x -> x <> '') AS tk
-                    FROM documents),
-              q AS (SELECT doc_id, CAST(len(tk) AS INTEGER) AS n_tokens,
-                           CAST(length(replace(text, ' ', '')) AS DOUBLE)
-                             / CAST(len(tk) AS DOUBLE) AS avg_token_len,
-                           CAST(len(list_filter(tk, x -> x IN ('the','a','is','and','of','to','in'))) AS DOUBLE)
-                             / CAST(len(tk) AS DOUBLE) AS stop_ratio
-                    FROM t),
-              qs AS (SELECT doc_id, n_tokens,
-                            greatest(0.0, least(1.0,
-                              stop_ratio * 0.3
-                              + least(1.0, CAST(n_tokens AS DOUBLE) / 100.0) * 0.4
-                              + least(1.0, avg_token_len / 8.0) * 0.3)) AS quality_score
-                     FROM q),
-              ser AS (SELECT unnest(generate_series(1, (SELECT COALESCE(MAX(len(tk)), 1) FROM t))) AS i),
-              bgr AS (SELECT doc_id, tk[i] || ' ' || tk[i + 1] AS b
-                      FROM t CROSS JOIN ser WHERE i <= len(tk) - 1),
-              rp0 AS (SELECT doc_id, COUNT(*) AS nb, COUNT(DISTINCT b) AS nub
-                      FROM bgr GROUP BY doc_id),
-              rp AS (SELECT t.doc_id,
-                            COALESCE(round(CAST(rp0.nb - rp0.nub AS DOUBLE)
-                                           / CAST(rp0.nb AS DOUBLE), 6), 0.0) AS rep_ratio
-                     FROM t LEFT JOIN rp0 ON t.doc_id = rp0.doc_id),
-              lh AS (SELECT doc_id,
-                            CAST(len(list_filter(tk, x -> x IN ('the','a','is','and','of'))) AS INTEGER) AS en_hits,
-                            CAST(len(list_filter(tk, x -> x IN ('el','la','de','que','y'))) AS INTEGER) AS es_hits,
-                            CAST(len(list_filter(tk, x -> x IN ('le','les','des','et','une'))) AS INTEGER) AS fr_hits,
-                            CAST(len(list_filter(tk, x -> x IN ('der','die','und','das','ist'))) AS INTEGER) AS de_hits
-                     FROM t),
-              ld AS (SELECT doc_id,
-                            CASE WHEN en_hits >= es_hits AND en_hits >= fr_hits
-                                  AND en_hits >= de_hits AND en_hits > 0 THEN 'en'
-                                 WHEN es_hits >= fr_hits AND es_hits >= de_hits
-                                  AND es_hits > 0 THEN 'es'
-                                 WHEN fr_hits >= de_hits AND fr_hits > 0 THEN 'fr'
-                                 WHEN de_hits > 0 THEN 'de'
-                                 ELSE 'und' END AS detected
-                     FROM lh),
-              j AS (SELECT qs.doc_id, qs.n_tokens, rp.rep_ratio, qs.quality_score, ld.detected
-                    FROM qs JOIN rp ON qs.doc_id = rp.doc_id
-                            JOIN ld ON qs.doc_id = ld.doc_id),
-              g AS (SELECT *, CASE WHEN n_tokens < 40 THEN 'too_short'
-                                   WHEN rep_ratio > 0.1 THEN 'too_repetitive'
-                                   WHEN quality_score < 0.55 THEN 'low_quality'
-                                   WHEN detected NOT IN ('en','es','fr','de') THEN 'lang'
-                              END AS drop_reason
-                    FROM j),
-              k AS (SELECT g.doc_id, d.lang, d.text, g.n_tokens
-                    FROM g JOIN documents d ON d.doc_id = g.doc_id
-                    WHERE g.drop_reason IS NULL),
-              canon AS (SELECT md5(text) AS h, MIN(doc_id) AS kept_id
-                        FROM k GROUP BY 1),
-              s AS (SELECT k.doc_id, k.lang, k.n_tokens
-                    FROM k JOIN canon ON k.doc_id = canon.kept_id),
-              n AS (SELECT lang, COUNT(*) AS n FROM s GROUP BY 1),
-              w AS (SELECT lang, CAST(round(sqrt(CAST(n AS DOUBLE)), 6)
-                                      AS DECIMAL(18,6)) AS w FROM n),
-              tt AS (SELECT SUM(w) AS ws FROM w),
-              qq AS (SELECT lang, CAST(floor(120 * CAST(w AS DOUBLE)
-                                             / CAST(ws AS DOUBLE) + 1e-9)
-                                       AS BIGINT) AS quota
-                     FROM w CROSS JOIN tt),
-              r AS (SELECT doc_id, lang, n_tokens,
-                           ROW_NUMBER() OVER (PARTITION BY lang
-                             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-                    FROM s)
-         SELECT r.doc_id, r.lang, r.n_tokens
-         FROM r JOIN qq ON qq.lang = r.lang
-         WHERE r.rn <= qq.quota
-         ORDER BY doc_id""",
-
-    "q_mix_temperature" ->
-      """WITH n AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY 1),
-              w AS (SELECT lang, CAST(round(sqrt(CAST(n AS DOUBLE)), 6)
-                                      AS DECIMAL(18,6)) AS w FROM n),
-              t AS (SELECT SUM(w) AS ws FROM w),
-              q AS (SELECT lang, CAST(floor(300 * CAST(w AS DOUBLE)
-                                            / CAST(ws AS DOUBLE) + 1e-9)
-                                      AS BIGINT) AS quota
-                    FROM w CROSS JOIN t),
-              r AS (SELECT doc_id, d.lang,
-                           ROW_NUMBER() OVER (PARTITION BY d.lang
-                             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-                    FROM documents d)
-         SELECT r.doc_id, r.lang
-         FROM r JOIN q ON q.lang = r.lang
-         WHERE r.rn <= q.quota
-         ORDER BY doc_id""",
-
-    "q_sample_mix" ->
-      """WITH r AS (SELECT doc_id, lang,
-                           ROW_NUMBER() OVER (PARTITION BY lang
-                             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-                    FROM documents)
-         SELECT doc_id, lang FROM r
-         WHERE (lang = 'en' AND rn <= 100) OR (lang = 'es' AND rn <= 40)
-            OR (lang = 'fr' AND rn <= 40) OR (lang = 'de' AND rn <= 20)
-         ORDER BY doc_id""",
-
-    "q_sample_stratified" ->
-      """WITH r AS (SELECT doc_id, source, lang,
-                           ROW_NUMBER() OVER (PARTITION BY source
-                             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-                    FROM documents)
-         SELECT doc_id, source, lang FROM r WHERE rn <= 50 ORDER BY doc_id""",
-
-    "q_sql_exists" -> AgentExistsSql,
-
-    "q_scd2_versions" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id FROM events
-                     WHERE user_id < 50)
-         SELECT user_id,
-                CAST(ROW_NUMBER() OVER w AS INTEGER) AS version,
-                ts_us AS valid_from,
-                LEAD(ts_us) OVER w AS valid_to,
-                LEAD(ts_us) OVER w IS NULL AS is_current
-         FROM ev
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-         ORDER BY user_id, version""",
-
-    "q_s15_describe_store" ->
-      """SELECT table_name AS tbl, column_name AS col,
-                CAST(ordinal_position AS BIGINT) AS ord,
-                CASE WHEN table_name = 'events' AND column_name = 'ts'
-                       THEN 'long' -- engine contract: epoch-nanos Long
-                     WHEN data_type = 'BIGINT'    THEN 'long'
-                     WHEN data_type = 'INTEGER'   THEN 'int'
-                     WHEN data_type = 'DOUBLE'    THEN 'double'
-                     WHEN data_type = 'FLOAT'     THEN 'float'
-                     WHEN data_type = 'VARCHAR'   THEN 'string'
-                     WHEN data_type = 'DATE'      THEN 'date'
-                     WHEN data_type IN ('TIMESTAMP', 'TIMESTAMP_NS')
-                       THEN 'timestamp'
-                     WHEN data_type = 'FLOAT[]'   THEN 'array<float>'
-                     ELSE lower(data_type) END AS dtype
-         FROM information_schema.columns
-         WHERE table_name IN ('region','nation','customer','supplier','part',
-                              'orders','lineitem','events','documents',
-                              'embeddings')
-         ORDER BY tbl, ord"""
-  ) ++ SqlFuzz.cases.toMap ++ // §2.11 fuzz family: oracle = the same SQL text
-    // block H (nested/array/JSON): dual-text — the oracle is the same
-    // query re-spelled in DuckDB's array dialect (see SqlFuzz.dualCases)
-    SqlFuzz.dualCases.map { case (n, _, duckSql) => n -> duckSql }.toMap
+  /** For each query, the family that declares it. */
+  lazy val familyOf: Map[String, String] = index.map { case (n, (fam, _)) => n -> fam }
 }

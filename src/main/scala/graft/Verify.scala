@@ -88,17 +88,18 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(m: scala.collection.Map[String, String]): String =
+      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
+    // the family that declares each query: tools/check.py groups its
+    // failures by it
+    Files.writeString(Paths.get(s"$outDir/families.json"), obj(SparkEntry.familyOf))
     // Explicit failure ledger (round-6 verdict #2): a thrown query must
     // leave a machine-readable `err` record in the artifact directory —
     // absence from the correctness JSON must never read as "all green".
     // Written on every run (empty object when clean) so a stale ledger
     // from a prior broken run can't outlive the fix.
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/errors.json"), obj(errors))
     if (errors.nonEmpty) {
       System.err.println(
         s"[verify] ${errors.size} queries THREW (see $outDir/errors.json): " +

@@ -197,14 +197,6 @@ object Dedup {
       .select(col(idCol), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
-  /** Candidate pairs from LSH buckets (distinct over bands). */
-  def lshCandidates(bandKeys: DataFrame, idCol: String): DataFrame = {
-    val a = bandKeys.select(col("band"), col("key"), col(idCol).as("id_a"))
-    val b = bandKeys.select(col("band"), col("key"), col(idCol).as("id_b"))
-    a.join(b, Seq("band", "key")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
-
   /** SimHash near-dup pairs: band the 64-bit fingerprint into 4×16-bit
     * chunks (a pair within Hamming distance ≤ 12 of uniformly-spread
     * differing bits shares some chunk with high probability), candidate on

@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Skew-handling patterns for 100 TB shuffles. AQE's skew split covers
   * sort-merge joins automatically; these are the explicit forms for the
-  * cases AQE doesn't reach (aggregations with a hot key, broadcast-
-  * ineligible lookup sides).
+  * case AQE doesn't reach, an aggregation with a hot key.
   */
 object Skew {
 
@@ -64,18 +63,4 @@ object Skew {
            count(lit(1)).as("__pn"))
       .groupBy(col(keyCol))
       .agg(sum(col("__partial")).as("total"), sum(col("__pn")).as("n"))
-
-  /** Salted join for a skewed fact key against a non-broadcastable lookup:
-    * fact rows get a deterministic content-hash salt in [0, saltBuckets);
-    * the lookup side is replicated once per salt value, so the hot key's
-    * rows spread over `saltBuckets` reducers instead of one. Equi-join
-    * semantics preserved exactly (inner join on the original keys).
-    */
-  def saltedJoin(fact: DataFrame, lookup: DataFrame, keys: Seq[String],
-                 saltBuckets: Int): DataFrame = {
-    val saltedFact = fact.withColumn("__salt", contentSalt(fact, saltBuckets))
-    val replicatedLookup = lookup.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltBuckets - 1)).cast("array<long>")))
-    saltedFact.join(replicatedLookup, keys :+ "__salt").drop("__salt")
-  }
 }

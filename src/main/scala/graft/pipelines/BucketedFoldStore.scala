@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * per-prefix watermark ([[compactLedger]]). The per-batch rewrite is
   * O(delta), not O(state): the state is hash-bucketed on the fold keys
   * and a fold rewrites ONLY the buckets the delta touches — the
-  * `StreamingUpsert.writerPartitioned` touched-partition discipline,
-  * made atomic with a single MANIFEST swap instead of per-partition
-  * dynamic overwrite. A store small enough to rewrite whole per fold
+  * touched-partition discipline of a dynamic partition overwrite, made
+  * atomic with a single MANIFEST swap instead of per-partition
+  * overwrites. A store small enough to rewrite whole per fold
   * (a quantile sketch) simply uses one bucket:
   *
   * {{{

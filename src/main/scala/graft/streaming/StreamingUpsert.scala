@@ -57,50 +57,6 @@ object StreamingUpsert {
       ()
     }
 
-  /** PARTITIONED-store sink — the 100 TB shape the whole-table
-    * [[writer]]'s scaladoc promised, now code: the store is partitioned
-    * by `partCol` (keys must be confined to their partition, e.g.
-    * (event_id, date) keyed by something carrying the date) and each
-    * micro-batch rewrites ONLY the partitions it touches via dynamic
-    * partition overwrite — the `backfillRange` (S13) discipline. Per
-    * batch: one distinct over the batch's partition values (tiny), a
-    * partition-pruned store read, one keyed merge shuffle over
-    * (touched partitions ∪ batch), and file rewrites bounded by the
-    * touched partitions, never the table.
-    *
-    * The merged rows are staged to DURABLE storage before the
-    * overwrite — the overwrite cannot read the path it is replacing,
-    * and a localCheckpoint's executor-local blocks would not survive
-    * an executor loss mid-write. Dynamic partition overwrite is a
-    * per-WRITE option, never a session conf: setting
-    * `spark.sql.sources.partitionOverwriteMode` would change every later
-    * partitioned overwrite in the same session. Trade-off vs
-    * [[writer]]: the swap is per-partition, not whole-table-atomic (the
-    * lakehouse MERGE shape without a transaction log) — the same
-    * contract the batch fact store accepts for backfills;
-    * last-write-wins and replay idempotence are unchanged.
-    */
-  def writerPartitioned(spark: SparkSession, stream: DataFrame,
-                        storePath: String, keys: Seq[String],
-                        versionCol: String, partCol: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val b = batch.persist()
-      try {
-        val touched = b.select(partCol).distinct().collect().map(_.get(0))
-        if (touched.nonEmpty) {
-          val base = BoxOfficePipeline.readOrEmpty(spark, storePath, b)
-            .filter(col(partCol).isin(touched.toIndexedSeq: _*))
-          val merged = Upsert.upsert(base, b, keys, col(versionCol))
-          val staging = storePath + ".batchstage"
-          merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging)
-          graft.pipelines.StoreTable.read(spark, staging)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partCol).parquet(storePath)
-        }
-      } finally { b.unpersist(); () }
-    }
-
   /** CDC sink — [[writer]]'s tombstone-aware sibling: each micro-batch
     * of an I/U/D change feed folds into the store via
     * [[graft.operators.Upsert.applyCdc]] (latest change per key by
@@ -125,16 +81,6 @@ object StreamingUpsert {
                keys: Seq[String], opCol: String, seqCol: String,
                checkpoint: String): StreamingQuery =
     writerCdc(spark, stream, storePath, keys, opCol, seqCol)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** [[writerPartitioned]] started with an AvailableNow drain. */
-  def startPartitioned(spark: SparkSession, stream: DataFrame,
-                       storePath: String, keys: Seq[String],
-                       versionCol: String, partCol: String,
-                       checkpoint: String): StreamingQuery =
-    writerPartitioned(spark, stream, storePath, keys, versionCol, partCol)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()

@@ -51,7 +51,11 @@ class BoxOfficePipelineSpec extends SparkSpec {
     val repl = rawBoxoffice(("m1", "a", "2024-12-24", "2025-01-01", 99.0))
       .withColumn("open_dt", to_date(col("open_dt")))
       .withColumn("elapsed_dt", datediff(col("target_dt"), col("open_dt")))
+    // dynamic overwrite is a per-write option: the session conf stays put
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.get(modeKey)
     BoxOfficePipeline.backfillRange(spark, root, repl)
+    assert(spark.conf.get(modeKey) == modeBefore, s"backfill changed $modeKey")
     val store = spark.read.parquet(s"$root/boxoffice")
     assert(store.count() == 2) // Jan 2 untouched
     assert(store.filter(col("target_dt") === Date.valueOf("2025-01-01"))

@@ -98,8 +98,12 @@ class DedupSpec extends SparkSpec {
     val df = Seq((1L, near1), (2L, near1)).toDF("doc_id", "text")
     val sh = Dedup.wordShingles(df, "doc_id", "text", 5)
     val bk = Dedup.lshBandKeys(Dedup.minhashSignatures(sh, "doc_id", 16), "doc_id", 16, 4)
-    val cands = Dedup.lshCandidates(bk, "doc_id").collect()
-    assert(cands.length == 1)
+    val byDoc = bk.collect()
+      .groupBy(_.getAs[Long]("doc_id"))
+      .map { case (d, rs) => d -> rs.map(r => (r.getAs[Int]("band"), r.getAs[String]("key"))).toSeq.sorted }
+    assert(byDoc.keySet == Set(1L, 2L))
+    assert(byDoc(1L).map(_._1) == Seq(0, 1, 2, 3))
+    assert(byDoc(1L) == byDoc(2L))
   }
 
   test("connectedComponents groups chained pairs into one cluster (min-id canonical)") {

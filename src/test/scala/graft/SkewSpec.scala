@@ -23,17 +23,6 @@ class SkewSpec extends SparkSpec {
     }
   }
 
-  test("salted join equals plain join (row multiset)") {
-    val fact = (1 to 500).map(i => (if (i % 5 == 0) i.toLong else 1L, i))
-      .toDF("k", "v").repartition(4)
-    val lookup = (1L to 500L).map(k => (k, s"name$k")).toDF("k", "name")
-    val salted = Skew.saltedJoin(fact, lookup, Seq("k"), saltBuckets = 8)
-      .select("k", "v", "name").orderBy("k", "v").collect()
-    val plain = fact.join(lookup, Seq("k"))
-      .select("k", "v", "name").orderBy("k", "v").collect()
-    assert(salted.toSeq == plain.toSeq)
-  }
-
   test("map columns don't break the salt, and a map-carrying struct still spreads by its other fields") {
     import org.apache.spark.sql.functions._
     // xxhash64 rejects MapType at analysis time: the salt must skip the

@@ -83,7 +83,7 @@ class StreamingSpec extends SparkSpec {
     data.repartition(2).write.parquet(s"$dir/events")
     val op: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       src => {
-        val ev = src.as[SparkEntry.EventLatest]
+        val ev = src.as[faces.Fixtures.EventLatest]
         LatestPerKeyStream.latestByVersion(ev)(
           e => (e.user_id, e.event_type), e => (e.ts_us, e.event_id)).toDF()
       }

@@ -156,7 +156,7 @@ class TablesSchemaSpec extends SparkSpec {
       val ev = Tables.normalizeEventTs(src) // Long passthrough
         .select(col("user_id"), col("event_type"), col("event_id"),
           expr("ts div 1000").as("ts_us"), col("value"))
-        .as[SparkEntry.EventLatest]
+        .as[faces.Fixtures.EventLatest]
       streaming.LatestPerKeyStream.latestByVersion(ev)(
         e => (e.user_id, e.event_type), e => (e.ts_us, e.event_id)).toDF()
     }
@@ -174,7 +174,7 @@ class TablesSchemaSpec extends SparkSpec {
       val ev = Tables.normalizeEventTs(src)
         .select(col("user_id"), col("event_type"), col("event_id"),
           expr("ts div 1000").as("ts_us"), col("value"))
-        .as[SparkEntry.EventLatest]
+        .as[faces.Fixtures.EventLatest]
       streaming.LatestPerKeyStream.latestByVersion(ev)(
         e => (e.user_id, e.event_type), e => (e.ts_us, e.event_id)).toDF()
     }

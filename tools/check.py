@@ -130,6 +130,20 @@ if fresh is not None:
           f"{len(stale)} stale dumps were SKIPPED, not blessed — rerun an "
           f"unfiltered Verify for a full compare")
 
+# Per-family tally for each family with a failure or a stale dump, from
+# the name -> family map Verify writes next to oracle_sql.json. A dump
+# without it predates the family tags: no grouping then, and no failure.
+families_path = f"{OUT}/families.json"
+if os.path.exists(families_path):
+    family = json.load(open(families_path))
+    for fam in sorted({family[n] for n in fails + stale}):
+        names = [n for n in oracle if family[n] == fam]
+        fam_stale = sum(n in stale for n in names)
+        fam_compared = len(names) - fam_stale
+        fam_passed = fam_compared - sum(n in fails for n in names)
+        print(f"family {fam}: {fam_passed}/{fam_compared}"
+              + (f" ({fam_stale} stale skipped)" if fam_stale else ""))
+
 compared = len(oracle) - len(stale)
 print(f"\n{compared - len(fails)}/{compared} compared queries pass"
       + (f" ({len(stale)} stale skipped)" if stale else ""))

@@ -11,8 +11,9 @@ plus the relational shapes the agent emits (GROUP BY, window row_number,
 EXISTS, top-k, joins, unions), renders each as ONE SQL text that parses
 and evaluates identically in Spark SQL and DuckDB, sanity-runs it
 against DuckDB on sf0.01, and emits src/main/scala/graft/SqlFuzz.scala —
-whose cases SparkEntry merges into queries/oracleSql so the driver's
-correctness gate hash-compares every one.
+whose cases faces/SqlFaces declares as faces (SparkEntry.queries and
+oracleSql derive from them) so the driver's correctness gate
+hash-compares every one.
 
 Dialect-portability rules the grammar enforces (each is a REAL
 divergence between the engines, pinned here by construction):
