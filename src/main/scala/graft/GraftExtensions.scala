@@ -17,8 +17,9 @@ import graft.functions._
   * .injectFunction`), as opposed to the per-session temp registration the
   * operators do lazily for themselves. Injection happens at session
   * build, survives `newSession()`, and needs no driver code changes: the
-  * SQL surface (§2.11) can call `simhash_agg`, `dot_fixed_point`,
-  * `shingle_hash64`, `lsh_bucket_bits`, `contains_ignoring_separators`
+  * SQL surface (§2.11) can call `simhash`, `dot_fixed_point`,
+  * `shingle_hash64`, `shingle_hash64_pos`, `lsh_bucket_bits`,
+  * `contains_ignoring_separators`, `bloom_filter_agg` and `might_contain`
   * directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -28,10 +29,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
-      FunctionIdentifier(SimhashAgg.FnName),
-      info(SimhashAgg.FnName,
-        "simhash_agg(md5hex) - 64-char '0'/'1' SimHash fingerprint of a group of md5-hex hashes"),
-      (exprs: Seq[Expression]) => SimhashAgg(exprs.head).toAggregateExpression()))
+      FunctionIdentifier(Simhash.FnName),
+      info(Simhash.FnName,
+        "simhash(tokens) - 64-char '0'/'1' SimHash fingerprint of a string array (over a group: simhash(collect_list(tok)))"),
+      (exprs: Seq[Expression]) => Simhash.fromExprs(exprs)))
     ext.injectFunction((
       FunctionIdentifier(DotFixedPoint.FnName),
       info(DotFixedPoint.FnName,

@@ -64,8 +64,7 @@ object DotFixedPoint {
   /** Elements must stay below 2³⁴ in magnitude (≈16 in float terms at the
     * ×10⁹ scale) — past that the decomposed products themselves can wrap.
     * The function is injected into the open SQL surface, so the contract
-    * is enforced, not just documented (same reasoning as SimhashAgg's
-    * runtime guards).
+    * is enforced, not just documented.
     */
   private final val MaxAbs = 1L << 34
 

@@ -162,41 +162,6 @@ object Dedup {
       .filter(col("containment") >= threshold)
       .select("id_a", "id_b", "n_a", "n_b", "shared", "containment")
 
-  /** MinHash signatures: each shingle is md5-hashed ONCE; hash function i
-    * is the 16-hex-char window of the doubled digest starting at offset
-    * 2i, and the signature is the lexicographic MIN of that window across
-    * the doc's shingles. One digest + cheap substrings instead of
-    * numHashes digests per shingle (16× less hashing), computed as
-    * parallel aggregate expressions in one pass — map-side partial
-    * aggregation reduces each partition to one row per doc before the
-    * shuffle. Windows of one digest are correlated across i (slightly
-    * less independent bands than true MinHash) — acceptable because LSH
-    * only generates candidates and the exact-Jaccard verification step
-    * decides; still portable to any engine with md5/substring.
-    */
-  def minhashSignatures(shingles: DataFrame, idCol: String, numHashes: Int): DataFrame = {
-    require(numHashes <= 16, "windowed-md5 scheme supports up to 16 hash functions")
-    val doubled = shingles.withColumn("__hh", concat(md5(col("s")), md5(col("s"))))
-    val aggs = (0 until numHashes).map(i =>
-      min(substring(col("__hh"), 1 + 2 * i, 16)).as(s"sig_$i"))
-    doubled.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** LSH banding: `numBands` keys per doc, each the md5 of that band's
-    * concatenated signature minima. Docs sharing any (band, key) are
-    * candidates — an equi-join, never a cross product.
-    */
-  def lshBandKeys(signatures: DataFrame, idCol: String,
-                  numHashes: Int, numBands: Int): DataFrame = {
-    val rows = numHashes / numBands
-    val bands = (0 until numBands).map { b =>
-      val sigCols = (b * rows until (b + 1) * rows).map(i => col(s"sig_$i"))
-      struct(lit(b).as("band"), md5(concat(sigCols: _*)).as("key"))
-    }
-    signatures.select(col(idCol), explode(array(bands: _*)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.key").as("key"))
-  }
-
   /** SimHash near-dup pairs: band the 64-bit fingerprint into 4×16-bit
     * chunks (a pair within Hamming distance ≤ 12 of uniformly-spread
     * differing bits shares some chunk with high probability), candidate on
@@ -424,16 +389,6 @@ object Dedup {
           sequence(lit(1), size(col("__t")) - (k - 1)),
           i => concat_ws(" ", slice(col("__t"), i, lit(k))))).as("sh"))
 
-  /** Full MinHash-LSH near-dup pipeline: shingle → sign → band → candidate
-    * → exact-Jaccard verify ≥ threshold.
-    *
-    * 100 TB shape: signatures, shingle counts and band keys are all
-    * computed map-side from the per-doc shingle array (higher-order
-    * functions, zero shuffles); the first exchange in the whole plan is
-    * the equi-join on (band, key) — whose input is numBands rows per doc —
-    * and only the surviving candidate pairs pay the exploded
-    * intersection join.
-    */
   /** Per-document MinHash-LSH index row: (id, n, sh, bands) with
     * `bands` = numBands (band, key) structs — everything computed
     * map-side from the shingle array, one narrow row per doc. This is
@@ -444,6 +399,8 @@ object Dedup {
   def minhashIndex(df: DataFrame, idCol: String, textCol: String,
                    k: Int, numHashes: Int, numBands: Int): DataFrame = {
     require(numHashes % numBands == 0)
+    // window i and window i+16 of the doubled digest are the same string
+    require(numHashes <= 16, "windowed-md5 scheme supports up to 16 hash functions")
     val rows = numHashes / numBands
     val withArr = Stage.spread(df)
       .transform(wordShingleArray(_, idCol, textCol, k))
@@ -463,6 +420,16 @@ object Dedup {
     index.select(col(idCol), explode(col("bands")).as("bk"))
       .select(col(idCol), col("bk.band").as("band"), col("bk.key").as("key"))
 
+  /** Full MinHash-LSH near-dup pipeline: shingle → sign → band → candidate
+    * → exact-Jaccard verify ≥ threshold.
+    *
+    * 100 TB shape: signatures, shingle counts and band keys are all
+    * computed map-side from the per-doc shingle array (higher-order
+    * functions, zero shuffles); the first exchange in the whole plan is
+    * the equi-join on (band, key) — whose input is numBands rows per doc —
+    * and only the surviving candidate pairs pay the exploded
+    * intersection join.
+    */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       k: Int, numHashes: Int, numBands: Int,
                       threshold: Double): DataFrame = {

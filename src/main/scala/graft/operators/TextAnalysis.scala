@@ -1075,19 +1075,28 @@ object TextAnalysis {
     * digits (so the DuckDB oracle reproduces it bit-for-bit):
     * bit_j(token) = ((hexdigit_{j/4}(md5(token)) >> (3-j%4)) & 1);
     * simhash_j = [ Σ_tokens (2·bit_j − 1) ≥ 0 ].
-    * Output: 64-char '0'/'1' string, MSB-first by j.
+    * Output: 64-char '0'/'1' string, MSB-first by j. One row per input
+    * row that has a token; a null or tokenless text produces no row.
+    * Precondition: `idCol` is unique (every caller passes `documents`,
+    * keyed by `doc_id`) — rows sharing an id are not merged.
     *
-    * Scale: explode(tokens × 64) is map-side only; the per-doc reduce is
-    * one hash aggregation — linear in corpus size, no pairwise work.
+    * Scale: one native [[graft.functions.Simhash]] projection over each
+    * row's token array — no explode, no aggregate, and no exchange but
+    * `Stage.spreadLarge`'s spread of a large under-partitioned input;
+    * linear in corpus size, no pairwise work.
     */
   def withSimhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    Stage.spreadLarge(df).select(col(idCol), explode(tokens(col(textCol))).as("tok"))
-      .groupBy(col(idCol))
-      .agg(graft.functions.SimhashAgg(df.sparkSession, md5(col("tok"))).as("simhash"))
+    // "has a non-space char" ⟺ size(tokens(text)) > 0; filtering on the
+    // text keeps `tokens` at one evaluation per row — a size filter over
+    // the token array would be pushed below the projection and split the
+    // text twice
+    Stage.spreadLarge(df).filter(col(textCol).rlike("[^ ]"))
+      .select(col(idCol),
+        graft.functions.Simhash(df.sparkSession, tokens(col(textCol))).as("simhash"))
 
   /** Built-ins-only formulation of the same fingerprint (64 parallel
     * bit-balance sums) — kept as the cross-check for [[withSimhash]]'s
-    * native aggregate and as the shape the DuckDB oracle mirrors.
+    * native expression and as the shape the DuckDB oracle mirrors.
     */
   def withSimhashSql(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val perToken = df
@@ -1195,8 +1204,7 @@ object TextAnalysis {
   private def tokenized(df: DataFrame, textCol: String): DataFrame =
     OpCache.persist(
       Stage.spreadLarge(df)
-        .select(explode(tokens(col(textCol))).as("token"))
-        .filter(length(col("token")) > 0))
+        .select(explode(tokens(col(textCol))).as("token")))
 
   private def verifyCandidates(toks: DataFrame, cands: DataFrame,
                                k: Int): DataFrame = {

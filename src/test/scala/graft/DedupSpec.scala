@@ -96,14 +96,17 @@ class DedupSpec extends SparkSpec {
 
   test("identical docs always share all LSH bands") {
     val df = Seq((1L, near1), (2L, near1)).toDF("doc_id", "text")
-    val sh = Dedup.wordShingles(df, "doc_id", "text", 5)
-    val bk = Dedup.lshBandKeys(Dedup.minhashSignatures(sh, "doc_id", 16), "doc_id", 16, 4)
-    val byDoc = bk.collect()
-      .groupBy(_.getAs[Long]("doc_id"))
-      .map { case (d, rs) => d -> rs.map(r => (r.getAs[Int]("band"), r.getAs[String]("key"))).toSeq.sorted }
+    val idx = Dedup.minhashIndex(df, "doc_id", "text", 5, 16, 4)
+    val byDoc = idx.collect()
+      .map(r => r.getAs[Long]("doc_id") ->
+        r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("bands"))
+          .map(b => (b.getAs[Int]("band"), b.getAs[String]("key"))).sorted)
+      .toMap
     assert(byDoc.keySet == Set(1L, 2L))
     assert(byDoc(1L).map(_._1) == Seq(0, 1, 2, 3))
     assert(byDoc(1L) == byDoc(2L))
+    // window i+16 of the doubled md5 digest repeats window i
+    intercept[IllegalArgumentException](Dedup.minhashIndex(df, "doc_id", "text", 5, 32, 4))
   }
 
   test("connectedComponents groups chained pairs into one cluster (min-id canonical)") {

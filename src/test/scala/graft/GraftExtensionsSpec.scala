@@ -30,10 +30,19 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
-      val sim = spark.sql(
-        "SELECT simhash_agg(md5(t)) AS s FROM VALUES ('a'), ('b') AS v(t)")
+      val sim = spark.sql("SELECT simhash(array('a', 'b')) AS s")
         .collect().head.getString(0)
       assert(sim.length == 64 && sim.forall(c => c == '0' || c == '1'))
+      // the grouped form: one fingerprint over a group's token rows
+      val grouped = spark.sql(
+        "SELECT simhash(collect_list(t)) AS s FROM VALUES ('a'), ('b') AS v(t)")
+        .collect().head.getString(0)
+      assert(grouped == sim)
+      // null elements are skipped; no token at all → no fingerprint
+      assert(spark.sql("SELECT simhash(array('a', NULL, 'b')) AS s")
+        .collect().head.getString(0) == sim)
+      assert(spark.sql("SELECT simhash(CAST(array() AS array<string>)) AS s")
+        .collect().head.isNullAt(0))
 
       val dot = spark.sql(
         "SELECT CAST(dot_fixed_point(array(1000000000L, 2000000000L), array(1000000000L, 1000000000L)) AS DOUBLE) AS d")

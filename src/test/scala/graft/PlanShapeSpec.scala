@@ -178,6 +178,19 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
+  test("withSimhash: one row-local projection — no exchange, no aggregate, " +
+      "no generate") {
+    // a document's tokens are already in one row: the fingerprint must
+    // not explode them and re-group by id through a shuffle
+    assume(new java.io.File(dir).exists(), s"$dir not present")
+    val docs = Tables.load(spark, dir, "documents")
+    val p = graft.operators.TextAnalysis.withSimhash(docs, "doc_id", "text")
+      .queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), s"exchange in:\n$p")
+    assert(!p.contains("Aggregate"), s"aggregate in:\n$p")
+    assert(!p.contains("Generate"), s"generate in:\n$p")
+  }
+
   test("q21_waiting_supplier: both self-correlations are single hash joins " +
       "keyed by the fact key (LeftSemi + LeftAnti), never per-row subqueries " +
       "or a cartesian") {

@@ -42,16 +42,41 @@ class TextAnalysisSpec extends SparkSpec {
     assert(fps.distinct.length == 1)
   }
 
-  test("native SimhashAgg matches the 64-sum SQL formulation exactly") {
-    val df = Seq(
+  test("native simhash matches the 64-sum SQL formulation exactly") {
+    // null and empty texts (no row from either side), repeated tokens,
+    // runs of spaces, non-ASCII tokens, then a seeded random batch
+    val fixed = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "some other words entirely different here now"),
-      (3L, "the the the repeated token weighting case")).toDF("doc_id", "text")
-    val native = TextAnalysis.withSimhash(df, "doc_id", "text")
-      .orderBy("doc_id").collect().map(_.getString(1))
-    val sql = TextAnalysis.withSimhashSql(df, "doc_id", "text")
-      .orderBy("doc_id").collect().map(_.getString(1))
-    assert(native.toSeq == sql.toSeq)
+      (3L, "the the the repeated token weighting case"),
+      (4L, null),
+      (5L, ""),
+      (6L, "   "),
+      (7L, "a  a   a b"),
+      (8L, "하얼빈 완전판 café naïve 東京 Ωmega 🙂 emoji 🙂"),
+      (9L, "x"))
+    val rnd = new scala.util.Random(7)
+    val vocab = Seq("the", "a", "data", "spark", "café", "Straße", "日本語", "Ω", "🙂", "x1", "z")
+    val random = (100L until 600L).map { id =>
+      id -> Seq.fill(rnd.nextInt(30))(
+        if (rnd.nextInt(8) == 0) "" else vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    }
+    val df = (fixed ++ random).toDF("doc_id", "text")
+    def fps(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val native = fps(TextAnalysis.withSimhash(df, "doc_id", "text"))
+    val sql = fps(TextAnalysis.withSimhashSql(df, "doc_id", "text"))
+    assert(!native.contains(4L) && !native.contains(5L) && !native.contains(6L))
+    assert(native.size > 400, s"random batch mostly tokenless: ${native.size}")
+    assert(native == sql)
+  }
+
+  test("simhash over a non-array argument fails at analysis") {
+    graft.functions.Simhash.register(spark)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT simhash('a b') AS s")
+    }
+    assert(e.getMessage.contains("array<string>"), e.getMessage)
   }
 
   test("simhash: identical texts agree; near texts are close in Hamming distance") {
@@ -65,22 +90,6 @@ class TextAnalysisSpec extends SparkSpec {
     def hamming(a: String, b: String) = a.zip(b).count { case (x, y) => x != y }
     assert(hs.forall(h => h.length == 64 && h.forall(c => c == '0' || c == '1')))
     assert(hamming(hs(0), hs(1)) < hamming(hs(0), hs(2)))
-  }
-
-  test("simhash_agg rejects non-md5 input instead of reading out of bounds (ADVICE r1)") {
-    import graft.functions.SimhashAgg
-    val short = Seq((1, "abc")).toDF("id", "h")
-    val e1 = intercept[Exception] {
-      short.groupBy("id").agg(SimhashAgg(spark, col("h"))).collect()
-    }
-    assert(e1.getMessage.contains("16") ||
-      Option(e1.getCause).exists(_.getMessage.contains("16")))
-    val nonhex = Seq((1, "zzzzzzzzzzzzzzzzzzzz")).toDF("id", "h")
-    val e2 = intercept[Exception] {
-      nonhex.groupBy("id").agg(SimhashAgg(spark, col("h"))).collect()
-    }
-    assert(e2.getMessage.contains("hex") ||
-      Option(e2.getCause).exists(_.getMessage.contains("hex")))
   }
 
   test("redaction masks urls, emails, ips and phones and counts each") {
