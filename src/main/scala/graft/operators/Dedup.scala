@@ -228,19 +228,21 @@ object Dedup {
     * min-label propagation lacks: its round count is the diameter, and
     * span dedup or quote chains produce long paths (a 10⁴-hop chain
     * would mean 10⁴ rounds of propagation but ~13 star rounds). Each
-    * round is two groupBy+join passes over the edge set, keyed by node
-    * — no driver-side graph state; the driver only runs the converged
-    * check. Returns (id, comp) for every node that appears in some
-    * pair, comp = the component's minimum id — including nodes whose
-    * ONLY appearance is a self-pair (a, a): the contraction drops
+    * round is one large-star then one small-star pass (two groupBy+join
+    * passes over the edge set, keyed by node — no driver-side graph
+    * state), materialized by one `localCheckpoint` and followed by one
+    * converged-check job; a run that has not converged after
+    * [[MaxStarRounds]] rounds throws. Returns (id, comp) for every node
+    * that appears in some pair, comp = the component's minimum id —
+    * including nodes whose ONLY appearance is a self-pair (a, a): the
+    * contraction drops
     * self-loops from the edge set (they carry no connectivity), so such
     * nodes are unioned back as singleton components afterwards rather
     * than silently vanishing (round-5 advice; current callers emit
     * id_a < id_b pairs, but the contract should not depend on that).
     */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 25): DataFrame =
-    connectedComponentsWithRounds(pairs, aCol, bCol, maxIter)._1
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    connectedComponentsWithRounds(pairs, aCol, bCol)._1
 
   /** Incremental cluster maintenance — fold NEW near-dup pairs into an
     * existing label table without re-deriving the old pairs: the stored
@@ -265,11 +267,16 @@ object Dedup {
       oldLabels.select(col("id").as(aCol), col("comp").as(bCol))
         .unionByName(newPairs.select(aCol, bCol)), aCol, bCol)
 
-  /** [[connectedComponents]] exposing the converged round count — the
-    * spec pins the O(log²) behavior on a long path with it. */
+  /** Star rounds after which [[connectedComponents]] gives up, loudly
+    * (a 100-node path takes 7, a 10⁴-hop chain about 13). */
+  private val MaxStarRounds = 25
+
+  /** [[connectedComponents]] exposing the converged round count: the
+    * number of large-star + small-star rounds run, each one checkpointed
+    * and probed once. The spec pins the O(log²) behavior on a long path,
+    * and the exact counts, with it. */
   private[graft] def connectedComponentsWithRounds(
-      pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 25): (DataFrame, Int) = {
+      pairs: DataFrame, aCol: String, bCol: String): (DataFrame, Int) = {
     // localCheckpoint, NOT persist: persist caches the DATA but the logical
     // plan keeps growing — after k rounds the plan tree holds O(4^k)
     // copies of the upstream pair-generation pipeline, and Catalyst
@@ -338,35 +345,17 @@ object Dedup {
         .filter(col("sc") > 1 || (col("sc") > 0 && col("tc") > 0))
         .isEmpty
     }
-    // Round batching (round-16, guide §2.4 — remove jobs outright): a
-    // converged star forest is a FIXPOINT of both stars (largeStar: a
-    // member's only neighbor is its smaller center, filtered by v > u,
-    // while the center re-emits (member, center); smallStar: a member's
-    // min smaller neighbor is already its center), so running TWO
-    // contraction rounds between convergence probes cannot change the
-    // labels — convergence mid-pair just makes the second round an
-    // identity pass over the already-contracted edge set. This halves
-    // the per-round fixed bill (one localCheckpoint materialization +
-    // one probe job per TWO rounds instead of per one), which is job
-    // machinery, not data, at any scale where the edge set has
-    // contracted. The up-front probe is folded into the loop for the
-    // same reason: raw pair sets are essentially never star forests, so
-    // it was one more fixed job per call, and running the pair of
-    // rounds on an already-converged input is an identity pass. `iter`
-    // still counts CONTRACTION ROUNDS (the O(log²) spec bound reads
-    // it), now rounded up to the next even number.
     var iter = 0
     var done = false
-    while (!done && iter < maxIter) {
-      e = smallStar(largeStar(smallStar(largeStar(e)))).localCheckpoint(true)
-      iter += 2
+    while (!done && iter < MaxStarRounds) {
+      e = smallStar(largeStar(e)).localCheckpoint(true)
+      iter += 1
       done = isStarForest(e)
     }
     // fail loudly: unconverged edges would silently keep multiple docs
     // per cluster downstream, indistinguishable from a correct run
     if (!done) throw new IllegalStateException(
-      s"connectedComponents did not converge within $maxIter star rounds; " +
-        "raise maxIter")
+      s"connectedComponents did not converge within $MaxStarRounds star rounds")
     val edgeLabels = e.select(col("a").as("id"), col("b").as("comp"))
       .union(e.select(col("b").as("id"), col("b").as("comp")).distinct())
     // nodes seen only as (a, a): singleton components, labeled by
@@ -499,20 +488,6 @@ object Dedup {
       .select("id_fresh", "id_other", "jaccard")
   }
 
-  /** End-to-end near-dup corpus dedup — the one-call composition a
-    * training-data pipeline runs before anything else: MinHash-LSH
-    * candidates → exact-Jaccard verify ≥ `threshold` → connected
-    * components over surviving pairs → keep each cluster's canonical
-    * (min-id) member. Returns one row per SURVIVING doc with its
-    * cluster size (1 for docs with no near-dup) — the audit shape a
-    * deletion run wants (removed count = |corpus| − |survivors|).
-    *
-    * 100 TB: every stage is an already-audited scale shape (map-side
-    * banding, bucketed candidate join, pair-only verification,
-    * constant-size-plan label propagation); nothing materializes beyond
-    * the pair set and the label table. Canonical = component label
-    * directly, because min-label propagation converges to the min id.
-    */
   /** Cluster labels with EXACT-TEXT COLLAPSE before the LSH pair search
     * — the text analog of the multimodal distinct-signature fix the sf1
     * measurement forced (round 9): a corpus where one document repeats
@@ -551,17 +526,42 @@ object Dedup {
     connectedComponents(repPairs.unionByName(memberEdges), "id_a", "id_b")
   }
 
+  /** End-to-end near-dup corpus dedup — the one-call composition a
+    * training-data pipeline runs before anything else: MinHash-LSH
+    * candidates → exact-Jaccard verify ≥ `threshold` → connected
+    * components over surviving pairs → keep each cluster's canonical
+    * (min-id) member. Returns one row per SURVIVING doc with its
+    * cluster size (1 for docs with no near-dup) — the audit shape a
+    * deletion run wants (removed count = |corpus| − |survivors|).
+    *
+    * 100 TB: every stage is an already-audited scale shape (map-side
+    * banding, bucketed candidate join, pair-only verification,
+    * constant-size-plan label propagation); nothing materializes beyond
+    * the pair set and the label table. Canonical = component label
+    * directly ([[survivors]]).
+    */
   def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
                   k: Int, numHashes: Int, numBands: Int,
-                  threshold: Double): DataFrame = {
-    val labels = OpCache.persist(collapsedNearDupLabels(
-      df, idCol, textCol, k, numHashes, numBands, threshold))
-    val canon = labels.groupBy(col("comp")).agg(count(lit(1)).as("cluster_size"))
-      .select(col("comp").as(idCol), col("cluster_size"))
-    val unique = df.select(col(idCol))
+                  threshold: Double): DataFrame =
+    survivors(df, idCol, OpCache.persist(collapsedNearDupLabels(
+      df, idCol, textCol, k, numHashes, numBands, threshold)))
+
+  /** One row per surviving doc of a clustered corpus: each doc of `df`
+    * outside every cluster of `labels` (id, comp) survives with
+    * `cluster_size` 1, and each cluster keeps its row of `canon`
+    * (idCol, cluster_size). `canon` defaults to the min-id member, which
+    * is the component label itself: star contraction labels each
+    * component with its minimum id.
+    */
+  private[graft] def survivors(df: DataFrame, idCol: String, labels: DataFrame,
+                               canon: Option[DataFrame] = None): DataFrame = {
+    val kept = canon.getOrElse(
+      labels.groupBy(col("comp")).agg(count(lit(1)).as("cluster_size"))
+        .select(col("comp").as(idCol), col("cluster_size")))
+    df.select(col(idCol))
       .join(labels.select(col("id").as(idCol)), Seq(idCol), "left_anti")
       .withColumn("cluster_size", lit(1L))
-    unique.unionByName(canon)
+      .unionByName(kept)
   }
 
   /** [[dedupCorpus]] with a QUALITY-preferring survivor: each near-dup
@@ -591,10 +591,7 @@ object Dedup {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .select(col("id").as(idCol), col("__sz").as("cluster_size"))
-    val unique = df.select(col(idCol))
-      .join(labels.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-      .withColumn("cluster_size", lit(1L))
-    unique.unionByName(canon)
+    survivors(df, idCol, labels, Some(canon))
   }
 
   /** Leakage-SAFE train/val/test split: the split label is a pure md5

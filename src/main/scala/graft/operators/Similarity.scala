@@ -347,14 +347,7 @@ object Similarity {
       .select("id_a", "id_b")
     val labels = OpCache.persist(
       Dedup.connectedComponents(pairs, "id_a", "id_b"))
-    // min-label propagation converges to the min id, so the component
-    // label IS the canonical survivor (the dedupCorpus discipline)
-    val canon = labels.groupBy(col("comp")).agg(count(lit(1)).as("cluster_size"))
-      .select(col("comp").as(idCol), col("cluster_size"))
-    val unique = corpus.select(col(idCol))
-      .join(labels.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-      .withColumn("cluster_size", lit(1L))
-    unique.unionByName(canon)
+    Dedup.survivors(corpus, idCol, labels)
       .join(assigned, idCol)
       .select(col(idCol), col("centroid_id"), col("cluster_size"))
   }

@@ -1188,8 +1188,7 @@ object TextAnalysis {
     val toks = OpCache.persist(
       Stage.spreadLarge(df)
         .filter(col(groupCol).isNotNull)
-        .select(col(groupCol), explode(tokens(col(textCol))).as("token"))
-        .filter(length(col("token")) > 0))
+        .select(col(groupCol), explode(tokens(col(textCol))).as("token")))
     val cands = toks.groupBy(col(groupCol))
       .agg(graft.functions.MisraGriesAgg(spark, col("token"), k).as("c"))
       .select(col(groupCol), explode(col("c")).as("token"))

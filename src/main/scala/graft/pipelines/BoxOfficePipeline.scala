@@ -335,18 +335,8 @@ object BoxOfficePipeline {
   def dumpCsv(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
-  /** Schema introspection (S15, ai_agent.py:26-38): table → DDL-ish text
-    * for the SQL surface's prompt context.
-    */
-  def describeStore(spark: SparkSession, root: String, tables: Seq[String]): String =
-    tables.map { t =>
-      val p = s"$root/$t"
-      if (StoreTable.exists(spark, p))
-        s"$t:\n${StoreTable.read(spark, p).schema.treeString}"
-      else s"$t: <empty>"
-    }.mkString("\n")
-
-  /** S15 as a relation (round-7 verdict #2): one row per column of each
+  /** Schema introspection (S15) as a relation (round-7 verdict #2): one
+    * row per column of each
     * named table — (tbl, col, ord, dtype) — the engine-facing dual of the
     * reference's `PRAGMA table_info` loop (ai_agent.py:26-38), emitted as
     * a DataFrame so the driver's DuckDB oracle can hash-compare it

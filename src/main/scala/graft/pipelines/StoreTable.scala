@@ -124,13 +124,6 @@ object StoreTable {
       nanosAsLong = true)
   }
 
-  /** The data schema (partition columns excluded) Spark's writer recorded
-    * in the footer of the table at `path`; None for a table written by
-    * another engine, or with no readable data file.
-    */
-  def dataSchema(spark: SparkSession, path: String): Option[StructType] =
-    footer(spark, path).flatMap(recorded)
-
   /** Read the table at `path` with no schema-inference job. */
   def read(spark: SparkSession, path: String): DataFrame =
     footer(spark, path) match {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipelines.BoxOfficePipeline
+import graft.pipelines.{BoxOfficePipeline, StoreTable}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.sql.Date
@@ -143,10 +143,10 @@ class BoxOfficePipelineSpec extends SparkSpec {
     BoxOfficePipeline.dumpCsv(latest, csvDir)
     assert(new java.io.File(csvDir).listFiles().exists(_.getName.endsWith(".csv")))
 
-    val desc = BoxOfficePipeline.describeStore(spark, root,
-      Seq("goods_stock", "boxoffice"))
-    assert(desc.contains("goods_stock") && desc.contains("scraped_at_us")
-      && desc.contains("<empty>"))
+    val desc = BoxOfficePipeline.describeTables(spark,
+        Seq("goods_stock" -> StoreTable.read(spark, s"$root/goods_stock")))
+      .select("col", "dtype").as[(String, String)].collect().toMap
+    assert(desc.get("scraped_at_us").contains("long") && desc.size == 4, s"got $desc")
   }
 
   test("compact merges many small append files and preserves all rows") {

@@ -1,6 +1,14 @@
 package graft
 
+import java.util.UUID
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import graft.operators.Dedup
+import org.apache.spark.graftspec.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, explode, lit}
 
 class DedupSpec extends SparkSpec {
@@ -137,11 +145,10 @@ class DedupSpec extends SparkSpec {
 
   test("connectedComponents passes an already-converged star forest through unchanged") {
     import spark.implicits._
-    // round-16: rounds now run in batched PAIRS between convergence
-    // probes, justified by star forests being a FIXPOINT of both stars —
-    // pin that claim directly: a converged input (two stars rooted at
-    // their component minima) must come back with identical labels even
-    // though the loop now always runs at least one double-round over it.
+    // a converged star forest is a FIXPOINT of both stars — pin that
+    // claim directly: a converged input (two stars rooted at their
+    // component minima) must come back with identical labels even though
+    // the loop always runs one round over it before its first probe.
     val star = Seq((5L, 0L), (3L, 0L), (7L, 0L), (12L, 10L)).toDF("id_a", "id_b")
     val labels = graft.operators.Dedup.connectedComponents(star, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -174,6 +181,47 @@ class DedupSpec extends SparkSpec {
       "scrambled tree must still collapse to one component")
     assert(pathRounds <= 2 * treeRounds,
       s"path took $pathRounds rounds vs balanced $treeRounds — diameter-bound, not log-bound")
+    graft.operators.OpCache.clear()
+  }
+
+  test("connectedComponents' cost as counts: exact star rounds and Spark jobs on the path and the tree") {
+    // one large-star + small-star round per checkpoint and per probe, so
+    // the round count is exact and the job count follows from it: each
+    // round is a checkpoint plus one probe, and their AQE query stages
+    // are jobs of their own. The same 100-node path and scrambled tree
+    // as the O(log^2) test, on a fresh session so that settings other
+    // specs leave on the shared one cannot move a count.
+    val s = spark.newSession()
+    import s.implicits._
+    val path = (0L until 99L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def p(i: Long): Long = (37L * i + 11L) % 100L
+    val tree = (1L until 100L).map(i => (p(i), p((i - 1) / 2))).toDF("id_a", "id_b")
+    val started = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
+    }
+    val sc = s.sparkContext
+    sc.addSparkListener(listener)
+    def cost(pairs: DataFrame): (Int, Long, Int) = {
+      val group = s"cc-jobs-${UUID.randomUUID()}"
+      sc.setJobGroup(group, "connected components job count", interruptOnCancel = false)
+      try {
+        val (labels, rounds) = Dedup.connectedComponentsWithRounds(pairs, "id_a", "id_b")
+        val n = labels.count()
+        BusDrain.drain(sc)
+        (rounds, n, started.asScala.count(_ == group))
+      } finally sc.clearJobGroup()
+    }
+    try {
+      val (pathRounds, pathN, pathJobs) = cost(path)
+      val (treeRounds, treeN, treeJobs) = cost(tree)
+      assert(pathN == 100 && treeN == 100)
+      assert(pathRounds == 7 && treeRounds == 5,
+        s"star rounds: path $pathRounds (pinned 7), tree $treeRounds (pinned 5)")
+      assert(pathJobs == 72 && treeJobs == 52,
+        s"jobs: path $pathJobs (pinned 72), tree $treeJobs (pinned 52)")
+    } finally sc.removeSparkListener(listener)
     graft.operators.OpCache.clear()
   }
 

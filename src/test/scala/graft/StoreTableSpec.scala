@@ -4,7 +4,9 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -25,6 +27,19 @@ class StoreTableSpec extends SparkSpec {
 
   private def freshRoot() = Files.createTempDirectory("graft_storetable_").toString
 
+  /** Whether the table's first data file carries the row schema Spark's
+    * writer records, the one [[StoreTable.read]] takes when present.
+    */
+  private def sparkWritten(path: String): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(StoreTable.dataFiles(p.getFileSystem(conf), p).next(), conf))
+    try reader.getFileMetaData.getKeyValueMetaData
+      .containsKey("org.apache.spark.sql.parquet.row.metadata")
+    finally reader.close()
+  }
+
   private def raw(rows: (String, String, String, Long)*): DataFrame =
     rows.toDF("movie_cd", "open_dt", "td", "audi_cnt")
       .withColumn("target_dt", to_date(col("td"))).drop("td")
@@ -37,7 +52,7 @@ class StoreTableSpec extends SparkSpec {
     val path = s"$root/boxoffice"
     val inferred = spark.read.parquet(path)
     val read = StoreTable.read(spark, path)
-    assert(StoreTable.dataSchema(spark, path).isDefined, "no footer schema: the fallback ran")
+    assert(sparkWritten(path), "no footer schema: the fallback ran")
     assert(read.schema == inferred.schema)
     assert(read.columns.last == "target_dt" && read.schema("target_dt").dataType == DateType)
     assert(read.orderBy("movie_cd").collect().toSeq == inferred.orderBy("movie_cd").collect().toSeq)
@@ -53,7 +68,7 @@ class StoreTableSpec extends SparkSpec {
     try Seq(1L -> "a", 2L -> "b").foreach { case (i, n) =>
       writer.write(rows.newGroup().append("id", i).append("name", n))
     } finally writer.close()
-    assert(StoreTable.dataSchema(spark, s"$dir/t").isEmpty)
+    assert(!sparkWritten(s"$dir/t"))
     val read = StoreTable.read(spark, s"$dir/t")
     assert(read.schema == spark.read.parquet(s"$dir/t").schema)
     assert(read.orderBy("id").as[(Long, String)].collect().toSeq == Seq(1L -> "a", 2L -> "b"))
@@ -63,7 +78,7 @@ class StoreTableSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.01"
     Tables.all.foreach { n =>
       val path = s"$sf/$n.parquet"
-      assert(StoreTable.dataSchema(spark, path).isEmpty, s"$n: premise, no Spark row metadata")
+      assert(!sparkWritten(path), s"$n: premise, no Spark row metadata")
       assert(StoreTable.read(spark, path).schema == spark.read.parquet(path).schema, n)
     }
   }
@@ -116,7 +131,7 @@ class StoreTableSpec extends SparkSpec {
     assert(n3 == 3 && onDisk() == n3) // m0 (re-sent), m5, m6
   }
 
-  test("a file: URI store is seen by ask, describeStore and compact") {
+  test("a file: URI store is seen by ask, describeTables and compact") {
     val root = new java.io.File(freshRoot()).toURI.toString.stripSuffix("/")
     assert(root.startsWith("file:"))
     BoxOfficePipeline.ingestDaily(spark, root, raw(
@@ -127,8 +142,10 @@ class StoreTableSpec extends SparkSpec {
     val n = new BoxOffice(spark, root)
       .ask("SELECT SUM(audi_cnt) AS s FROM boxoffice").as[Long].head()
     assert(n == 60L)
-    assert(BoxOfficePipeline.describeStore(spark, root, Seq("boxoffice"))
-      .contains("target_dt: date"))
+    assert(BoxOfficePipeline.describeTables(spark,
+        Seq("boxoffice" -> StoreTable.read(spark, s"$root/boxoffice")))
+      .filter(col("col") === "target_dt").select("dtype").as[String].collect()
+      .toSeq == Seq("date"))
     val (before, after) = BoxOfficePipeline.compact(spark, s"$root/boxoffice", 1000L, Seq("target_dt"))
     assert(before >= 2 && after == 2) // one file per day partition
     assert(StoreTable.read(spark, s"$root/boxoffice").count() == 3)

@@ -19,7 +19,8 @@ runs here on the documents-only table subset:
 
 Usage: python3 tools/check_zipf.py [sfDir] [--skip-verify]
   sfDir default /root/repo/testdata/zipf_sf1 (regenerate if absent:
-  sbt "runMain graft.GenData /root/repo/testdata/zipf_sf1 10 --zipf").
+  sbt "runMain graft.GenData --zipf /root/repo/testdata/zipf_sf1"; `--zipf`
+  must come first, and the default is 50,000 documents).
 Writes CORRECTNESS_zipf.json in the repo root.
 """
 import json, os, subprocess, sys
