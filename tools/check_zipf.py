@@ -18,18 +18,18 @@ runs here on the documents-only table subset:
     min-id union-find replacement (pair CTEs + suffix verbatim).
 
 Usage: python3 tools/check_zipf.py [sfDir] [--skip-verify]
-  sfDir default /root/repo/testdata/zipf_sf1 (regenerate if absent:
-  sbt "runMain graft.GenData --zipf /root/repo/testdata/zipf_sf1"; `--zipf`
+  sfDir default testdata/zipf_sf1 in the repo root (regenerate if absent:
+  sbt "runMain graft.GenData --zipf testdata/zipf_sf1"; `--zipf`
   must come first, and the default is 50,000 documents).
 Writes CORRECTNESS_zipf.json in the repo root.
 """
 import json, os, subprocess, sys
 
-SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("-") \
-    else "/root/repo/testdata/zipf_sf1"
-OUT = "/tmp/graft_verify_zipf"
 TOOLS = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(TOOLS)
+SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("-") \
+    else os.path.join(REPO, "testdata", "zipf_sf1")
+OUT = "/tmp/graft_verify_zipf"
 
 CLOSURE = ["q_dedup_clusters", "q_dedup_corpus", "q_dedup_corpus_best"]
 DIRECT = [
